@@ -37,11 +37,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         q[name] = examples.make_sparql_query(name)
     for name, (fn, _sql) in examples.EXTRA_QUERIES.items():
         q[name] = fn
-    try:
-        from morph_xr2rml_spark.ops import registry as ops_registry
-        q.update(ops_registry.queries())
-    except ImportError:
-        pass
     return q
 
 
@@ -56,9 +51,4 @@ def oracle_sql() -> dict[str, str]:
         o[name] = examples.sparql_oracle_sql(name)
     for name, (_fn, sql) in examples.EXTRA_QUERIES.items():
         o[name] = sql
-    try:
-        from morph_xr2rml_spark.ops import registry as ops_registry
-        o.update(ops_registry.oracle_sql())
-    except ImportError:
-        pass
     return o

@@ -95,8 +95,7 @@ def tpch_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
                                        F.col(cname).cast("decimal(12,2)"))
             tables[name] = df
         cache[sf_dir] = tables
-    # shallow copy: callers (e.g. the bench's scaling harness) replace
-    # entries in the returned dict
+    # shallow copy: callers may replace entries in the returned dict
     return dict(cache[sf_dir])
 
 

@@ -143,12 +143,30 @@ def nt_escape_col(col: Column) -> Column:
 # references behave identically (both resolve by name at analysis).
 # ---------------------------------------------------------------------------
 
+# default-graph sentinel: the graph column of a triple in the default
+# graph.  Compared by value — a per-row NULL graph means the default graph
+# too, so a rebuilt-equal string still takes the constant-NULL fast path.
+NULL_G = "CAST(NULL AS STRING)"
+
+
 def sql_lit(s: str) -> str:
     """SQL string literal that parses back to exactly ``s`` under the
     default parser (backslash escape sequences ON)."""
     out = (s.replace("\\", "\\\\").replace("'", "\\'")
             .replace("\n", "\\n").replace("\r", "\\r").replace("\t", "\\t"))
     return "'" + out + "'"
+
+
+def check_sql_text_conf(spark: SparkSession) -> None:
+    """The SQL-text builders (sql_lit and every text twin) assume the
+    default parser.  Under the legacy escapedStringLiterals mode a
+    backslash escape parses back differently and terms would silently
+    change, so refuse to compile instead."""
+    conf = "spark.sql.parser.escapedStringLiterals"
+    if spark.conf.get(conf, "false").strip().lower() == "true":
+        raise ValueError(
+            f"{conf}=true is not supported: the native compilers build "
+            f"SQL string literals with backslash escapes; set it to false")
 
 
 def sql_ident(name: str) -> str:
@@ -261,6 +279,7 @@ class NativeCompiler:
         ('lexpat', kind, pat) STRSTARTS/STRENDS/CONTAINS mirrors — see
         _constraint_col.  tm_skip: TMs proven unable to contribute any
         matching triple — their sources are never read."""
+        check_sql_text_conf(spark)
         self.spark = spark
         self.mapping = mapping
         self.tables = tables
@@ -473,7 +492,6 @@ class NativeCompiler:
         # the default graph only when EVERY render is null — mirrored
         # here with per-variant row conditions (constant graph maps fold
         # to unconditional variants)
-        NULL_G = "CAST(NULL AS STRING)"
         sub_gs = [self.term_expr_sql(df, gm) for gm in tm.graph_maps]
         sub_kinds = [gm.kind for gm in tm.graph_maps]
 
@@ -551,7 +569,7 @@ class NativeCompiler:
                             else df,
                             F.expr(subj_sql).alias("subj"), F.expr(pred),
                             rom,
-                            None if gc is NULL_G else F.expr(gc),
+                            None if gc == NULL_G else F.expr(gc),
                             subj_nn=None if subj_nn is None
                             else F.expr(subj_nn)))
 
@@ -574,7 +592,7 @@ class NativeCompiler:
             obj_c = case_over([o for _p, o, _gc, _nn in po_trips])
             # graph-less mapping (the common case): keep the constant
             # NULL instead of a per-row CASE over the index
-            all_default = all(gc is NULL_G for _p, _o, gc, _nn in po_trips)
+            all_default = all(gc == NULL_G for _p, _o, gc, _nn in po_trips)
             graph_c = NULL_G if all_default else case_over(
                 [gc for _p, _o, gc, _nn in po_trips])
             objnull_c: Optional[str] = None

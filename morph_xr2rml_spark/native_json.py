@@ -35,8 +35,9 @@ from . import namespaces as NS
 from .functions.templates import compile_template, get_template_groups
 from .model import (COLUMN, CONSTANT, REFERENCE, TEMPLATE, MappingDocument,
                     TermMap, TriplesMap)
-from .native import (encode_literal_sql, encode_reserved_sql,
-                     encode_url_sql, nt_escape_col, sql_lit, strip_ws_sql)
+from .native import (NULL_G, check_sql_text_conf, encode_literal_sql,
+                     encode_reserved_sql, encode_url_sql, nt_escape_col,
+                     sql_lit, strip_ws_sql)
 from .sources import SourceCatalog
 from .translate import EngineConfig
 
@@ -280,6 +281,70 @@ def _tree_to_struct(tree: dict) -> T.StructType:
     return T.StructType(fields)
 
 
+# ---------------------------------------------------------------------------
+# Answering-mode persist tracker
+# ---------------------------------------------------------------------------
+# The unfused (answering) plan persists each resolved, filtered source
+# (tm_base / _rom_triples) and registers it here; ``cleanup()`` releases
+# everything.  A long-lived session answering many queries would otherwise
+# accumulate executor storage — the same contract as
+# ``engine.SparkEngine.cleanup()``.
+
+_PERSISTED: list = []
+# live-entry cap: long sessions answering many distinct queries would
+# otherwise accumulate cached source frames indefinitely (each distinct
+# find() filter caches its own filtered copy).  Evicting the OLDEST
+# entry is always safe — a later re-execution of its plan just
+# recomputes from the source.  cleanup() remains the explicit release.
+_MAX_LIVE = 16
+
+
+def spread(df):
+    """Scale-adaptive read-side parallelism fix (guide §2.5, input skew:
+    "one huge unsplittable file ... repartition immediately after the
+    read"): the local test tables are single-row-group parquet files, so
+    a scan yields 1-2 partitions and every compute-heavy downstream op
+    (from_json, explode) serializes on 1-2 cores regardless of the
+    executor count.  Round-robin repartition to the cluster's default
+    parallelism; a no-op whenever the scan already has enough splits
+    (the production/100-TB case).  Results are unchanged: the answering
+    plan has no partition-layout-dependent semantics."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() >= par:
+        return df
+    return df.repartition(par)
+
+
+def track_persist(df):
+    """persist(MEMORY_AND_DISK) + register for cleanup().
+    Keeps at most _MAX_LIVE tracked entries: beyond that the oldest is
+    unpersisted (lazily recomputable — correctness unaffected)."""
+    from pyspark import StorageLevel
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    _PERSISTED.append(df)
+    while len(_PERSISTED) > _MAX_LIVE:
+        old = _PERSISTED.pop(0)
+        try:
+            old.unpersist()
+        except Exception:
+            pass   # session already stopped — nothing to release
+    return df
+
+
+def cleanup() -> int:
+    """Unpersist every frame registered by track_persist(); returns how
+    many frames were released."""
+    n = 0
+    for df in _PERSISTED:
+        try:
+            df.unpersist()
+            n += 1
+        except Exception:
+            pass   # session already stopped — nothing to release
+    _PERSISTED.clear()
+    return n
+
+
 class JsonNativeCompiler:
     """Compile eligible triples maps into from_json/explode/concat plans."""
 
@@ -294,6 +359,7 @@ class JsonNativeCompiler:
         pred filter can't match — the SPARQL evaluator's per-pattern
         ``pred = <iri>`` then prunes every non-matching collection scan
         (and its from_json parse) out of the plan entirely."""
+        check_sql_text_conf(spark)
         self.spark = spark
         self.mapping = mapping
         self.catalog = catalog
@@ -603,14 +669,13 @@ class JsonNativeCompiler:
             # plentiful splits (guide §2.5) — then lazy-persist the
             # RESOLVED, FILTERED content rows: computed when the first
             # branch executes, shared by the rest (guide §5: reused +
-            # expensive to recompute; released via ops.cleanup).  The
+            # expensive to recompute; released via cleanup()).  The
             # persist sits BELOW the nondeterministic parse barrier:
             # the cached subplan stays deterministic, so Catalyst's
             # cache matching (sameResult) recognizes every reference.
             # Schema sampling (catalog.resolve in _schema_for) sees the
             # raw registered source, so its limit(n).collect() stays an
             # incremental first-partition take, not this shuffle.
-            from .ops import spread, track_persist
             src = track_persist(spread(src))
         schema = self._schema_for(tm)
         parsed = self._parse_select(src, schema)
@@ -636,7 +701,6 @@ class JsonNativeCompiler:
         # drops the graph, all-null falls back to the default graph —
         # identical to the Python tier's quad combination
         # (translate.py:419-452) and the native tabular compiler
-        NULL_G = "CAST(NULL AS STRING)"
         sub_gs = [self._term_expr_sql(tm, root, item, gm)
                   for gm in tm.graph_maps]
         sub_kinds = [gm.kind for gm in tm.graph_maps]
@@ -701,7 +765,7 @@ class JsonNativeCompiler:
         for pred, rom, gc, cond in rom_selects:
             out_parts.append(self._rom_triples(
                 tm, parsed, root, item, subj, F.expr(pred), rom,
-                None if gc is NULL_G else F.expr(gc),
+                None if gc == NULL_G else F.expr(gc),
                 None if cond is None else F.expr(cond)))
         if not out_parts:
             # subject-only TM (no class, no POM): R2RML emits rows only
@@ -740,7 +804,6 @@ class JsonNativeCompiler:
         psrc, _ = self.catalog.resolve(parent_tm.logical_source)
         if not self.fuse_projections:
             # same spread+reuse argument as the child source in tm_base
-            from .ops import spread, track_persist
             psrc = track_persist(spread(psrc))
         pschema = self._schema_for(parent_tm)
         pparsed = self._parse_select(psrc, pschema)

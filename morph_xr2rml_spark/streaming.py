@@ -103,79 +103,6 @@ def stream_triples(mapping: MappingDocument, stream_df: DataFrame,
     return triples
 
 
-def stream_sessionize(events: DataFrame, gap_minutes: int = 30,
-                      user_col: str = "user_id",
-                      ts_col: str = "ts") -> DataFrame:
-    """Custom STATEFUL streaming operator: gap-based sessionization with
-    ``applyInPandasWithState`` — the batch ``ops.events.events_sessionize``
-    semantics on an unbounded stream.  Per-user state carries the open
-    session (start, last-seen, count); a micro-batch closes every session
-    whose gap to the newest event exceeds the threshold and emits it;
-    the still-open session stays in state.  State is bounded by one open
-    session per user.
-
-    Input: streaming DataFrame with (user_col, ts_col).  Output stream:
-    (user_id, session_start, session_end, n_events) — closed sessions
-    only (the open tail flushes when a later event or timeout closes it).
-    """
-    from pyspark.sql.streaming.state import (GroupState,
-                                             GroupStateTimeout)
-
-    gap_s = gap_minutes * 60
-    # derive the key column's type from the input — string/int user ids
-    # both work (a hardcoded 'long' breaks at Arrow schema check time)
-    user_type = events.schema[user_col].dataType.simpleString()
-    out_schema = (f"user_id {user_type}, session_start timestamp, "
-                  "session_end timestamp, n_events long")
-    state_schema = "start long, last long, n long"   # epoch seconds
-
-    def fn(key, pdfs, state: GroupState):
-        import pandas as pd
-        (user,) = key
-        if state.hasTimedOut:
-            # no events for > gap: close and emit the open session
-            start, last, n = state.get
-            state.remove()
-            yield pd.DataFrame({"user_id": [user],
-                                "session_start": [pd.Timestamp(start, unit="s")],
-                                "session_end": [pd.Timestamp(last, unit="s")],
-                                "n_events": [n]})
-            return
-        ts_all = []
-        for pdf in pdfs:
-            ts_all.extend(int(t.timestamp()) for t in pdf[ts_col])
-        ts_all.sort()
-        start, last, n = state.get if state.exists else (None, None, 0)
-        closed = []
-        for t in ts_all:
-            if start is None:
-                start, last, n = t, t, 1
-            elif t - last > gap_s:
-                closed.append((start, last, n))
-                start, last, n = t, t, 1
-            else:
-                # cross-micro-batch disorder: an event older than the
-                # saved high-water mark must not move `last` backwards
-                # (that could split one session in two later)
-                last, n = max(last, t), n + 1
-        state.update((start, last, n))
-        state.setTimeoutDuration(gap_s * 1000)
-        if closed:
-            import pandas as pd
-            yield pd.DataFrame({
-                "user_id": [user] * len(closed),
-                "session_start": [pd.Timestamp(s, unit="s")
-                                  for s, _l, _n in closed],
-                "session_end": [pd.Timestamp(l, unit="s")
-                                for _s, l, _n in closed],
-                "n_events": [n_ for _s, _l, n_ in closed]})
-
-    return (events.groupBy(F.col(user_col))
-                  .applyInPandasWithState(
-                      fn, out_schema, state_schema, "append",
-                      GroupStateTimeout.ProcessingTimeTimeout))
-
-
 def triple_rate_metrics(triples_stream: DataFrame,
                         window: str = "1 minute") -> DataFrame:
     """Windowed triples/predicate counts — the monitoring aggregation

@@ -212,3 +212,22 @@ def test_schema_sampling_cached_on_catalog(spark):
     s3 = JsonNativeCompiler(spark, m2, cat)._schema_for(
         m2.triples_maps["#T"])
     assert "v" not in s3.fieldNames()
+
+
+def test_cleanup_releases_persisted_sources(spark):
+    """Answering mode persists each resolved, filtered document source;
+    native_json.cleanup() must release every tracked persist so a
+    long-lived session does not leak executor storage."""
+    from test_examples_oracle import SF_DIR
+
+    from morph_xr2rml_spark import examples, native_json
+    native_json.cleanup()   # reset anything earlier tests tracked
+    jsc = spark.sparkContext._jsc.sc()
+    examples.sparql_pushdown_doclit(spark, SF_DIR).collect()
+    # raw getPersistentRDDs counts are racy — unreferenced RDDs from
+    # earlier tests are garbage-collected asynchronously by the
+    # ContextCleaner.  Assert on the DELTA the tracked cleanup produces.
+    mid = jsc.getPersistentRDDs().size()
+    released = native_json.cleanup()
+    assert released >= 1
+    assert jsc.getPersistentRDDs().size() <= mid - released

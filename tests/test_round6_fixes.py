@@ -7,13 +7,8 @@
 2. every native render mirrors Python str.strip() exactly (ADVICE r5
    medium — F.trim strips spaces only, so a tab/newline-padded field
    whose rendered literal matches a query constant was wrongly pruned by
-   the natively-applied $renderIn);
-3. decode_avi_mjpeg defaults us_per_frame when the avih header is
-   absent/zeroed instead of TypeError-ing in sample_video_frames
-   (ADVICE r5 low).
+   the natively-applied $renderIn).
 """
-
-import struct
 
 from pyspark.sql import functions as F
 
@@ -151,37 +146,6 @@ def test_padded_render_matches_python_tier(spark):
     assert native == python
     objs = {r[2] for r in native if r[1].endswith("val>")}
     assert objs == {'"X"', '"Z"'}
-
-
-# ---------------------------------------------------------------------------
-# 3. AVI without timing header
-# ---------------------------------------------------------------------------
-
-def test_avi_zeroed_avih_defaults_frame_rate():
-    from morph_xr2rml_spark.ops.multimodal import (decode_avi_mjpeg,
-                                                   make_avi_mjpeg)
-    payload = bytearray(make_avi_mjpeg(1))
-    i = payload.find(b"avih")
-    assert i > 0
-    struct.pack_into("<I", payload, i + 8, 0)      # us_per_frame := 0
-    d = decode_avi_mjpeg(bytes(payload))
-    assert d["us_per_frame"] == 1_000_000 // 25
-    assert d["frames"]
-
-
-def test_sample_video_frames_survives_missing_timing(spark):
-    from morph_xr2rml_spark.ops.multimodal import (make_avi_mjpeg,
-                                                   sample_video_frames)
-    payload = bytearray(make_avi_mjpeg(2))
-    i = payload.find(b"avih")
-    struct.pack_into("<I", payload, i + 8, 0)
-    df = spark.createDataFrame(
-        [(1, "video", "video/avi", 1000, bytearray(bytes(payload)))],
-        "media_id long, kind string, mime string, duration_ms long, "
-        "payload binary")
-    out = sample_video_frames(df, every_ms=500).collect()
-    assert len(out) == 2
-    assert all(r[2] is not None for r in out)
 
 
 # ---------------------------------------------------------------------------

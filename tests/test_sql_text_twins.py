@@ -302,3 +302,26 @@ def test_json_term_expr_matches_legacy_dsl(spark):
         for i in range(len(maps)):
             assert getattr(r, f"new{i}") == getattr(r, f"old{i}"), \
                 (i, getattr(r, f"new{i}"), getattr(r, f"old{i}"))
+
+
+def test_compilers_refuse_escaped_string_literals(spark):
+    """sql_lit assumes the default parser; under the legacy
+    escapedStringLiterals mode both native compilers fail loudly instead
+    of emitting silently different terms."""
+    from morph_xr2rml_spark.model import MappingDocument
+    from morph_xr2rml_spark.native import NativeCompiler
+    from morph_xr2rml_spark.native_json import JsonNativeCompiler
+    from morph_xr2rml_spark.sources import SourceCatalog
+    mapping = MappingDocument.from_text("")
+    conf = "spark.sql.parser.escapedStringLiterals"
+    old = spark.conf.get(conf, "false")
+    spark.conf.set(conf, "true")
+    try:
+        with pytest.raises(ValueError, match="escapedStringLiterals"):
+            NativeCompiler(spark, mapping, {})
+        with pytest.raises(ValueError, match="escapedStringLiterals"):
+            JsonNativeCompiler(spark, mapping, SourceCatalog())
+    finally:
+        spark.conf.set(conf, old)
+    NativeCompiler(spark, mapping, {})
+    JsonNativeCompiler(spark, mapping, SourceCatalog())
