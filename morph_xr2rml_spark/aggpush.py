@@ -1,4 +1,4 @@
-"""Aggregate / DISTINCT pushdown for the tabular answering path.
+"""Aggregate / DISTINCT pushdown: the first step of api.answer_auto.
 
 The evaluator answers ``SELECT ?k (SUM(?v) AS ?s) ... GROUP BY ?k`` by
 materializing the mapping's triple pool (term strings for every
@@ -27,10 +27,11 @@ source).  Proving bindings == rows needs the compile-time uniqueness
 theorems (native.subject_renders_unique) that only exist here.
 
 Soundness discipline (same as rewrite.py): this is a FAST PATH -- on
-ANY shape or provability doubt `try_aggregate_pushdown` returns None
-and the caller falls back to the full evaluator.  A pushed plan must be
-an EXACT mirror (not a superset): there is no evaluator behind it to
-re-apply the real semantics.  The preconditions:
+ANY shape or provability doubt `try_aggregate_pushdown_auto` returns
+None and `api.answer_auto` goes on to its routed plan under the full
+evaluator.  A pushed plan must be an EXACT mirror (not a superset):
+there is no evaluator behind it to re-apply the real semantics.  The
+preconditions:
 
 * WHERE is one BGP of triple patterns plus FILTERs, BINDs (applied in
   the evaluator's post-pattern order via its own _bind_term_const/
@@ -90,12 +91,14 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
 from . import namespaces as NS
+from .api import route_tier
 from .functions.templates import get_template_groups
 from .model import COLUMN, CONSTANT, TEMPLATE, MappingDocument, TermMap
 from .model import REFERENCE
-from .native import (NativeCompiler, is_tabular_compilable, subject_space,
-                     subject_spaces_disjoint, subject_renders_unique,
+from .native import (NativeCompiler, subject_space, subject_spaces_disjoint,
+                     subject_renders_unique,
                      subject_renders_unique_schemaless)
+from .sources import SourceCatalog
 from .sparql import (SelectQuery, SparqlEngine, TriplePattern,
                      lexical_value, numeric_value, term_order_keys)
 
@@ -194,44 +197,37 @@ def _numeric_mirror(compiler: NativeCompiler, df: DataFrame,
 
 class _BindingTier:
     """Per-TM adapter producing the bindings-frame ingredients (scan,
-    exact term/notnull/numeric expressions, uniqueness proof) for both
-    source tiers.  A TM neither sub-tier can open exactly is not a
-    candidate.  Doc-tier conditions mirror materialize_auto's routing:
-    only json-native-SAFE TMs qualify (static paths, native find()
-    filter, schema sample pinned every leaf), so the mirror renders are
-    the SAME expressions the materialized pool would use
-    (native_json._term_expr); Python-document-compiler TMs refuse.
-    Iterator TMs refuse: one subject spans several items there, which
-    breaks bindings == rows."""
+    exact term/notnull/numeric expressions, uniqueness proof) for the two
+    Catalyst tiers.  The tier is the router's (api.route_tier): only a
+    TM routed native ("tab") or json-native ("doc") is a candidate, so
+    the mirror renders are the SAME expressions the materialized pool
+    would use (native_json._term_expr on the doc side); a TM routed to
+    the Python document compiler refuses.  Own refusals on top: graph
+    maps (quads multiply bindings per graph) and iterator / pushDown TMs
+    (one subject spans several items, which breaks bindings == rows)."""
 
-    def __init__(self, spark, mapping, cfg, tables=None, catalog=None):
+    def __init__(self, spark, mapping, cfg, tables, catalog):
+        from .native_json import JsonNativeCompiler
         self.spark = spark
         self.mapping = mapping
-        self.tab = NativeCompiler(spark, mapping, tables, cfg,
-                                  fuse_projections=False) \
-            if tables is not None else None
-        self.doc = None
-        if catalog is not None:
-            from .native_json import JsonNativeCompiler
-            self.doc = JsonNativeCompiler(spark, mapping, catalog, cfg)
+        self.tables = tables or {}
+        self.tab = NativeCompiler(spark, mapping, self.tables, cfg,
+                                  fuse_projections=False)
+        self.doc = JsonNativeCompiler(spark, mapping,
+                                      catalog or SourceCatalog(), cfg)
 
     def kind(self, tm) -> Optional[str]:
         if tm.graph_maps or any(pom.graph_maps
                                 for pom in tm.predicate_object_maps):
             return None          # quads multiply bindings per graph
-        if self.tab is not None and is_tabular_compilable(tm):
-            if tm.logical_source.kind != "table" \
-                    or tm.logical_source.value in (self.tab.tables or {}):
-                return "tab"
-        if self.doc is not None and tm.logical_source.iterator is None \
-                and not tm.logical_source.pushdowns:
-            from .native_json import compilable
-            try:
-                if compilable(tm) and not self.doc.unsafe_paths(tm):
-                    return "doc"
-            except Exception:
-                return None      # unresolvable source / schema conflict
-        return None
+        if tm.logical_source.iterator is not None \
+                or tm.logical_source.pushdowns:
+            return None
+        try:
+            tier = route_tier(self.mapping, tm, self.tables, self.doc)
+        except Exception:
+            return None          # unresolvable source / schema conflict
+        return {"native": "tab", "json": "doc"}.get(tier)
 
     def om_kinds(self, k: str) -> tuple:
         return (CONSTANT, COLUMN, TEMPLATE) if k == "tab" \
@@ -625,31 +621,12 @@ def _build_join_frame(tier, mapping: MappingDocument, groups: dict,
     return cur
 
 
-def try_aggregate_pushdown(spark: SparkSession, mapping: MappingDocument,
-                           tables: dict, q: SelectQuery,
-                           cfg=None) -> Optional[DataFrame]:
-    """Tabular-tier entry (answer_tabular)."""
-    return _try_push(spark, mapping, q,
-                     lambda: _BindingTier(spark, mapping, cfg,
-                                          tables=tables))
-
-
-def try_aggregate_pushdown_documents(spark: SparkSession,
-                                     mapping: MappingDocument,
-                                     catalog, q: SelectQuery,
-                                     cfg=None) -> Optional[DataFrame]:
-    """Document-tier entry (answer_documents)."""
-    return _try_push(spark, mapping, q,
-                     lambda: _BindingTier(spark, mapping, cfg,
-                                          catalog=catalog))
-
-
 def try_aggregate_pushdown_auto(spark: SparkSession,
                                 mapping: MappingDocument, q: SelectQuery,
                                 tables=None, catalog=None,
                                 cfg=None) -> Optional[DataFrame]:
-    """Mixed-mapping entry (answer_auto): each contributing TM opens on
-    whichever tier compiles it exactly; the union spans tiers."""
+    """The one entry (api.answer_auto): each contributing TM opens on
+    the tier the router gives it; the union spans tiers."""
     return _try_push(spark, mapping, q,
                      lambda: _BindingTier(spark, mapping, cfg,
                                           tables=tables, catalog=catalog))

@@ -1,29 +1,159 @@
-"""Unified materialization facade.
+"""Unified facade: one path from mapping to plan for both of the
+paper's modes.
 
-``materialize_auto`` routes every triples map to the fastest compiler it
-qualifies for:
+``route_tier`` is the one place a triples map's compiler is chosen:
 
-  - pure-Catalyst native compiler (native.py) when the TM is
+  - ``native``: the pure-Catalyst compiler (native.py) when the TM is
     tabular/R2RML-only (column/template/constant terms, plain-column
     joins, no iterator/nested maps) AND its refobjectmap parents are too;
-  - the Arrow-batched document compiler (engine.py) otherwise.
+  - ``json``: the json-native compiler (native_json.py) for static-path
+    document TMs whose sampled schema pinned every leaf, parents too;
+  - ``doc``: the Arrow-batched document compiler (engine.py) otherwise.
 
-One call, one deduplicated triple DataFrame — the drop-in equivalent of
-the reference's ``MorphRunner`` materialization mode
-(/root/reference/morph-xr2rml-dist/.../MorphRunner.scala:28-115).
+``materialize_auto`` (graph materialization, the reference's
+``MorphRunner``, MorphRunner.scala:28-115) and ``answer_auto`` (query
+rewriting) both compile through ``_routed_plan``: derived constraints
+applied per tier, every TM routed, each tier compiled, one union, and
+one duplicate-freeness proof.
 """
 
 from __future__ import annotations
 
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from .engine import SparkMaterializer, TRIPLE_SCHEMA
-from .model import MappingDocument
-from .native import NativeCompiler, is_tabular_compilable
+from .model import MappingDocument, TriplesMap
+from .native import (NativeCompiler, is_tabular_compilable, subject_space,
+                     subject_spaces_disjoint)
 from .sources import SourceCatalog
 from .translate import EngineConfig
+
+
+def route_tier(mapping: MappingDocument, tm: TriplesMap,
+               tables: dict, jc) -> str:
+    """The TM's tier: ``"native"``, ``"json"`` or ``"doc"``.  A ROM's
+    parent must live in the same compiler, so a TM whose parent does not
+    qualify for a tier is demoted with it.  ``jc`` is the
+    JsonNativeCompiler whose schema sample guards the json tier."""
+    from .native_json import compilable as json_ok
+    group = [tm] + [mapping.triples_maps[rom.parent_tm]
+                    for pom in tm.predicate_object_maps
+                    for rom in pom.ref_object_maps]
+
+    def native_ok(t: TriplesMap) -> bool:
+        ls = t.logical_source
+        if ls.is_find() or (ls.kind == "table" and ls.value not in tables):
+            return False
+        return is_tabular_compilable(t)
+
+    if all(native_ok(t) for t in group):
+        return "native"
+    # schema-sampling guard: a mapping-required leaf whose type the
+    # sample could not pin (unseen / conflicting long-vs-double) would
+    # silently drop or drift triples after row sample_n -- such TMs run
+    # on the document compiler instead
+    if all(json_ok(t) for t in group) \
+            and not any(jc.unsafe_paths(t) for t in group):
+        return "json"
+    return "doc"
+
+
+def _routed_plan(spark: SparkSession, mapping: MappingDocument,
+                 catalog: Optional[SourceCatalog] = None,
+                 tables: Optional[dict[str, DataFrame]] = None,
+                 cfg: Optional[EngineConfig] = None,
+                 constraints: Optional[dict] = None, **engine_kw):
+    """Compile ``mapping`` with every TM on its routed tier.  Returns
+    ``(triples, tiers, distinct)``: the union of the per-TM plans, the
+    tier of every emitting TM, and a thunk for the plan's one
+    duplicate-freeness proof.
+
+    ``constraints`` (rewrite.derive_tm_constraints) selects answering
+    mode, ``None`` materialization.  In answering mode a TM whose
+    constraint is ``[]`` is skipped on every tier (it emits nothing but
+    stays in the mapping as a ROM join parent), the others' row filters
+    / composed find() filters come from rewrite.constrained_plan, and the
+    native and json-native compilers emit one unfused branch per
+    predicate so the evaluator's pattern filters prune the branches they
+    cannot match."""
+    cfg = cfg or EngineConfig()
+    tables = tables or {}
+    catalog = catalog or SourceCatalog()
+    answering = constraints is not None
+    row_filters: dict = {}
+    skip: frozenset = frozenset()
+    if answering:
+        from .rewrite import constrained_plan
+        # the $renderIn mirror assumes the DEFAULT literal render pipeline
+        push_render = cfg.literal_trim and not cfg.encode_literal_quotes
+        mapping, row_filters = constrained_plan(mapping, constraints,
+                                                push_render)
+        skip = frozenset(n for n, c in constraints.items() if c == [])
+
+    from .native_json import JsonNativeCompiler, provably_distinct_json
+    jc = JsonNativeCompiler(spark, mapping, catalog, cfg,
+                            fuse_projections=not answering)
+    tiers = {n: route_tier(mapping, tm, tables, jc)
+             for n, tm in mapping.triples_maps.items() if n not in skip}
+    by_tier = {t: [mapping.triples_maps[n] for n, tn in tiers.items()
+                   if tn == t] for t in ("native", "json", "doc")}
+    # the document compiler reads tables through the catalog and SQL-text
+    # sources read its temp views; a registration costs one view command
+    # per table, so only plans that read them pay it
+    if by_tier["doc"] or any(
+            tm.logical_source.kind != "table"
+            and not tm.logical_source.is_find()
+            for tm in mapping.triples_maps.values()):
+        for name, df in tables.items():
+            catalog.register_table(name, df)
+
+    nc = NativeCompiler(spark, mapping, tables, cfg,
+                        fuse_projections=not answering,
+                        tm_row_filters=row_filters,
+                        tm_skip=set(mapping.triples_maps)
+                        - {tm.name for tm in by_tier["native"]})
+    parts = [nc.tm_triples(tm) for tm in by_tier["native"]]
+    parts += [jc.tm_base(tm) for tm in by_tier["json"]]
+    if by_tier["doc"]:
+        sm = SparkMaterializer(spark, mapping, catalog, cfg, **engine_kw)
+        parts += [sm._tm_triples(tm) for tm in by_tier["doc"]]
+
+    if not parts:
+        out = spark.createDataFrame([], TRIPLE_SCHEMA)
+    else:
+        out = parts[0]
+        for p in parts[1:]:
+            out = out.unionByName(p)
+
+    def distinct() -> bool:
+        """The plan provably emits no duplicate triple: the native tier
+        by NativeCompiler.provably_distinct, the other two by the
+        tier-independent provably_distinct_json, each with skipped TMs
+        excluded; across the two, every pair of TMs has disjoint subject
+        spaces or disjoint constant predicate sets."""
+        from .rewrite import tm_pred_iris
+        native = by_tier["native"]
+        other = by_tier["json"] + by_tier["doc"]
+        if other and not provably_distinct_json(
+                mapping, skip=frozenset(mapping.triples_maps)
+                - {tm.name for tm in other}):
+            return False
+        if native and not nc.provably_distinct():
+            return False
+        for t1 in native:
+            for t2 in other:
+                if subject_spaces_disjoint(subject_space(t1),
+                                           subject_space(t2)):
+                    continue
+                p1, p2 = tm_pred_iris(t1), tm_pred_iris(t2)
+                if p1 is not None and p2 is not None and not (p1 & p2):
+                    continue
+                return False
+        return True
+
+    return out, tiers, distinct
 
 
 def materialize_auto(spark: SparkSession, mapping: MappingDocument,
@@ -31,106 +161,20 @@ def materialize_auto(spark: SparkSession, mapping: MappingDocument,
                      tables: Optional[dict[str, DataFrame]] = None,
                      cfg: Optional[EngineConfig] = None,
                      dedup: bool = True,
-                     tm_row_filters: Optional[dict] = None,
-                     fuse_projections: bool = True,
                      **engine_kw) -> DataFrame:
-    """tm_row_filters: per-TM OR-of-conjunction row constraints for the
-    NATIVE tier (rewrite.constrained_plan — document TMs carry theirs
-    inside the composed find() filter already); fuse_projections is
-    forwarded to NativeCompiler (False when SPARQL runs over the plan,
-    so Catalyst can constant-fold unreachable predicate branches)."""
-    cfg = cfg or EngineConfig()
-    tables = tables or {}
-    catalog = catalog or SourceCatalog()
-    for name, df in tables.items():
-        catalog.register_table(name, df)
-
-    def native_ok(tm) -> bool:
-        if not is_tabular_compilable(tm):
-            return False
-        if tm.logical_source.kind == "table" and \
-                tm.logical_source.value not in tables:
-            return False
-        # a ROM's parent must live in the same compiler
-        for pom in tm.predicate_object_maps:
-            for rom in pom.ref_object_maps:
-                parent = mapping.triples_maps[rom.parent_tm]
-                if not is_tabular_compilable(parent) or \
-                        (parent.logical_source.kind == "table" and
-                         parent.logical_source.value not in tables):
-                    return False
-        return True
-
-    from .native_json import JsonNativeCompiler, compilable as json_ok
-
-    jc = JsonNativeCompiler(spark, mapping, catalog, cfg,
-                            fuse_projections=fuse_projections)
-
-    def json_native_ok(tm) -> bool:
-        if not json_ok(tm):
-            return False
-        for pom in tm.predicate_object_maps:
-            for rom in pom.ref_object_maps:
-                if not json_ok(mapping.triples_maps[rom.parent_tm]):
-                    return False
-        # schema-sampling guard: a mapping-required leaf whose type the
-        # sample could not pin (unseen / conflicting long-vs-double)
-        # would silently drop or drift triples after row sample_n —
-        # route those TMs to the document compiler instead
-        if jc.unsafe_paths(tm):
-            return False
-        for pom in tm.predicate_object_maps:
-            for rom in pom.ref_object_maps:
-                if jc.unsafe_paths(mapping.triples_maps[rom.parent_tm]):
-                    return False
-        return True
-
-    native_tms = {n: tm for n, tm in mapping.triples_maps.items()
-                  if native_ok(tm)}
-    jn_tms = {n: tm for n, tm in mapping.triples_maps.items()
-              if n not in native_tms and json_native_ok(tm)}
-    doc_tms = {n: tm for n, tm in mapping.triples_maps.items()
-               if n not in native_tms and n not in jn_tms}
-
-    parts: list[DataFrame] = []
-    if native_tms and not jn_tms and not doc_tms:
-        # all-native mapping: delegate so the uniqueness-driven dedup
-        # elimination applies (provably-duplicate-free mappings skip the
-        # global dropDuplicates exchange entirely)
-        return NativeCompiler(spark, mapping, tables, cfg,
-                              tm_row_filters=tm_row_filters,
-                              fuse_projections=fuse_projections) \
-            .triples(dedup=dedup)
-    if native_tms:
-        nc = NativeCompiler(spark, mapping, tables, cfg,
-                            tm_row_filters=tm_row_filters,
-                            fuse_projections=fuse_projections)
-        parts.extend(nc.tm_triples(tm) for tm in native_tms.values())
-    if jn_tms:
-        parts.extend(jc.tm_base(tm) for tm in jn_tms.values())
-    if doc_tms:
-        sm = SparkMaterializer(spark, mapping, catalog, cfg, **engine_kw)
-        parts.extend(sm._tm_triples(tm) for tm in doc_tms.values())
-
-    if not parts:
-        return spark.createDataFrame([], TRIPLE_SCHEMA)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    if dedup:
-        from .native_json import provably_distinct_json
-        if not native_tms and provably_distinct_json(mapping):
-            # document/json-native mapping provably emits no duplicate
-            # (r6 — the doc-tier twin of the native compiler's dedup
-            # elimination): skip the global exchange entirely
-            return out
-        from .engine import dedup_triples
-        # native-tier TMs emit one triple per (row, term map) — mostly
-        # distinct, where the map-side partial agg only burns memory
-        # (measured 2.4x at 66M triples).  Document-tier TMs (iterator
-        # re-emission) keep the default map-side collapse.
-        out = dedup_triples(out, prepartition=not doc_tms)
-    return out
+    """One call, one triple DataFrame with every TM on its routed tier;
+    deduplicated unless the plan is provably duplicate-free -- the
+    drop-in equivalent of the reference's materialization mode."""
+    out, tiers, distinct = _routed_plan(spark, mapping, catalog, tables,
+                                        cfg, **engine_kw)
+    if not dedup or distinct():
+        return out
+    from .engine import dedup_triples
+    # native and json-native TMs emit one triple per (row, term map) --
+    # mostly distinct, where the map-side partial agg only burns memory
+    # (measured 2.4x at 66M triples).  Document-tier TMs (iterator
+    # re-emission) keep the default map-side collapse.
+    return dedup_triples(out, prepartition="doc" not in tiers.values())
 
 
 def answer_auto(spark: SparkSession, mapping: MappingDocument,
@@ -140,81 +184,37 @@ def answer_auto(spark: SparkSession, mapping: MappingDocument,
                 cfg: Optional[EngineConfig] = None,
                 **engine_kw) -> DataFrame:
     """Answer a SPARQL query with source pushdown wherever the mapping
-    allows (the query-side twin of ``materialize_auto``):
+    allows (the query-side twin of ``materialize_auto``).  The
+    reference's runner instantiates one translator per source
+    (MorphRDBUnfolder.scala:65-97 for SQL conditions,
+    MorphMongoDataSourceReader.scala:52-70 for find() filters); here:
 
-      - every TM tabular with its table present → ``answer_tabular``
-        (constraint inversion, cross-pattern propagation, TM
-        elimination, parquet PushedFilters);
-      - every TM a document source → ``answer_documents`` (constraints
-        composed into find() via $lexIn/$renderIn/$numCmp);
-      - MIXED relational + document (r6, the reference's federation
-        bread-and-butter: per-source condition generation in
-        MorphRDBUnfolder.scala:65-97 + MorphMongoDataSourceReader.scala:
-        52-70) → constraints derived ONCE, routed per TM: ``.where``
-        row filters / TM drops on the tabular scans, composed find()
-        filters on the document scans, then one union plan under the
-        evaluator;
-      - anything else → SPARQL over the un-rewritten
-        ``materialize_auto`` plan (no pushdown, always sound)."""
-    from .rewrite import answer_documents, answer_tabular
+      1. aggregate/DISTINCT pushdown (aggpush.py) when bindings provably
+         equal source rows -- no triple pool at all;
+      2. constraints derived ONCE for every TM (rewrite.py);
+      3. the routed plan: ``.where`` row filters on native scans
+         (parquet PushedFilters), composed find() filters on document
+         scans, TMs that match nothing skipped;
+      4. the evaluator over that plan, with its per-pattern dedup
+         dropped when the plan is provably duplicate-free.
+
+    ``engine_kw`` go to the SparqlEngine (and disable step 1)."""
+    from .rewrite import _eng_answer, derive_tm_constraints
     from .sparql import SparqlEngine, parse_sparql
     tables = tables or {}
-
-    def tabular_ok(tm) -> bool:
-        return is_tabular_compilable(tm) and (
-            tm.logical_source.kind != "table"
-            or tm.logical_source.value in tables)
-
-    tms = mapping.triples_maps.values()
-    if tms and all(tabular_ok(tm) for tm in tms):
-        return answer_tabular(spark, mapping, tables, query_text,
-                              cfg=cfg, **engine_kw)
-    if tms and all(tm.logical_source.kind == "query" for tm in tms):
-        return answer_documents(spark, mapping,
-                                catalog or SourceCatalog(), query_text,
-                                cfg=cfg, **engine_kw)
+    catalog = catalog or SourceCatalog()
     q = query_text if not isinstance(query_text, str) \
         else parse_sparql(query_text)
-    tm_row_filters = None
-    eff_mapping = mapping
     if not engine_kw:
-        # mixed-mapping aggregate/DISTINCT pushdown: each contributing
-        # TM opens on whichever tier compiles it exactly; the union
-        # spans tiers under one aggregate
         from .aggpush import try_aggregate_pushdown_auto
-        fast = try_aggregate_pushdown_auto(spark, mapping, q,
-                                           tables=tables,
-                                           catalog=catalog or
-                                           SourceCatalog(), cfg=cfg)
+        fast = try_aggregate_pushdown_auto(spark, mapping, q, tables=tables,
+                                           catalog=catalog, cfg=cfg)
         if fast is not None:
             return fast
-    if tms and all(tabular_ok(tm) or tm.logical_source.kind == "query"
-                   for tm in tms):
-        # mixed-tier pushdown: derive once, apply per tier
-        from .rewrite import constrained_plan, derive_tm_constraints
-        eff = cfg or EngineConfig()
-        push_render = eff.literal_trim and not eff.encode_literal_quotes
-        constraints = derive_tm_constraints(mapping, q, tables)
-        eff_mapping, tm_row_filters = constrained_plan(
-            mapping, constraints, push_render)
-        if not eff_mapping.triples_maps:
-            from .rewrite import _eng_answer
-            triples = spark.createDataFrame([], TRIPLE_SCHEMA)
-            eng = SparqlEngine(triples, dedup_source=True, **engine_kw)
-            return _eng_answer(spark, eng, q)
-    triples = materialize_auto(spark, eff_mapping, catalog=catalog,
-                               tables=tables, cfg=cfg, dedup=False,
-                               tm_row_filters=tm_row_filters,
-                               fuse_projections=tm_row_filters is None)
-    dedup_source = True
-    if tm_row_filters is not None and eff_mapping.triples_maps:
-        # mixed plan provably duplicate-free → skip the evaluator's
-        # per-pattern dedup (same elimination the pure tiers get)
-        from .rewrite import plan_provably_distinct
-        dedup_source = not plan_provably_distinct(spark, eff_mapping,
-                                                  tables)
-    from .rewrite import _eng_answer
-    eng = SparqlEngine(triples, dedup_source=dedup_source, **engine_kw)
+    constraints = derive_tm_constraints(mapping, q, tables)
+    triples, _tiers, distinct = _routed_plan(spark, mapping, catalog, tables,
+                                             cfg, constraints)
+    eng = SparqlEngine(triples, dedup_source=not distinct(), **engine_kw)
     return _eng_answer(spark, eng, q)
 
 

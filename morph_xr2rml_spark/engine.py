@@ -332,7 +332,7 @@ class SparkMaterializer:
         ls = tm.logical_source
         df, _tabular = self.catalog.resolve(ls)
         py_filter = None
-        if ls.kind == "query" and ls.value.lstrip().startswith("db."):
+        if ls.is_find():
             _coll, filter_text = parse_mongo_query(ls.value)
             if mongo_filter_to_column(filter_text, "content") is None:
                 py_filter = filter_text

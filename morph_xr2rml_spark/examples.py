@@ -360,16 +360,16 @@ def make_sparql_query(name: str):
     sparql_text, _oracle = SPARQL_QUERIES[name]
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # full production path (r5): answer_tabular = constraint
+        # full production path (r5): answer_auto = constraint
         # derivation (constant/literal inversion, cross-pattern
         # propagation, TM elimination) over the unfused RAW plan, then
         # the SPARQL evaluator with per-pattern dedup-after-filter —
         # constant preds per union branch still let Catalyst prune
         # non-matching triples-map branches from the plan
-        from .rewrite import answer_tabular
+        from .api import answer_auto
         mapping = MappingDocument.from_text(TPCH_KG_MAPPING)
-        return answer_tabular(spark, mapping, tpch_tables(spark, sf_dir),
-                              sparql_text)
+        return answer_auto(spark, mapping, sparql_text,
+                           tables=tpch_tables(spark, sf_dir))
 
     return run
 
@@ -520,10 +520,11 @@ def sparql_describe_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     BOTH positions: nation scan filtered to n_nationkey=0, customer
     scan to c_nationkey=0 via the inNation ROM transfer, orders/region
     eliminated)."""
-    from .rewrite import answer_tabular
+    from .api import answer_auto
     mapping = MappingDocument.from_text(TPCH_KG_MAPPING)
-    return answer_tabular(spark, mapping, tpch_tables(spark, sf_dir),
-                          "DESCRIBE <http://example.org/nation/0>") \
+    return answer_auto(spark, mapping,
+                       "DESCRIBE <http://example.org/nation/0>",
+                       tables=tpch_tables(spark, sf_dir)) \
         .orderBy("subj", "pred", "obj")
 
 
@@ -547,12 +548,11 @@ ORDER BY subj, pred, obj
 # ---------------------------------------------------------------------------
 
 def sparql_pushdown_point(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .rewrite import answer_tabular
+    from .api import answer_auto
     mapping = MappingDocument.from_text(TPCH_KG_MAPPING)
-    return answer_tabular(spark, mapping, tpch_tables(spark, sf_dir),
-                          "SELECT ?p ?o WHERE "
-                          "{ <http://example.org/order/1> ?p ?o } "
-                          "ORDER BY ?p ?o")
+    return answer_auto(spark, mapping, "SELECT ?p ?o WHERE "
+                       "{ <http://example.org/order/1> ?p ?o } "
+                       "ORDER BY ?p ?o", tables=tpch_tables(spark, sf_dir))
 
 
 def sparql_pushdown_point_oracle_sql() -> str:
@@ -567,13 +567,12 @@ def sparql_pushdown_obj(spark: SparkSession, sf_dir: str) -> DataFrame:
     transfers through the referencing object map to the CHILD's join
     column (genCond on the object reference) — scans orders with
     o_custkey = 5, never touching nation/region."""
-    from .rewrite import answer_tabular
+    from .api import answer_auto
     mapping = MappingDocument.from_text(TPCH_KG_MAPPING)
-    return answer_tabular(spark, mapping, tpch_tables(spark, sf_dir),
-                          SPARQL_PREFIX + """
+    return answer_auto(spark, mapping, SPARQL_PREFIX + """
         SELECT ?o WHERE {
             ?o ex:placedBy <http://example.org/customer/5>
-        } ORDER BY ?o""")
+        } ORDER BY ?o""", tables=tpch_tables(spark, sf_dir))
 
 
 def sparql_pushdown_obj_oracle_sql() -> str:
@@ -585,15 +584,15 @@ ORDER BY o"""
 
 
 def sparql_pushdown_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .rewrite import answer_documents
+    from .api import answer_auto
     from .sources import SourceCatalog
     mapping = MappingDocument.from_text(LINEITEM_JSON_MAPPING)
     catalog = SourceCatalog().register_collection(
         "orderdocs", orderdocs_df(spark, sf_dir))
-    return answer_documents(spark, mapping, catalog, SPARQL_PREFIX + """
+    return answer_auto(spark, mapping, SPARQL_PREFIX + """
         SELECT ?q ?part WHERE {
             <http://example.org/line/7-1> ex:qty ?q ; ex:part ?part .
-        }""")
+        }""", catalog=catalog)
 
 
 SPARQL_PUSHDOWN_DOC_SQL = f"""
@@ -610,14 +609,13 @@ def sparql_pushdown_lit(spark: SparkSession, sf_dir: str) -> DataFrame:
     column-bound object inverts to a typed source predicate evaluated at
     the scan, and every TM not emitting ex:totalPrice is eliminated —
     tests/test_pushdown_literal.py audits the physical plan."""
-    from .rewrite import answer_tabular
+    from .api import answer_auto
     mapping = MappingDocument.from_text(TPCH_KG_MAPPING)
-    return answer_tabular(spark, mapping, tpch_tables(spark, sf_dir),
-                          SPARQL_PREFIX + """
+    return answer_auto(spark, mapping, SPARQL_PREFIX + """
         SELECT ?o ?p WHERE {
             ?o ex:totalPrice ?p .
             FILTER(?p > 200000.0)
-        } ORDER BY ?o""")
+        } ORDER BY ?o""", tables=tpch_tables(spark, sf_dir))
 
 
 SPARQL_PUSHDOWN_LIT_SQL = f"""
@@ -634,14 +632,13 @@ def sparql_pushdown_seg(spark: SparkSession, sf_dir: str) -> DataFrame:
     "BUILDING" inverts to a rendered-lexical equality on the customer
     scan (mirror of the trim+encode_literal+escape pipeline — sound and
     exact), orders/nation/region are never read."""
-    from .rewrite import answer_tabular
+    from .api import answer_auto
     mapping = MappingDocument.from_text(TPCH_KG_MAPPING)
-    return answer_tabular(spark, mapping, tpch_tables(spark, sf_dir),
-                          SPARQL_PREFIX + """
+    return answer_auto(spark, mapping, SPARQL_PREFIX + """
         SELECT ?c ?n WHERE {
             ?c ex:segment "BUILDING" .
             ?c ex:name ?n .
-        } ORDER BY ?c""")
+        } ORDER BY ?c""", tables=tpch_tables(spark, sf_dir))
 
 
 SPARQL_PUSHDOWN_SEG_SQL = f"""
@@ -662,15 +659,14 @@ def sparql_pushdown_regex(spark: SparkSession, sf_dir: str) -> DataFrame:
     conditions when binding triple patterns to candidate term maps,
     MorphBaseTriplePatternBinder).  Nation/region/orders are never read
     (class pattern + disjoint subject spaces)."""
-    from .rewrite import answer_tabular
+    from .api import answer_auto
     mapping = MappingDocument.from_text(TPCH_KG_MAPPING)
-    return answer_tabular(spark, mapping, tpch_tables(spark, sf_dir),
-                          SPARQL_PREFIX + """
+    return answer_auto(spark, mapping, SPARQL_PREFIX + """
         SELECT ?c ?n WHERE {
             ?c ex:name ?n . ?c a ex:Customer .
             FILTER(regex(STR(?n), "^Customer#000000[0-9]*1$")
                    && isLiteral(?n))
-        } ORDER BY ?c""")
+        } ORDER BY ?c""", tables=tpch_tables(spark, sf_dir))
 
 
 SPARQL_PUSHDOWN_REGEX_SQL = f"""
@@ -728,11 +724,11 @@ def sparql_pushdown_doclit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Object-literal constant pushdown on the DOCUMENT tier: "P" inverts
     to the internal $renderIn find() operator (render-mirror membership)
     composed into the source filter — stays json-native compilable."""
-    from .rewrite import answer_documents
+    from .api import answer_auto
     mapping = MappingDocument.from_text(ORDERDOC_FLAT_MAPPING)
-    return answer_documents(spark, mapping, orderflat_catalog(spark, sf_dir),
-                            SPARQL_PREFIX + """
-        SELECT ?s WHERE { ?s ex:status "P" } ORDER BY ?s""")
+    return answer_auto(spark, mapping, SPARQL_PREFIX + """
+        SELECT ?s WHERE { ?s ex:status "P" } ORDER BY ?s""",
+                       catalog=orderflat_catalog(spark, sf_dir))
 
 
 SPARQL_PUSHDOWN_DOCLIT_SQL = f"""
@@ -746,12 +742,11 @@ def sparql_pushdown_doccmp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Numeric comparison FILTER pushdown on the DOCUMENT tier: the
     $numCmp find() operator (try_cast value predicate) prunes documents
     at the scan."""
-    from .rewrite import answer_documents
+    from .api import answer_auto
     mapping = MappingDocument.from_text(ORDERDOC_FLAT_MAPPING)
-    return answer_documents(spark, mapping, orderflat_catalog(spark, sf_dir),
-                            SPARQL_PREFIX + """
+    return answer_auto(spark, mapping, SPARQL_PREFIX + """
         SELECT ?s ?c WHERE { ?s ex:cust ?c . FILTER(?c < 10) }
-        ORDER BY ?s""")
+        ORDER BY ?s""", catalog=orderflat_catalog(spark, sf_dir))
 
 
 SPARQL_PUSHDOWN_DOCCMP_SQL = f"""
@@ -827,12 +822,11 @@ def sparql_pushdown_docseg(spark: SparkSession, sf_dir: str) -> DataFrame:
     into the unconstrained second pattern — ONE filtered collection
     scan instead of a full scan (the tabular tier's bind_m analogue,
     now on documents)."""
-    from .rewrite import answer_documents
+    from .api import answer_auto
     mapping = MappingDocument.from_text(ORDERDOC_FLAT_MAPPING)
-    return answer_documents(spark, mapping, orderflat_catalog(spark, sf_dir),
-                            SPARQL_PREFIX + """
+    return answer_auto(spark, mapping, SPARQL_PREFIX + """
         SELECT ?s ?c WHERE { ?s ex:status "F" . ?s ex:cust ?c }
-        ORDER BY ?s""")
+        ORDER BY ?s""", catalog=orderflat_catalog(spark, sf_dir))
 
 
 SPARQL_PUSHDOWN_DOCSEG_SQL = f"""
@@ -849,14 +843,13 @@ def sparql_pushdown_docpat(spark: SparkSession, sf_dir: str) -> DataFrame:
     (rendered-lexical pattern mirror, nt-escaped like the engine's
     lexical; numeric canonical arm) — json-native plan, documents
     pruned at the scan."""
-    from .rewrite import answer_documents
+    from .api import answer_auto
     mapping = MappingDocument.from_text(ORDERDOC_FLAT_MAPPING)
-    return answer_documents(spark, mapping, orderflat_catalog(spark, sf_dir),
-                            SPARQL_PREFIX + """
+    return answer_auto(spark, mapping, SPARQL_PREFIX + """
         SELECT ?s ?c WHERE {
             ?s ex:priority ?c .
             FILTER STRSTARTS(STR(?c), "1-URG")
-        } ORDER BY ?s""")
+        } ORDER BY ?s""", catalog=orderflat_catalog(spark, sf_dir))
 
 
 SPARQL_PUSHDOWN_DOCPAT_SQL = f"""
@@ -873,12 +866,11 @@ def sparql_topk_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY + LIMIT compiles to TakeOrderedAndProject directly over the
     one filtered orders scan — zero shuffles
     (tests/test_round6_plans.py audits the plan)."""
-    from .rewrite import answer_tabular
+    from .api import answer_auto
     mapping = MappingDocument.from_text(TPCH_KG_MAPPING)
-    return answer_tabular(spark, mapping, tpch_tables(spark, sf_dir),
-                          SPARQL_PREFIX + """
+    return answer_auto(spark, mapping, SPARQL_PREFIX + """
         SELECT ?o ?p WHERE { ?o ex:totalPrice ?p }
-        ORDER BY ?o LIMIT 25""")
+        ORDER BY ?o LIMIT 25""", tables=tpch_tables(spark, sf_dir))
 
 
 # ORDER BY sorts the BRACKET-LESS IRI string (SPARQL §15.4 compares
@@ -905,13 +897,12 @@ def sparql_agg_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tests/test_agg_pushdown.py): float addition reassociates across
     engines, so a cross-engine hash gate pins only the exact
     aggregates."""
-    from .rewrite import answer_tabular
+    from .api import answer_auto
     mapping = MappingDocument.from_text(TPCH_KG_MAPPING)
-    return answer_tabular(spark, mapping, tpch_tables(spark, sf_dir),
-                          SPARQL_PREFIX + """
+    return answer_auto(spark, mapping, SPARQL_PREFIX + """
         SELECT ?seg (COUNT(*) AS ?n) (MIN(?b) AS ?lo) (MAX(?b) AS ?hi)
         WHERE { ?c ex:segment ?seg . ?c ex:acctbal ?b }
-        GROUP BY ?seg ORDER BY ?seg""")
+        GROUP BY ?seg ORDER BY ?seg""", tables=tpch_tables(spark, sf_dir))
 
 
 SPARQL_AGG_SQL = """
@@ -933,14 +924,12 @@ def sparql_agg_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     json-native collection scan — one scan, no per-POM union, no dedup
     exchange, map-side partial aggregation.  COUNT and MIN/MAX over the
     integer customer key are hash-exact across engines."""
-    from .rewrite import answer_documents
+    from .api import answer_auto
     mapping = MappingDocument.from_text(ORDERDOC_FLAT_MAPPING)
-    return answer_documents(spark, mapping,
-                            orderflat_catalog(spark, sf_dir),
-                            SPARQL_PREFIX + """
+    return answer_auto(spark, mapping, SPARQL_PREFIX + """
         SELECT ?pr (COUNT(*) AS ?n) (MIN(?c) AS ?lo) (MAX(?c) AS ?hi)
         WHERE { ?o ex:priority ?pr . ?o ex:cust ?c }
-        GROUP BY ?pr ORDER BY ?pr""")
+        GROUP BY ?pr ORDER BY ?pr""", catalog=orderflat_catalog(spark, sf_dir))
 
 
 SPARQL_AGG_DOC_SQL = """
@@ -967,13 +956,12 @@ def sparql_agg_optional(spark: SparkSession, sf_dir: str) -> DataFrame:
     with at most its own row's optional value.  Reference parity:
     OPTIONAL evaluates in Jena over the materialized model
     (MorphMongoQueryProcessor.scala:45-150)."""
-    from .rewrite import answer_tabular
+    from .api import answer_auto
     mapping = MappingDocument.from_text(TPCH_KG_MAPPING)
-    return answer_tabular(spark, mapping, tpch_tables(spark, sf_dir),
-                          SPARQL_PREFIX + """
+    return answer_auto(spark, mapping, SPARQL_PREFIX + """
         SELECT ?seg (COUNT(?seg) AS ?nseg) (COUNT(*) AS ?n)
         WHERE { ?s ex:name ?nm . OPTIONAL { ?s ex:segment ?seg } }
-        GROUP BY ?seg ORDER BY ?seg""")
+        GROUP BY ?seg ORDER BY ?seg""", tables=tpch_tables(spark, sf_dir))
 
 
 SPARQL_AGG_OPTIONAL_SQL = """
@@ -1000,13 +988,12 @@ def sparql_agg_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     them under ONE aggregate -- two pruned scans, no materialized KG,
     no dedup exchange.  Reference parity: UNION evaluates in Jena over
     the materialized model (MorphMongoQueryProcessor.scala:45-150)."""
-    from .rewrite import answer_tabular
+    from .api import answer_auto
     mapping = MappingDocument.from_text(TPCH_KG_MAPPING)
-    return answer_tabular(spark, mapping, tpch_tables(spark, sf_dir),
-                          SPARQL_PREFIX + """
+    return answer_auto(spark, mapping, SPARQL_PREFIX + """
         SELECT ?x (COUNT(*) AS ?n)
         WHERE { { ?c ex:segment ?x } UNION { ?o ex:status ?x } }
-        GROUP BY ?x ORDER BY ?x""")
+        GROUP BY ?x ORDER BY ?x""", tables=tpch_tables(spark, sf_dir))
 
 
 SPARQL_AGG_UNION_SQL = """
@@ -1032,16 +1019,15 @@ def sparql_agg_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     (SUM/AVG stay in the differential battery -- float reassociation).
     Reference parity: subqueries evaluate in Jena over the materialized
     model (MorphMongoQueryProcessor.scala:45-150)."""
-    from .rewrite import answer_tabular
+    from .api import answer_auto
     mapping = MappingDocument.from_text(TPCH_KG_MAPPING)
-    return answer_tabular(spark, mapping, tpch_tables(spark, sf_dir),
-                          SPARQL_PREFIX + """
+    return answer_auto(spark, mapping, SPARQL_PREFIX + """
         SELECT ?name ?k WHERE {
           ?c ex:name ?name .
           { SELECT ?c (COUNT(*) AS ?k)
             WHERE { ?o ex:placedBy ?c } GROUP BY ?c }
           FILTER(?k >= 15)
-        } ORDER BY ?name""")
+        } ORDER BY ?name""", tables=tpch_tables(spark, sf_dir))
 
 
 SPARQL_AGG_SUBQUERY_SQL = """
@@ -1064,15 +1050,14 @@ def sparql_agg_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     Counts are hash-exact cross-engine.  Reference parity: EXISTS
     evaluates in Jena over the materialized model
     (MorphMongoQueryProcessor.scala:45-150)."""
-    from .rewrite import answer_tabular
+    from .api import answer_auto
     mapping = MappingDocument.from_text(TPCH_KG_MAPPING)
-    return answer_tabular(spark, mapping, tpch_tables(spark, sf_dir),
-                          SPARQL_PREFIX + """
+    return answer_auto(spark, mapping, SPARQL_PREFIX + """
         SELECT ?seg (COUNT(*) AS ?n) WHERE {
           ?c ex:segment ?seg .
           FILTER EXISTS { ?o ex:placedBy ?c . ?o ex:totalPrice ?p .
                           FILTER(?p > 300000) }
-        } GROUP BY ?seg ORDER BY ?seg""")
+        } GROUP BY ?seg ORDER BY ?seg""", tables=tpch_tables(spark, sf_dir))
 
 
 SPARQL_AGG_EXISTS_SQL = """
@@ -1142,12 +1127,11 @@ def sparql_graph_quads(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph; region names stay in the default graph and must NOT match.
     Reference: subject/POM graph emission,
     MorphRDBDataTranslator.scala:95-130 and 140-178."""
-    from .rewrite import answer_tabular
+    from .api import answer_auto
     mapping = MappingDocument.from_text(GRAPH_KG_MAPPING)
-    return answer_tabular(spark, mapping, tpch_tables(spark, sf_dir),
-                          SPARQL_PREFIX + """
+    return answer_auto(spark, mapping, SPARQL_PREFIX + """
         SELECT ?g ?n WHERE { GRAPH ?g { ?s ex:name ?n } }
-        ORDER BY ?g ?n""")
+        ORDER BY ?g ?n""", tables=tpch_tables(spark, sf_dir))
 
 
 SPARQL_GRAPH_QUADS_SQL = f"""
@@ -1167,12 +1151,12 @@ def sparql_from_dataset(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph becomes the merge of the FROM graphs, and the graph-template
     inversion turns the clause into a source row constraint — the
     nation scan carries EqualTo(n_regionkey,2), region is never read."""
-    from .rewrite import answer_tabular
+    from .api import answer_auto
     mapping = MappingDocument.from_text(GRAPH_KG_MAPPING)
-    return answer_tabular(spark, mapping, tpch_tables(spark, sf_dir),
-                          SPARQL_PREFIX + """
+    return answer_auto(spark, mapping, SPARQL_PREFIX + """
         SELECT ?s ?n FROM <http://example.org/g/2>
-        WHERE { ?s ex:name ?n } ORDER BY ?s ?n""")
+        WHERE { ?s ex:name ?n } ORDER BY ?s ?n""",
+                       tables=tpch_tables(spark, sf_dir))
 
 
 SPARQL_FROM_DATASET_SQL = f"""

@@ -123,7 +123,7 @@ class PredicateObjectMap:
 
 @dataclass
 class LogicalSource:
-    kind: str                            # "query" | "table"
+    kind: str                            # "query" | "table" | "sql"
     value: str                           # query string or table name
     ref_formulation: str = NS.REFFORM_JSONPATH
     iterator: Optional[str] = None
@@ -134,6 +134,10 @@ class LogicalSource:
         """Identity used for scan reuse / query-result caching
         (MorphMongoDataSourceReader.makeQueryMapId)."""
         return f"{self.kind}:{self.value}"
+
+    def is_find(self) -> bool:
+        """A MongoDB ``db.<coll>.find(...)`` query (MongoDBQuery.scala)."""
+        return self.kind == "query" and self.value.lstrip().startswith("db.")
 
 
 @dataclass

@@ -18,7 +18,7 @@ double→xsd:decimal, boolean→xsd:boolean —
 MorphMongoDataTranslator.scala:403-419), so both compilers emit identical
 triples; tests assert it.
 
-``compilable(tm)`` decides eligibility; ``materialize_auto`` can route
+``compilable(tm)`` decides eligibility; ``api.route_tier`` routes a TM
 through here before falling back to the Python document stage.
 """
 
@@ -61,7 +61,7 @@ def compilable(tm: TriplesMap) -> bool:
     ls = tm.logical_source
     if ls.kind not in ("query",):
         return False
-    if ls.value.lstrip().startswith("db."):
+    if ls.is_find():
         from .model import parse_mongo_query
         from .sources import mongo_filter_native_ok
         try:
@@ -228,7 +228,7 @@ def _merge_type(a, b):
         return a
     # long/double mixed in one field: reading both as double would emit
     # "3.0"^^xsd:decimal where the document engine emits "3"^^xsd:integer
-    # — flagged as unsafe so materialize_auto falls back to the document
+    # — flagged as unsafe so api.route_tier falls back to the document
     # compiler for this TM instead of silently drifting
     raise SchemaConflict(f"conflicting JSON types {a} vs {b}")
 
@@ -457,7 +457,7 @@ class JsonNativeCompiler:
         # record where the sample could NOT pin a safe type: a leaf never
         # observed (its true type is unknown — a later long would silently
         # become a plain-literal string) or observed with conflicting
-        # types.  materialize_auto uses this to fall back to the document
+        # types.  api.route_tier uses this to fall back to the document
         # compiler rather than risk dropped/drifting triples at row
         # sample_n+1.
         unsafe: list[str] = []

@@ -23,9 +23,10 @@ scan every source first.  This module closes that gap:
    subject spaces, AND-strengthening under provably-unique subjects —
    the reference's bind_m reduction, r5);
 4. the surviving constraints become native `.where` predicates on the
-   tabular scans (pushed to parquet as PushedFilters) or compose into
+   native-tier scans (pushed to parquet as PushedFilters) or compose into
    the mapping's `find()` filter for document sources (internal
-   `$lexIn` / `$renderIn` / `$numCmp` operators, natively compilable).
+   `$lexIn` / `$renderIn` / `$numCmp` operators, natively compilable) --
+   `constrained_plan`, applied by `api.answer_auto`'s routed plan.
 
 Soundness: the derived filters only PRUNE source rows that provably
 cannot generate any pattern-matching triple; the SPARQL evaluator then
@@ -47,7 +48,7 @@ import json
 import re
 from typing import Optional, Union
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 from . import namespaces as NS
 from .functions.templates import get_template_groups
@@ -1259,7 +1260,6 @@ def derive_tm_constraints(mapping: MappingDocument,
     return out
 
 
-
 def _eng_answer(spark: SparkSession, eng: SparqlEngine, q: SelectQuery):
     """Dispatch a parsed query against an engine: CONSTRUCT/DESCRIBE and
     SELECT return binding/triple DataFrames; ASK returns a one-row
@@ -1273,50 +1273,7 @@ def _eng_answer(spark: SparkSession, eng: SparqlEngine, q: SelectQuery):
 
 
 # ---------------------------------------------------------------------------
-# Tabular (native-compiler) answering
-# ---------------------------------------------------------------------------
-
-def answer_tabular(spark: SparkSession, mapping: MappingDocument,
-                   tables: dict[str, DataFrame], query_text,
-                   cfg=None, **engine_kw) -> DataFrame:
-    """Answer SPARQL over an R2RML/tabular mapping with subject-constant
-    pushdown: derived constraints become `.where` predicates on the TM
-    scans (visible as parquet PushedFilters) and fully-excluded TMs are
-    dropped from the plan, so a point query touches one table instead of
-    materializing the whole KG."""
-    from .native import NativeCompiler
-    q = query_text if isinstance(query_text, SelectQuery) \
-        else parse_sparql(query_text)
-    if not engine_kw:
-        # aggregate/DISTINCT pushdown (aggpush.py): when bindings
-        # provably equal source rows, a GROUP BY compiles straight onto
-        # the scan -- no triple pool, no term render before the
-        # aggregate's own exchange.  None = out of shape / unprovable.
-        from .aggpush import try_aggregate_pushdown
-        fast = try_aggregate_pushdown(spark, mapping, tables, q, cfg)
-        if fast is not None:
-            return fast
-    constraints = derive_tm_constraints(mapping, q, tables)
-    tm_row_filters = {n: c for n, c in constraints.items()
-                      if c is not None and c}
-    tm_skip = {n for n, c in constraints.items()
-               if c is not None and not c}
-    compiler = NativeCompiler(spark, mapping, tables, cfg,
-                              fuse_projections=False,
-                              tm_row_filters=tm_row_filters,
-                              tm_skip=tm_skip)
-    # provably duplicate-free plan (r5 uniqueness proofs): skip the
-    # evaluator's per-pattern dropDuplicates — a top-k query then
-    # compiles to TakeOrderedAndProject directly over the filtered
-    # scan, with no exchange at all (r6)
-    eng = SparqlEngine(compiler.triples(dedup=False),
-                       dedup_source=not compiler.provably_distinct(),
-                       **engine_kw)
-    return _eng_answer(spark, eng, q)
-
-
-# ---------------------------------------------------------------------------
-# Document (find-filter) answering
+# Per-source constraint application (find() composition, row filters)
 # ---------------------------------------------------------------------------
 
 def _doc_field_for_ref(tm: TriplesMap, ref: str) -> Optional[str]:
@@ -1399,42 +1356,38 @@ def _conj_to_find(tm: TriplesMap, conj: dict,
 def constrained_plan(mapping: MappingDocument, constraints: dict,
                      push_render: bool = True
                      ) -> tuple[MappingDocument, dict]:
-    """Apply derived constraints PER TIER (r6 — the analogue of the
+    """Apply derived constraints per source (r6 -- the analogue of the
     reference's per-source condition generation: the runner factory
-    instantiates one translator per source,
-    MorphRDBUnfolder.scala:65-97 for the RDB conditions and
-    MorphMongoDataSourceReader.scala:52-70 for the Mongo ones).
+    instantiates one translator per source, MorphRDBUnfolder.scala:65-97
+    for the RDB conditions and MorphMongoDataSourceReader.scala:52-70
+    for the Mongo ones).
 
-    Returns ``(m2, tm_row_filters)``: a deep-copied mapping where
-      - fully-excluded TMs of ANY tier are removed,
-      - document TMs' constraints are composed into their find() filter
-        (internal $lexIn/$renderIn/$numCmp operators, natively
-        compilable),
-    and ``tm_row_filters`` carries the tabular TMs' constraints for
-    ``NativeCompiler`` (``.where`` on the scan → parquet PushedFilters).
-    TMs referenced as ROM parents keep their full scan (the parent side
-    of a join must stay complete)."""
-    m2 = copy.deepcopy(mapping)
+    Returns ``(m2, tm_row_filters)``:
+      - ``m2``: the mapping with each ``db.*.find`` TM's constraints
+        composed into its find() filter (internal $lexIn/$renderIn/
+        $numCmp operators, natively compilable) -- a deep copy when any
+        filter changes.  ROM parents keep their full find() (the parent
+        side of a join must stay complete);
+      - ``tm_row_filters``: every other constrained TM's constraints,
+        for NativeCompiler (``.where`` on the TM's own scan -> parquet
+        PushedFilters).  Only native-tier TMs read them; a TM on another
+        tier scans in full.
+    A TM whose constraint is ``[]`` is left alone: the caller skips it."""
     rom_parents = {rom.parent_tm
-                   for tm in m2.triples_maps.values()
+                   for tm in mapping.triples_maps.values()
                    for pom in tm.predicate_object_maps
                    for rom in pom.ref_object_maps}
     row_filters: dict = {}
-    for name in list(m2.triples_maps):
+    finds: dict = {}
+    for name, tm in mapping.triples_maps.items():
         c = constraints.get(name)
-        if c is None or name in rom_parents:
-            continue
-        tm = m2.triples_maps[name]
         if not c:
-            # TM provably generates no pattern-matching triple — drop it
-            # whatever its tier
-            del m2.triples_maps[name]
             continue
-        if tm.logical_source.kind == "table":
+        if not tm.logical_source.is_find():
             row_filters[name] = c
             continue
-        if tm.logical_source.kind != "query":
-            continue    # rr:sqlQuery sources: full scan stays sound
+        if name in rom_parents:
+            continue
         ors = [f for f in (_conj_to_find(tm, conj, push_render)
                            for conj in c)
                if f is not None]
@@ -1445,102 +1398,9 @@ def constrained_plan(mapping: MappingDocument, constraints: dict,
         from .mongo_filter import parse_filter
         orig = parse_filter(ftext)
         new = derived if not orig else {"$and": [orig, derived]}
-        tm.logical_source.value = f"db.{coll}.find({json.dumps(new)})"
-    return m2, row_filters
-
-
-def plan_provably_distinct(spark: SparkSession, mapping: MappingDocument,
-                           tables: dict[str, DataFrame]) -> bool:
-    """Duplicate-freeness proof for a MIXED relational+document plan
-    (r6): the tabular side via NativeCompiler.provably_distinct (doc TMs
-    skipped), the document side via provably_distinct_json (tabular TMs
-    skipped), plus cross-TIER pairwise disjointness (subject spaces or
-    constant predicate sets).  Used by answer_auto's mixed branch to
-    drop the evaluator's per-pattern dedup."""
-    from .native import (NativeCompiler, is_tabular_compilable,
-                         subject_space, subject_spaces_disjoint)
-    from .native_json import provably_distinct_json
-    tab, doc = [], []
-    for name, tm in mapping.triples_maps.items():
-        if tm.logical_source.kind == "table" \
-                and tm.logical_source.value in tables \
-                and is_tabular_compilable(tm):
-            tab.append((name, tm))
-        elif tm.logical_source.kind == "query":
-            doc.append((name, tm))
-        else:
-            return False
-    for _n, tm in tab:
-        # the tabular proof's ROM reasoning assumes tabular parents
-        for pom in tm.predicate_object_maps:
-            for rom in pom.ref_object_maps:
-                parent = mapping.triples_maps[rom.parent_tm]
-                if parent.logical_source.kind != "table":
-                    return False
-    if doc and not provably_distinct_json(
-            mapping, skip=frozenset(n for n, _ in tab)):
-        return False
-    if tab:
-        nc = NativeCompiler(spark, mapping, tables,
-                            tm_skip={n for n, _ in doc})
-        if not nc.provably_distinct():
-            return False
-    for _n1, t1 in tab:
-        for _n2, t2 in doc:
-            s1, s2 = subject_space(t1), subject_space(t2)
-            if s1 is not None and s2 is not None \
-                    and subject_spaces_disjoint(s1, s2):
-                continue
-            p1, p2 = tm_pred_iris(t1), tm_pred_iris(t2)
-            if p1 is not None and p2 is not None and not (p1 & p2):
-                continue
-            return False
-    return True
-
-
-def constrained_mapping(mapping: MappingDocument, constraints: dict,
-                        push_render: bool = True) -> MappingDocument:
-    """Deep-copied mapping with derived constraints composed into each
-    document TM's find() filter; fully-excluded TMs are removed (see
-    constrained_plan — this keeps the document-only surface)."""
-    return constrained_plan(mapping, constraints, push_render)[0]
-
-
-def answer_documents(spark: SparkSession, mapping: MappingDocument,
-                     catalog, query_text, cfg=None,
-                     **engine_kw) -> DataFrame:
-    """Answer SPARQL over a document mapping with find()-filter pushdown:
-    the restricted mapping routes through materialize_auto (json-native
-    tier keeps the composed filter as Column predicates on the scan)."""
-    from .api import materialize_auto
-    from .translate import EngineConfig
-    q = query_text if isinstance(query_text, SelectQuery) \
-        else parse_sparql(query_text)
-    if not engine_kw:
-        # aggregate/DISTINCT pushdown, document tier (aggpush.py): the
-        # GROUP BY compiles straight onto the json-native collection
-        # scan when bindings provably equal documents
-        from .aggpush import try_aggregate_pushdown_documents
-        fast = try_aggregate_pushdown_documents(spark, mapping, catalog,
-                                                q, cfg)
-        if fast is not None:
-            return fast
-    constraints = derive_tm_constraints(mapping, q)
-    eff = cfg or EngineConfig()
-    # the $renderIn mirror assumes the DEFAULT literal render pipeline
-    push_render = eff.literal_trim and not eff.encode_literal_quotes
-    m2 = constrained_mapping(mapping, constraints, push_render)
-    if not m2.triples_maps:
-        from .engine import TRIPLE_SCHEMA
-        triples = spark.createDataFrame([], TRIPLE_SCHEMA)
-    else:
-        # unfused branches (constant pred per union branch) so the
-        # evaluator's per-pattern pred filter prunes non-matching
-        # collection scans out of the plan (NativeCompiler twin)
-        triples = materialize_auto(spark, m2, catalog=catalog, cfg=cfg,
-                                   dedup=False, fuse_projections=False)
-    from .native_json import provably_distinct_json
-    eng = SparqlEngine(triples,
-                       dedup_source=not provably_distinct_json(m2),
-                       **engine_kw)
-    return _eng_answer(spark, eng, q)
+        finds[name] = f"db.{coll}.find({json.dumps(new)})"
+    if finds:
+        mapping = copy.deepcopy(mapping)
+        for name, value in finds.items():
+            mapping.triples_maps[name].logical_source.value = value
+    return mapping, row_filters

@@ -317,7 +317,7 @@ class SourceCatalog:
     # -- resolution --------------------------------------------------------
     def resolve(self, ls: LogicalSource) -> tuple[DataFrame, bool]:
         """LogicalSource → (docs DataFrame(content, _seq), is_tabular)."""
-        if ls.kind == "query" and ls.value.lstrip().startswith("db."):
+        if ls.is_find():
             coll, filter_text = parse_mongo_query(ls.value)
             if coll not in self._collections:
                 raise KeyError(f"Collection {coll!r} not registered; have "

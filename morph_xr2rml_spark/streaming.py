@@ -69,7 +69,7 @@ def stream_triples(mapping: MappingDocument, stream_df: DataFrame,
         tm_src = src.select("content", "_seq")
         py_filter = None
         ls = tm.logical_source
-        if ls.kind == "query" and ls.value.lstrip().startswith("db."):
+        if ls.is_find():
             coll, filter_text = parse_mongo_query(ls.value)
             colls.add(coll)
             native_cond = mongo_filter_to_column(filter_text, "content")

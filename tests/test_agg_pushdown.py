@@ -2,7 +2,7 @@
 (aggpush.py, round 6).
 
 Every battery query is answered twice:
-  (a) through answer_tabular — which takes the aggregate fast path when
+  (a) through answer_auto — which takes the aggregate fast path when
       the bindings==rows proof holds;
   (b) over the full un-rewritten plan (NativeCompiler triples +
       SparqlEngine) with evaluator-side aggregation.
@@ -18,11 +18,11 @@ single-pattern DISTINCT case, which is sound without any uniqueness.
 
 import pytest
 
-from morph_xr2rml_spark.aggpush import try_aggregate_pushdown
+from morph_xr2rml_spark.aggpush import try_aggregate_pushdown_auto
+from morph_xr2rml_spark.api import answer_auto
 from morph_xr2rml_spark.examples import TPCH_KG_MAPPING, tpch_tables
 from morph_xr2rml_spark.model import MappingDocument
 from morph_xr2rml_spark.native import NativeCompiler
-from morph_xr2rml_spark.rewrite import answer_tabular
 from morph_xr2rml_spark.sparql import SparqlEngine, parse_sparql
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -344,7 +344,7 @@ def env(spark):
 def test_pushed_equals_evaluator(spark, env, qi):
     mapping, tables, engine = env
     q, _push = QUERIES[qi]
-    fast = _norm(answer_tabular(spark, mapping, tables, P + q).collect())
+    fast = _norm(answer_auto(spark, mapping, P + q, tables=tables).collect())
     slow = _norm(engine.sql(P + q).collect())
     assert fast == slow, f"divergence on: {q}"
 
@@ -353,8 +353,8 @@ def test_pushed_equals_evaluator(spark, env, qi):
 def test_engagement(spark, env, qi):
     mapping, tables, _engine = env
     q, push = QUERIES[qi]
-    got = try_aggregate_pushdown(spark, mapping, tables,
-                                 parse_sparql(P + q))
+    got = try_aggregate_pushdown_auto(spark, mapping, parse_sparql(P + q),
+                                      tables=tables)
     assert (got is not None) == push, q
 
 
@@ -437,7 +437,8 @@ def test_having_without_aggref_refuses(spark, env):
     q = parse_sparql(P + "SELECT DISTINCT ?seg WHERE "
                          "{ ?c ex:segment ?seg } GROUP BY ?seg "
                          "HAVING (?seg > \"A\")")
-    assert try_aggregate_pushdown(spark, mapping, tables, q) is None
+    assert try_aggregate_pushdown_auto(spark, mapping, q,
+                                       tables=tables) is None
 
 
 def test_unbound_filter_var_refuses(spark, env):
@@ -446,7 +447,8 @@ def test_unbound_filter_var_refuses(spark, env):
     mapping, tables, _e = env
     q = parse_sparql(P + "SELECT (COUNT(*) AS ?n) WHERE "
                          "{ ?c ex:segment ?seg . FILTER(?other > 1) }")
-    assert try_aggregate_pushdown(spark, mapping, tables, q) is None
+    assert try_aggregate_pushdown_auto(spark, mapping, q,
+                                       tables=tables) is None
 
 
 def test_no_uniqueref_refuses_aggregates_allows_distinct(spark, env):
@@ -454,14 +456,16 @@ def test_no_uniqueref_refuses_aggregates_allows_distinct(spark, env):
     mapping = MappingDocument.from_text(NO_UNIQUE_MAPPING)
     agg = parse_sparql(P + "SELECT (COUNT(*) AS ?n) WHERE "
                            "{ ?c ex:segment ?s }")
-    assert try_aggregate_pushdown(spark, mapping, tables, agg) is None
+    assert try_aggregate_pushdown_auto(spark, mapping, agg,
+                                       tables=tables) is None
     multi = parse_sparql(P + "SELECT DISTINCT ?s WHERE "
                              "{ ?c ex:segment ?s . ?c ex:name ?n }")
-    assert try_aggregate_pushdown(spark, mapping, tables, multi) is None
+    assert try_aggregate_pushdown_auto(spark, mapping, multi,
+                                       tables=tables) is None
     # single-pattern DISTINCT is sound with no uniqueness proof at all
     single = parse_sparql(P + "SELECT DISTINCT ?s WHERE "
                               "{ ?c ex:segment ?s }")
-    pushed = try_aggregate_pushdown(spark, mapping, tables, single)
+    pushed = try_aggregate_pushdown_auto(spark, mapping, single, tables=tables)
     assert pushed is not None
     full = NativeCompiler(spark, mapping, tables,
                           fuse_projections=False).triples(dedup=False)
@@ -475,8 +479,8 @@ def test_overlapping_subject_spaces_refuse(spark, env):
     mapping = MappingDocument.from_text(OVERLAP_MAPPING)
     for q in ("SELECT (COUNT(*) AS ?n) WHERE { ?t ex:label ?l }",
               "SELECT DISTINCT ?l WHERE { ?t ex:label ?l }"):
-        assert try_aggregate_pushdown(
-            spark, mapping, tables, parse_sparql(P + q)) is None
+        assert try_aggregate_pushdown_auto(spark, mapping, parse_sparql(P + q),
+                                           tables=tables) is None
 
 
 def test_same_pred_second_slot_refuses(spark, env):
@@ -484,7 +488,8 @@ def test_same_pred_second_slot_refuses(spark, env):
     mapping = MappingDocument.from_text(TWO_SLOT_MAPPING)
     q = parse_sparql(P + "SELECT (COUNT(*) AS ?n) WHERE "
                          "{ ?c ex:label ?l }")
-    assert try_aggregate_pushdown(spark, mapping, tables, q) is None
+    assert try_aggregate_pushdown_auto(spark, mapping, q,
+                                       tables=tables) is None
 
 
 # ---------------------------------------------------------------------------
@@ -569,7 +574,7 @@ class AggGen:
 def test_fuzz_agg_pushed_equals_evaluator(spark, env, seed):
     mapping, tables, engine = env
     q = P + AggGen(seed).build()
-    fast = _norm(answer_tabular(spark, mapping, tables, q).collect())
+    fast = _norm(answer_auto(spark, mapping, q, tables=tables).collect())
     slow = _norm(engine.sql(q).collect())
     assert fast == slow, f"divergence (seed {seed}) on:\n{q}"
 
@@ -690,7 +695,7 @@ class RichAggGen:
 def test_fuzz_rich_pushed_equals_evaluator(spark, env, seed):
     mapping, tables, engine = env
     q = P + RichAggGen(seed).build()
-    fast = _norm(answer_tabular(spark, mapping, tables, q).collect())
+    fast = _norm(answer_auto(spark, mapping, q, tables=tables).collect())
     slow = _norm(engine.sql(q).collect())
     assert fast == slow, f"divergence (seed {seed}) on:\n{q}"
 
@@ -699,13 +704,10 @@ def test_fuzz_rich_pushed_equals_evaluator(spark, env, seed):
 # Document tier: GROUP BY straight onto the json-native collection scan
 # ---------------------------------------------------------------------------
 
-from morph_xr2rml_spark.aggpush import (try_aggregate_pushdown_auto,
-                                        try_aggregate_pushdown_documents)
-from morph_xr2rml_spark.api import answer_auto, materialize_auto
+from morph_xr2rml_spark.api import materialize_auto
 from morph_xr2rml_spark.examples import (MIXED_KG_MAPPING,
                                          ORDERDOC_FLAT_MAPPING,
                                          orderflat_catalog)
-from morph_xr2rml_spark.rewrite import answer_documents
 
 DOC_QUERIES = [
     ("SELECT ?pr (COUNT(*) AS ?n) WHERE { ?o ex:priority ?pr } "
@@ -750,8 +752,7 @@ def doc_env(spark):
 def test_doc_pushed_equals_evaluator(spark, doc_env, qi):
     mapping, catalog, engine = doc_env
     q, _push = DOC_QUERIES[qi]
-    fast = _norm(answer_documents(spark, mapping, catalog,
-                                  P + q).collect())
+    fast = _norm(answer_auto(spark, mapping, P + q, catalog=catalog).collect())
     slow = _norm(engine.sql(P + q).collect())
     assert fast == slow, f"divergence on: {q}"
 
@@ -760,16 +761,17 @@ def test_doc_pushed_equals_evaluator(spark, doc_env, qi):
 def test_doc_engagement(spark, doc_env, qi):
     mapping, catalog, _engine = doc_env
     q, push = DOC_QUERIES[qi]
-    got = try_aggregate_pushdown_documents(spark, mapping, catalog,
-                                           parse_sparql(P + q))
+    got = try_aggregate_pushdown_auto(spark, mapping, parse_sparql(P + q),
+                                      catalog=catalog)
     assert (got is not None) == push, q
 
 
 def test_doc_plan_single_scan_no_dedup(spark, doc_env):
     mapping, catalog, _e = doc_env
-    df = answer_documents(spark, mapping, catalog, P +
-                          "SELECT ?pr (COUNT(*) AS ?n) WHERE "
-                          "{ ?o ex:priority ?pr } GROUP BY ?pr")
+    df = answer_auto(spark, mapping, P +
+                     "SELECT ?pr (COUNT(*) AS ?n) WHERE "
+                     "{ ?o ex:priority ?pr } GROUP BY ?pr",
+                     catalog=catalog)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Scan parquet") == 1
     assert "dropDuplicates" not in plan and "Union" not in plan
@@ -793,8 +795,8 @@ def test_doc_iterator_refuses(spark, doc_env):
     _m, catalog, _e = doc_env
     mapping = MappingDocument.from_text(ITER_DOC_MAPPING)
     q = parse_sparql(P + "SELECT (COUNT(*) AS ?n) WHERE { ?o ex:v ?x }")
-    assert try_aggregate_pushdown_documents(spark, mapping, catalog,
-                                            q) is None
+    assert try_aggregate_pushdown_auto(spark, mapping, q,
+                                       catalog=catalog) is None
 
 
 # ---------------------------------------------------------------------------
@@ -880,10 +882,10 @@ def test_mixed_mapping_doc_only_contributor(spark, env, doc_env):
 
 def test_plan_single_scan_pruned_schema(spark, env):
     mapping, tables, _e = env
-    df = answer_tabular(spark, mapping, tables, P +
-                        "SELECT ?seg (COUNT(*) AS ?n) (SUM(?b) AS ?s) "
-                        "WHERE { ?c ex:segment ?seg . ?c ex:acctbal ?b } "
-                        "GROUP BY ?seg")
+    df = answer_auto(spark, mapping, P +
+                     "SELECT ?seg (COUNT(*) AS ?n) (SUM(?b) AS ?s) "
+                     "WHERE { ?c ex:segment ?seg . ?c ex:acctbal ?b } "
+                     "GROUP BY ?seg", tables=tables)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Union" not in plan                      # no per-POM union
     assert "dropDuplicates" not in plan
@@ -901,10 +903,10 @@ def test_plan_join_tree_broadcast_no_render(spark, env):
     # RAW key (no term strings before the exchange), one aggregate, no
     # union, no dedup; the orders subject template is never rendered
     mapping, tables, _e = env
-    df = answer_tabular(spark, mapping, tables, P +
-                        "SELECT ?seg (COUNT(?o) AS ?n) WHERE { "
-                        "?o a ex:Order . ?o ex:placedBy ?c . "
-                        "?c ex:segment ?seg } GROUP BY ?seg")
+    df = answer_auto(spark, mapping, P +
+                     "SELECT ?seg (COUNT(?o) AS ?n) WHERE { "
+                     "?o a ex:Order . ?o ex:placedBy ?c . "
+                     "?c ex:segment ?seg } GROUP BY ?seg", tables=tables)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Scan parquet") == 2
     assert "Union" not in plan and "dropDuplicates" not in plan
@@ -920,8 +922,9 @@ def test_plan_join_tree_broadcast_no_render(spark, env):
 
 def test_plan_multi_tm_unions_three_scans(spark, env):
     mapping, tables, _e = env
-    df = answer_tabular(spark, mapping, tables, P +
-                        "SELECT (COUNT(*) AS ?n) WHERE { ?s ex:name ?x }")
+    df = answer_auto(spark, mapping, P +
+                     "SELECT (COUNT(*) AS ?n) WHERE { ?s ex:name ?x }",
+                     tables=tables)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Scan parquet") == 3          # region/nation/customer
     assert [r["n"] for r in df.collect()] == [

@@ -5,6 +5,8 @@ import json
 
 import pytest
 from fixtures_data import STUDENTS, STUDENTS_JSON
+from test_correctness_gate import SF_DIR as GATE_SF
+from test_examples_oracle import SF_DIR as ORACLE_SF
 
 from morph_xr2rml_spark.api import materialize_auto
 from morph_xr2rml_spark.local_engine import materialize_local
@@ -92,7 +94,7 @@ def test_answer_auto_routes_all_tiers(spark):
     P = "PREFIX ex: <http://example.com/>\n"
     sf = "/root/testdata/sf0.001"
 
-    # tabular → answer_tabular (TM elimination visible in the plan)
+    # tabular: native tier (TM skip visible in the plan)
     mapping = MappingDocument.from_text(TPCH_KG_MAPPING)
     df = answer_auto(spark, mapping, P +
                      "SELECT ?p ?o WHERE { <http://example.org/order/1> ?p ?o }",
@@ -101,7 +103,7 @@ def test_answer_auto_routes_all_tiers(spark):
     assert "nation.parquet" not in plan and "region.parquet" not in plan
     assert df.count() == 5
 
-    # document → answer_documents ($renderIn composed)
+    # document: find() filter ($renderIn composed)
     doc_map = MappingDocument.from_text("""
     @prefix rr:  <http://www.w3.org/ns/r2rml#> .
     @prefix xrr: <http://i3s.unice.fr/xr2rml#> .
@@ -151,3 +153,161 @@ def test_materialize_auto_all_native_eliminates_dedup(spark):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Aggregate" not in plan       # dedup exchange eliminated
     assert df.count() == 8335
+
+
+# ---------------------------------------------------------------------------
+# The one router: every TM's tier, for both modes
+# ---------------------------------------------------------------------------
+
+ROUTE_SF = ORACLE_SF
+EX = "@prefix rr: <http://www.w3.org/ns/r2rml#> .\n" \
+     "@prefix xrr: <http://i3s.unice.fr/xr2rml#> .\n" \
+     "@prefix ex: <http://example.com/> .\n"
+
+# a document TM whose sampled schema cannot pin $.v (long vs double)
+GUARDED_DOC_MAPPING = EX + """
+<#T> xrr:logicalSource [ xrr:query "db.docs.find({})" ];
+  rr:subjectMap [ rr:template "http://d/{$.id}" ];
+  rr:predicateObjectMap [ rr:predicate ex:v;
+                          rr:objectMap [ xrr:reference "$.v" ] ].
+"""
+
+# a tabular TM joined to a document parent: the ROM keeps both in one
+# compiler, so the tabular child leaves the native tier
+DOC_PARENT_MAPPING = EX + """
+<#Cust> rr:logicalTable [ rr:tableName "customer" ];
+  rr:subjectMap [ rr:template "http://example.org/customer/{c_custkey}" ];
+  rr:predicateObjectMap [ rr:predicate ex:order; rr:objectMap [
+      rr:parentTriplesMap <#Doc>;
+      rr:joinCondition [ rr:child "c_custkey"; rr:parent "$.ck" ] ] ].
+<#Doc> xrr:logicalSource [ xrr:query "db.orderflat.find({})" ];
+  rr:subjectMap [ rr:template "http://example.org/odoc/{$.ok}" ];
+  rr:predicateObjectMap [ rr:predicate ex:status;
+                          rr:objectMap [ xrr:reference "$.st" ] ].
+"""
+
+
+def _route_case(spark, case: str):
+    """(mapping, tables, catalog, expected tiers) for one router case."""
+    from morph_xr2rml_spark import examples as ex
+    tables = ex.tpch_tables(spark, ROUTE_SF)
+    if case == "tpch":
+        return (ex.TPCH_KG_MAPPING, tables, SourceCatalog(),
+                {"#Region": "native", "#Nation": "native",
+                 "#Customer": "native", "#Orders": "native"})
+    if case == "orderdocs":
+        cat = SourceCatalog().register_collection(
+            "orderdocs", ex.orderdocs_df(spark, ROUTE_SF))
+        return ex.LINEITEM_JSON_MAPPING, {}, cat, {"#Lines": "json"}
+    if case == "mixed":
+        return (ex.MIXED_KG_MAPPING, {"customer": tables["customer"]},
+                ex.orderflat_catalog(spark, ROUTE_SF),
+                {"#MCustomer": "native", "#MOrder": "json"})
+    if case == "schema_guard":
+        docs = [{"id": 1, "v": 3}, {"id": 2, "v": 3.5}]
+        cat = SourceCatalog().register_collection(
+            "docs", spark.createDataFrame([(json.dumps(d),) for d in docs],
+                                          "content string"))
+        return GUARDED_DOC_MAPPING, {}, cat, {"#T": "doc"}
+    if case == "doc_parent":
+        return (DOC_PARENT_MAPPING, {"customer": tables["customer"]},
+                ex.orderflat_catalog(spark, ROUTE_SF),
+                {"#Cust": "doc", "#Doc": "json"})
+    raise KeyError(case)
+
+
+@pytest.mark.parametrize("case", ["tpch", "orderdocs", "mixed",
+                                  "schema_guard", "doc_parent"])
+def test_router_decisions(spark, case):
+    from morph_xr2rml_spark.api import route_tier
+    from morph_xr2rml_spark.native_json import JsonNativeCompiler
+    text, tables, catalog, want = _route_case(spark, case)
+    mapping = MappingDocument.from_text(text)
+    jc = JsonNativeCompiler(spark, mapping, catalog)
+    got = {n: route_tier(mapping, tm, tables, jc)
+           for n, tm in mapping.triples_maps.items()}
+    assert got == want
+
+
+def _parquet_tables(df) -> set:
+    import re
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return {m.group(1) for line in plan.splitlines() if "FileScan" in line
+            for m in re.finditer(r"/(\w+)\.parquet", line)}
+
+
+@pytest.mark.parametrize("query", ["sparql_pushdown_point",
+                                   "sparql_pushdown_obj"])
+def test_skipped_rom_parents_are_never_read(spark, query):
+    """A TM that can match nothing is skipped on every tier, ROM parents
+    included: it stays in the mapping as a join parent but emits nothing.
+    Keeping ROM parents whole instead would also read nation and region
+    for these point queries."""
+    from morph_xr2rml_spark import examples as ex
+    df = getattr(ex, query)(spark, GATE_SF)
+    assert _parquet_tables(df) == {"orders", "customer"}
+    assert df.count() > 0
+
+
+# ---------------------------------------------------------------------------
+# The former no-pushdown fallback: a table registered only in the catalog
+# runs on the Python document tier next to a native TM
+# ---------------------------------------------------------------------------
+
+CATALOG_TABLE_MAPPING = EX + """
+<#Cust> rr:logicalTable [ rr:tableName "customer" ];
+  rr:subjectMap [ rr:template "http://example.org/customer/{c_custkey}";
+                  rr:class ex:Customer ];
+  rr:predicateObjectMap [ rr:predicate ex:name;
+                          rr:objectMap [ rr:column "c_name" ] ];
+  rr:predicateObjectMap [ rr:predicate ex:inNation; rr:objectMap [
+      rr:template "http://example.org/nation/{c_nationkey}" ] ].
+<#Nat> rr:logicalTable [ rr:tableName "nation" ];
+  rr:subjectMap [ rr:template "http://example.org/nation/{n_nationkey}";
+                  rr:class ex:Nation ];
+  rr:predicateObjectMap [ rr:predicate ex:name;
+                          rr:objectMap [ rr:column "n_name" ] ].
+"""
+
+FALLBACK_QUERIES = [
+    "SELECT ?c ?nn WHERE { ?c ex:inNation ?n . ?n ex:name ?nn . "
+    "?c ex:name ?cn . FILTER(?c = <http://example.org/customer/5>) }",
+    "SELECT ?s WHERE { ?s a ex:Nation }",
+    "ASK { <http://example.org/nation/3> ex:name ?x }",
+    "ASK { <http://example.org/nation/999> ex:name ?x }",
+    "CONSTRUCT { ?n ex:label ?x } WHERE { ?n a ex:Nation ; ex:name ?x }",
+    "DESCRIBE <http://example.org/nation/0>",
+]
+
+
+@pytest.fixture(scope="module")
+def fallback_env(spark):
+    from morph_xr2rml_spark.api import route_tier
+    from morph_xr2rml_spark.examples import tpch_tables
+    from morph_xr2rml_spark.native_json import JsonNativeCompiler
+    from morph_xr2rml_spark.sparql import SparqlEngine
+    mapping = MappingDocument.from_text(CATALOG_TABLE_MAPPING)
+    t = tpch_tables(spark, ROUTE_SF)
+    tables = {"customer": t["customer"]}
+    catalog = SourceCatalog().register_table("nation", t["nation"])
+    jc = JsonNativeCompiler(spark, mapping, catalog)
+    assert {n: route_tier(mapping, tm, tables, jc)
+            for n, tm in mapping.triples_maps.items()} == \
+        {"#Cust": "native", "#Nat": "doc"}
+    full = materialize_auto(spark, mapping, catalog=catalog, tables=tables,
+                            dedup=False)
+    return mapping, tables, catalog, SparqlEngine(full, dedup_source=True)
+
+
+@pytest.mark.parametrize("qi", range(len(FALLBACK_QUERIES)))
+def test_catalog_table_answers_equal_full_plan(spark, fallback_env, qi):
+    from morph_xr2rml_spark.api import answer_auto
+    from morph_xr2rml_spark.rewrite import _eng_answer
+    from morph_xr2rml_spark.sparql import parse_sparql
+    mapping, tables, catalog, engine = fallback_env
+    q = "PREFIX ex: <http://example.com/>\n" + FALLBACK_QUERIES[qi]
+    got = sorted(tuple(r) for r in answer_auto(
+        spark, mapping, q, catalog=catalog, tables=tables).collect())
+    want = sorted(tuple(r) for r in
+                  _eng_answer(spark, engine, parse_sparql(q)).collect())
+    assert got == want and got

@@ -8,11 +8,11 @@ graph context, so dataset clauses prune TM scans like GRAPH does."""
 
 import pytest
 
+from morph_xr2rml_spark.api import answer_auto
 from morph_xr2rml_spark.examples import (GRAPH_KG_MAPPING, SPARQL_PREFIX,
                                          tpch_tables)
 from morph_xr2rml_spark.model import MappingDocument
-from morph_xr2rml_spark.rewrite import (answer_tabular,
-                                        derive_tm_constraints)
+from morph_xr2rml_spark.rewrite import derive_tm_constraints
 from morph_xr2rml_spark.sparql import SparqlEngine, parse_sparql
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -93,7 +93,7 @@ def test_from_clause_inverts_graph_template(spark):
     cons = derive_tm_constraints(mapping, q, tables)
     assert cons["#GNation"] == [{"n_regionkey": "2"}]
     assert cons["#GRegion"] == []
-    out = [r["n"] for r in answer_tabular(spark, mapping, tables, q)
+    out = [r["n"] for r in answer_auto(spark, mapping, q, tables=tables)
            .collect()]
     assert out == ['"NATION_12"', '"NATION_17"', '"NATION_2"',
                    '"NATION_22"', '"NATION_7"']
@@ -106,7 +106,7 @@ def test_from_named_only_eliminates_default_patterns(spark):
                          "WHERE { ?s ex:name ?n }")
     cons = derive_tm_constraints(mapping, q, tables)
     assert all(c == [] for c in cons.values())
-    assert answer_tabular(spark, mapping, tables, q).count() == 0
+    assert answer_auto(spark, mapping, q, tables=tables).count() == 0
 
 
 def test_graph_outside_from_named_eliminated(spark):
@@ -115,7 +115,7 @@ def test_graph_outside_from_named_eliminated(spark):
     q = SPARQL_PREFIX + (
         "SELECT ?n FROM NAMED <http://example.com/gnames> WHERE "
         "{ GRAPH <http://example.org/g/2> { ?s ex:name ?n } }")
-    assert answer_tabular(spark, mapping, tables, q).count() == 0
+    assert answer_auto(spark, mapping, q, tables=tables).count() == 0
 
 
 def test_dataset_query_matches_full_evaluator(spark):
@@ -135,17 +135,18 @@ def test_dataset_query_matches_full_evaluator(spark):
         "FROM <http://example.org/g/0> WHERE { ?s ex:name ?n } "
         "ORDER BY ?n",
     ]:
-        got = _rows(answer_tabular(spark, mapping, tables,
-                                   SPARQL_PREFIX + q))
+        got = _rows(answer_auto(spark, mapping, SPARQL_PREFIX + q,
+                                tables=tables))
         want = _rows(SparqlEngine(pool).sql(SPARQL_PREFIX + q))
         assert got == want
 
 
 def test_aggregate_fast_path_refuses_dataset_clauses(spark):
-    from morph_xr2rml_spark.aggpush import try_aggregate_pushdown
+    from morph_xr2rml_spark.aggpush import try_aggregate_pushdown_auto
     mapping = MappingDocument.from_text(GRAPH_KG_MAPPING)
     tables = tpch_tables(spark, SF_DIR)
     q = parse_sparql(SPARQL_PREFIX + (
         "SELECT ?n (COUNT(*) AS ?k) FROM <http://example.org/g/2> "
         "WHERE { ?s ex:name ?n } GROUP BY ?n"))
-    assert try_aggregate_pushdown(spark, mapping, tables, q) is None
+    assert try_aggregate_pushdown_auto(spark, mapping, q,
+                                       tables=tables) is None

@@ -7,7 +7,7 @@ Here the oracle is a different engine entirely (DuckDB executing
 mechanically generated SQL joins over the CTE triple set), so evaluator
 join/filter/aggregate semantics are exercised independently, on shapes
 nobody hand-picked.  Both the evaluator path (SparqlEngine over the
-materialized pool) and the pushdown path (answer_tabular) must match.
+materialized pool) and the pushdown path (answer_auto) must match.
 
 Restricted to shapes with an exact 1:1 SQL rendering: required BGP
 chains, constant subjects/objects, numeric-comparison and STRSTARTS and
@@ -21,11 +21,11 @@ import random
 import duckdb
 import pytest
 
+from morph_xr2rml_spark.api import answer_auto
 from morph_xr2rml_spark.examples import (TPCH_KG_MAPPING,
                                          kg_tpch_triples_cte, tpch_tables)
 from morph_xr2rml_spark.model import MappingDocument
 from morph_xr2rml_spark.native import NativeCompiler
-from morph_xr2rml_spark.rewrite import answer_tabular
 from morph_xr2rml_spark.sparql import SparqlEngine
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -393,7 +393,7 @@ def test_fuzz_vs_duckdb_oracle(spark, env, seed):
         f"evaluator divergence (seed {seed})\nSPARQL:\n{q}\nSQL:\n{sql}"
     # pushdown path
     got_push = _norm(r for r in
-                     answer_tabular(spark, mapping, tables, q).collect())
+                     answer_auto(spark, mapping, q, tables=tables).collect())
     assert got_push == want, \
         f"pushdown divergence (seed {seed})\nSPARQL:\n{q}\nSQL:\n{sql}"
 
@@ -612,7 +612,7 @@ def test_graph_fuzz_vs_duckdb_oracle(spark, graph_env, seed):
     got_eval = _norm(engine.sql(q).collect())
     assert got_eval == want, \
         f"evaluator divergence (seed {seed})\nSPARQL:\n{q}\nSQL:\n{sql}"
-    got_push = _norm(answer_tabular(spark, mapping, tables, q).collect())
+    got_push = _norm(answer_auto(spark, mapping, q, tables=tables).collect())
     assert got_push == want, \
         f"pushdown divergence (seed {seed})\nSPARQL:\n{q}\nSQL:\n{sql}"
 
@@ -746,7 +746,7 @@ def test_union_fuzz_vs_duckdb_oracle(spark, env, seed):
     got_eval = _norm(engine.sql(q).collect())
     assert got_eval == want, \
         f"evaluator divergence (seed {seed})\nSPARQL:\n{q}\nSQL:\n{sql}"
-    got_push = _norm(answer_tabular(spark, mapping, tables, q).collect())
+    got_push = _norm(answer_auto(spark, mapping, q, tables=tables).collect())
     assert got_push == want, \
         f"pushdown divergence (seed {seed})\nSPARQL:\n{q}\nSQL:\n{sql}"
 
@@ -803,5 +803,5 @@ def test_subquery_topk_vs_duckdb_oracle(spark, env, idx):
                  .fetchall())
     got_eval = _norm(engine.sql(q).collect())
     assert got_eval == want, f"evaluator divergence on:\n{q}"
-    got_push = _norm(answer_tabular(spark, mapping, tables, q).collect())
+    got_push = _norm(answer_auto(spark, mapping, q, tables=tables).collect())
     assert got_push == want, f"pushdown divergence on:\n{q}"

@@ -10,11 +10,11 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
+from morph_xr2rml_spark.api import answer_auto
 from morph_xr2rml_spark.examples import (GRAPH_KG_MAPPING, SPARQL_PREFIX,
                                          TPCH_KG_MAPPING, tpch_tables)
 from morph_xr2rml_spark.model import MappingDocument
-from morph_xr2rml_spark.rewrite import (answer_tabular,
-                                        derive_tm_constraints)
+from morph_xr2rml_spark.rewrite import derive_tm_constraints
 from morph_xr2rml_spark.sparql import SparqlEngine
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -33,7 +33,7 @@ def _full_scan_answer(spark, mapping_text, query):
 def _rewritten(spark, mapping_text, query):
     mapping = MappingDocument.from_text(mapping_text)
     tables = tpch_tables(spark, SF_DIR)
-    return answer_tabular(spark, mapping, tables, SPARQL_PREFIX + query)
+    return answer_auto(spark, mapping, SPARQL_PREFIX + query, tables=tables)
 
 
 def _rows(df):
@@ -81,7 +81,7 @@ def test_graph_template_inversion_constrains_scan(spark):
     cons = derive_tm_constraints(mapping, q, tables)
     assert cons["#GNation"] == [{"n_regionkey": "2"}]
     assert cons["#GRegion"] == []        # no graph maps: can't serve GRAPH
-    plan = answer_tabular(spark, mapping, tables, q) \
+    plan = answer_auto(spark, mapping, q, tables=tables) \
         ._jdf.queryExecution().executedPlan().toString()
     assert re.search(r"PushedFilters: \[[^\]]*EqualTo\(n_regionkey,2\)",
                      plan)
@@ -95,7 +95,7 @@ def test_graph_var_eliminates_graphless_mapping(spark):
     q = SPARQL_PREFIX + "SELECT ?g ?n WHERE { GRAPH ?g { ?s ex:name ?n } }"
     cons = derive_tm_constraints(mapping, q, tables)
     assert all(c == [] for c in cons.values())
-    assert answer_tabular(spark, mapping, tables, q).count() == 0
+    assert answer_auto(spark, mapping, q, tables=tables).count() == 0
 
 
 def test_default_graph_eliminates_fully_graphed_tm(spark):
@@ -107,7 +107,7 @@ def test_default_graph_eliminates_fully_graphed_tm(spark):
     cons = derive_tm_constraints(mapping, q, tables)
     assert cons["#GNation"] == []
     assert cons["#GRegion"] is None      # full scan
-    assert answer_tabular(spark, mapping, tables, q).count() == 5
+    assert answer_auto(spark, mapping, q, tables=tables).count() == 5
 
 
 ADVERSARIAL_TWO_RENDERS = """
@@ -134,7 +134,7 @@ def test_two_graph_renders_stay_unconstrained_but_correct(spark):
                          " { ?s ex:name ?n } } ORDER BY ?s")
     cons = derive_tm_constraints(mapping, q, tables)
     assert cons["#A"] is None            # AMBIGUOUS: no constraint
-    got = _rows(answer_tabular(spark, mapping, tables, q))
+    got = _rows(answer_auto(spark, mapping, q, tables=tables))
     want = _rows(_full_scan_answer(spark, ADVERSARIAL_TWO_RENDERS,
                                    "SELECT ?s ?n WHERE "
                                    "{ GRAPH <http://example.org/g/2> "
@@ -145,7 +145,7 @@ def test_two_graph_renders_stay_unconstrained_but_correct(spark):
     # graph map reaches it, and a single-conj pushdown on regionkey
     # would wrongly return empty
     q7 = q.replace("/g/2", "/g/7")
-    got7 = _rows(answer_tabular(spark, mapping, tables, q7))
+    got7 = _rows(answer_auto(spark, mapping, q7, tables=tables))
     assert got7 == [("<http://example.org/nation/7>", '"NATION_7"')]
 
 
@@ -250,7 +250,7 @@ def test_doc_tier_graph_constant_composes_into_find(spark):
     constraint key is the doc-level reference, handled by _conj_to_find
     like any template-inversion equality)."""
     import json as _json
-    from morph_xr2rml_spark.rewrite import answer_documents
+    from morph_xr2rml_spark.api import answer_auto
     from morph_xr2rml_spark.sources import SourceCatalog
     M = """
 @prefix rr:  <http://www.w3.org/ns/r2rml#> .
@@ -273,7 +273,7 @@ def test_doc_tier_graph_constant_composes_into_find(spark):
          "{ GRAPH <http://example.org/g/x> { ?s ex:v ?v } } ORDER BY ?s")
     cons = derive_tm_constraints(mapping, q)
     assert cons["#D"] == [{"$.ga": "x"}]
-    out = [tuple(r) for r in answer_documents(spark, mapping, cat, q)
+    out = [tuple(r) for r in answer_auto(spark, mapping, q, catalog=cat)
            .collect()]
     assert len(out) == 5
     assert out[0] == ("<http://example.org/d/1>", '"V1"')

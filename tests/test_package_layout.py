@@ -1,6 +1,7 @@
 """Package layout guards: the engine imports neither the removed
-training-data operator suite nor the removed legacy bench harness, and
-``__spark_entry__`` pairs every query with an oracle."""
+training-data operator suite nor the removed legacy bench harness,
+``__spark_entry__`` pairs every query with an oracle, SPARQL answering
+has one entry point, and one router picks every triples map's tier."""
 
 import ast
 import pathlib
@@ -10,6 +11,13 @@ ROOT = pathlib.Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(ROOT))
 
 FORBIDDEN = ("morph_xr2rml_spark.ops", "bench", "bench_extra")
+# answering entry points folded into api.answer_auto
+DELETED = {"answer_tabular", "answer_documents", "constrained_mapping",
+           "plan_provably_distinct", "try_aggregate_pushdown",
+           "try_aggregate_pushdown_documents"}
+# tier tests: outside their own compilers only api.route_tier calls them
+TIER_TESTS = {"is_tabular_compilable", "compilable", "unsafe_paths"}
+COMPILERS = ("native.py", "native_json.py")
 
 
 def _sources():
@@ -47,3 +55,61 @@ def test_no_imports_of_removed_modules():
 def test_entry_queries_and_oracles_pair_up():
     import __spark_entry__ as e
     assert set(e.queries()) == set(e.oracle_sql())
+
+
+def test_deleted_answer_paths_stay_gone():
+    bad = []
+    for path in _sources():
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+                name = node.name
+            elif isinstance(node, ast.Attribute):
+                name = node.attr
+            elif isinstance(node, ast.Name):
+                name = node.id
+            elif isinstance(node, ast.alias):
+                name = node.name
+            else:
+                continue
+            if name in DELETED:
+                bad.append(f"{path.relative_to(ROOT)}:{node.lineno}: "
+                           f"{name}")
+    assert not bad, bad
+
+
+def _tier_test_callers(path: pathlib.Path):
+    """(line, enclosing function chain) of every call of a tier test,
+    import aliases resolved."""
+    tree = ast.parse(path.read_text(), str(path))
+    names = set(TIER_TESTS)
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom):
+            names |= {a.asname for a in node.names
+                      if a.name in TIER_TESTS and a.asname}
+
+    def visit(node, chain):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            chain = chain + (node.name,)
+        if isinstance(node, ast.Call):
+            f = node.func
+            name = f.id if isinstance(f, ast.Name) else \
+                f.attr if isinstance(f, ast.Attribute) else None
+            if name in names:
+                yield node.lineno, chain
+        for child in ast.iter_child_nodes(node):
+            yield from visit(child, chain)
+
+    yield from visit(tree, ())
+
+
+def test_only_the_router_chooses_a_tier():
+    bad = []
+    for path in _sources():
+        if path.name in COMPILERS:
+            continue             # compiler-internal uses
+        for line, chain in _tier_test_callers(path):
+            if path.name == "api.py" and "route_tier" in chain:
+                continue
+            bad.append(f"{path.relative_to(ROOT)}:{line}: "
+                       f"{'.'.join(chain) or '<module>'}")
+    assert not bad, bad

@@ -1,7 +1,7 @@
 """Differential soundness harness for rewrite.py (round 5).
 
 Every query is answered twice over the TPC-H KG mapping:
-  (a) through answer_tabular — constraint derivation, TM elimination,
+  (a) through answer_auto — constraint derivation, TM elimination,
       cross-pattern propagation, literal/comparison pushdown;
   (b) over the FULL un-rewritten plan (NativeCompiler triples +
       SparqlEngine) — no pushdown at all.
@@ -14,10 +14,10 @@ unsatisfiable constants).
 
 import pytest
 
+from morph_xr2rml_spark.api import answer_auto
 from morph_xr2rml_spark.examples import TPCH_KG_MAPPING, tpch_tables
 from morph_xr2rml_spark.model import MappingDocument
 from morph_xr2rml_spark.native import NativeCompiler
-from morph_xr2rml_spark.rewrite import answer_tabular
 from morph_xr2rml_spark.sparql import SparqlEngine
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -154,7 +154,7 @@ def test_rewritten_equals_full_scan(spark, fixture_env, qi):
     mapping, tables, engine = fixture_env
     q = P + QUERIES[qi]
     fast = sorted(tuple(r) for r in
-                  answer_tabular(spark, mapping, tables, q).collect())
+                  answer_auto(spark, mapping, q, tables=tables).collect())
     slow = sorted(tuple(r) for r in engine.sql(q).collect())
     assert fast == slow, f"divergence on: {QUERIES[qi]}"
 
@@ -218,7 +218,7 @@ def test_nasty_mapping_rewritten_equals_full(spark, nasty_env, qi):
     mapping, tables, engine = nasty_env
     q = P + NASTY_QUERIES[qi]
     fast = sorted(tuple(r) for r in
-                  answer_tabular(spark, mapping, tables, q).collect())
+                  answer_auto(spark, mapping, q, tables=tables).collect())
     slow = sorted(tuple(r) for r in engine.sql(q).collect())
     assert fast == slow, f"divergence on: {NASTY_QUERIES[qi]}"
     assert len(slow) > 0 or qi in ()     # every query has answers here

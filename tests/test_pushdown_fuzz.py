@@ -2,11 +2,12 @@
 
 A seeded generator composes SPARQL queries from the TPC-H KG vocabulary
 (triple-pattern chains, constants, FILTER algebra, OPTIONAL/UNION/MINUS,
-VALUES, BIND, DISTINCT) and asserts answer_tabular / answer_documents
-produce the SAME MULTISET of rows as the full un-rewritten scan.  Unlike
-the hand-written batteries (test_pushdown_differential.py) this explores
-feature INTERACTIONS the authors didn't think of, and compares sorted
-multisets, not sets, so duplicate-row divergence is caught too.
+VALUES, BIND, DISTINCT) and asserts answer_auto, over tabular and
+document mappings, produces the SAME MULTISET of rows as the full
+un-rewritten scan.  Unlike the hand-written batteries
+(test_pushdown_differential.py) this explores feature INTERACTIONS the
+authors didn't think of, and compares sorted multisets, not sets, so
+duplicate-row divergence is caught too.
 
 Seeds are fixed — every run explores the identical query population, so
 a failure is always replayable (the query text is in the assert message).
@@ -20,9 +21,8 @@ from morph_xr2rml_spark.examples import (
     TPCH_KG_MAPPING, ORDERDOC_FLAT_MAPPING, tpch_tables, orderflat_catalog)
 from morph_xr2rml_spark.model import MappingDocument
 from morph_xr2rml_spark.native import NativeCompiler
-from morph_xr2rml_spark.rewrite import answer_tabular, answer_documents
 from morph_xr2rml_spark.sparql import SparqlEngine
-from morph_xr2rml_spark.api import materialize_auto
+from morph_xr2rml_spark.api import answer_auto, materialize_auto
 
 SF_DIR = "/root/testdata/sf0.001"
 P = ("PREFIX ex: <http://example.com/>\n"
@@ -229,7 +229,7 @@ def test_fuzz_tabular_rewrite_equals_full(spark, tab_env, seed):
     mapping, tables, engine = tab_env
     q = P + QueryGen(seed).build()
     fast = sorted(tuple(r) for r in
-                  answer_tabular(spark, mapping, tables, q).collect())
+                  answer_auto(spark, mapping, q, tables=tables).collect())
     slow = sorted(tuple(r) for r in engine.sql(q).collect())
     assert fast == slow, f"divergence (seed {seed}) on:\n{q}"
 
@@ -325,7 +325,7 @@ def test_fuzz_document_rewrite_equals_full(spark, doc_env, seed):
     mapping, catalog, engine = doc_env
     q = P + DocQueryGen(seed).build()
     fast = sorted(tuple(r) for r in
-                  answer_documents(spark, mapping, catalog, q).collect())
+                  answer_auto(spark, mapping, q, catalog=catalog).collect())
     slow = sorted(tuple(r) for r in engine.sql(q).collect())
     assert fast == slow, f"divergence (seed {seed}) on:\n{q}"
 
@@ -418,7 +418,7 @@ def test_fuzz_graph_rewrite_equals_full(spark, graph_env, seed):
     mapping, tables, engine = graph_env
     q = P + GraphQueryGen(seed).build()
     fast = sorted(tuple(r) for r in
-                  answer_tabular(spark, mapping, tables, q).collect())
+                  answer_auto(spark, mapping, q, tables=tables).collect())
     slow = sorted(tuple(r) for r in engine.sql(q).collect())
     assert fast == slow, f"divergence (seed {seed}) on:\n{q}"
 
@@ -513,6 +513,6 @@ def test_fuzz_doc_graph_rewrite_equals_full(spark, doc_graph_env, seed):
     mapping, cat, engine = doc_graph_env
     q = P + DocGraphQueryGen(seed).build()
     fast = sorted(tuple(r) for r in
-                  answer_documents(spark, mapping, cat, q).collect())
+                  answer_auto(spark, mapping, q, catalog=cat).collect())
     slow = sorted(tuple(r) for r in engine.sql(q).collect())
     assert fast == slow, f"divergence (seed {seed}) on:\n{q}"

@@ -13,12 +13,12 @@ and TMs that cannot emit the predicate are eliminated from the plan.
 import duckdb
 import pytest
 
+from morph_xr2rml_spark.api import answer_auto
 from morph_xr2rml_spark.examples import (SPARQL_PUSHDOWN_LIT_SQL,
                                          SPARQL_PUSHDOWN_SEG_SQL,
                                          TPCH_KG_MAPPING, sparql_pushdown_lit,
                                          sparql_pushdown_seg, tpch_tables)
 from morph_xr2rml_spark.model import MappingDocument
-from morph_xr2rml_spark.rewrite import answer_tabular
 
 SF_DIR = "/root/testdata/sf0.001"
 PREFIX = "PREFIX ex: <http://example.com/>\n"
@@ -59,8 +59,9 @@ def test_comparison_pushed_to_parquet_on_native_types(spark):
     mapping = MappingDocument.from_text(TPCH_KG_MAPPING)
     raw = {n: spark.read.parquet(f"{SF_DIR}/{n}.parquet")
            for n in ("region", "nation", "customer", "orders", "lineitem")}
-    df = answer_tabular(spark, mapping, raw, PREFIX + """
-        SELECT ?o WHERE { ?o ex:totalPrice ?p . FILTER(?p > 200000.0) }""")
+    df = answer_auto(spark, mapping, PREFIX + """
+        SELECT ?o WHERE { ?o ex:totalPrice ?p . FILTER(?p > 200000.0) }""",
+                     tables=raw)
     plan = _plan(df)
     assert "GreaterThan(o_totalprice,200000.0)" in plan
     assert df.count() == len(_duck(
@@ -82,11 +83,11 @@ def test_literal_equality_prunes_scan(spark):
 def test_values_literal_disjunction(spark):
     mapping = MappingDocument.from_text(TPCH_KG_MAPPING)
     tables = tpch_tables(spark, SF_DIR)
-    df = answer_tabular(spark, mapping, tables, PREFIX + """
+    df = answer_auto(spark, mapping, PREFIX + """
         SELECT ?c ?s WHERE {
             ?c ex:segment ?s .
             VALUES ?s { "BUILDING" "MACHINERY" }
-        } ORDER BY ?c""")
+        } ORDER BY ?c""", tables=tables)
     exp = _duck("""
         SELECT '<http://example.org/customer/' || c_custkey || '>',
                '"' || c_mktsegment || '"'
@@ -101,8 +102,8 @@ def test_numeric_filter_on_string_pred_sound(spark):
     # crash or drop the TM unsoundly
     mapping = MappingDocument.from_text(TPCH_KG_MAPPING)
     tables = tpch_tables(spark, SF_DIR)
-    df = answer_tabular(spark, mapping, tables, PREFIX + """
-        SELECT ?c WHERE { ?c ex:name ?n . FILTER(?n > 5) }""")
+    df = answer_auto(spark, mapping, PREFIX + """
+        SELECT ?c WHERE { ?c ex:name ?n . FILTER(?n > 5) }""", tables=tables)
     assert df.count() == 0
 
 
@@ -120,9 +121,10 @@ def test_typed_literal_object_constant(spark):
     """
     mapping = MappingDocument.from_text(text)
     raw = {"nation": spark.read.parquet(f"{SF_DIR}/nation.parquet")}
-    df = answer_tabular(spark, mapping, raw, PREFIX +
-                        'PREFIX xsd: <http://www.w3.org/2001/XMLSchema#>\n'
-                        'SELECT ?s WHERE { ?s ex:key "15"^^xsd:integer }')
+    df = answer_auto(spark, mapping, PREFIX +
+                     'PREFIX xsd: <http://www.w3.org/2001/XMLSchema#>\n'
+                     'SELECT ?s WHERE { ?s ex:key "15"^^xsd:integer }',
+                     tables=raw)
     plan = _plan(df)
     assert "EqualTo(n_nationkey,15)" in plan
     assert [r.s for r in df.collect()] == ["<http://example.org/nation/15>"]
@@ -131,11 +133,11 @@ def test_typed_literal_object_constant(spark):
 def test_conjunctive_range_filter(spark):
     mapping = MappingDocument.from_text(TPCH_KG_MAPPING)
     tables = tpch_tables(spark, SF_DIR)
-    df = answer_tabular(spark, mapping, tables, PREFIX + """
+    df = answer_auto(spark, mapping, PREFIX + """
         SELECT ?o WHERE {
             ?o ex:totalPrice ?p .
             FILTER(?p >= 100000.0 && ?p < 150000.0)
-        }""")
+        }""", tables=tables)
     exp = _duck("""SELECT 1 FROM orders
                    WHERE CAST(o_totalprice AS DECIMAL(12,2)) >= 100000.0
                      AND CAST(o_totalprice AS DECIMAL(12,2)) < 150000.0""")
@@ -153,11 +155,11 @@ def test_cross_pattern_propagation_prunes_and_strengthens(spark):
     AND-strengthening via the unique subject key)."""
     mapping = MappingDocument.from_text(TPCH_KG_MAPPING)
     tables = tpch_tables(spark, SF_DIR)
-    df = answer_tabular(spark, mapping, tables, PREFIX + """
+    df = answer_auto(spark, mapping, PREFIX + """
         SELECT ?c ?n WHERE {
             ?c ex:segment "BUILDING" .
             ?c ex:name ?n .
-        } ORDER BY ?c""")
+        } ORDER BY ?c""", tables=tables)
     plan = _plan(df)
     for absent in ("nation.parquet", "region.parquet", "orders.parquet"):
         assert absent not in plan
@@ -221,12 +223,12 @@ def test_propagation_values_multi_constant_sound(spark):
     (no unsound AND of mutually-exclusive constants)."""
     mapping = MappingDocument.from_text(TPCH_KG_MAPPING)
     tables = tpch_tables(spark, SF_DIR)
-    df = answer_tabular(spark, mapping, tables, PREFIX + """
+    df = answer_auto(spark, mapping, PREFIX + """
         SELECT ?c ?n WHERE {
             ?c ex:name ?n .
             VALUES ?c { <http://example.org/customer/5>
                         <http://example.org/customer/9> }
-        } ORDER BY ?c""")
+        } ORDER BY ?c""", tables=tables)
     got = [(r.c, r.n) for r in df.collect()]
     exp = [(r[0], r[1]) for r in _duck("""
         SELECT '<http://example.org/customer/' || c_custkey || '>',
@@ -241,11 +243,11 @@ def test_propagation_optional_strengthened(spark):
     — and the semantics stay correct."""
     mapping = MappingDocument.from_text(TPCH_KG_MAPPING)
     tables = tpch_tables(spark, SF_DIR)
-    df = answer_tabular(spark, mapping, tables, PREFIX + """
+    df = answer_auto(spark, mapping, PREFIX + """
         SELECT ?c ?b WHERE {
             ?c ex:segment "BUILDING" .
             OPTIONAL { ?c ex:acctbal ?b }
-        } ORDER BY ?c""")
+        } ORDER BY ?c""", tables=tables)
     got = [(r.c, r.b) for r in df.collect()]
     exp = [(r[0], r[1]) for r in _duck("""
         SELECT '<http://example.org/customer/' || c_custkey || '>',
@@ -271,10 +273,11 @@ def test_or_subject_equalities_promote(spark):
     assert cons["#Customer"] == []          # cannot render order/ subjects
     # plan + parity: both keys as an OR'd scan predicate
     tables = tpch_tables(spark, SF_DIR)
-    df = answer_tabular(spark, mapping, tables, PREFIX + """
+    df = answer_auto(spark, mapping, PREFIX + """
         SELECT ?o WHERE { ?s ex:totalPrice ?o .
             FILTER(?s = <http://example.org/order/1>
-                || ?s = <http://example.org/order/2>) } ORDER BY ?o""")
+                || ?s = <http://example.org/order/2>) } ORDER BY ?o""",
+                     tables=tables)
     exp = _duck("""
         SELECT '"' || CAST(o_totalprice AS DECIMAL(12,2))
                || '"^^<http://www.w3.org/2001/XMLSchema#decimal>'
@@ -286,11 +289,11 @@ def test_or_subject_equalities_promote(spark):
 def test_multi_var_values_projects_per_variable(spark):
     mapping = MappingDocument.from_text(TPCH_KG_MAPPING)
     tables = tpch_tables(spark, SF_DIR)
-    df = answer_tabular(spark, mapping, tables, PREFIX + """
+    df = answer_auto(spark, mapping, PREFIX + """
         SELECT ?c ?s WHERE { ?c ex:segment ?s .
             VALUES (?c ?s) { (<http://example.org/customer/5> UNDEF)
                              (<http://example.org/customer/9> UNDEF) } }
-        ORDER BY ?c""")
+        ORDER BY ?c""", tables=tables)
     plan = _plan(df)
     for absent in ("orders.parquet", "nation.parquet", "region.parquet"):
         assert absent not in plan
@@ -314,9 +317,10 @@ def test_seq_path_first_hop_constrained(spark):
     assert cons["#Orders"] == [{"o_orderkey": "1"}]
     assert cons["#Customer"] is None        # serves the second hop
     tables = tpch_tables(spark, SF_DIR)
-    df = answer_tabular(spark, mapping, tables, PREFIX + """
+    df = answer_auto(spark, mapping, PREFIX + """
         SELECT ?n WHERE {
-            <http://example.org/order/1> ex:placedBy/ex:name ?n }""")
+            <http://example.org/order/1> ex:placedBy/ex:name ?n }""",
+                     tables=tables)
     exp = _duck("""
         SELECT '"' || c_name || '"' FROM customer
         WHERE c_custkey = (SELECT o_custkey FROM orders
@@ -364,14 +368,14 @@ def _products_catalog(spark):
 
 
 def test_doc_literal_composes_renderin(spark):
-    from morph_xr2rml_spark.rewrite import (constrained_mapping,
+    from morph_xr2rml_spark.rewrite import (constrained_plan,
                                             derive_tm_constraints)
     from morph_xr2rml_spark.sources import mongo_filter_native_ok
     mapping = MappingDocument.from_text(DOC_MAPPING)
     cons = derive_tm_constraints(mapping,
                                  PREFIX + 'SELECT ?s WHERE { ?s ex:name "n3" }')
     assert cons["#P"] == [{"$.name": ("lexeq", "n3")}]
-    m2 = constrained_mapping(mapping, cons)
+    m2, _ = constrained_plan(mapping, cons)
     find = m2.triples_maps["#P"].logical_source.value
     assert '"$renderIn": ["n3"]' in find
     # the composed filter stays NATIVELY compilable (json tier keeps it)
@@ -379,28 +383,32 @@ def test_doc_literal_composes_renderin(spark):
 
 
 def test_doc_literal_answer_and_edges(spark):
-    from morph_xr2rml_spark.rewrite import answer_documents
+    from morph_xr2rml_spark.api import answer_auto
     mapping = MappingDocument.from_text(DOC_MAPPING)
     cat = _products_catalog(spark)
-    got = answer_documents(spark, mapping, cat,
-                           PREFIX + 'SELECT ?s WHERE { ?s ex:name "n3" }')
+    got = answer_auto(spark, mapping,
+                      PREFIX + 'SELECT ?s WHERE { ?s ex:name "n3" }',
+                      catalog=cat)
     assert [r.s for r in got.collect()] == ["<http://x/p/3>"]
     # literal_trim: " padded " renders "padded" — the mirror must keep it
-    got = answer_documents(spark, mapping, cat,
-                           PREFIX + 'SELECT ?s WHERE { ?s ex:name "padded" }')
+    got = answer_auto(spark, mapping,
+                      PREFIX + 'SELECT ?s WHERE { ?s ex:name "padded" }',
+                      catalog=cat)
     assert [r.s for r in got.collect()] == ["<http://x/p/99>"]
     # raw 7.50 renders "7.5": the numeric arm must keep the doc
-    got = answer_documents(spark, mapping, cat, PREFIX +
-                           'SELECT ?s WHERE { ?s ex:price "7.5" }')
+    got = answer_auto(spark, mapping, PREFIX +
+                      'SELECT ?s WHERE { ?s ex:price "7.5" }',
+                      catalog=cat)
     assert [r.s for r in got.collect()] == ["<http://x/p/98>"]
 
 
 def test_doc_numcmp_matches_engine_semantics(spark):
-    from morph_xr2rml_spark.rewrite import answer_documents
+    from morph_xr2rml_spark.api import answer_auto
     mapping = MappingDocument.from_text(DOC_MAPPING)
     cat = _products_catalog(spark)
-    got = answer_documents(spark, mapping, cat, PREFIX + """
-        SELECT ?s WHERE { ?s ex:price ?p . FILTER(?p > 70) } ORDER BY ?s""")
+    got = answer_auto(spark, mapping, PREFIX + """
+        SELECT ?s WHERE { ?s ex:price ?p . FILTER(?p > 70) } ORDER BY ?s""",
+                      catalog=cat)
     # 73.5, 84.0, 94.5 AND the plain string "77" (numeric_value
     # semantics); ORDER BY compares the IRI itself (SPARQL §15.4, r6),
     # so p/9 sorts before p/99 (codepoint order of the bracketless IRI)
@@ -412,14 +420,14 @@ def test_doc_numcmp_matches_engine_semantics(spark):
 def test_doc_pushdown_guard_nondefault_cfg(spark):
     """With literal_trim off the $renderIn mirror would be wrong — the
     answer must fall back to a full scan and stay correct."""
-    from morph_xr2rml_spark.rewrite import answer_documents
+    from morph_xr2rml_spark.api import answer_auto
     from morph_xr2rml_spark.translate import EngineConfig
     mapping = MappingDocument.from_text(DOC_MAPPING)
     cat = _products_catalog(spark)
     cfg = EngineConfig(literal_trim=False)
-    got = answer_documents(spark, mapping, cat, PREFIX +
-                           'SELECT ?s WHERE { ?s ex:name " padded " }',
-                           cfg=cfg)
+    got = answer_auto(spark, mapping, PREFIX +
+                      'SELECT ?s WHERE { ?s ex:name " padded " }',
+                      catalog=cat, cfg=cfg)
     assert [r.s for r in got.collect()] == ["<http://x/p/99>"]
 
 
@@ -427,13 +435,13 @@ def test_doc_iterator_refs_stay_unpushed(spark):
     """Iterator-relative references are not document-level fields: the
     constraint must be skipped (full scan), never mis-pushed."""
     from morph_xr2rml_spark.examples import LINEITEM_JSON_MAPPING
-    from morph_xr2rml_spark.rewrite import (constrained_mapping,
+    from morph_xr2rml_spark.rewrite import (constrained_plan,
                                             derive_tm_constraints)
     mapping = MappingDocument.from_text(LINEITEM_JSON_MAPPING)
     cons = derive_tm_constraints(mapping, PREFIX +
         'PREFIX xsd: <http://www.w3.org/2001/XMLSchema#>\n'
         'SELECT ?s WHERE { ?s ex:qty "5"^^xsd:integer }')
-    m2 = constrained_mapping(mapping, cons)
+    m2, _ = constrained_plan(mapping, cons)
     assert "$renderIn" not in m2.triples_maps["#Lines"].logical_source.value
 
 
@@ -452,8 +460,9 @@ def test_describe_pushdown_constrains_both_positions(spark):
     assert cons["#Customer"] == [{"c_nationkey": "0"}]
     assert cons["#Orders"] == [] and cons["#Region"] == []
     tables = tpch_tables(spark, SF_DIR)
-    fast = answer_tabular(spark, mapping, tables,
-                          "DESCRIBE <http://example.org/nation/0>")
+    fast = answer_auto(spark, mapping,
+                       "DESCRIBE <http://example.org/nation/0>",
+                       tables=tables)
     plan = _plan(fast)
     # Orders is gone entirely; Region's OWN branches are eliminated (its
     # scans in the plan are only the inRegion ROM parent-key probes,
@@ -499,10 +508,10 @@ def test_string_pattern_builtins_push(spark):
     pattern predicates at the scan; parity with DuckDB."""
     mapping = MappingDocument.from_text(TPCH_KG_MAPPING)
     tables = tpch_tables(spark, SF_DIR)
-    df = answer_tabular(spark, mapping, tables, PREFIX + """
+    df = answer_auto(spark, mapping, PREFIX + """
         SELECT ?c ?n WHERE { ?c ex:name ?n . ?c a ex:Customer .
             FILTER STRSTARTS(STR(?n), "Customer#00000001") }
-        ORDER BY ?c""")
+        ORDER BY ?c""", tables=tables)
     plan = _plan(df)
     for absent in ("nation.parquet", "region.parquet", "orders.parquet"):
         assert absent not in plan
@@ -530,9 +539,9 @@ def test_eq_plus_strstarts_conjunction_not_unsat(spark):
 
     mapping = MappingDocument.from_text(TPCH_KG_MAPPING)
     tables = tpch_tables(spark, SF_DIR)
-    df = answer_tabular(spark, mapping, tables, PREFIX + """
+    df = answer_auto(spark, mapping, PREFIX + """
         SELECT ?c WHERE { ?c ex:name ?n .
             FILTER(?n = "Customer#000000001"
-                && STRSTARTS(STR(?n), "Customer")) }""")
+                && STRSTARTS(STR(?n), "Customer")) }""", tables=tables)
     assert [r.c for r in df.collect()] == \
         ["<http://example.org/customer/1>"]

@@ -5,7 +5,7 @@ The reference's runner factory instantiates one translator per source
 and generates each source's conditions separately (MorphBaseRunnerFactory;
 RDB: MorphRDBUnfolder.scala:65-97, Mongo:
 MorphMongoDataSourceReader.scala:52-70).  The Spark analogue
-(rewrite.constrained_plan routed through api.answer_auto): ONE constraint
+(rewrite.constrained_plan in api.answer_auto's routed plan): ONE constraint
 derivation, applied per tier — `.where` row filters / TM drops on the
 tabular scans, composed find() filters on the document scans — then one
 union plan under the evaluator.
@@ -16,6 +16,8 @@ single-group template is injective with NO schema
 patterns on the same subject variable AND into one filtered collection
 scan — the tabular tier's bind_m analogue on documents.
 """
+
+import re
 
 import duckdb
 import pytest
@@ -38,6 +40,30 @@ P = "PREFIX ex: <http://example.com/>\n"
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _ancestors_of(plan: str, *needles: str) -> list[list[str]]:
+    """For every operator line containing all ``needles``: the operator
+    lines above it in the plan tree, nearest first."""
+    nodes = []                   # (depth, operator text)
+    for line in plan.splitlines():
+        m = re.match(r"^([ :|]*)\+- (.*)", line)
+        if m:
+            nodes.append((len(m.group(1)), m.group(2)))
+        elif not nodes:
+            nodes.append((-1, line))   # the root operator
+        # other lines continue a multi-line expression of the node above
+    out = []
+    for i, (depth, text) in enumerate(nodes):
+        if not all(n in text for n in needles):
+            continue
+        chain, d = [], depth
+        for pd, ptext in reversed(nodes[:i]):
+            if pd < d:
+                chain.append(ptext)
+                d = pd
+        out.append(chain)
+    return out
 
 
 def _duck(sql: str):
@@ -104,6 +130,16 @@ def test_mixed_both_tiers_push_to_scan(spark):
     # present — since r7 one scan + find() filter feeds every branch)
     assert "get_json_object" in plan and "$.st" in plan
     assert "InMemoryTableScan" in plan
+    # ... and the composed filter sits inside the cached subplan, below
+    # the from_json parse: it prunes documents before they are cached
+    # and parsed, not after
+    chains = _ancestors_of(plan, "Filter", "get_json_object", "$.st")
+    assert chains
+    for chain in chains:
+        cached = [i for i, op in enumerate(chain)
+                  if op.startswith("InMemoryRelation")]
+        parsed = [i for i, op in enumerate(chain) if "from_json" in op]
+        assert cached and parsed and cached[0] < parsed[0], chain
     # sources never mentioned by the mapping are not read
     for absent in ("nation.parquet", "region.parquet", "lineitem.parquet"):
         assert absent not in plan
@@ -287,7 +323,7 @@ DOC_PAT_DIFFERENTIAL = [
 
 @pytest.fixture(scope="module")
 def doc_env(spark):
-    from morph_xr2rml_spark.rewrite import answer_documents
+    from morph_xr2rml_spark.api import answer_auto
     mapping = MappingDocument.from_text(ORDERDOC_FLAT_MAPPING)
     catalog = orderflat_catalog(spark, SF_DIR)
     full = materialize_auto(spark, mapping, catalog=catalog, dedup=False)
@@ -296,11 +332,11 @@ def doc_env(spark):
 
 @pytest.mark.parametrize("qi", range(len(DOC_PAT_DIFFERENTIAL)))
 def test_doc_pat_rewritten_equals_full_scan(spark, doc_env, qi):
-    from morph_xr2rml_spark.rewrite import answer_documents
+    from morph_xr2rml_spark.api import answer_auto
     mapping, catalog, engine = doc_env
     q = P + DOC_PAT_DIFFERENTIAL[qi]
     fast = {tuple(r) for r in
-            answer_documents(spark, mapping, catalog, q).collect()}
+            answer_auto(spark, mapping, q, catalog=catalog).collect()}
     slow = {tuple(r) for r in engine.sql(q).collect()}
     assert fast == slow, f"divergence on: {DOC_PAT_DIFFERENTIAL[qi]}"
 

@@ -10,12 +10,12 @@ scan and complete absence of eliminated TMs' sources.
 
 import pytest
 
+from morph_xr2rml_spark.api import answer_auto
 from morph_xr2rml_spark.examples import (LINEITEM_JSON_MAPPING,
                                          TPCH_KG_MAPPING, orderdocs_df,
                                          tpch_tables)
 from morph_xr2rml_spark.model import MappingDocument, parse_mongo_query
-from morph_xr2rml_spark.rewrite import (AMBIGUOUS, answer_documents,
-                                        answer_tabular, constrained_mapping,
+from morph_xr2rml_spark.rewrite import (AMBIGUOUS, constrained_plan,
                                         derive_tm_constraints,
                                         invert_template)
 from morph_xr2rml_spark.sources import SourceCatalog, mongo_filter_native_ok
@@ -127,7 +127,7 @@ def test_tabular_point_query_parity_and_plan(spark):
     tables = tpch_tables(spark, SF_DIR)
     qt = ("SELECT ?p ?o WHERE { <http://example.org/order/1> ?p ?o } "
           "ORDER BY ?p ?o")
-    df = answer_tabular(spark, mapping, tables, qt)
+    df = answer_auto(spark, mapping, qt, tables=tables)
     got = [tuple(r) for r in df.collect()]
 
     # parity vs the unrestricted engine
@@ -152,8 +152,8 @@ def test_tabular_point_query_parity_and_plan(spark):
 def test_tabular_full_scan_when_unconstrained(spark):
     mapping = MappingDocument.from_text(TPCH_KG_MAPPING)
     tables = tpch_tables(spark, SF_DIR)
-    df = answer_tabular(spark, mapping, tables, PREFIX +
-                        "SELECT ?c ?n WHERE { ?c ex:name ?n }")
+    df = answer_auto(spark, mapping, PREFIX +
+                     "SELECT ?c ?n WHERE { ?c ex:name ?n }", tables=tables)
     # names come from region+nation+customer TMs: full scans, right counts
     n_region = tables["region"].count()
     n_nation = tables["nation"].count()
@@ -168,7 +168,7 @@ def test_doc_pushdown_composes_native_filter():
     cons = derive_tm_constraints(mapping, PREFIX + """
         SELECT ?q WHERE { <http://example.org/line/7-1> ex:qty ?q }""")
     assert cons["#Lines"] == [{"$.ok": "7", "$.ln": "1"}]
-    m2 = constrained_mapping(mapping, cons)
+    m2, _ = constrained_plan(mapping, cons)
     coll, ftext = parse_mongo_query(m2.triples_maps["#Lines"]
                                     .logical_source.value)
     assert coll == "orderdocs"
@@ -184,7 +184,7 @@ def test_doc_point_query_parity_and_native_plan(spark):
         "orderdocs", orderdocs_df(spark, SF_DIR))
     qt = PREFIX + """SELECT ?q ?part WHERE {
         <http://example.org/line/7-1> ex:qty ?q ; ex:part ?part }"""
-    df = answer_documents(spark, mapping, catalog, qt)
+    df = answer_auto(spark, mapping, qt, catalog=catalog)
     rows = [tuple(r) for r in df.collect()]
 
     li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet") \
@@ -202,8 +202,9 @@ def test_doc_eliminated_tm_yields_empty(spark):
     mapping = MappingDocument.from_text(LINEITEM_JSON_MAPPING)
     catalog = SourceCatalog().register_collection(
         "orderdocs", orderdocs_df(spark, SF_DIR))
-    df = answer_documents(spark, mapping, catalog, PREFIX + """
-        SELECT ?q WHERE { <http://example.org/nothing/1> ex:qty ?q }""")
+    df = answer_auto(spark, mapping, PREFIX + """
+        SELECT ?q WHERE { <http://example.org/nothing/1> ex:qty ?q }""",
+                     catalog=catalog)
     assert df.count() == 0
 
 
@@ -238,9 +239,9 @@ def test_derive_unsatisfiable_object_skips_pattern():
 def test_object_pushdown_answer_and_plan(spark):
     mapping = MappingDocument.from_text(TPCH_KG_MAPPING)
     tables = tpch_tables(spark, SF_DIR)
-    df = answer_tabular(spark, mapping, tables, PREFIX + """
+    df = answer_auto(spark, mapping, PREFIX + """
         SELECT ?o WHERE { ?o ex:placedBy <http://example.org/customer/5> }
-        ORDER BY ?o""")
+        ORDER BY ?o""", tables=tables)
     got = [r[0] for r in df.collect()]
     want = sorted(f"<http://example.org/order/{r.o_orderkey}>"
                   for r in tables["orders"].where("o_custkey = 5").collect())

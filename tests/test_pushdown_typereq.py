@@ -10,10 +10,10 @@ regex still runs in the evaluator)."""
 
 import pytest
 
+from morph_xr2rml_spark.api import answer_auto
 from morph_xr2rml_spark.examples import TPCH_KG_MAPPING, tpch_tables
 from morph_xr2rml_spark.model import MappingDocument
-from morph_xr2rml_spark.rewrite import (_regex_lexpats, answer_tabular,
-                                        derive_tm_constraints)
+from morph_xr2rml_spark.rewrite import _regex_lexpats, derive_tm_constraints
 
 SF_DIR = "/root/testdata/sf0.001"
 P = "PREFIX ex: <http://example.com/>\n" \
@@ -153,9 +153,10 @@ def _plan(df) -> str:
 def test_impossible_facet_compiles_to_empty_plan(spark):
     mapping = MappingDocument.from_text(TPCH_KG_MAPPING)
     tables = tpch_tables(spark, SF_DIR)
-    df = answer_tabular(spark, mapping, tables,
-                        P + "SELECT ?s ?o WHERE { ?s ex:placedBy ?o . "
-                        "FILTER(isLiteral(?o)) }")
+    df = answer_auto(spark, mapping,
+                     P + "SELECT ?s ?o WHERE { ?s ex:placedBy ?o . "
+                        "FILTER(isLiteral(?o)) }",
+                     tables=tables)
     assert "FileScan" not in _plan(df)     # zero source reads
     assert df.count() == 0
 
@@ -163,10 +164,11 @@ def test_impossible_facet_compiles_to_empty_plan(spark):
 def test_regex_prefix_reaches_scan_as_startswith(spark):
     mapping = MappingDocument.from_text(TPCH_KG_MAPPING)
     tables = tpch_tables(spark, SF_DIR)
-    df = answer_tabular(spark, mapping, tables,
-                        P + "SELECT ?c ?n WHERE { ?c ex:name ?n . "
+    df = answer_auto(spark, mapping,
+                     P + "SELECT ?c ?n WHERE { ?c ex:name ?n . "
                         "?c a ex:Customer . "
-                        'FILTER regex(STR(?n), "^Customer#0000001") }')
+                        'FILTER regex(STR(?n), "^Customer#0000001") }',
+                     tables=tables)
     plan = _plan(df)
     assert "StartsWith" in plan
     # only the customer table is ever read
@@ -181,10 +183,11 @@ def test_regex_prefix_reaches_scan_as_startswith(spark):
 def test_exists_and_strengthens_to_one_filtered_scan(spark):
     mapping = MappingDocument.from_text(TPCH_KG_MAPPING)
     tables = tpch_tables(spark, SF_DIR)
-    df = answer_tabular(spark, mapping, tables,
-                        P + "SELECT ?c ?n WHERE { ?c ex:name ?n . "
+    df = answer_auto(spark, mapping,
+                     P + "SELECT ?c ?n WHERE { ?c ex:name ?n . "
                         "?c a ex:Customer . "
-                        'FILTER EXISTS { ?c ex:segment "BUILDING" } }')
+                        'FILTER EXISTS { ?c ex:segment "BUILDING" } }',
+                     tables=tables)
     plan = _plan(df)
     scans = [l for l in plan.splitlines() if "FileScan parquet" in l]
     assert scans and all("customer.parquet" in l for l in scans)

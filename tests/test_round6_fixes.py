@@ -34,11 +34,12 @@ def test_neq_filter_not_collected():
 
 
 def test_neq_filter_answers(spark):
-    from morph_xr2rml_spark.rewrite import answer_tabular
+    from morph_xr2rml_spark.api import answer_auto
     mapping = MappingDocument.from_text(TPCH_KG_MAPPING)
     tables = tpch_tables(spark, SF_DIR)
-    df = answer_tabular(spark, mapping, tables, P + """
-        SELECT ?o ?p WHERE { ?o ex:totalPrice ?p . FILTER(?p != 200000.0) }""")
+    df = answer_auto(spark, mapping, P + """
+        SELECT ?o ?p WHERE { ?o ex:totalPrice ?p . FILTER(?p != 200000.0) }""",
+                     tables=tables)
     n_orders = tables["orders"].count()
     assert df.count() == n_orders  # no order at exactly 200000.0
 
@@ -112,11 +113,11 @@ def test_renderin_keeps_tab_padded_docs(spark):
     document tier (render = .strip()), while the composed $renderIn is
     applied NATIVELY in catalog.resolve — with F.trim it pruned the
     tab-padded doc whose render matches."""
-    from morph_xr2rml_spark.rewrite import answer_documents
+    from morph_xr2rml_spark.api import answer_auto
     mapping = MappingDocument.from_text(PADDED_DOC_MAPPING)
-    rows = answer_documents(
-        spark, mapping, _padded_catalog(spark),
-        P + 'SELECT ?s WHERE { ?s ex:val "X" } ORDER BY ?s').collect()
+    rows = answer_auto(spark, mapping,
+                       P + 'SELECT ?s WHERE { ?s ex:val "X" } ORDER BY ?s',
+                       catalog=_padded_catalog(spark)).collect()
     assert [r["s"] for r in rows] == ["<http://example.org/pad/1>",
                                       "<http://example.org/pad/2>"]
 
@@ -151,7 +152,7 @@ def test_padded_render_matches_python_tier(spark):
 # ---------------------------------------------------------------------------
 # 4. Named-graph quads in the NATIVE compiler (late r6): graph maps used
 #    to silently drop to NULL on the native tier (is_tabular_compilable
-#    routed them away, but direct NativeCompiler/answer_tabular use hit
+#    routed them away, but direct NativeCompiler/answer_auto use hit
 #    the gap).  Byte-parity against the Python document tier.
 # ---------------------------------------------------------------------------
 
@@ -223,16 +224,16 @@ def test_materialize_auto_routes_graph_tms_native(spark):
 def test_graph_tms_refuse_aggregate_fast_path(spark):
     # quads multiply bindings per graph: the bindings==rows proof must
     # refuse (the evaluator answers instead, and answers correctly)
-    from morph_xr2rml_spark.aggpush import try_aggregate_pushdown
-    from morph_xr2rml_spark.rewrite import answer_tabular
+    from morph_xr2rml_spark.aggpush import try_aggregate_pushdown_auto
+    from morph_xr2rml_spark.api import answer_auto
     from morph_xr2rml_spark.sparql import parse_sparql
     mapping, tables, _cat = _graph_env(spark)
     q = ("PREFIX ex: <http://example.com/>\n"
          "SELECT ?n (COUNT(*) AS ?k) WHERE { ?s ex:name ?n } "
          "GROUP BY ?n ORDER BY ?n")
-    assert try_aggregate_pushdown(spark, mapping, tables,
-                                  parse_sparql(q)) is None
-    out = answer_tabular(spark, mapping, tables, q)
+    assert try_aggregate_pushdown_auto(spark, mapping, parse_sparql(q),
+                                       tables=tables) is None
+    out = answer_auto(spark, mapping, q, tables=tables)
     # default-graph semantics: the graph-mapped nation triples live in
     # named graphs only, so the plain pattern matches region names alone
     assert out.count() == 5
@@ -240,5 +241,5 @@ def test_graph_tms_refuse_aggregate_fast_path(spark):
     gq = ("PREFIX ex: <http://example.com/>\n"
           "SELECT (COUNT(*) AS ?k) WHERE "
           "{ GRAPH ex:gn { ?s ex:name ?n } }")
-    rows = answer_tabular(spark, mapping, tables, gq).collect()
+    rows = answer_auto(spark, mapping, gq, tables=tables).collect()
     assert rows[0]["k"] == 25                # nation names in ex:gn

@@ -18,14 +18,13 @@ exchange; iterator mappings correctly stay unprovable.
 
 import pytest
 
-from morph_xr2rml_spark.api import materialize_auto
+from morph_xr2rml_spark.api import answer_auto, materialize_auto
 from morph_xr2rml_spark.examples import (LINEITEM_JSON_MAPPING,
                                          ORDERDOC_FLAT_MAPPING,
                                          TPCH_KG_MAPPING, orderdocs_df,
                                          orderflat_catalog, tpch_tables)
 from morph_xr2rml_spark.model import MappingDocument
 from morph_xr2rml_spark.native_json import provably_distinct_json
-from morph_xr2rml_spark.rewrite import answer_documents, answer_tabular
 from morph_xr2rml_spark.sources import SourceCatalog
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -42,8 +41,9 @@ def _plan(df) -> str:
 
 def test_tabular_topk_is_take_ordered_no_exchange(spark):
     mapping = MappingDocument.from_text(TPCH_KG_MAPPING)
-    df = answer_tabular(spark, mapping, tpch_tables(spark, SF_DIR), P + """
-        SELECT ?o ?p WHERE { ?o ex:totalPrice ?p } ORDER BY ?p LIMIT 10""")
+    df = answer_auto(spark, mapping, P + """
+        SELECT ?o ?p WHERE { ?o ex:totalPrice ?p } ORDER BY ?p LIMIT 10""",
+                     tables=tpch_tables(spark, SF_DIR))
     plan = _plan(df)
     assert "TakeOrderedAndProject" in plan
     assert "hashpartitioning" not in plan       # no dedup, no sort shuffle
@@ -56,9 +56,9 @@ def test_tabular_topk_is_take_ordered_no_exchange(spark):
 
 def test_doc_topk_is_take_ordered_no_exchange(spark):
     mapping = MappingDocument.from_text(ORDERDOC_FLAT_MAPPING)
-    df = answer_documents(spark, mapping, orderflat_catalog(spark, SF_DIR),
-                          P + """
-        SELECT ?s ?c WHERE { ?s ex:cust ?c } ORDER BY ?s LIMIT 10""")
+    df = answer_auto(spark, mapping, P + """
+        SELECT ?s ?c WHERE { ?s ex:cust ?c } ORDER BY ?s LIMIT 10""",
+                     catalog=orderflat_catalog(spark, SF_DIR))
     plan = _plan(df)
     assert "TakeOrderedAndProject" in plan
     assert "hashpartitioning" not in plan
@@ -68,8 +68,9 @@ def test_doc_topk_is_take_ordered_no_exchange(spark):
 
 def test_point_query_no_exchange(spark):
     mapping = MappingDocument.from_text(TPCH_KG_MAPPING)
-    df = answer_tabular(spark, mapping, tpch_tables(spark, SF_DIR), P + """
-        SELECT ?p ?o WHERE { <http://example.org/order/1> ?p ?o }""")
+    df = answer_auto(spark, mapping, P + """
+        SELECT ?p ?o WHERE { <http://example.org/order/1> ?p ?o }""",
+                     tables=tpch_tables(spark, SF_DIR))
     plan = _plan(df)
     # the only exchange allowed is the ROM broadcast build (no shuffle)
     assert "hashpartitioning" not in plan and "rangepartitioning" not in plan
@@ -125,8 +126,9 @@ def test_decimal_native_comparison_pushes_to_parquet(spark, tmp_path):
               **{n: tpch_tables(spark, SF_DIR)[n]
                  for n in ("region", "nation", "customer")}}
     mapping = MappingDocument.from_text(TPCH_KG_MAPPING)
-    df = answer_tabular(spark, mapping, tables, P + """
-        SELECT ?o WHERE { ?o ex:totalPrice ?p . FILTER(?p > 200000.0) }""")
+    df = answer_auto(spark, mapping, P + """
+        SELECT ?o WHERE { ?o ex:totalPrice ?p . FILTER(?p > 200000.0) }""",
+                     tables=tables)
     plan = _plan(df)
     assert "GreaterThan(o_totalprice,200000.00)" in plan
     # result parity with the double-path engine semantics
@@ -135,20 +137,25 @@ def test_decimal_native_comparison_pushes_to_parquet(spark, tmp_path):
 
 
 def test_mixed_plan_provably_distinct(spark):
+    from morph_xr2rml_spark.api import _routed_plan
     from morph_xr2rml_spark.examples import MIXED_KG_MAPPING
-    from morph_xr2rml_spark.rewrite import plan_provably_distinct
-    mapping = MappingDocument.from_text(MIXED_KG_MAPPING)
     tables = {"customer": tpch_tables(spark, SF_DIR)["customer"]}
-    assert plan_provably_distinct(spark, mapping, tables)
+    catalog = orderflat_catalog(spark, SF_DIR)
+
+    def plan_provably_distinct(mapping) -> bool:
+        return _routed_plan(spark, mapping, catalog, tables)[2]()
+
+    mapping = MappingDocument.from_text(MIXED_KG_MAPPING)
+    assert plan_provably_distinct(mapping)
     # adversarial: doc TM without uniqueRef → refused
     weak = MappingDocument.from_text(
         MIXED_KG_MAPPING.replace('; xrr:uniqueRef "$.ok"', ""))
-    assert not plan_provably_distinct(spark, weak, tables)
+    assert not plan_provably_distinct(weak)
     # adversarial: doc TM rendering into the customer subject space
     clash = MappingDocument.from_text(MIXED_KG_MAPPING.replace(
         "http://example.org/odoc/{$.ok}",
         "http://example.org/customer/{$.ok}"))
-    assert not plan_provably_distinct(spark, clash, tables)
+    assert not plan_provably_distinct(clash)
 
 
 def test_mixed_answering_drops_evaluator_dedup(spark):
@@ -180,8 +187,8 @@ def test_ask_through_answer_paths(spark):
                     P + 'ASK { ?c ex:segment "NO_SUCH" }', tables=tables)
     assert [r["ask"] for r in f.collect()] == [False]
     dm = MappingDocument.from_text(ORDERDOC_FLAT_MAPPING)
-    d = answer_documents(spark, dm, orderflat_catalog(spark, SF_DIR),
-                         P + 'ASK { ?s ex:status "F" }')
+    d = answer_auto(spark, dm, P + 'ASK { ?s ex:status "F" }',
+                    catalog=orderflat_catalog(spark, SF_DIR))
     assert [r["ask"] for r in d.collect()] == [True]
 
 

@@ -15,9 +15,9 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import Row, functions as F
 
+from morph_xr2rml_spark.api import answer_auto
 from morph_xr2rml_spark.model import MappingDocument
-from morph_xr2rml_spark.rewrite import (AMBIGUOUS, answer_tabular,
-                                        invert_graph_ctx)
+from morph_xr2rml_spark.rewrite import AMBIGUOUS, invert_graph_ctx
 from morph_xr2rml_spark.sources import SourceCatalog
 
 NULLABLE_GRAPH_MAPPING = """
@@ -64,10 +64,9 @@ def test_nullable_graph_template_row_survives_default_graph(spark):
     t = spark.createDataFrame(
         [Row(k=1, gk=7, name="in-graph"),
          Row(k=2, gk=None, name="default-graph")])
-    out = answer_tabular(
-        spark, mapping, {"t": t},
-        "PREFIX ex: <http://example.com/>\n"
-        "SELECT ?s ?n WHERE { ?s ex:name ?n } ORDER BY ?s")
+    out = answer_auto(spark, mapping, "PREFIX ex: <http://example.com/>\n"
+                      "SELECT ?s ?n WHERE { ?s ex:name ?n } ORDER BY ?s",
+                      tables={"t": t})
     rows = [tuple(r) for r in out.collect()]
     assert rows == [("<http://example.org/t/2>", '"default-graph"')]
 
@@ -76,19 +75,15 @@ def test_expression_aggregate_input_refuses_not_crashes(spark, tmp_path):
     from morph_xr2rml_spark.examples import TPCH_KG_MAPPING, tpch_tables
     mapping = MappingDocument.from_text(TPCH_KG_MAPPING)
     tables = tpch_tables(spark, "/root/testdata/sf0.001")
-    out = answer_tabular(
-        spark, mapping, tables,
-        "PREFIX ex: <http://example.com/>\n"
-        "SELECT ?seg (COUNT(COALESCE(?b, ?b)) AS ?n) "
-        "WHERE { ?c ex:segment ?seg . ?c ex:acctbal ?b } "
-        "GROUP BY ?seg ORDER BY ?seg")
+    out = answer_auto(spark, mapping, "PREFIX ex: <http://example.com/>\n"
+                      "SELECT ?seg (COUNT(COALESCE(?b, ?b)) AS ?n) "
+                      "WHERE { ?c ex:segment ?seg . ?c ex:acctbal ?b } "
+                      "GROUP BY ?seg ORDER BY ?seg", tables=tables)
     # evaluator answers it; pushdown must have refused silently
-    oracle = answer_tabular(
-        spark, mapping, tables,
-        "PREFIX ex: <http://example.com/>\n"
-        "SELECT ?seg (COUNT(?b) AS ?n) "
-        "WHERE { ?c ex:segment ?seg . ?c ex:acctbal ?b } "
-        "GROUP BY ?seg ORDER BY ?seg")
+    oracle = answer_auto(spark, mapping, "PREFIX ex: <http://example.com/>\n"
+                         "SELECT ?seg (COUNT(?b) AS ?n) "
+                         "WHERE { ?c ex:segment ?seg . ?c ex:acctbal ?b } "
+                         "GROUP BY ?seg ORDER BY ?seg", tables=tables)
     assert [tuple(r) for r in out.collect()] == \
         [tuple(r) for r in oracle.collect()]
 

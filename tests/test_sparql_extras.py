@@ -225,23 +225,22 @@ def test_having_over_expression_aggregate(_agg_expr_df):
 def test_aggpush_refuses_expression_inputs(spark):
     # an expression aggregate input is not a known term column: the
     # fast path must refuse (evaluator answers, and answers correctly)
-    from morph_xr2rml_spark.aggpush import try_aggregate_pushdown
+    from morph_xr2rml_spark.aggpush import try_aggregate_pushdown_auto
     from morph_xr2rml_spark.examples import TPCH_KG_MAPPING, tpch_tables
     from morph_xr2rml_spark.model import MappingDocument
-    from morph_xr2rml_spark.rewrite import answer_tabular
+    from morph_xr2rml_spark.api import answer_auto
     from morph_xr2rml_spark.sparql import parse_sparql
     mapping = MappingDocument.from_text(TPCH_KG_MAPPING)
     tables = tpch_tables(spark, "/root/testdata/sf0.001")
     q = ("PREFIX ex: <http://example.com/>\n"
          "SELECT (SUM(?p + ?p) AS ?t) WHERE { ?o ex:totalPrice ?p }")
-    assert try_aggregate_pushdown(spark, mapping, tables,
-                                  parse_sparql(q)) is None
-    got = answer_tabular(spark, mapping, tables, q).collect()[0]["t"]
-    want = answer_tabular(
-        spark, mapping, tables,
-        "PREFIX ex: <http://example.com/>\n"
-        "SELECT (SUM(?p) AS ?t) WHERE { ?o ex:totalPrice ?p }"
-    ).collect()[0]["t"]
+    assert try_aggregate_pushdown_auto(spark, mapping, parse_sparql(q),
+                                       tables=tables) is None
+    got = answer_auto(spark, mapping, q, tables=tables).collect()[0]["t"]
+    want = answer_auto(
+        spark, mapping, "PREFIX ex: <http://example.com/>\n"
+        "SELECT (SUM(?p) AS ?t) WHERE { ?o ex:totalPrice ?p }",
+        tables=tables).collect()[0]["t"]
     assert abs(got - 2 * want) < 1e-6 * abs(got)
 
 
