@@ -16,8 +16,9 @@ sys.path.insert(0, "/root/repo")
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: the TPC-H KG materialization (native compiler: scans →
-    term projections → equi-joins → union → dedup) at sf0.001."""
+    """Flagship: the TPC-H KG materialization through materialize_auto
+    (every TM routed to the native compiler: scans → term projections →
+    equi-joins → union; the dedup is proved unnecessary) at sf0.001."""
     from morph_xr2rml_spark.examples import kg_tpch_triples
     return kg_tpch_triples(spark, "/root/testdata/sf0.001")
 

@@ -64,7 +64,7 @@ def _routed_plan(spark: SparkSession, mapping: MappingDocument,
                  catalog: Optional[SourceCatalog] = None,
                  tables: Optional[dict[str, DataFrame]] = None,
                  cfg: Optional[EngineConfig] = None,
-                 constraints: Optional[dict] = None, **engine_kw):
+                 constraints: Optional[dict] = None):
     """Compile ``mapping`` with every TM on its routed tier.  Returns
     ``(triples, tiers, distinct)``: the union of the per-TM plans, the
     tier of every emitting TM, and a thunk for the plan's one
@@ -111,13 +111,11 @@ def _routed_plan(spark: SparkSession, mapping: MappingDocument,
 
     nc = NativeCompiler(spark, mapping, tables, cfg,
                         fuse_projections=not answering,
-                        tm_row_filters=row_filters,
-                        tm_skip=set(mapping.triples_maps)
-                        - {tm.name for tm in by_tier["native"]})
+                        tm_row_filters=row_filters)
     parts = [nc.tm_triples(tm) for tm in by_tier["native"]]
     parts += [jc.tm_base(tm) for tm in by_tier["json"]]
     if by_tier["doc"]:
-        sm = SparkMaterializer(spark, mapping, catalog, cfg, **engine_kw)
+        sm = SparkMaterializer(spark, mapping, catalog, cfg)
         parts += [sm._tm_triples(tm) for tm in by_tier["doc"]]
 
     if not parts:
@@ -130,17 +128,14 @@ def _routed_plan(spark: SparkSession, mapping: MappingDocument,
     def distinct() -> bool:
         """The plan provably emits no duplicate triple: the native tier
         by NativeCompiler.provably_distinct, the other two by the
-        tier-independent provably_distinct_json, each with skipped TMs
-        excluded; across the two, every pair of TMs has disjoint subject
+        tier-independent provably_distinct_json, each over the TMs it
+        emits; across the two, every pair of TMs has disjoint subject
         spaces or disjoint constant predicate sets."""
         from .rewrite import tm_pred_iris
         native = by_tier["native"]
         other = by_tier["json"] + by_tier["doc"]
-        if other and not provably_distinct_json(
-                mapping, skip=frozenset(mapping.triples_maps)
-                - {tm.name for tm in other}):
-            return False
-        if native and not nc.provably_distinct():
+        if not provably_distinct_json(other) \
+                or not nc.provably_distinct(native):
             return False
         for t1 in native:
             for t2 in other:
@@ -160,13 +155,12 @@ def materialize_auto(spark: SparkSession, mapping: MappingDocument,
                      catalog: Optional[SourceCatalog] = None,
                      tables: Optional[dict[str, DataFrame]] = None,
                      cfg: Optional[EngineConfig] = None,
-                     dedup: bool = True,
-                     **engine_kw) -> DataFrame:
+                     dedup: bool = True) -> DataFrame:
     """One call, one triple DataFrame with every TM on its routed tier;
     deduplicated unless the plan is provably duplicate-free -- the
     drop-in equivalent of the reference's materialization mode."""
     out, tiers, distinct = _routed_plan(spark, mapping, catalog, tables,
-                                        cfg, **engine_kw)
+                                        cfg)
     if not dedup or distinct():
         return out
     from .engine import dedup_triples
@@ -181,8 +175,7 @@ def answer_auto(spark: SparkSession, mapping: MappingDocument,
                 query_text,
                 catalog: Optional[SourceCatalog] = None,
                 tables: Optional[dict[str, DataFrame]] = None,
-                cfg: Optional[EngineConfig] = None,
-                **engine_kw) -> DataFrame:
+                cfg: Optional[EngineConfig] = None) -> DataFrame:
     """Answer a SPARQL query with source pushdown wherever the mapping
     allows (the query-side twin of ``materialize_auto``).  The
     reference's runner instantiates one translator per source
@@ -196,25 +189,22 @@ def answer_auto(spark: SparkSession, mapping: MappingDocument,
          (parquet PushedFilters), composed find() filters on document
          scans, TMs that match nothing skipped;
       4. the evaluator over that plan, with its per-pattern dedup
-         dropped when the plan is provably duplicate-free.
-
-    ``engine_kw`` go to the SparqlEngine (and disable step 1)."""
+         dropped when the plan is provably duplicate-free."""
     from .rewrite import _eng_answer, derive_tm_constraints
     from .sparql import SparqlEngine, parse_sparql
     tables = tables or {}
     catalog = catalog or SourceCatalog()
     q = query_text if not isinstance(query_text, str) \
         else parse_sparql(query_text)
-    if not engine_kw:
-        from .aggpush import try_aggregate_pushdown_auto
-        fast = try_aggregate_pushdown_auto(spark, mapping, q, tables=tables,
-                                           catalog=catalog, cfg=cfg)
-        if fast is not None:
-            return fast
+    from .aggpush import try_aggregate_pushdown_auto
+    fast = try_aggregate_pushdown_auto(spark, mapping, q, tables=tables,
+                                       catalog=catalog, cfg=cfg)
+    if fast is not None:
+        return fast
     constraints = derive_tm_constraints(mapping, q, tables)
     triples, _tiers, distinct = _routed_plan(spark, mapping, catalog, tables,
                                              cfg, constraints)
-    eng = SparqlEngine(triples, dedup_source=not distinct(), **engine_kw)
+    eng = SparqlEngine(triples, dedup_source=not distinct())
     return _eng_answer(spark, eng, q)
 
 

@@ -31,6 +31,7 @@ from pyspark.sql.types import (ArrayType, IntegerType, LongType, StringType,
 
 from .model import MappingDocument, TriplesMap, parse_mongo_query
 from .mongo_filter import compile_filter, parse_filter
+from .native_json import track_persist
 from .sources import SourceCatalog, mongo_filter_to_column
 from .translate import CompiledTriplesMap, EngineConfig, expand_collection, \
     _compile_msp, CollTerm
@@ -300,14 +301,12 @@ class SparkMaterializer:
 
     def __init__(self, spark: SparkSession, mapping: MappingDocument,
                  catalog: SourceCatalog, cfg: Optional[EngineConfig] = None,
-                 salt_partitions: int = 0,
                  tm_limit: Optional[int] = None,
                  tm_offset: Optional[int] = None):
         self.spark = spark
         self.mapping = mapping
         self.catalog = catalog
         self.cfg = cfg or EngineConfig()
-        self.salt_partitions = salt_partitions
         # per-triples-map source row limit/offset — the reference's
         # datatranslation.limit/offset config (MorphProperties.scala:218-219,
         # applied as "LIMIT x OFFSET y" in SQLQuery.scala:392,410):
@@ -388,9 +387,11 @@ class SparkMaterializer:
         # ROMs present (the ROM-free case early-returned above): the child
         # stage has two consumers (base triples + join rows) — persist so
         # the JSON-parse-heavy stage runs once; disk overflow for
-        # executor-memory safety at scale
-        from pyspark import StorageLevel
-        child = child.persist(StorageLevel.MEMORY_AND_DISK)
+        # executor-memory safety at scale.  Tracked by native_json's
+        # persist registry too: the routed plan drops this materializer,
+        # and native_json.cleanup() (and its live-entry cap) must still
+        # reach the persist
+        child = track_persist(child)
         self._persisted.append(child)
 
         base = child.where(F.col("kind") == 0) \
@@ -442,16 +443,7 @@ class SparkMaterializer:
                      .dropDuplicates(["key", "subj", "pred", "graph", "uid"])
             p = parent.where(F.col("cond_id") == cond_id) \
                       .select("key", "psubj", "pseq", "pidx")
-            if self.salt_partitions > 1:
-                # explicit key salting for hot parent keys: replicate the
-                # parent rows across salt buckets, salt the child randomly
-                n = self.salt_partitions
-                c = c.withColumn("_salt", (F.rand(42) * n).cast("int"))
-                p = p.withColumn("_salt", F.explode(
-                    F.sequence(F.lit(0), F.lit(n - 1))))
-                joined = c.join(p, ["key", "_salt"]).drop("_salt")
-            else:
-                joined = c.join(p, "key")
+            joined = c.join(p, "key")
             if rom.is_collection():
                 # one row per (child ctx, parent subject), earliest parent
                 # pos — the position orders collection members below

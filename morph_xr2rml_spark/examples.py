@@ -2,8 +2,9 @@
 entry point (__spark_entry__.py), the benchmark, and tests.
 
 Two pipelines:
-  - ``kg_tpch``: R2RML-style mapping over typed tables → NATIVE compiler
-    (pure Catalyst: codegen, pushdown, equi-joins);
+  - ``kg_tpch``: R2RML-style mapping over typed tables → materialize_auto,
+    which routes every TM to the NATIVE compiler (pure Catalyst: codegen,
+    pushdown, equi-joins);
   - ``kg_lineitem_json``: JSON documents with rml:iterator + xrr:pushDown
     → DOCUMENT compiler (Arrow-batched mapInPandas).
 
@@ -16,7 +17,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .engine import materialize
 from .model import MappingDocument
-from .native import NativeCompiler
 from .sources import SourceCatalog
 
 EX = "http://example.org/"
@@ -102,11 +102,11 @@ def tpch_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 def kg_tpch_triples(spark: SparkSession, sf_dir: str,
                     tables: dict[str, DataFrame] | None = None,
                     dedup: bool = True) -> DataFrame:
+    from .api import materialize_auto
     mapping = MappingDocument.from_text(TPCH_KG_MAPPING)
-    compiler = NativeCompiler(spark, mapping,
-                              tables or tpch_tables(spark, sf_dir),
-                              broadcast_parents=False)
-    return compiler.triples(dedup=dedup)
+    return materialize_auto(spark, mapping,
+                            tables=tables or tpch_tables(spark, sf_dir),
+                            dedup=dedup)
 
 
 _RDF_TYPE = "<http://www.w3.org/1999/02/22-rdf-syntax-ns#type>"
@@ -438,21 +438,15 @@ LANG_KG_MAPPING = """
 """
 
 
-def _lang_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
+def sparql_lang_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .api import answer_auto
     mapping = MappingDocument.from_text(LANG_KG_MAPPING)
     nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    return NativeCompiler(spark, mapping, {"nation": nation},
-                          fuse_projections=False).triples()
-
-
-def sparql_lang_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .sparql import SparqlEngine
-    return SparqlEngine(_lang_triples(spark, sf_dir),
-                        dedup_source=False).sql(SPARQL_PREFIX + """
+    return answer_auto(spark, mapping, SPARQL_PREFIX + """
         SELECT ?s ?l WHERE {
             ?s ex:label ?l .
             FILTER(langMatches(LANG(?l), "en"))
-        } ORDER BY ?s ?l""")
+        } ORDER BY ?s ?l""", tables={"nation": nation})
 
 
 SPARQL_LANG_FILTER_SQL = """
@@ -490,15 +484,12 @@ ORDER BY s
 def sparql_construct_located(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CONSTRUCT: derive ex:locatedIn triples (customer → region) from the
     inNation/inRegion chain over the TPC-H KG."""
-    from .sparql import SparqlEngine
+    from .api import answer_auto
     mapping = MappingDocument.from_text(TPCH_KG_MAPPING)
-    compiler = NativeCompiler(spark, mapping, tpch_tables(spark, sf_dir),
-                              fuse_projections=False)
-    eng = SparqlEngine(compiler.triples(dedup=False), dedup_source=True)
-    return eng.construct(SPARQL_PREFIX + """
+    return answer_auto(spark, mapping, SPARQL_PREFIX + """
         CONSTRUCT { ?c ex:locatedIn ?r }
         WHERE { ?c ex:inNation ?n . ?n ex:inRegion ?r }
-    """).orderBy("subj", "pred", "obj")
+    """, tables=tpch_tables(spark, sf_dir)).orderBy("subj", "pred", "obj")
 
 
 def sparql_construct_oracle_sql() -> str:

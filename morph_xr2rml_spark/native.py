@@ -255,15 +255,9 @@ class NativeCompiler:
     def __init__(self, spark: SparkSession, mapping: MappingDocument,
                  tables: dict[str, DataFrame],
                  cfg: Optional[EngineConfig] = None,
-                 term_style: str = "ntriples",
-                 broadcast_parents: bool = False,
                  fuse_projections: bool = True,
-                 tm_row_filters: Optional[dict] = None,
-                 tm_skip: Optional[set] = None):
-        """term_style: 'ntriples' → canonical lexical forms (engine
-        output); 'plain' → raw value strings (oracle-comparable).
-
-        fuse_projections: True → ONE scan per TM (explode over an array of
+                 tm_row_filters: Optional[dict] = None):
+        """fuse_projections: True → ONE scan per TM (explode over an array of
         (pred, obj) structs) — best for materialization throughput.
         False → one union branch per predicate-object map with a CONSTANT
         pred per branch, which lets Catalyst constant-fold away branches
@@ -277,18 +271,14 @@ class NativeCompiler:
         (template inversion), ('lexeq', lex) rendered-literal equality,
         ('cmp', ((op, num), ...)) numeric predicates, or
         ('lexpat', kind, pat) STRSTARTS/STRENDS/CONTAINS mirrors — see
-        _constraint_col.  tm_skip: TMs proven unable to contribute any
-        matching triple — their sources are never read."""
+        _constraint_col."""
         check_sql_text_conf(spark)
         self.spark = spark
         self.mapping = mapping
         self.tables = tables
         self.cfg = cfg or EngineConfig()
-        self.term_style = term_style
-        self.broadcast_parents = broadcast_parents
         self.fuse_projections = fuse_projections
         self.tm_row_filters = tm_row_filters or {}
-        self.tm_skip = frozenset(tm_skip or ())
 
     # -- term expressions ----------------------------------------------
     def _source_df(self, tm: TriplesMap) -> DataFrame:
@@ -301,19 +291,13 @@ class NativeCompiler:
         return self.spark.sql(ls.value)
 
     def _iri_term(self, iri_value: Column) -> Column:
-        if self.term_style == "ntriples":
-            return F.concat(F.lit("<"), iri_value, F.lit(">"))
-        return iri_value
+        return F.concat(F.lit("<"), iri_value, F.lit(">"))
 
     def _iri_term_sql(self, inner: str) -> str:
-        if self.term_style == "ntriples":
-            return f"concat('<', {inner}, '>')"
-        return inner
+        return f"concat('<', {inner}, '>')"
 
     def _literal_term(self, value: Column, datatype: Optional[str],
                       lang: Optional[str]) -> Column:
-        if self.term_style == "plain":
-            return value
         body = F.concat(F.lit('"'), nt_escape_col(value), F.lit('"'))
         if lang:
             return F.concat(body, F.lit("@" + lang))
@@ -323,8 +307,6 @@ class NativeCompiler:
 
     def _literal_term_sql(self, inner: str, datatype: Optional[str],
                           lang: Optional[str]) -> str:
-        if self.term_style == "plain":
-            return inner
         body = f"concat('\"', {nt_escape_sql(inner)}, '\"')"
         if lang:
             return f"concat({body}, {sql_lit('@' + lang)})"
@@ -390,8 +372,7 @@ class NativeCompiler:
             if c[0] == "iri":
                 return self._iri_term_sql(sql_lit(c[1]))
             if c[0] == "bnode":
-                return sql_lit(f"_:{c[1]}"
-                               if self.term_style == "ntriples" else c[1])
+                return sql_lit(f"_:{c[1]}")
             return self._literal_term_sql(sql_lit(c[1]), m.datatype or c[2],
                                           m.language or c[3])
         if m.kind == COLUMN:
@@ -641,7 +622,8 @@ class NativeCompiler:
         parent key (xrr:uniqueRef, xR2RMLLogicalSource.scala:17-22 — the
         reference's precondition; without it a duplicate-keyed parent
         would emit N duplicate triples under the inner join but one
-        under the probe, changing triples(dedup=False) multiplicity) and
+        under the probe, changing the un-deduplicated plan's
+        multiplicity) and
         identical source dtypes (exact, incl. decimal precision) so both
         sides render the same lexical form."""
         if len(rom.join_conditions) != 1:
@@ -699,8 +681,6 @@ class NativeCompiler:
         if self._parent_key_renders_object(parent_tm, pdf, child_df, rom):
             # existence probe: bare parent keys, no subject strings built
             parent_keys = pdf.select(F.col(pcols[0]).alias(ccols[0]))
-            if self.broadcast_parents:
-                parent_keys = F.broadcast(parent_keys)
             kept = child_df.join(parent_keys, ccols[0], "left_semi") \
                            .withColumn(pcols[0], F.col(ccols[0]))
             key_obj = self.term_expr(kept, parent_tm.subject_map)
@@ -717,8 +697,6 @@ class NativeCompiler:
         parent_sel = pdf.select(
             parent_subj.alias("_psubj"),
             *[F.col(c).alias(f"_pk{i}") for i, c in enumerate(pcols)])
-        if self.broadcast_parents:
-            parent_sel = F.broadcast(parent_sel)
         # ship raw term-source columns through the exchange, not built
         # strings: the subj/pred Columns reference child columns by name
         # and resolve against the joined plan, so construction happens
@@ -773,9 +751,7 @@ class NativeCompiler:
                 val = strip_ws_col(val)
             if isinstance(df.schema[col].dataType, T.StringType):
                 val = encode_literal_col(val, self.cfg.encode_literal_quotes)
-            if self.term_style == "ntriples":
-                val = nt_escape_col(val)
-            return val
+            return nt_escape_col(val)
 
         def lex_eq(col: str, lex: str) -> Column:
             dtype = df.schema[col].dataType
@@ -931,37 +907,19 @@ class NativeCompiler:
                     return False
         return True
 
-    def _subject_space(self, tm: TriplesMap):
-        return subject_space(tm)
-
-    def _tm_pred_consts(self, tm: TriplesMap):
-        """Set of constant predicate IRIs the TM emits, or None when any
-        predicate map is dynamic."""
-        preds = set()
-        if tm.class_uris:
-            preds.add(NS.RDF_TYPE)
-        for pom in tm.predicate_object_maps:
-            for pm in pom.predicate_maps:
-                if pm.kind != CONSTANT or pm.constant is None \
-                        or pm.constant[0] != "iri":
-                    return None
-                preds.add(pm.constant[1])
-        return preds
-
-    def provably_distinct(self) -> bool:
-        """True when the WHOLE mapping provably emits no duplicate triple,
-        so triples(dedup=True) can skip the global dedup exchange — the
-        compile-time counterpart of the reference's Jena-set semantics
+    def provably_distinct(self, tms) -> bool:
+        """True when the triples maps ``tms`` together provably emit no
+        duplicate triple, so the global dedup exchange can be skipped —
+        the compile-time counterpart of the reference's Jena-set semantics
         (it needs a Model because it cannot prove this; we can, from
         xrr:uniqueRef + constant predicates + single-valued columns).
         Per-TM: subject unique per row and per-row slots disjoint
         (_tm_branches_distinct).  Across TMs: pairwise disjoint subject
         spaces (distinct term types, or neither fixed template prefix a
         prefix of the other) or disjoint constant predicate sets."""
-        tms = [(name, tm) for name, tm in self.mapping.triples_maps.items()
-               if name not in self.tm_skip]
+        from .rewrite import tm_pred_iris
         infos = []
-        for _name, tm in tms:
+        for tm in tms:
             if tm.graph_maps or any(pom.graph_maps
                                     for pom in tm.predicate_object_maps):
                 # named graphs multiply quads per (s,p,o); the branch
@@ -970,51 +928,17 @@ class NativeCompiler:
             df = self._source_df(tm)
             if not self._tm_branches_distinct(tm, df):
                 return False
-            infos.append((self._subject_space(tm), self._tm_pred_consts(tm)))
+            infos.append((subject_space(tm), tm_pred_iris(tm)))
         for i in range(len(infos)):
             for j in range(i + 1, len(infos)):
                 (sp_a, pr_a), (sp_b, pr_b) = infos[i], infos[j]
-                if sp_a is not None and sp_b is not None:
-                    (tt_a, px_a), (tt_b, px_b) = sp_a, sp_b
-                    if tt_a != tt_b:
-                        continue
-                    if not (px_a.startswith(px_b) or px_b.startswith(px_a)):
-                        continue
+                if subject_spaces_disjoint(sp_a, sp_b):
+                    continue
                 if pr_a is not None and pr_b is not None \
                         and not (pr_a & pr_b):
                     continue
                 return False
         return True
-
-    def triples(self, dedup: bool = True) -> DataFrame:
-        parts = [self.tm_triples(tm)
-                 for name, tm in self.mapping.triples_maps.items()
-                 if name not in self.tm_skip]
-        self.dedup_eliminated = False
-        if not parts:
-            from .engine import TRIPLE_SCHEMA
-            return self.spark.createDataFrame([], TRIPLE_SCHEMA)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        if dedup:
-            if self.provably_distinct():
-                # uniqueness-driven dedup elimination: the mapping provably
-                # emits a duplicate-free triple set, so the global
-                # dropDuplicates exchange (the residual cost in the full
-                # kg_tpch pipeline) is a no-op — skip it
-                self.dedup_eliminated = True
-                return out
-            from .engine import dedup_triples
-            # tabular R2RML emits one triple per (row, term map): duplicates
-            # only exist if source rows repeat, so skip the map-side
-            # partial agg (prepartition) — it collapses nothing here.
-            # BUT only in fused (materialization) mode: the explicit
-            # repartition blocks predicate pushdown, which the unfused
-            # SPARQL-over-plan mode relies on to constant-fold
-            # non-matching branches out of the plan (15 -> 6 scans)
-            out = dedup_triples(out, prepartition=self.fuse_projections)
-        return out
 
 
 # ---------------------------------------------------------------------------

@@ -117,13 +117,14 @@ def compilable(tm: TriplesMap) -> bool:
 # Compile-time duplicate-freeness (document tier, r6)
 # ---------------------------------------------------------------------------
 
-def provably_distinct_json(mapping, skip: frozenset = frozenset()) -> bool:
+def provably_distinct_json(tms) -> bool:
     """Document-tier twin of NativeCompiler.provably_distinct — tier-
     independent (the proof is about mapping semantics: the same shapes
     emit identically from the json-native and the Arrow document
-    compilers).  True when the mapping provably emits no duplicate
-    triple, so the global dedup exchange / the evaluator's per-pattern
-    dropDuplicates are compile-time no-ops.  Per TM:
+    compilers).  True when the triples maps ``tms`` together provably
+    emit no duplicate triple, so the global dedup exchange / the
+    evaluator's per-pattern dropDuplicates are compile-time no-ops.
+    Per TM:
 
       - NO iterator and no logical-source pushDown (one row == one
         document; under an iterator a subject repeats across items);
@@ -165,9 +166,7 @@ def provably_distinct_json(mapping, skip: frozenset = frozenset()) -> bool:
         return None
 
     infos = []
-    for name, tm in mapping.triples_maps.items():
-        if name in skip:
-            continue
+    for tm in tms:
         ls = tm.logical_source
         if ls.iterator or ls.pushdowns:
             return False
@@ -285,10 +284,10 @@ def _tree_to_struct(tree: dict) -> T.StructType:
 # Answering-mode persist tracker
 # ---------------------------------------------------------------------------
 # The unfused (answering) plan persists each resolved, filtered source
-# (tm_base / _rom_triples) and registers it here; ``cleanup()`` releases
-# everything.  A long-lived session answering many queries would otherwise
-# accumulate executor storage — the same contract as
-# ``engine.SparkEngine.cleanup()``.
+# (tm_base / _rom_triples), and the Python tier persists each ROM TM's
+# child stage (engine.SparkMaterializer._tm_triples); both register here,
+# and ``cleanup()`` releases everything.  A long-lived session answering
+# many queries would otherwise accumulate executor storage.
 
 _PERSISTED: list = []
 # live-entry cap: long sessions answering many distinct queries would
@@ -837,18 +836,6 @@ class JsonNativeCompiler:
         return joined.select("subj", "pred",
                              F.col("_psubj").alias("obj"), "graph") \
                      .where(F.col("subj").isNotNull() & F.col("obj").isNotNull())
-
-    def triples(self, dedup: bool = True) -> DataFrame:
-        parts = [self.tm_base(tm) for tm in self.mapping.triples_maps.values()]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        if dedup:
-            from .engine import dedup_triples
-            # one triple per (item, term map): mostly distinct, so skip
-            # the map-side partial agg (measured 2.4x at 66M triples)
-            out = dedup_triples(out, prepartition=True)
-        return out
 
 
 # ---------------------------------------------------------------------------

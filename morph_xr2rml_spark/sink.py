@@ -43,13 +43,12 @@ class ResumableMaterializer:
 
     def __init__(self, spark: SparkSession, mapping: MappingDocument,
                  catalog: SourceCatalog, out_path: str,
-                 cfg: Optional[EngineConfig] = None, **engine_kw):
+                 cfg: Optional[EngineConfig] = None):
         self.spark = spark
         self.mapping = mapping
         self.catalog = catalog
         self.out_path = out_path
-        self.materializer = SparkMaterializer(spark, mapping, catalog,
-                                              cfg, **engine_kw)
+        self.materializer = SparkMaterializer(spark, mapping, catalog, cfg)
         self.manifest_path = os.path.join(out_path, "_manifest.json")
 
     # -- manifest --------------------------------------------------------

@@ -4,7 +4,7 @@
 Every battery query is answered twice:
   (a) through answer_auto — which takes the aggregate fast path when
       the bindings==rows proof holds;
-  (b) over the full un-rewritten plan (NativeCompiler triples +
+  (b) over the full un-rewritten plan (the unconstrained routed plan +
       SparqlEngine) with evaluator-side aggregation.
 Result multisets must agree (doubles compared at 9 significant digits:
 partial aggregation reassociates float addition in BOTH paths, so the
@@ -22,8 +22,9 @@ from morph_xr2rml_spark.aggpush import try_aggregate_pushdown_auto
 from morph_xr2rml_spark.api import answer_auto
 from morph_xr2rml_spark.examples import TPCH_KG_MAPPING, tpch_tables
 from morph_xr2rml_spark.model import MappingDocument
-from morph_xr2rml_spark.native import NativeCompiler
 from morph_xr2rml_spark.sparql import SparqlEngine, parse_sparql
+
+from conftest import tier_pool
 
 SF_DIR = "/root/testdata/sf0.001"
 P = "PREFIX ex: <http://example.com/>\n" \
@@ -334,8 +335,8 @@ def _norm(rows):
 def env(spark):
     mapping = MappingDocument.from_text(TPCH_KG_MAPPING)
     tables = tpch_tables(spark, SF_DIR)
-    full = NativeCompiler(spark, mapping, tables,
-                          fuse_projections=False).triples(dedup=False)
+    full = tier_pool(spark, mapping, "native", tables, fused=False,
+                     dedup=False)
     engine = SparqlEngine(full, dedup_source=True)
     return mapping, tables, engine
 
@@ -467,8 +468,8 @@ def test_no_uniqueref_refuses_aggregates_allows_distinct(spark, env):
                               "{ ?c ex:segment ?s }")
     pushed = try_aggregate_pushdown_auto(spark, mapping, single, tables=tables)
     assert pushed is not None
-    full = NativeCompiler(spark, mapping, tables,
-                          fuse_projections=False).triples(dedup=False)
+    full = tier_pool(spark, mapping, "native", tables, fused=False,
+                     dedup=False)
     slow = SparqlEngine(full, dedup_source=True).sql(
         P + "SELECT DISTINCT ?s WHERE { ?c ex:segment ?s }")
     assert _norm(pushed.collect()) == _norm(slow.collect())

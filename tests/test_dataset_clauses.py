@@ -121,11 +121,10 @@ def test_graph_outside_from_named_eliminated(spark):
 def test_dataset_query_matches_full_evaluator(spark):
     """Differential: the constrained answer equals evaluation over the
     unconstrained materialized pool."""
-    from morph_xr2rml_spark.native import NativeCompiler
+    from conftest import tier_pool
     mapping = MappingDocument.from_text(GRAPH_KG_MAPPING)
     tables = tpch_tables(spark, SF_DIR)
-    pool = NativeCompiler(spark, mapping, tables,
-                          fuse_projections=False).triples(dedup=True)
+    pool = tier_pool(spark, mapping, "native", tables, fused=False)
     for q in [
         "SELECT ?n FROM <http://example.org/g/2> "
         "WHERE { ?s ex:name ?n } ORDER BY ?n",

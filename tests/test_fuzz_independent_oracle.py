@@ -25,8 +25,9 @@ from morph_xr2rml_spark.api import answer_auto
 from morph_xr2rml_spark.examples import (TPCH_KG_MAPPING,
                                          kg_tpch_triples_cte, tpch_tables)
 from morph_xr2rml_spark.model import MappingDocument
-from morph_xr2rml_spark.native import NativeCompiler
 from morph_xr2rml_spark.sparql import SparqlEngine
+
+from conftest import tier_pool
 
 SF_DIR = "/root/testdata/sf0.001"
 TABLES = ("region", "nation", "customer", "orders")
@@ -366,8 +367,7 @@ def _norm(rows):
 def env(spark):
     mapping = MappingDocument.from_text(TPCH_KG_MAPPING)
     tables = tpch_tables(spark, SF_DIR)
-    pool = NativeCompiler(spark, mapping, tables,
-                          fuse_projections=False).triples(dedup=True)
+    pool = tier_pool(spark, mapping, "native", tables, fused=False)
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
@@ -591,8 +591,7 @@ def graph_env(spark):
     from morph_xr2rml_spark.examples import GRAPH_KG_MAPPING
     mapping = MappingDocument.from_text(GRAPH_KG_MAPPING)
     tables = tpch_tables(spark, SF_DIR)
-    pool = NativeCompiler(spark, mapping, tables,
-                          fuse_projections=False).triples(dedup=True)
+    pool = tier_pool(spark, mapping, "native", tables, fused=False)
     con = duckdb.connect()
     for t in TABLES:
         con.execute(

@@ -22,11 +22,10 @@ SF_DIR = "/root/testdata/sf0.001"
 
 def _full_scan_answer(spark, mapping_text, query):
     """Oracle: evaluate over the UNCONSTRAINED materialized quad pool."""
-    from morph_xr2rml_spark.native import NativeCompiler
+    from conftest import tier_pool
     mapping = MappingDocument.from_text(mapping_text)
     tables = tpch_tables(spark, SF_DIR)
-    pool = NativeCompiler(spark, mapping, tables,
-                          fuse_projections=False).triples(dedup=True)
+    pool = tier_pool(spark, mapping, "native", tables, fused=False)
     return SparqlEngine(pool).sql(SPARQL_PREFIX + query)
 
 
@@ -215,8 +214,8 @@ def test_null_graph_renders_and_column_iri_encoding_parity(spark):
     NOT the template-group reserved-chars encoder — ':' and '/' must
     survive."""
     from morph_xr2rml_spark.engine import materialize
+    from conftest import tier_pool
     from morph_xr2rml_spark.model import MappingDocument
-    from morph_xr2rml_spark.native import NativeCompiler
     from morph_xr2rml_spark.sources import SourceCatalog
     t = spark.createDataFrame(
         [(1, "A", "p", "q", "http://example.org/c1"),
@@ -231,9 +230,8 @@ def test_null_graph_renders_and_column_iri_encoding_parity(spark):
                   .collect())
     for fuse in (True, False):
         got = sorted(tuple(r) for r in
-                     NativeCompiler(spark, mapping, {"t": t},
-                                    fuse_projections=fuse)
-                     .triples(dedup=True).collect())
+                     tier_pool(spark, mapping, "native", {"t": t},
+                               fused=fuse).collect())
         assert got == want
     # the column IRI keeps ':' '/' and encodes only URL-unsafe chars
     assert ("<http://example.org/x/3>", "<http://example.com/iri>",

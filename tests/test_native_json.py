@@ -8,8 +8,10 @@ import pytest
 from morph_xr2rml_spark.engine import materialize
 from morph_xr2rml_spark.local_engine import materialize_local
 from morph_xr2rml_spark.model import MappingDocument
-from morph_xr2rml_spark.native_json import JsonNativeCompiler, compilable
+from morph_xr2rml_spark.native_json import compilable
 from morph_xr2rml_spark.sources import SourceCatalog
+
+from conftest import tier_pool
 
 SIMPLE = """
 @prefix rr: <http://www.w3.org/ns/r2rml#> .
@@ -70,8 +72,8 @@ def test_compilable_detection():
 def test_json_native_equals_document_compiler(spark):
     mapping = MappingDocument.from_text(SIMPLE)
     cat = _catalog(spark, "orderdocs", DOCS)
-    jn = JsonNativeCompiler(spark, mapping, cat)
-    got = {tuple(r) for r in jn.triples().collect()}
+    got = {tuple(r) for r in
+           tier_pool(spark, mapping, "json", catalog=cat).collect()}
     want = materialize_local(mapping, {"orderdocs": DOCS})
     assert got == want
     # types: qty long → xsd:integer, flag → xsd:boolean
@@ -84,7 +86,7 @@ def test_json_native_equals_document_compiler(spark):
 def test_json_native_no_python_in_plan(spark):
     mapping = MappingDocument.from_text(SIMPLE)
     cat = _catalog(spark, "orderdocs", DOCS)
-    plan = JsonNativeCompiler(spark, mapping, cat).triples() \
+    plan = tier_pool(spark, mapping, "json", catalog=cat) \
         ._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" not in plan and "MapInPandas" not in plan
     assert "Generate explode" in plan or "Generate" in plan
@@ -99,8 +101,8 @@ def test_json_native_rom_join(spark):
         [(json.dumps(d),) for d in c_docs], "content string"))
     cat.register_collection("p", spark.createDataFrame(
         [(json.dumps(d),) for d in p_docs], "content string"))
-    jn = JsonNativeCompiler(spark, mapping, cat)
-    got = {tuple(r) for r in jn.triples().collect()}
+    got = {tuple(r) for r in
+           tier_pool(spark, mapping, "json", catalog=cat).collect()}
     want = materialize_local(mapping, {"c": c_docs, "p": p_docs})
     assert got == want
     refs = {(s, o) for (s, p, o, g) in got if p.endswith("ref>")}
@@ -116,7 +118,7 @@ def test_corpus_mapping_json_native_equals_doc_engine(spark):
     cat1 = SourceCatalog().register_collection("orderdocs", docs)
     cat2 = SourceCatalog().register_collection("orderdocs", docs)
     native = {tuple(r) for r in
-              JsonNativeCompiler(spark, mapping, cat1).triples().collect()}
+              tier_pool(spark, mapping, "json", catalog=cat1).collect()}
     pyudf = {tuple(r) for r in materialize(spark, mapping, cat2).collect()}
     assert native == pyudf
 
@@ -151,7 +153,7 @@ def test_json_native_graph_quads_match_python_tier(spark):
     emitting nothing — byte-parity against the document engine."""
     import json as _json
     from morph_xr2rml_spark.engine import materialize
-    from morph_xr2rml_spark.native_json import JsonNativeCompiler, compilable
+    from morph_xr2rml_spark.native_json import compilable
     from morph_xr2rml_spark.sources import SourceCatalog
     docs = [_json.dumps(d) for d in [
         {"id": 1, "ga": "x", "val": "A", "pk": 10},
@@ -167,8 +169,7 @@ def test_json_native_graph_quads_match_python_tier(spark):
     mapping = MappingDocument.from_text(GRAPH_DOC_MAPPING)
     assert compilable(mapping.triples_maps["#D"])
     got = sorted(tuple(r) for r in
-                 JsonNativeCompiler(spark, mapping, cat)
-                 .triples(dedup=True).collect())
+                 tier_pool(spark, mapping, "json", catalog=cat).collect())
     want = sorted(tuple(r) for r in materialize(spark, mapping, cat)
                   .collect())
     assert got == want and len(got) == 10
@@ -230,4 +231,36 @@ def test_cleanup_releases_persisted_sources(spark):
     mid = jsc.getPersistentRDDs().size()
     released = native_json.cleanup()
     assert released >= 1
+    assert jsc.getPersistentRDDs().size() <= mid - released
+
+
+def test_cleanup_releases_python_tier_rom_persists(spark):
+    """A document-tier TM with a ROM persists its child stage; the routed
+    plan drops the SparkMaterializer that made it, so the persist must be
+    tracked by native_json too, or nothing can ever release it."""
+    from morph_xr2rml_spark import native_json
+    from morph_xr2rml_spark.api import _routed_plan, answer_auto
+    mapping = MappingDocument.from_text(JOIN_MAPPING.replace(
+        '''    rr:subjectMap [ rr:template "http://x/c/{$.id}" ];''',
+        '''    rr:subjectMap [ rr:template "http://x/c/{$.id}" ];
+    rr:predicateObjectMap [ rr:predicate ex:tag;
+      rr:objectMap [ xrr:reference "$.tags[*]" ] ];'''))
+    cat = SourceCatalog()
+    cat.register_collection("c", spark.createDataFrame(
+        [(json.dumps({"id": i, "pid": 10, "tags": ["a", "b"]}),)
+         for i in range(1, 4)], "content string"))
+    cat.register_collection("p", spark.createDataFrame(
+        [(json.dumps({"id": 10, "v": "x"}),)], "content string"))
+    assert _routed_plan(spark, mapping, cat)[1] == {"#Child": "doc",
+                                                    "#Parent": "json"}
+    native_json.cleanup()   # reset anything earlier tests tracked
+    jsc = spark.sparkContext._jsc.sc()
+    for i in (1, 2, 3):
+        rows = answer_auto(spark, mapping, "SELECT ?p ?o WHERE "
+                           f"{{ <http://x/c/{i}> ?p ?o }}",
+                           catalog=cat).collect()
+        assert len(rows) == 3          # two tags + the ROM reference
+    mid = jsc.getPersistentRDDs().size()
+    released = native_json.cleanup()
+    assert released >= 3
     assert jsc.getPersistentRDDs().size() <= mid - released

@@ -1,7 +1,8 @@
 """Package layout guards: the engine imports neither the removed
 training-data operator suite nor the removed legacy bench harness,
 ``__spark_entry__`` pairs every query with an oracle, SPARQL answering
-has one entry point, and one router picks every triples map's tier."""
+has one entry point, one router picks every triples map's tier, and
+only the router's ``api._routed_plan`` builds a whole-mapping plan."""
 
 import ast
 import pathlib
@@ -18,6 +19,11 @@ DELETED = {"answer_tabular", "answer_documents", "constrained_mapping",
 # tier tests: outside their own compilers only api.route_tier calls them
 TIER_TESTS = {"is_tabular_compilable", "compilable", "unsafe_paths"}
 COMPILERS = ("native.py", "native_json.py")
+# options no caller set, deleted with the compilers' whole-mapping triples()
+DELETED_OPTIONS = {"term_style", "broadcast_parents", "tm_skip",
+                   "salt_partitions", "event_time_col", "triple_rate_metrics"}
+# entry points whose every option is explicit (no pass-through **kwargs)
+NO_KWARGS = {"materialize_auto", "answer_auto", "_routed_plan"}
 
 
 def _sources():
@@ -112,4 +118,50 @@ def test_only_the_router_chooses_a_tier():
                 continue
             bad.append(f"{path.relative_to(ROOT)}:{line}: "
                        f"{'.'.join(chain) or '<module>'}")
+    assert not bad, bad
+
+
+def _functions():
+    """(path, enclosing class or None, FunctionDef) across the package."""
+    for path in _sources():
+        tree = ast.parse(path.read_text(), str(path))
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ClassDef):
+                for item in node.body:
+                    if isinstance(item, ast.FunctionDef):
+                        yield path, node.name, item
+        for node in tree.body:
+            if isinstance(node, ast.FunctionDef):
+                yield path, None, node
+
+
+def test_compilers_build_only_per_tm_plans():
+    bad = [f"{path.relative_to(ROOT)}:{fn.lineno}: {cls}.{fn.name}"
+           for path, cls, fn in _functions()
+           if cls in ("NativeCompiler", "JsonNativeCompiler")
+           and fn.name == "triples"]
+    assert not bad, bad
+
+
+def test_deleted_options_stay_gone():
+    bad = []
+    for path, cls, fn in _functions():
+        a = fn.args
+        params = [p.arg for p in a.posonlyargs + a.args + a.kwonlyargs]
+        for name in [fn.name] + params:
+            if name in DELETED_OPTIONS:
+                bad.append(f"{path.relative_to(ROOT)}:{fn.lineno}: "
+                           f"{fn.name}({name})")
+    assert not bad, bad
+
+
+def test_plan_entries_take_no_pass_through_kwargs():
+    seen = set()
+    bad = []
+    for path, cls, fn in _functions():
+        if path.name == "api.py" and cls is None and fn.name in NO_KWARGS:
+            seen.add(fn.name)
+            if fn.args.kwarg is not None:
+                bad.append(f"{fn.name}(**{fn.args.kwarg.arg})")
+    assert seen == NO_KWARGS
     assert not bad, bad

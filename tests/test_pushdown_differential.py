@@ -3,7 +3,7 @@
 Every query is answered twice over the TPC-H KG mapping:
   (a) through answer_auto — constraint derivation, TM elimination,
       cross-pattern propagation, literal/comparison pushdown;
-  (b) over the FULL un-rewritten plan (NativeCompiler triples +
+  (b) over the FULL un-rewritten plan (the unconstrained routed plan +
       SparqlEngine) — no pushdown at all.
 The result sets must be identical: the rewriter may only prune source
 rows that provably cannot contribute, never change an answer.  The
@@ -17,8 +17,9 @@ import pytest
 from morph_xr2rml_spark.api import answer_auto
 from morph_xr2rml_spark.examples import TPCH_KG_MAPPING, tpch_tables
 from morph_xr2rml_spark.model import MappingDocument
-from morph_xr2rml_spark.native import NativeCompiler
 from morph_xr2rml_spark.sparql import SparqlEngine
+
+from conftest import tier_pool
 
 SF_DIR = "/root/testdata/sf0.001"
 P = "PREFIX ex: <http://example.com/>\n" \
@@ -143,8 +144,8 @@ QUERIES = [
 def fixture_env(spark):
     mapping = MappingDocument.from_text(TPCH_KG_MAPPING)
     tables = tpch_tables(spark, SF_DIR)
-    full = NativeCompiler(spark, mapping, tables,
-                          fuse_projections=False).triples(dedup=False)
+    full = tier_pool(spark, mapping, "native", tables, fused=False,
+                     dedup=False)
     engine = SparqlEngine(full, dedup_source=True)
     return mapping, tables, engine
 
@@ -208,8 +209,8 @@ NASTY_QUERIES = [
 def nasty_env(spark):
     mapping = MappingDocument.from_text(NASTY_MAPPING)
     tables = tpch_tables(spark, SF_DIR)
-    full = NativeCompiler(spark, mapping, tables,
-                          fuse_projections=False).triples(dedup=False)
+    full = tier_pool(spark, mapping, "native", tables, fused=False,
+                     dedup=False)
     return mapping, tables, SparqlEngine(full, dedup_source=True)
 
 

@@ -20,9 +20,10 @@ import pytest
 from morph_xr2rml_spark.examples import (
     TPCH_KG_MAPPING, ORDERDOC_FLAT_MAPPING, tpch_tables, orderflat_catalog)
 from morph_xr2rml_spark.model import MappingDocument
-from morph_xr2rml_spark.native import NativeCompiler
 from morph_xr2rml_spark.sparql import SparqlEngine
 from morph_xr2rml_spark.api import answer_auto, materialize_auto
+
+from conftest import tier_pool
 
 SF_DIR = "/root/testdata/sf0.001"
 P = ("PREFIX ex: <http://example.com/>\n"
@@ -216,8 +217,8 @@ class QueryGen:
 def tab_env(spark):
     mapping = MappingDocument.from_text(TPCH_KG_MAPPING)
     tables = tpch_tables(spark, SF_DIR)
-    full = NativeCompiler(spark, mapping, tables,
-                          fuse_projections=False).triples(dedup=False)
+    full = tier_pool(spark, mapping, "native", tables, fused=False,
+                     dedup=False)
     return mapping, tables, SparqlEngine(full, dedup_source=True)
 
 
@@ -405,8 +406,7 @@ def graph_env(spark):
     from morph_xr2rml_spark.examples import GRAPH_KG_MAPPING
     mapping = MappingDocument.from_text(GRAPH_KG_MAPPING)
     tables = tpch_tables(spark, SF_DIR)
-    full = NativeCompiler(spark, mapping, tables,
-                          fuse_projections=False).triples(dedup=True)
+    full = tier_pool(spark, mapping, "native", tables, fused=False)
     return mapping, tables, SparqlEngine(full)
 
 

@@ -450,7 +450,7 @@ def test_describe_pushdown_constrains_both_positions(spark):
     object position — nation scan filtered, customer scan filtered via
     the ROM transfer, orders/region eliminated; result identical to the
     full-scan evaluation."""
-    from morph_xr2rml_spark.native import NativeCompiler
+    from conftest import tier_pool
     from morph_xr2rml_spark.rewrite import derive_tm_constraints
     from morph_xr2rml_spark.sparql import SparqlEngine
     mapping = MappingDocument.from_text(TPCH_KG_MAPPING)
@@ -476,8 +476,8 @@ def test_describe_pushdown_constrains_both_positions(spark):
         c.startswith("r_regionkey#") and "," not in c
         for c in region_scan_cols)
     assert "(n_nationkey" in plan and "(c_nationkey" in plan
-    full = NativeCompiler(spark, mapping, tables,
-                          fuse_projections=False).triples(dedup=False)
+    full = tier_pool(spark, mapping, "native", tables, fused=False,
+                     dedup=False)
     slow = SparqlEngine(full, dedup_source=True).sql(
         "DESCRIBE <http://example.org/nation/0>")
     assert sorted(map(tuple, fast.collect())) == \

@@ -131,10 +131,10 @@ def test_tabular_point_query_parity_and_plan(spark):
     got = [tuple(r) for r in df.collect()]
 
     # parity vs the unrestricted engine
-    from morph_xr2rml_spark.native import NativeCompiler
+    from conftest import tier_pool
     from morph_xr2rml_spark.sparql import SparqlEngine
-    full = NativeCompiler(spark, mapping, tables,
-                          fuse_projections=False).triples(dedup=False)
+    full = tier_pool(spark, mapping, "native", tables, fused=False,
+                     dedup=False)
     want = [tuple(r) for r in
             SparqlEngine(full, dedup_source=True).sql(qt).collect()]
     assert got == want and len(got) == 5

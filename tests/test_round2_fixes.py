@@ -11,9 +11,10 @@ from pyspark.sql import functions as F
 from morph_xr2rml_spark.api import materialize_auto
 from morph_xr2rml_spark.engine import SparkMaterializer, materialize
 from morph_xr2rml_spark.model import MappingDocument
-from morph_xr2rml_spark.native import NativeCompiler
 from morph_xr2rml_spark.sources import SourceCatalog, mongo_filter_to_column
 from morph_xr2rml_spark.sparql import SparqlEngine
+
+from conftest import tier_pool
 
 
 def _chain_triples(spark, n):
@@ -95,7 +96,7 @@ def test_nocond_rom_native_compiler_empty(spark):
     mapping = MappingDocument.from_text(NOCOND_RDB_MAPPING)
     ta = spark.createDataFrame([(1,), (2,)], "id int")
     tb = spark.createDataFrame([(1, "x"), (2, "y")], "id int, name string")
-    out = NativeCompiler(spark, mapping, {"ta": ta, "tb": tb}).triples().collect()
+    out = tier_pool(spark, mapping, "native", {"ta": ta, "tb": tb}).collect()
     assert [r for r in out if r.pred == "<http://example.com/ref>"] == []
     assert len(out) > 0
 

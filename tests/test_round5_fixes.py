@@ -8,7 +8,7 @@
    (MorphBaseDataTranslator accumulates into a Model); we prove them away;
 2. the left_semi ROM probe collapse is now GATED on a declared-unique
    parent key (ADVICE r4: without xrr:uniqueRef a duplicate-keyed parent
-   changes triples(dedup=False) multiplicity);
+   changes the un-deduplicated plan's multiplicity);
 3. rewrite.py soundness (ADVICE r4): rdf:type emitted via an explicit
    predicate-object map no longer causes TM elimination, and zero-length
    property paths (star/opt) never constrain any TM.
@@ -16,11 +16,14 @@
 
 import pytest
 
+from morph_xr2rml_spark.api import _routed_plan
 from morph_xr2rml_spark.examples import TPCH_KG_MAPPING, tpch_tables
 from morph_xr2rml_spark.model import MappingDocument
 from morph_xr2rml_spark.native import NativeCompiler
 from morph_xr2rml_spark.rewrite import (_path_iris, derive_tm_constraints,
                                         invert_object)
+
+from conftest import tier_pool
 
 SF_DIR = "/root/testdata/sf0.001"
 PREFIX = "PREFIX ex: <http://example.com/>\n"
@@ -34,12 +37,18 @@ def _physical_plan(df) -> str:
 # 1. dedup elimination
 # ---------------------------------------------------------------------------
 
+def _plan_distinct(spark, mapping, tables) -> bool:
+    """The routed plan's one duplicate-freeness proof."""
+    return _routed_plan(spark, mapping, tables=tables)[2]()
+
+
 def test_tpch_mapping_provably_distinct(spark):
     mapping = MappingDocument.from_text(TPCH_KG_MAPPING)
-    c = NativeCompiler(spark, mapping, tpch_tables(spark, SF_DIR))
-    assert c.provably_distinct()
-    df = c.triples(dedup=True)
-    assert c.dedup_eliminated
+    tables = tpch_tables(spark, SF_DIR)
+    c = NativeCompiler(spark, mapping, tables)
+    assert c.provably_distinct(mapping.triples_maps.values())
+    df = tier_pool(spark, mapping, "native", tables)
+    assert _plan_distinct(spark, mapping, tables)
     # the dedup exchange is a HashAggregate over the hash pair — the
     # eliminated plan must contain NO aggregate at all
     assert "Aggregate" not in _physical_plan(df)
@@ -48,10 +57,11 @@ def test_tpch_mapping_provably_distinct(spark):
 def test_dedup_elimination_matches_forced_dedup(spark):
     from morph_xr2rml_spark.engine import dedup_triples
     mapping = MappingDocument.from_text(TPCH_KG_MAPPING)
-    c = NativeCompiler(spark, mapping, tpch_tables(spark, SF_DIR))
-    fast = c.triples(dedup=True)
-    assert c.dedup_eliminated
-    slow = dedup_triples(c.triples(dedup=False))
+    tables = tpch_tables(spark, SF_DIR)
+    fast = tier_pool(spark, mapping, "native", tables)
+    assert _plan_distinct(spark, mapping, tables)
+    slow = dedup_triples(tier_pool(spark, mapping, "native", tables,
+                                   dedup=False))
     assert set(map(tuple, fast.collect())) == set(map(tuple, slow.collect()))
 
 
@@ -63,10 +73,11 @@ def test_no_uniqueref_keeps_dedup(spark):
                           .replace('; xrr:uniqueRef "o_orderkey"', "")
     assert "uniqueRef" not in text
     mapping = MappingDocument.from_text(text)
-    c = NativeCompiler(spark, mapping, tpch_tables(spark, SF_DIR))
-    assert not c.provably_distinct()
-    df = c.triples(dedup=True)
-    assert not c.dedup_eliminated
+    tables = tpch_tables(spark, SF_DIR)
+    c = NativeCompiler(spark, mapping, tables)
+    assert not c.provably_distinct(mapping.triples_maps.values())
+    df = tier_pool(spark, mapping, "native", tables)
+    assert not _plan_distinct(spark, mapping, tables)
     assert "Aggregate" in _physical_plan(df)
 
 
@@ -85,7 +96,7 @@ def test_duplicate_pred_blocks_proof(spark):
     """
     mapping = MappingDocument.from_text(text)
     c = NativeCompiler(spark, mapping, tpch_tables(spark, SF_DIR))
-    assert not c.provably_distinct()
+    assert not c.provably_distinct(mapping.triples_maps.values())
 
 
 def test_overlapping_subject_space_needs_disjoint_preds(spark):
@@ -106,13 +117,13 @@ def test_overlapping_subject_space_needs_disjoint_preds(spark):
     """
     mapping = MappingDocument.from_text(text)
     c = NativeCompiler(spark, mapping, tpch_tables(spark, SF_DIR))
-    assert not c.provably_distinct()
+    assert not c.provably_distinct(mapping.triples_maps.values())
     # same shape but DISTINCT predicates → disjoint, proof holds
     mapping2 = MappingDocument.from_text(text.replace(
         "rr:predicate ex:name; rr:objectMap [ rr:column \"n_comment\" ]",
         "rr:predicate ex:comment; rr:objectMap [ rr:column \"n_comment\" ]"))
     c2 = NativeCompiler(spark, mapping2, tpch_tables(spark, SF_DIR))
-    assert c2.provably_distinct()
+    assert c2.provably_distinct(mapping2.triples_maps.values())
 
 
 def test_multi_group_template_proof(spark):
@@ -129,9 +140,11 @@ def test_multi_group_template_proof(spark):
     """
     tables = tpch_tables(spark, SF_DIR)
     amb = MappingDocument.from_text(base.replace("SEP", "-"))
-    assert not NativeCompiler(spark, amb, tables).provably_distinct()
+    assert not NativeCompiler(spark, amb, tables).provably_distinct(
+        amb.triples_maps.values())
     safe = MappingDocument.from_text(base.replace("SEP", "/"))
-    assert NativeCompiler(spark, safe, tables).provably_distinct()
+    assert NativeCompiler(spark, safe, tables).provably_distinct(
+        safe.triples_maps.values())
 
 
 # ---------------------------------------------------------------------------
@@ -142,12 +155,12 @@ def test_semi_collapse_requires_uniqueref(spark):
     tables = tpch_tables(spark, SF_DIR)
     with_u = MappingDocument.from_text(TPCH_KG_MAPPING)
     plan_u = _physical_plan(
-        NativeCompiler(spark, with_u, tables).triples(dedup=False))
+        tier_pool(spark, with_u, "native", tables, dedup=False))
     assert "LeftSemi" in plan_u
     without = MappingDocument.from_text(
         TPCH_KG_MAPPING.replace('; xrr:uniqueRef "c_custkey"', ""))
     plan_n = _physical_plan(
-        NativeCompiler(spark, without, tables).triples(dedup=False))
+        tier_pool(spark, without, "native", tables, dedup=False))
     # the orders→customer ROM must fall back to the inner join (customer
     # key no longer declared unique); nation/region probes remain
     assert plan_n.count("LeftSemi") == plan_u.count("LeftSemi") - 1
@@ -173,12 +186,12 @@ def test_duplicate_parent_multiplicity_preserved(spark):
     child = spark.createDataFrame([(1, 10)], "id int, pid int")
     parent = spark.createDataFrame([(10,), (10,)], "pid int")
     mapping = MappingDocument.from_text(text)
-    c = NativeCompiler(spark, mapping,
-                       {"dup_child": child, "dup_parent": parent})
-    rows = c.triples(dedup=False).collect()
+    tables = {"dup_child": child, "dup_parent": parent}
+    rows = tier_pool(spark, mapping, "native", tables, dedup=False).collect()
     refs = [r for r in rows if r.pred.endswith("ref>")]
     assert len(refs) == 2          # N duplicates, matching the inner join
-    assert c.triples(dedup=True).where("pred like '%ref%'").count() == 1
+    assert tier_pool(spark, mapping, "native", tables) \
+        .where("pred like '%ref%'").count() == 1
 
 
 # ---------------------------------------------------------------------------

@@ -194,12 +194,11 @@ def _graph_env(spark):
 
 
 def test_native_graph_quads_match_python_tier(spark):
+    from conftest import tier_pool
     from morph_xr2rml_spark.engine import materialize
-    from morph_xr2rml_spark.native import NativeCompiler
     mapping, tables, cat = _graph_env(spark)
     for fuse in (True, False):
-        nat = NativeCompiler(spark, mapping, tables,
-                             fuse_projections=fuse).triples(dedup=True)
+        nat = tier_pool(spark, mapping, "native", tables, fused=fuse)
         ora = materialize(spark, mapping, cat)
         a = sorted(tuple(r) for r in nat.collect())
         b = sorted(tuple(r) for r in ora.collect())

@@ -82,7 +82,7 @@ def test_point_query_no_exchange(spark):
 
 def test_doc_mapping_provably_distinct_skips_dedup(spark):
     mapping = MappingDocument.from_text(ORDERDOC_FLAT_MAPPING)
-    assert provably_distinct_json(mapping)
+    assert provably_distinct_json(mapping.triples_maps.values())
     df = materialize_auto(spark, mapping,
                           catalog=orderflat_catalog(spark, SF_DIR))
     plan = _plan(df)
@@ -104,7 +104,7 @@ def test_doc_dedup_elimination_matches_forced_dedup(spark):
 
 def test_iterator_mapping_stays_unprovable(spark):
     mapping = MappingDocument.from_text(LINEITEM_JSON_MAPPING)
-    assert not provably_distinct_json(mapping)
+    assert not provably_distinct_json(mapping.triples_maps.values())
     cat = SourceCatalog().register_collection(
         "orderdocs", orderdocs_df(spark, SF_DIR))
     df = materialize_auto(spark, mapping, catalog=cat)
@@ -194,7 +194,8 @@ def test_ask_through_answer_paths(spark):
 
 def test_no_uniqueref_stays_unprovable():
     text = ORDERDOC_FLAT_MAPPING.replace('; xrr:uniqueRef "$.ok"', "")
-    assert not provably_distinct_json(MappingDocument.from_text(text))
+    assert not provably_distinct_json(
+        MappingDocument.from_text(text).triples_maps.values())
 
 
 def test_same_pred_two_refs_stays_unprovable():
@@ -205,13 +206,15 @@ def test_same_pred_two_refs_stays_unprovable():
         'rr:objectMap [ xrr:reference "$.ck" ] ];',
         'rr:predicateObjectMap [ rr:predicate ex:status; '
         'rr:objectMap [ xrr:reference "$.ck" ] ];')
-    assert not provably_distinct_json(MappingDocument.from_text(text))
+    assert not provably_distinct_json(
+        MappingDocument.from_text(text).triples_maps.values())
 
 
 def test_wildcard_object_stays_unprovable():
     text = ORDERDOC_FLAT_MAPPING.replace('xrr:reference "$.ck"',
                                          'xrr:reference "$.ck.*"')
-    assert not provably_distinct_json(MappingDocument.from_text(text))
+    assert not provably_distinct_json(
+        MappingDocument.from_text(text).triples_maps.values())
 
 
 def test_overlapping_subject_spaces_stay_unprovable():
@@ -225,4 +228,5 @@ def test_overlapping_subject_spaces_stay_unprovable():
     rr:predicateObjectMap [ rr:predicate ex:status; rr:objectMap [ xrr:reference "$.st" ] ].
 """
     assert not provably_distinct_json(
-        MappingDocument.from_text(ORDERDOC_FLAT_MAPPING + extra))
+        MappingDocument.from_text(ORDERDOC_FLAT_MAPPING + extra)
+        .triples_maps.values())

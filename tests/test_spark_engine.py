@@ -16,12 +16,12 @@ from conftest import requires_reference
 pytestmark = requires_reference
 
 
-def _spark_triples(spark, mapping, collections, **kw):
+def _spark_triples(spark, mapping, collections):
     catalog = SourceCatalog()
     for name, docs in collections.items():
         df = spark.createDataFrame([(d,) for d in docs], "content string")
         catalog.register_collection(name, df)
-    out = materialize(spark, mapping, catalog, **kw)
+    out = materialize(spark, mapping, catalog)
     return {tuple(r) for r in out.collect()}
 
 
@@ -32,15 +32,6 @@ def test_mapping1_spark_equals_oracle(spark):
     want = materialize_local(mapping, {"students": STUDENTS, "movies": MOVIES})
     assert got == want
     assert len(got) == 50
-
-
-def test_mapping1_with_salting(spark):
-    mapping = MappingDocument.from_file(MAPPING1_PATH)
-    got = _spark_triples(spark, mapping,
-                         {"students": STUDENTS_JSON, "movies": MOVIES_JSON},
-                         salt_partitions=4)
-    want = materialize_local(mapping, {"students": STUDENTS, "movies": MOVIES})
-    assert got == want
 
 
 def test_dedup_across_duplicate_docs(spark):
