@@ -213,8 +213,8 @@ def test_null_graph_renders_and_column_iri_encoding_parity(spark):
     IRI term maps get the whole-IRI encodeURI (URL-unsafe chars only),
     NOT the template-group reserved-chars encoder — ':' and '/' must
     survive."""
-    from morph_xr2rml_spark.engine import materialize
     from conftest import tier_pool
+    from morph_xr2rml_spark.engine import materialize
     from morph_xr2rml_spark.model import MappingDocument
     from morph_xr2rml_spark.sources import SourceCatalog
     t = spark.createDataFrame(
