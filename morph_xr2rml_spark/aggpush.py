@@ -488,7 +488,9 @@ def _build_join_frame(tier, mapping: MappingDocument, groups: dict,
     for a, b, _r in edges:
         adj.setdefault(a, []).append(b)
         adj.setdefault(b, []).append(a)
-    root = next(iter(nodes))
+    # the first group in query order: a set's first element would follow
+    # the string-hash seed, and with it which frame leads the join chain
+    root = next(iter(groups))
     seen = {root}
     stack = [root]
     while stack:
@@ -732,7 +734,7 @@ def _build_single_frame(tier, mapping: MappingDocument, groups: dict,
         k = kinds[tm.name]
         df = tier.open(tm, k)
         cond = tier.notnull(tm, k, df, tm.subject_map)
-        for p in needed:
+        for p in sorted(needed):
             cond = cond & tier.notnull(tm, k, df, slots[p])
         for pred, okind, oval in const_pats:
             om = slots[pred]
@@ -1286,8 +1288,10 @@ def _try_push(spark: SparkSession, mapping: MappingDocument,
         for v in proj:
             if v not in computed:
                 need_term(v)
-    for v in filter_vars | pre_vars | bind_term_vars \
-            | branch_filter_vars | {v for v, _l in values_conds}:
+    # sorted: term_vars is the frame's column order, the same in every
+    # process whatever the string-hash seed
+    for v in sorted(filter_vars | pre_vars | bind_term_vars
+                    | branch_filter_vars | {v for v, _l in values_conds}):
         if v in known_vars:
             need_term(v)
     for _pos, _eg1, _eo1, common, _eg2 in exists_specs:
