@@ -33,23 +33,28 @@ evaluator.  A pushed plan must be an EXACT mirror (not a superset):
 there is no evaluator behind it to re-apply the real semantics.  The
 preconditions:
 
-* WHERE is one BGP of triple patterns plus FILTERs, BINDs (applied in
-  the evaluator's post-pattern order via its own _bind_term_const/
-  _bind_col compilers), single-var VALUES, and single-pattern
-  ``OPTIONAL { ?s pred ?fresh }`` groups (nullable term columns; see
-  _build_single_frame) -- no UNION/GRAPH/subquery/MINUS/EXISTS and no
-  richer optionals (those keep evaluator semantics the mirror does
-  not replicate);
-* every pattern is ``?s <const-pred> ?o-or-constant`` with ONE common
-  subject variable (rdf:type excluded: class objects multiply per
-  class).  Constant objects mirror `_pattern_df`'s exact match forms
-  (IRI equality, plain-literal prefix match, typed-literal exact
-  match, numeric-value equality);
-* FILTER and HAVING expressions are compiled by the EVALUATOR'S OWN
-  expression compiler over the native bindings frame (an empty-pool
-  SparqlEngine borrowed for `_filter_col`/`_operand_col`), so their
-  semantics are exact by construction, not by re-implementation.
-  EXISTS-bearing filters are refused (they need the triple pool);
+* WHERE is one BGP of triple patterns plus FILTERs, BINDs, VALUES,
+  single-pattern ``OPTIONAL { ?s pred ?fresh }`` groups (nullable term
+  columns; see _build_single_frame), pure UNIONs of flat BGPs,
+  pushable subqueries and FILTER (NOT) EXISTS / MINUS over flat BGPs
+  -- no GRAPH and no richer optionals (those keep evaluator semantics
+  the mirror does not replicate);
+* every pattern is ``?s <const-pred> ?o-or-constant``, grouped by
+  subject variable; several groups join as a tree over referencing-
+  object-map edges (_build_join_frame).  An rdf:type pattern needs a
+  constant class (class objects multiply per class).  Constant objects
+  mirror `_pattern_df`'s exact match forms (IRI equality, plain-literal
+  prefix match, typed-literal exact match, numeric-value equality);
+* the SELECT tail over the native bindings frame is the EVALUATOR'S
+  OWN code (`_apply_tail`): BIND, VALUES, HAVING and ORDER BY/OFFSET/
+  LIMIT are the SparqlEngine methods `_join_group` and `evaluate` call
+  (`_apply_binds`, `_apply_values`, `_apply_having`,
+  `_slice_solutions`), and FILTER, HAVING and SELECT expressions go
+  through its expression compiler (an empty-pool SparqlEngine borrowed
+  for `_filter_col`/`_operand_col`), so their semantics are exact by
+  construction, not by re-implementation.  Only aggregation is built
+  here, over pre-mirrored inputs.  Filters with EXISTS inside an
+  expression are refused (they need the triple pool);
 * every mapping TM has compile-time-constant predicates (otherwise a
   TM's contribution cannot be bounded) and any TM emitting SOME of the
   pattern predicates has a subject space pairwise disjoint from every
@@ -100,7 +105,8 @@ from .native import (NativeCompiler, subject_space, subject_spaces_disjoint,
                      subject_renders_unique_schemaless)
 from .sources import SourceCatalog
 from .sparql import (SelectQuery, SparqlEngine, TriplePattern,
-                     lexical_value, numeric_value, term_order_keys)
+                     aggregate_specs, distinct_numeric_agg, lexical_value,
+                     numeric_value)
 
 # filter/operand AST nodes that depend on evaluation-time state the
 # borrowed expression compiler cannot supply here: EXISTS needs the
@@ -263,17 +269,15 @@ class _BindingTier:
         return subject_renders_unique_schemaless(tm)
 
 
-def _tm_needed_slots(tm, needed: set):
+def _tm_needed_slots(tm, needed: set) -> Optional[dict]:
     """How a TM relates to the pattern predicates.
 
     Returns None when any predicate map is non-constant (the TM's
-    emissions cannot be bounded -- caller must fall back), else
-    ``(slots, unclean)`` where slots maps each needed predicate the TM
-    emits to its object-map list and unclean holds the needed
-    predicates that also have a RefObjectMap slot.  rdf:type is handled
-    by `_tm_type_consts`, never through slots."""
+    emissions cannot be bounded -- caller must fall back), else a dict
+    mapping each needed predicate the TM emits to its ``(object maps,
+    referencing object maps)`` lists.  rdf:type is handled by
+    `_tm_type_consts`, never through slots."""
     slots: dict = {}
-    unclean: set = set()
     for pom in tm.predicate_object_maps:
         preds = []
         for pm in pom.predicate_maps:
@@ -284,10 +288,20 @@ def _tm_needed_slots(tm, needed: set):
         for p in preds:
             if p not in needed:
                 continue
-            slots.setdefault(p, []).extend(pom.object_maps)
-            if pom.ref_object_maps:
-                unclean.add(p)
-    return slots, unclean
+            ent = slots.setdefault(p, ([], []))
+            ent[0].extend(pom.object_maps)
+            ent[1].extend(pom.ref_object_maps)
+    return slots
+
+
+def _sole_om(slot, om_kinds) -> Optional[TermMap]:
+    """The slot's one object map when it is the predicate's only,
+    mirrorable emission (no referencing object map, no second object
+    map, a term kind the tier renders); else None."""
+    oms, roms = slot
+    if roms or len(oms) != 1 or oms[0].kind not in om_kinds:
+        return None
+    return oms[0]
 
 
 def _tm_type_consts(tm) -> Optional[set]:
@@ -331,6 +345,73 @@ def _const_obj_cond(tier, tm, k, df, om, okind, oval) -> Optional[Column]:
         return None
 
 
+def _emits_input(func: str, var, dist: bool, computed: set,
+                 nullable: set) -> bool:
+    """Whether the bindings frame carries an aggregate's ``#a{i}``
+    input column.  Not for COUNT(*), not for an input computed after
+    the frame is built (`_apply_tail` adds those), and not for a plain
+    COUNT of a var that is never NULL on the frame: ``count(1)`` is
+    exact there."""
+    return (var is not None and var not in computed
+            and not (func == "COUNT" and not dist and var not in nullable))
+
+
+def _frame_cols(tier, tm, k, df, home, term_vars: list, specs: list,
+                computed: set, nullable: set) -> list:
+    """One TM frame's term columns and aggregate-input columns.
+    ``home(v)`` is ``(here, m)``: whether v lives on this frame, and
+    its term map there (None: a NULL column -- an optional slot the TM
+    never emits, or a var bound only in a sibling UNION branch)."""
+    cols = []
+    for v in term_vars:
+        here, m = home(v)
+        if here:
+            cols.append((F.lit(None).cast("string") if m is None
+                         else tier.term(tm, k, df, m)).alias(v))
+    for i, (func, var, dist, _alias, _sep) in enumerate(specs):
+        if not _emits_input(func, var, dist, computed, nullable):
+            continue
+        here, m = home(var)
+        if not here:
+            continue
+        if m is None:            # absent optional/branch slot: typed NULLs
+            dt = "double" if (func in ("SUM", "AVG", "MIN", "MAX")
+                              and not dist) else "string"
+            c = F.lit(None).cast(dt)
+        elif dist and func in ("SUM", "AVG"):
+            # DISTINCT dedupes TERMS first: ship the exact term
+            c = tier.term(tm, k, df, m)
+        elif func in ("SUM", "AVG", "MIN", "MAX"):
+            c = tier.numeric(tm, k, df, m)
+        elif func == "GROUP_CONCAT":
+            c = lexical_value(tier.term(tm, k, df, m))
+        else:                    # COUNT (DISTINCT) / SAMPLE: exact term
+            c = tier.term(tm, k, df, m)
+        cols.append(c.alias(f"#a{i}"))
+    return cols
+
+
+def _bindings_frame(tier, mapping: MappingDocument, groups: dict,
+                    obj_binding: dict, opt_binding: dict, term_vars: list,
+                    specs: list, computed: set,
+                    absent: frozenset = frozenset(),
+                    nullable: Optional[set] = None) -> Optional[DataFrame]:
+    """One BGP's bindings frame: the single-subject builder when no
+    subject is bound as an object, else -- or when it refuses -- the
+    join-tree builder (a single visible group can still need it: an
+    edge predicate whose object var is never a subject is a
+    pseudo-group against the ROM parent)."""
+    if len(groups) == 1 and not any(v in groups for v in obj_binding):
+        u = _build_single_frame(tier, mapping, groups, opt_binding,
+                                term_vars, specs, computed, absent,
+                                nullable)
+        if u is not None:
+            return u
+    return _build_join_frame(tier, mapping, groups, obj_binding,
+                             opt_binding, term_vars, specs, computed,
+                             absent, nullable)
+
+
 def _build_join_frame(tier, mapping: MappingDocument, groups: dict,
                       obj_binding: dict, opt_binding: dict,
                       term_vars: list, specs: list, computed: set,
@@ -368,20 +449,9 @@ def _build_join_frame(tier, mapping: MappingDocument, groups: dict,
                 return None      # dynamic rdf:type object: cannot bound
             tc = set()
         tm_types[tm.name] = tc
-        slots: dict = {}
-        for pom in tm.predicate_object_maps:
-            preds = []
-            for pm in pom.predicate_maps:
-                if pm.kind != CONSTANT or pm.constant is None \
-                        or pm.constant[0] != "iri":
-                    return None  # dynamic predicate: cannot bound
-                preds.append(pm.constant[1])
-            for p in preds:
-                if p not in all_preds:
-                    continue
-                ent = slots.setdefault(p, ([], []))
-                ent[0].extend(pom.object_maps)
-                ent[1].extend(pom.ref_object_maps)
+        slots = _tm_needed_slots(tm, all_preds)
+        if slots is None:
+            return None          # dynamic predicate: cannot bound
         tm_slots[tm.name] = slots
 
     # ---- cover per group: fixpoint resolution -------------------------
@@ -531,11 +601,10 @@ def _build_join_frame(tier, mapping: MappingDocument, groups: dict,
         if ent is None:
             opt_slot[var] = (gv, None)   # never emitted: NULL column
         else:
-            oms, roms = ent
-            if roms or len(oms) != 1 \
-                    or oms[0].kind not in tier.om_kinds(kinds[gv]):
+            om = _sole_om(ent, tier.om_kinds(kinds[gv]))
+            if om is None:
                 return None
-            opt_slot[var] = (gv, oms[0])
+            opt_slot[var] = (gv, om)
 
     anchor = next(iter(groups))  # NULL columns for sibling-branch vars
 
@@ -565,33 +634,12 @@ def _build_join_frame(tier, mapping: MappingDocument, groups: dict,
             if c is None:
                 return None
             cond = cond & c
-        cols = []
-        for v in term_vars:
+        def home(v: str):
             hg, m = var_home(v)
-            if hg == gv:
-                cols.append((F.lit(None).cast("string") if m is None
-                             else tier.term(tm, k, df, m)).alias(v))
-        for i, (func, var, dist, _alias, _sep) in enumerate(specs):
-            if var is None or var in computed:
-                continue
-            if func == "COUNT" and not dist and var not in nullable:
-                continue
-            hg, m = var_home(var)
-            if hg != gv:
-                continue
-            if m is None:        # absent optional/branch slot: typed NULLs
-                dt = "double" if (func in ("SUM", "AVG", "MIN", "MAX")
-                                  and not dist) else "string"
-                cols.append(F.lit(None).cast(dt).alias(f"#a{i}"))
-            elif dist and func in ("SUM", "AVG"):
-                cols.append(tier.term(tm, k, df, m).alias(f"#a{i}"))
-            elif func in ("SUM", "AVG", "MIN", "MAX"):
-                cols.append(tier.numeric(tm, k, df, m).alias(f"#a{i}"))
-            elif func == "GROUP_CONCAT":
-                cols.append(lexical_value(tier.term(tm, k, df, m))
-                            .alias(f"#a{i}"))
-            else:
-                cols.append(tier.term(tm, k, df, m).alias(f"#a{i}"))
+            return hg == gv, m
+
+        cols = _frame_cols(tier, tm, k, df, home, term_vars, specs,
+                           computed, nullable)
         for ei, (cgv, pgv, rom) in enumerate(edges):
             if gv == cgv:
                 cols.extend(F.col(jc.child_ref).alias(f"#ck{ei}_{i}")
@@ -668,10 +716,9 @@ def _build_single_frame(tier, mapping: MappingDocument, groups: dict,
     contributors = []            # (tm, full_slots or None, opt_slots)
     kinds: dict = {}             # tm name -> "tab" | "doc"
     for tm in mapping.triples_maps.values():
-        info = _tm_needed_slots(tm, needed | opt_preds)
-        if info is None:
+        slots = _tm_needed_slots(tm, needed | opt_preds)
+        if slots is None:
             return None          # dynamic predicates: cannot bound
-        slots, unclean = info
         type_consts = _tm_type_consts(tm) if type_pats else set()
         if type_consts is None:
             return None          # dynamic rdf:type object: cannot bound
@@ -680,12 +727,14 @@ def _build_single_frame(tier, mapping: MappingDocument, groups: dict,
         covers = needed <= set(slots) and type_pats <= type_consts
         full_slots = None
         opt_slots: dict = {}
-        if covers and not (needed & unclean) \
-                and all(len(slots[p]) == 1 for p in needed):
-            k = tier.kind(tm)
-            if k is not None and all(slots[p][0].kind in tier.om_kinds(k)
-                                     for p in needed):
-                full_slots = {p: slots[p][0] for p in needed}
+        # route the TM only when every needed slot is one plain object map
+        k = tier.kind(tm) if covers and all(
+            not slots[p][1] and len(slots[p][0]) == 1 for p in needed) \
+            else None
+        if k is not None:
+            oms = {p: _sole_om(slots[p], tier.om_kinds(k)) for p in needed}
+            if None not in oms.values():
+                full_slots = oms
                 kinds[tm.name] = k
                 # optional slots this candidate emits: must be solely
                 # and exactly mirrorable, else the left join cannot
@@ -693,12 +742,11 @@ def _build_single_frame(tier, mapping: MappingDocument, groups: dict,
                 for p in opt_preds:
                     if p not in slots:
                         opt_slots[p] = None      # never emitted: NULL
-                    elif p in unclean or len(slots[p]) != 1 \
-                            or slots[p][0].kind not in tier.om_kinds(k):
+                        continue
+                    opt_slots[p] = _sole_om(slots[p], tier.om_kinds(k))
+                    if opt_slots[p] is None:
                         full_slots = None
                         break
-                    else:
-                        opt_slots[p] = slots[p][0]
         if covers and full_slots is None:
             return None          # a contributor we cannot compile
         contributors.append((tm, full_slots, opt_slots))
@@ -737,60 +785,22 @@ def _build_single_frame(tier, mapping: MappingDocument, groups: dict,
         for p in sorted(needed):
             cond = cond & tier.notnull(tm, k, df, slots[p])
         for pred, okind, oval in const_pats:
-            om = slots[pred]
-            t = tier.term(tm, k, df, om)
-            if okind == "iri":
-                c = t == f"<{oval}>"
-            elif okind == "lit":
-                # plain-literal prefix match (_pattern_df: any datatype
-                # variant of the lexical matches)
-                c = t.startswith(oval)
-            elif okind == "lit_exact":
-                c = t == oval
-            else:                # num: value equality via the mirror
-                try:
-                    c = tier.numeric(tm, k, df, om) == float(oval)
-                except ValueError:
-                    return None
+            c = _const_obj_cond(tier, tm, k, df, slots[pred], okind, oval)
+            if c is None:
+                return None
             cond = cond & c
 
-        def tmap(v: str) -> Optional[TermMap]:
+        def home(v: str):
             if v in absent:
-                return None          # bound only in a sibling UNION branch
+                return True, None    # bound only in a sibling UNION branch
             if v == subj:
-                return tm.subject_map
+                return True, tm.subject_map
             if v in opt_binding:
-                return opts[opt_binding[v][1]]   # None = absent slot
-            return slots[var_pred[v]]
+                return True, opts[opt_binding[v][1]]   # None = absent slot
+            return True, slots[var_pred[v]]
 
-        def term_col(v: str) -> Column:
-            m = tmap(v)
-            if m is None:
-                return F.lit(None).cast("string")
-            return tier.term(tm, k, df, m)
-
-        cols = [term_col(v).alias(v) for v in term_vars]
-        for i, (func, var, dist, _alias, _sep) in enumerate(specs):
-            if var in computed:
-                continue         # input computed after the pre-exprs/binds
-            if func == "COUNT" and not ((dist and var is not None)
-                                        or var in nullable):
-                continue         # bindings never NULL: count(1) suffices
-            src = tmap(var)
-            if src is None:      # absent optional/branch slot: typed NULLs
-                dt = "double" if (func in ("SUM", "AVG", "MIN", "MAX")
-                                  and not dist) else "string"
-                cols.append(F.lit(None).cast(dt).alias(f"#a{i}"))
-            elif dist and func in ("SUM", "AVG"):
-                # DISTINCT dedupes TERMS first: ship the exact term
-                cols.append(tier.term(tm, k, df, src).alias(f"#a{i}"))
-            elif func in ("SUM", "AVG", "MIN", "MAX"):
-                cols.append(tier.numeric(tm, k, df, src).alias(f"#a{i}"))
-            elif func == "GROUP_CONCAT":
-                cols.append(lexical_value(tier.term(tm, k, df, src))
-                            .alias(f"#a{i}"))
-            else:                # COUNT (DISTINCT) / SAMPLE: exact term
-                cols.append(tier.term(tm, k, df, src).alias(f"#a{i}"))
+        cols = _frame_cols(tier, tm, k, df, home, term_vars, specs,
+                           computed, nullable)
         frames.append(df.where(cond).select(*cols))
 
     u = frames[0]
@@ -1018,14 +1028,14 @@ def _try_push(spark: SparkSession, mapping: MappingDocument,
     nullable = set(opt_binding) | union_nullable
 
     # BIND: the evaluator applies binds sequentially AFTER the pattern
-    # join (term-string constants via _bind_term_const, computed plain
-    # values via _bind_col -- both pool-independent for the admitted AST
-    # kinds), then VALUES, then filters; `_apply_tail` mirrors that
-    # order verbatim over the bindings frame.  A bind var that is also
-    # pattern-bound becomes the evaluator's where-equality (sequential
-    # scope emulation), so it stays a term column; a fresh bind var is a
-    # COMPUTED column -- available to filters / keys / aggregates /
-    # projection exactly like a pre-expr alias, never term-rendered.
+    # join, then VALUES, then filters; `_apply_tail` runs the same
+    # SparqlEngine._apply_binds (pool-independent for the admitted AST
+    # kinds) in that order over the bindings frame.  A bind var that is
+    # also pattern-bound becomes the evaluator's where-equality
+    # (sequential scope emulation), so it stays a term column; a fresh
+    # bind var is a COMPUTED column -- available to filters / keys /
+    # aggregates / projection exactly like a pre-expr alias, never
+    # term-rendered.
     bind_only: list = []         # fresh aliases introduced by BIND
     bind_term_vars: set = set()  # pattern vars a bind expr/equality reads
     for var, expr in g.binds:
@@ -1109,39 +1119,25 @@ def _try_push(spark: SparkSession, mapping: MappingDocument,
                     return None
                 branch_filter_vars |= fv
 
-    # VALUES: the single-bound-var case is a term-string membership
-    # constraint (exact mirror over the same term columns); an UNDEF
-    # row is a wildcard (no constraint).  Every other shape -- multi-
-    # var, fresh vars, UNDEF on shared vars -- mirrors the evaluator's
-    # vdf join VERBATIM in _apply_tail (same lexical rows, same common
-    # computation, same NULL-compat condition); fresh VALUES vars join
-    # as term-lexical columns available downstream.  Collisions with
-    # BIND/subquery columns refuse (computed-vs-term join forms).
-    values_conds: list = []      # (var, [term lexicals]) membership
-    values_joins: list = []      # (vars_, lex_rows) general mirror
+    # VALUES: `_apply_tail` runs the evaluator's own
+    # SparqlEngine._apply_values over the term columns.  A single var
+    # already on the frame (pattern or BIND) is a term-string membership
+    # constraint (UNDEF: none), so its term column must be rendered;
+    # every other shape -- multi-var, fresh vars, UNDEF on shared vars
+    # -- joins the VALUES rows, fresh vars arriving as term-lexical
+    # columns available downstream.  Collisions with BIND/subquery/
+    # probe columns refuse (computed-vs-term join forms).
+    values_member: set = set()   # single bound vars: membership
+    values_joins: list = []      # vars of the joined blocks
     values_provided: set = set()
-
-    def _values_lex(term):
-        kind, val = term
-        if kind == "undef":
-            return None
-        if kind == "iri":
-            return f"<{val}>"
-        if kind in ("lit", "lit_exact"):
-            return val
-        return str(val)
-
-    for vars_, rows in g.values:
-        lex_rows = [tuple(_values_lex(t) for t in row) for row in rows]
+    for vars_, _rows in g.values:
         if len(vars_) == 1 and vars_[0] in known_vars | binds:
-            if any(r[0] is None for r in lex_rows):
-                continue         # wildcard binding: no constraint
-            values_conds.append((vars_[0], [r[0] for r in lex_rows]))
+            values_member.add(vars_[0])
         else:
             if any(v in binds | sub_provided | exists_vars_all
                    for v in vars_):
                 return None
-            values_joins.append((list(vars_), lex_rows))
+            values_joins.append(vars_)
             values_provided |= {v for v in vars_
                                 if v not in all_pat_vars
                                 and v not in opt_binding}
@@ -1156,31 +1152,12 @@ def _try_push(spark: SparkSession, mapping: MappingDocument,
     if not filter_vars <= known_vars | binds | sub_computed:
         return None
 
-    # HAVING: mirror the evaluator's hidden-aggregate machinery
-    specs = [tuple(a) for a in q.aggregates]
-    visible = [a[3] for a in q.aggregates]
-    # repr keys: expression aggregate inputs are ASTs (may hold lists)
-    agg_alias = {(f_, repr(v_), d_): a_ for f_, v_, d_, a_, _s in specs}
-
-    def _collect_aggrefs(x):
-        if isinstance(x, tuple):
-            if x and x[0] == "aggref":
-                key = (x[1], repr(x[2]), x[3])
-                if key not in agg_alias:
-                    alias = f"#hav{len(specs)}"
-                    specs.append((x[1], x[2], x[3], alias, " "))
-                    agg_alias[key] = alias
-            else:
-                for e in x:
-                    _collect_aggrefs(e)
-        elif isinstance(x, list):
-            for e in x:
-                _collect_aggrefs(e)
-
+    # HAVING: the evaluator's hidden-aggregate specs and aliases
     for h in q.having:
         if not _having_ok(h, set(q.group_by), known_vars):
             return None
-        _collect_aggrefs(h)
+    specs, agg_alias = aggregate_specs(q)
+    visible = [a[3] for a in q.aggregates]
     if q.having and not specs:
         # HAVING with no aggregate reference: the evaluator still takes
         # its aggregate branch (has_aggs counts q.having) -- keep it
@@ -1240,7 +1217,7 @@ def _try_push(spark: SparkSession, mapping: MappingDocument,
                 and v not in values_provided:
             term_vars.append(v)
 
-    for vars_, _lr in values_joins:
+    for vars_ in values_joins:
         for v in vars_:          # VALUES join keys on the outer frame
             need_term(v)
 
@@ -1291,16 +1268,16 @@ def _try_push(spark: SparkSession, mapping: MappingDocument,
     # sorted: term_vars is the frame's column order, the same in every
     # process whatever the string-hash seed
     for v in sorted(filter_vars | pre_vars | bind_term_vars
-                    | branch_filter_vars | {v for v, _l in values_conds}):
+                    | branch_filter_vars | values_member):
         if v in known_vars:
             need_term(v)
     for _pos, _eg1, _eo1, common, _eg2 in exists_specs:
         for v in common:         # probe join keys on the outer frame
             need_term(v)
 
-    # ORDER BY: plain vars sort like the evaluator's tail below;
-    # expression keys borrow _operand_col and may only reference
-    # projected columns (same analysis scope as the evaluator)
+    # ORDER BY: the tail runs the evaluator's _slice_solutions;
+    # expression keys may only reference projected columns (same
+    # analysis scope as the evaluator)
     for v, _asc in q.order_by:
         if not isinstance(v, str):
             ovars: set = set()
@@ -1314,22 +1291,8 @@ def _try_push(spark: SparkSession, mapping: MappingDocument,
     for b, (gb, ob) in zip(bgroups, parsed):
         bvars = set(gb) | set(ob)
         absent = frozenset(all_pat_vars - bvars)
-        edges_b = len(gb) > 1 or any(v in gb for v in ob)
-        if edges_b:
-            u_b = _build_join_frame(tier, mapping, gb, ob, opt_binding,
-                                    term_vars, specs, agg_late, absent,
-                                    nullable)
-        else:
-            u_b = _build_single_frame(tier, mapping, gb, opt_binding,
-                                      term_vars, specs, agg_late,
-                                      absent, nullable)
-            if u_b is None:
-                # a single visible group can still need the join
-                # builder: an edge predicate whose object var is never
-                # a subject (pseudo-group against the ROM parent)
-                u_b = _build_join_frame(tier, mapping, gb, ob,
-                                        opt_binding, term_vars, specs,
-                                        agg_late, absent, nullable)
+        u_b = _bindings_frame(tier, mapping, gb, ob, opt_binding,
+                              term_vars, specs, agg_late, absent, nullable)
         if u_b is None:
             return None
         if multi:
@@ -1342,9 +1305,7 @@ def _try_push(spark: SparkSession, mapping: MappingDocument,
             # frames carry raw edge-key columns the union must drop)
             emitted = [f"#a{i}" for i, (fn_, v_, d_, _a, _s)
                        in enumerate(specs)
-                       if v_ is not None and v_ not in computed
-                       and not (fn_ == "COUNT" and not d_
-                                and v_ not in nullable)]
+                       if _emits_input(fn_, v_, d_, agg_late, nullable)]
             u_b = u_b.select(*term_vars, *emitted)
         frames.append(u_b)
     u = frames[0]
@@ -1364,16 +1325,8 @@ def _try_push(spark: SparkSession, mapping: MappingDocument,
             fv2: set = set()
             _ast_vars(flt, fv2)
             e_tvars.extend(v for v in sorted(fv2) if v not in e_tvars)
-        edges_e = len(egroups) > 1 or any(v in egroups for v in eobj)
-        if edges_e:
-            e_f = _build_join_frame(tier, mapping, egroups, eobj, {},
-                                    e_tvars, [], set())
-        else:
-            e_f = _build_single_frame(tier, mapping, egroups, {},
-                                      e_tvars, [], set())
-            if e_f is None:
-                e_f = _build_join_frame(tier, mapping, egroups, eobj,
-                                        {}, e_tvars, [], set())
+        e_f = _bindings_frame(tier, mapping, egroups, eobj, {}, e_tvars,
+                              [], set())
         if e_f is None:
             return None
         if eg.filters:
@@ -1383,69 +1336,33 @@ def _try_push(spark: SparkSession, mapping: MappingDocument,
                 e_f = e_f.where(beng._filter_col(flt, e_f))
         exists_joins.append((kind, e_f, list(common)))
 
-    return _apply_tail(spark, q, u, g, values_conds, pre_exprs,
-                       post_exprs, specs, agg_late, nullable,
-                       agg_alias, proj, exists_joins, values_joins)
+    return _apply_tail(spark, q, u, g, pre_exprs, post_exprs, specs,
+                       agg_late, nullable, agg_alias, proj, exists_joins)
 
 
-def _apply_tail(spark, q, u, g, values_conds, pre_exprs, post_exprs,
-                specs, computed, nullable, agg_alias, proj,
-                exists_joins=(), values_joins=()) -> DataFrame:
-    """The evaluator's SELECT tail over the bindings frame: BINDs,
-    VALUES membership, filters, EXISTS probe joins, pre-exprs,
+def _apply_tail(spark, q, u, g, pre_exprs, post_exprs, specs, computed,
+                nullable, agg_alias, proj, exists_joins=()) -> DataFrame:
+    """The evaluator's SELECT tail over the bindings frame, in its
+    order: BINDs, VALUES, filters, EXISTS probe joins, pre-exprs,
     aggregation + HAVING + post-exprs, projection, DISTINCT, ORDER BY,
-    OFFSET/LIMIT -- shared by the single-group union and the join-tree
-    builder."""
+    OFFSET/LIMIT.  BIND, VALUES, HAVING and the ORDER BY/OFFSET/LIMIT
+    slice are the evaluator's own SparqlEngine methods (_apply_binds,
+    _apply_values, _apply_having, _slice_solutions), and filters and
+    expressions its own compiler; only aggregation is built here, over
+    the frame's ``#a{i}`` inputs.  The expression engine is built only
+    when one of them compiles an expression."""
     eng = None
     if g.binds or g.filters or q.having or q.select_exprs \
             or any(not isinstance(v, str) for v, _a in q.order_by):
         eng = _expr_engine(spark)
-    # BIND mirror (verbatim from _join_group): term-string constants and
-    # term constructors bind/compare in term form; computed plain values
-    # compare against the bound term's numeric / lexical value
-    bound = set(u.columns)
-    for var, expr in g.binds:
-        tc = eng._bind_term_const(expr)
-        c = tc if tc is not None else eng._bind_col(expr)
-        if var in bound:
-            if tc is not None or expr[0] == "termctor":
-                u = u.where(F.col(var) == c)
-            elif expr[0] in ("num", "arith", "numop"):
-                u = u.where(numeric_value(F.col(var)) == c.cast("double"))
-            else:
-                u = u.where(lexical_value(F.col(var)) == c.cast("string"))
-        else:
-            u = u.withColumn(var, c)
-            bound.add(var)
-    for v, lex in values_conds:
-        u = u.where(F.col(v).isin(lex))
-    # multi-var / fresh-var VALUES: the evaluator's vdf join, verbatim
-    # (same inline frame, common computation, NULL-compat condition)
-    for vars_, lex_rows in values_joins:
-        vdf = spark.createDataFrame(
-            lex_rows, ", ".join(f"{v} string" for v in vars_))
-        common = [c for c in vars_ if c in u.columns]
-        if not common:
-            u = u.crossJoin(F.broadcast(vdf))
-        elif not any(r[vars_.index(c)] is None
-                     for r in lex_rows for c in common):
-            u = u.join(F.broadcast(vdf), common)
-        else:
-            # UNDEF on a shared var: NULL in the VALUES row is a
-            # wildcard -- join on (value IS NULL OR equal), keep the
-            # pattern side's binding
-            ren = {c: f"#val_{c}" for c in common}
-            for c, r_ in ren.items():
-                vdf = vdf.withColumnRenamed(c, r_)
-            cond = F.lit(True)
-            for c, r_ in ren.items():
-                cond = cond & (F.col(r_).isNull()
-                               | (F.col(c) == F.col(r_)))
-            u = u.join(F.broadcast(vdf), cond).drop(*ren.values())
+    if g.binds:
+        u = eng._apply_binds(u, g.binds)
+    u = SparqlEngine._apply_values(u, g.values)
     for flt in g.filters:
         u = u.where(eng._filter_col(flt, u))
-    # EXISTS/NOT EXISTS/MINUS: the evaluator's probe joins, verbatim --
-    # distinct probe, left_semi/left_anti on the common columns; with
+    # EXISTS/NOT EXISTS/MINUS: sparql._exists_join's join for a frame
+    # whose common columns are all bound (the analysis refuses nullable
+    # ones) -- distinct probe, left_semi/left_anti on them; with
     # no common column EXISTS' inner (non)emptiness decides wholesale
     # (common-less MINUS entries were dropped upstream: rows stay)
     for kind, e_f, common in exists_joins:
@@ -1496,7 +1413,6 @@ def _apply_tail(spark, q, u, g, values_conds, pre_exprs, post_exprs,
             elif func == "SAMPLE":
                 aggs.append(F.min(col).alias(alias))
             elif dist and func in ("SUM", "AVG"):
-                from .sparql import distinct_numeric_agg
                 aggs.append(distinct_numeric_agg(col, func).alias(alias))
             else:
                 fn = {"SUM": F.sum, "AVG": F.avg, "MIN": F.min,
@@ -1505,17 +1421,8 @@ def _apply_tail(spark, q, u, g, values_conds, pre_exprs, post_exprs,
         out = u.groupBy(*q.group_by).agg(*aggs) if q.group_by \
             else u.agg(*aggs)
 
-        def _resolve(x):
-            if isinstance(x, tuple):
-                if x and x[0] == "aggref":
-                    return ("var", agg_alias[(x[1], repr(x[2]), x[3])])
-                return tuple(_resolve(e) for e in x)
-            if isinstance(x, list):
-                return [_resolve(e) for e in x]
-            return x
-
-        for h in q.having:
-            out = out.where(eng._filter_col(_resolve(h), out))
+        if q.having:
+            out = eng._apply_having(out, q.having, agg_alias)
         for a, e in post_exprs:
             out = out.withColumn(a, eng._operand_col(e))
         out = out.select(*proj)
@@ -1523,20 +1430,5 @@ def _apply_tail(spark, q, u, g, values_conds, pre_exprs, post_exprs,
         out = u.select(*proj)
     if q.distinct:
         out = out.distinct()
-    if q.order_by:
-        dtypes = dict(out.dtypes)
-        keys = []
-        for v, asc in q.order_by:
-            if not isinstance(v, str):
-                ks = [eng._operand_col(v, lexical=True)]
-            elif dtypes.get(v, "string") != "string":
-                ks = [F.col(v)]
-            else:
-                ks = term_order_keys(F.col(v))
-            keys.extend([k.asc() if asc else k.desc() for k in ks])
-        out = out.orderBy(*keys)
-    if q.offset:
-        out = out.offset(q.offset)
-    if q.limit is not None:
-        out = out.limit(q.limit)
-    return out
+    # eng is None only when every ORDER BY key is a plain variable
+    return SparqlEngine._slice_solutions(eng, out, q)

@@ -185,6 +185,32 @@ def _make_child_fn(tm: TriplesMap, cfg: EngineConfig, rom_base: int,
     return translate_batches
 
 
+def _make_filter_fn(py_filter_text: str):
+    """A find() filter the Column compiler cannot express, as its own
+    stage over the source rows: keeps the rows whose document matches
+    (bad docs never match)."""
+
+    def keep_matching(batches: Iterator) -> Iterator:
+        import pandas as pd
+        pyfilter = compile_filter(parse_filter(py_filter_text))
+        loads = _fast_loads()
+
+        def matches(raw) -> bool:
+            if raw is None:
+                return False
+            try:
+                doc = loads(raw)
+            except (ValueError, TypeError):
+                return False
+            return bool(pyfilter(doc))
+
+        for pdf in batches:
+            yield pdf[pd.Series([matches(raw) for raw in pdf["content"]],
+                                index=pdf.index, dtype=bool)]
+
+    return keep_matching
+
+
 def _make_child_fn_lean(tm: TriplesMap, cfg: EngineConfig,
                         py_filter_text: Optional[str]):
     """ROM-free translation stage: emits the 4 triple columns directly.
@@ -364,6 +390,11 @@ class SparkMaterializer:
     def _tm_triples(self, tm: TriplesMap) -> DataFrame:
         rom_base = self._rom_bases[tm.name]
         src, py_filter = self._source_and_pyfilter(tm)
+        if py_filter is not None and (self.tm_offset is not None
+                                      or self.tm_limit is not None):
+            # MongoDB slices find(f) AFTER f: filter before the slice
+            src = src.mapInPandas(_make_filter_fn(py_filter), src.schema)
+            py_filter = None
         if self.tm_offset is not None:
             src = src.offset(self.tm_offset)
         if self.tm_limit is not None:

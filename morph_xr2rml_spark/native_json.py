@@ -366,12 +366,10 @@ class JsonNativeCompiler:
         self.sample_n = sample_n
         self.fuse_projections = fuse_projections
         # schema sampling costs a driver-side collect() job per (source,
-        # path-set): cached on the CATALOG so repeated queries over the
-        # same registered data pay it once, not once per compile.  The
-        # key carries the needed-path set, so different mappings sharing
-        # a catalog never collide.  The cache is fetched from the
-        # catalog PER ACCESS (never captured) so a re-registration that
-        # invalidates it (sources.py) is seen by live compilers too.
+        # path-set): memoized in the catalog's schema_samples so repeated
+        # queries over the same registered data pay it once, not once per
+        # compile.  The key carries the needed-path set, so different
+        # mappings sharing a catalog never collide.
 
     # -- schema ----------------------------------------------------------
     def _needed_paths(self, tm: TriplesMap) -> list[list[str]]:
@@ -424,16 +422,9 @@ class JsonNativeCompiler:
         return (tm.logical_source.source_id() + "|" + repr(paths)
                 + f"|{self.sample_n}")
 
-    def _schema_cache(self) -> dict:
-        cache = getattr(self.catalog, "_json_schema_cache", None)
-        if cache is None:
-            cache = {}
-            setattr(self.catalog, "_json_schema_cache", cache)
-        return cache
-
     def _schema_for(self, tm: TriplesMap) -> T.StructType:
         key = self._cache_key(tm)
-        cache = self._schema_cache()
+        cache = self.catalog.schema_samples
         if key in cache:
             return cache[key][0]
         tree: dict = {}
@@ -482,9 +473,9 @@ class JsonNativeCompiler:
         (unseen or conflicting) — non-empty means this TM should run on
         the document compiler instead."""
         key = self._cache_key(tm)
-        if key not in self._schema_cache():
+        if key not in self.catalog.schema_samples:
             self._schema_for(tm)
-        return self._schema_cache()[key][1]
+        return self.catalog.schema_samples[key][1]
 
     # -- term expressions --------------------------------------------------
     def _field_col(self, tm: TriplesMap, root: Column, item: Optional[Column],

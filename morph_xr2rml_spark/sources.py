@@ -263,15 +263,13 @@ class SourceCatalog:
         self._tables: dict[str, DataFrame] = {}
         self._inputs: dict[str, DataFrame] = {}  # name -> input frame
         self._spark = None
+        # the json-native compiler's sampled schemas and unsafe-path
+        # verdicts, by (source, needed paths, sample size); every
+        # registration clears it, so new data is never served a stale
+        # sample
+        self.schema_samples: dict = {}
 
     # -- registration ----------------------------------------------------
-    def _invalidate_schema_cache(self) -> None:
-        """Drop the JSON schema-sampling cache (native_json.py keys it on
-        this catalog): re-registering a source with different data must
-        not serve stale sampled schemas / unsafe-path verdicts."""
-        if hasattr(self, "_json_schema_cache"):
-            delattr(self, "_json_schema_cache")
-
     def register_collection(self, name: str, df: DataFrame,
                             content_col: str = "content") -> "SourceCatalog":
         """Register a document collection: df must have a JSON-text column."""
@@ -281,7 +279,7 @@ class SourceCatalog:
         out = out.withColumn("_seq", F.monotonically_increasing_id())
         self._collections[name] = out
         self._inputs[f"c:{name}:{content_col}"] = df
-        self._invalidate_schema_cache()
+        self.schema_samples.clear()
         return self
 
     def register_table(self, name: str, df: DataFrame) -> "SourceCatalog":
@@ -295,7 +293,7 @@ class SourceCatalog:
         self._spark = df.sparkSession
         df.createOrReplaceTempView(name)
         self._inputs[f"t:{name}"] = df
-        self._invalidate_schema_cache()
+        self.schema_samples.clear()
         return self
 
     def register_repo_table(self, df: DataFrame,

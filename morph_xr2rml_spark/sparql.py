@@ -1034,6 +1034,49 @@ def term_order_keys(col: Column) -> list[Column]:
     return [rank, num, lexical_value(col)]
 
 
+def _values_lex(term) -> Optional[str]:
+    """A VALUES term as its binding's term string; None for UNDEF (a
+    wildcard binding)."""
+    kind, val = term
+    if kind == "undef":
+        return None
+    if kind == "iri":
+        return f"<{val}>"
+    if kind in ("lit", "lit_exact"):
+        return val
+    return str(val)
+
+
+def aggregate_specs(q: SelectQuery) -> tuple[list, dict]:
+    """The aggregate specs ``(func, input, distinct, alias, sep)`` a
+    grouped SELECT computes: the projected ones, then every aggregate
+    HAVING references but the projection does not, as a hidden
+    ``#hav{i}`` column (filtered on, then dropped).  Also the alias of
+    each spec by ``(func, repr(input), distinct)`` — repr because an
+    expression input is an AST that may hold lists."""
+    specs = [tuple(a) for a in q.aggregates]
+    agg_alias = {(f, repr(v), d): a for f, v, d, a, _s in specs}
+
+    def collect(x):
+        if isinstance(x, tuple):
+            if x and x[0] == "aggref":
+                key = (x[1], repr(x[2]), x[3])
+                if key not in agg_alias:
+                    alias = f"#hav{len(specs)}"
+                    specs.append((x[1], x[2], x[3], alias, " "))
+                    agg_alias[key] = alias
+            else:
+                for e in x:
+                    collect(e)
+        elif isinstance(x, list):
+            for e in x:
+                collect(e)
+
+    for h in q.having:
+        collect(h)
+    return specs, agg_alias
+
+
 class SparqlEngine:
     """Evaluate parsed SELECT queries against a (subj, pred, obj[, graph])
     triple DataFrame.  Variable bindings are the canonical lexical term
@@ -1374,7 +1417,25 @@ class SparqlEngine:
             # empty group pattern: ONE empty solution μ0 (SPARQL §18.5) —
             # the unit relation; VALUES/BIND-only groups build on it
             df = self.triples.sparkSession.range(1).select()
-        for var, expr in g.binds:
+        df = self._apply_binds(df, g.binds)
+        df = self._apply_values(df, g.values)
+        for flt in g.filters:
+            df, flt, markers = self._attach_exists_markers(df, flt,
+                                                           graph_term)
+            df = df.where(self._filter_col(flt, df))
+            if markers:
+                df = df.drop(*markers)
+        for positive, sub in g.exists:
+            df = self._exists_join(df, self._join_group(sub, graph_term),
+                                   positive)
+        for sub in g.minuses:
+            df = self._minus_join(df, self._join_group(sub, graph_term))
+        return df
+
+    # -- BIND / VALUES over a group's bindings (also aggpush._apply_tail) --
+
+    def _apply_binds(self, df: DataFrame, binds: list) -> DataFrame:
+        for var, expr in binds:
             tc = self._bind_term_const(expr)
             c = tc if tc is not None else self._bind_col(expr)
             if var in df.columns:
@@ -1395,17 +1456,12 @@ class SparqlEngine:
                                   c.cast("string"))
             else:
                 df = df.withColumn(var, c)
-        for vars_, rows in g.values:
-            def term_lex(term) -> Optional[str]:
-                kind, val = term
-                if kind == "undef":
-                    return None          # wildcard binding
-                if kind == "iri":
-                    return f"<{val}>"
-                if kind in ("lit", "lit_exact"):
-                    return val
-                return str(val)
-            lex_rows = [tuple(term_lex(t) for t in row) for row in rows]
+        return df
+
+    @staticmethod
+    def _apply_values(df: DataFrame, values: list) -> DataFrame:
+        for vars_, rows in values:
+            lex_rows = [tuple(_values_lex(t) for t in row) for row in rows]
             if len(vars_) == 1 and vars_[0] in df.columns:
                 if any(r[0] is None for r in lex_rows):
                     pass   # an UNDEF row matches everything: no constraint
@@ -1434,17 +1490,6 @@ class SparqlEngine:
                         cond = cond & (F.col(r).isNull()
                                        | (F.col(c) == F.col(r)))
                     df = df.join(F.broadcast(vdf), cond).drop(*ren.values())
-        for flt in g.filters:
-            df, flt, markers = self._attach_exists_markers(df, flt,
-                                                           graph_term)
-            df = df.where(self._filter_col(flt, df))
-            if markers:
-                df = df.drop(*markers)
-        for positive, sub in g.exists:
-            df = self._exists_join(df, self._join_group(sub, graph_term),
-                                   positive)
-        for sub in g.minuses:
-            df = self._minus_join(df, self._join_group(sub, graph_term))
         return df
 
     # -- compatibility joins (EXISTS / MINUS) ------------------------------
@@ -1488,6 +1533,21 @@ class SparqlEngine:
             out = out.unionByName(p)
         return out
 
+    @staticmethod
+    def _compat_probe(probe: DataFrame, common: list,
+                      prefix: str) -> tuple[DataFrame, Column]:
+        """The nested-loop form: the probe with each shared column
+        renamed to ``prefix + name``, and the compatibility condition
+        (per shared var: unbound on either side, or equal)."""
+        for c in common:
+            probe = probe.withColumnRenamed(c, prefix + c)
+        cond = F.lit(True)
+        for c in common:
+            r = prefix + c
+            cond = cond & (F.col(c).isNull() | F.col(r).isNull()
+                           | (F.col(c) == F.col(r)))
+        return probe, cond
+
     def _exists_join(self, df: DataFrame, sdf: DataFrame,
                      positive: bool) -> DataFrame:
         common = [c for c in sdf.columns if c in df.columns]
@@ -1500,14 +1560,7 @@ class SparqlEngine:
             return df
         probe = sdf.select(*common).distinct()
         if len(common) > self._NULL_DECOMP_MAX:
-            ren = {c: "#ex_" + c for c in common}
-            p2 = probe
-            for c, r in ren.items():
-                p2 = p2.withColumnRenamed(c, r)
-            cond = F.lit(True)
-            for c, r in ren.items():
-                cond = cond & (F.col(c).isNull() | F.col(r).isNull()
-                               | (F.col(c) == F.col(r)))
+            p2, cond = self._compat_probe(probe, common, "#ex_")
             return df.join(p2, cond, how)
         parts = []
         for part, bound in self._null_pattern_parts(df, common):
@@ -1528,17 +1581,11 @@ class SparqlEngine:
             return df
         probe = sdf.select(*common).distinct()
         if len(common) > self._NULL_DECOMP_MAX:
-            ren = {c: "#mn_" + c for c in common}
-            p2 = probe
-            for c, r in ren.items():
-                p2 = p2.withColumnRenamed(c, r)
-            compat = F.lit(True)
+            p2, compat = self._compat_probe(probe, common, "#mn_")
             overlap = F.lit(False)
-            for c, r in ren.items():
-                compat = compat & (F.col(c).isNull() | F.col(r).isNull()
-                                   | (F.col(c) == F.col(r)))
+            for c in common:
                 overlap = overlap | (F.col(c).isNotNull()
-                                     & F.col(r).isNotNull())
+                                     & F.col("#mn_" + c).isNotNull())
             return df.join(p2, compat & overlap, "left_anti")
         parts = []
         for part, bound in self._null_pattern_parts(df, common):
@@ -1570,14 +1617,7 @@ class SparqlEngine:
                 if len(common) > self._NULL_DECOMP_MAX:
                     # compatibility split: semi/anti keeps the row set
                     # duplicate-free (a condition left-join would fan out)
-                    ren = {c: "#ex_" + c for c in common}
-                    p2 = probe
-                    for c, r in ren.items():
-                        p2 = p2.withColumnRenamed(c, r)
-                    cond = F.lit(True)
-                    for c, r in ren.items():
-                        cond = cond & (F.col(c).isNull() | F.col(r).isNull()
-                                       | (F.col(c) == F.col(r)))
+                    p2, cond = self._compat_probe(probe, common, "#ex_")
                     df = df.join(p2, cond, "left_semi") \
                            .withColumn(m, F.lit(True)) \
                            .unionByName(df.join(p2, cond, "left_anti")
@@ -2064,9 +2104,29 @@ class SparqlEngine:
         return out.where(F.col("subj").isNotNull()
                          & F.col("obj").isNotNull()).distinct()
 
+    def _apply_having(self, df: DataFrame, having: list,
+                      agg_alias: dict) -> DataFrame:
+        """HAVING over the aggregated frame: each aggregate reference
+        reads its (possibly hidden) alias from `aggregate_specs`."""
+        def resolve(x):
+            if isinstance(x, tuple):
+                if x and x[0] == "aggref":
+                    return ("var", agg_alias[(x[1], repr(x[2]), x[3])])
+                return tuple(resolve(e) for e in x)
+            if isinstance(x, list):
+                return [resolve(e) for e in x]
+            return x
+
+        for h in having:
+            df = df.where(self._filter_col(resolve(h), df))
+        return df
+
     def _slice_solutions(self, df: DataFrame, q: SelectQuery) -> DataFrame:
-        """Apply ORDER BY / OFFSET / LIMIT to a solutions frame (the
-        grammar's SolutionModifier on CONSTRUCT/DESCRIBE/ASK forms)."""
+        """Apply ORDER BY / OFFSET / LIMIT to a solutions frame: the
+        grammar's SolutionModifier on every query form, and the last
+        step of aggpush's pushed SELECT.  ``self`` is read only for an
+        expression key, so aggpush passes no engine (None) when every
+        key is a plain variable."""
         if q.order_by:
             dtypes = dict(df.dtypes)
 
@@ -2074,6 +2134,8 @@ class SparqlEngine:
                 if not isinstance(v, str):
                     return [self._operand_col(v, lexical=True)]
                 if dtypes.get(v, "string") != "string":
+                    # plain computed column (BIND arithmetic, aggregate
+                    # alias): its native type already sorts by value
                     return [F.col(v)]
                 return term_order_keys(F.col(v))
             df = df.orderBy(*[k.asc() if a else k.desc()
@@ -2098,30 +2160,8 @@ class SparqlEngine:
         for alias, expr in pre_exprs:
             df = df.withColumn(alias, self._operand_col(expr))
         if has_aggs:
-            specs = [tuple(a) for a in q.aggregates]
-            visible = [a[3] for a in specs]
-            # HAVING may reference aggregates not in the projection:
-            # compute them as hidden columns, filter, then drop
-            # keys use repr(input) — an expression AST may hold lists
-            agg_alias = {(f, repr(v), d): a for f, v, d, a, _s in specs}
-
-            def _collect_aggrefs(x):
-                if isinstance(x, tuple):
-                    if x[0] == "aggref":
-                        key = (x[1], repr(x[2]), x[3])
-                        if key not in agg_alias:
-                            alias = f"#hav{len(specs)}"
-                            specs.append((x[1], x[2], x[3], alias, " "))
-                            agg_alias[key] = alias
-                    else:
-                        for e in x:
-                            _collect_aggrefs(e)
-                elif isinstance(x, list):
-                    for e in x:
-                        _collect_aggrefs(e)
-
-            for h in q.having:
-                _collect_aggrefs(h)
+            specs, agg_alias = aggregate_specs(q)
+            visible = [a[3] for a in q.aggregates]
 
             # expression aggregate inputs compute PRE-GROUPING as
             # hidden columns (plain computed values, not term strings)
@@ -2179,17 +2219,7 @@ class SparqlEngine:
             else:
                 df = df.agg(*aggs)
 
-            def _resolve(x):
-                if isinstance(x, tuple):
-                    if x[0] == "aggref":
-                        return ("var", agg_alias[(x[1], repr(x[2]), x[3])])
-                    return tuple(_resolve(e) for e in x)
-                if isinstance(x, list):
-                    return [_resolve(e) for e in x]
-                return x
-
-            for h in q.having:
-                df = df.where(self._filter_col(_resolve(h), df))
+            df = self._apply_having(df, q.having, agg_alias)
             for alias, expr in post_exprs:
                 # recompute over group keys / aggregate aliases; a
                 # reference to a non-grouped variable fails analysis with
@@ -2219,25 +2249,7 @@ class SparqlEngine:
                 df = df.drop(*internal)
         if q.distinct:
             df = df.distinct()
-        if q.order_by:
-            dtypes = dict(df.dtypes)
-
-            def _okeys(v) -> list:
-                if not isinstance(v, str):
-                    return [self._operand_col(v, lexical=True)]
-                if dtypes.get(v, "string") != "string":
-                    # plain computed column (BIND arithmetic, aggregate
-                    # alias): its native type already sorts by value
-                    return [F.col(v)]
-                return term_order_keys(F.col(v))
-            df = df.orderBy(*[k.asc() if a else k.desc()
-                              for v, a in q.order_by
-                              for k in _okeys(v)])
-        if q.offset:
-            df = df.offset(q.offset)
-        if q.limit is not None:
-            df = df.limit(q.limit)
-        return df
+        return self._slice_solutions(df, q)
 
 
 # ---------------------------------------------------------------------------

@@ -320,6 +320,23 @@ QUERIES = [
      "{ ?s ex:name ?nm . OPTIONAL { ?s ex:acctbal ?b } }", True),
     # plain SELECT (no aggregate, no DISTINCT)
     ("SELECT ?c ?seg WHERE { ?c ex:segment ?seg }", False),
+    # ---- BIND over a pattern-bound var: the evaluator's equality in
+    # its term-constant, numeric and lexical forms ----
+    ('SELECT (COUNT(*) AS ?n) WHERE { ?c ex:segment ?seg . '
+     'BIND("BUILDING" AS ?seg) }', True),
+    ("SELECT ?seg (COUNT(*) AS ?n) WHERE { ?c ex:segment ?seg . "
+     "?c ex:acctbal ?b . BIND(ABS(?b) AS ?b) } GROUP BY ?seg "
+     "ORDER BY ?seg", True),
+    ('SELECT DISTINCT ?c WHERE { ?c ex:segment ?seg . '
+     'BIND(CONCAT("BUILD", "ING") AS ?seg) } ORDER BY ?c LIMIT 5', True),
+    # expression ORDER BY key, then OFFSET
+    ("SELECT DISTINCT ?seg WHERE { ?c ex:segment ?seg } "
+     "ORDER BY DESC(STRLEN(?seg)) ?seg OFFSET 1", True),
+    # UNION branches leave out an aggregate input a fresh VALUES var
+    # supplies after the union (the tail computes it)
+    ("SELECT ?x (COUNT(DISTINCT ?tag) AS ?n) WHERE { { ?c ex:segment ?x } "
+     'UNION { ?o ex:status ?x } VALUES ?tag { "a" "b" } } GROUP BY ?x '
+     "ORDER BY ?x", True),
 ]
 
 
@@ -329,6 +346,16 @@ def _norm(rows):
         out.append(tuple(float(f"{v:.9g}") if isinstance(v, float) else v
                          for v in r))
     return sorted(out, key=repr)
+
+
+def _order_keys(rows, q):
+    """The rows' ORDER BY keys in result order, over the plain-variable
+    keys only: the multiset of rows fixes this sequence whatever order
+    ties take."""
+    keys = [v for v, _asc in parse_sparql(P + q).order_by
+            if isinstance(v, str)]
+    return [tuple(float(f"{r[k]:.9g}") if isinstance(r[k], float) else r[k]
+                  for k in keys) for r in rows]
 
 
 @pytest.fixture(scope="module")
@@ -345,9 +372,13 @@ def env(spark):
 def test_pushed_equals_evaluator(spark, env, qi):
     mapping, tables, engine = env
     q, _push = QUERIES[qi]
-    fast = _norm(answer_auto(spark, mapping, P + q, tables=tables).collect())
-    slow = _norm(engine.sql(P + q).collect())
+    fast_rows = answer_auto(spark, mapping, P + q, tables=tables).collect()
+    slow_rows = engine.sql(P + q).collect()
+    fast = _norm(fast_rows)
+    slow = _norm(slow_rows)
     assert fast == slow, f"divergence on: {q}"
+    assert _order_keys(fast_rows, q) == _order_keys(slow_rows, q), \
+        f"order divergence on: {q}"
 
 
 @pytest.mark.parametrize("qi", range(len(QUERIES)))

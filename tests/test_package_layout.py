@@ -1,8 +1,9 @@
 """Package layout guards: the engine imports neither the removed
 training-data operator suite nor the removed legacy bench harness,
 ``__spark_entry__`` pairs every query with an oracle, SPARQL answering
-has one entry point, one router picks every triples map's tier, and
-only the router's ``api._routed_plan`` builds a whole-mapping plan."""
+has one entry point, one router picks every triples map's tier, only
+the router's ``api._routed_plan`` builds a whole-mapping plan, and
+aggregate pushdown runs the evaluator's own SELECT tail."""
 
 import ast
 import pathlib
@@ -24,6 +25,8 @@ DELETED_OPTIONS = {"term_style", "broadcast_parents", "tm_skip",
                    "salt_partitions", "event_time_col", "triple_rate_metrics"}
 # entry points whose every option is explicit (no pass-through **kwargs)
 NO_KWARGS = {"materialize_auto", "answer_auto", "_routed_plan"}
+# evaluator code aggpush calls instead of keeping its own copy
+EVALUATOR_COPIES = {"_values_lex", "_collect_aggrefs", "_resolve"}
 
 
 def _sources():
@@ -164,4 +167,45 @@ def test_plan_entries_take_no_pass_through_kwargs():
             if fn.args.kwarg is not None:
                 bad.append(f"{fn.name}(**{fn.args.kwarg.arg})")
     assert seen == NO_KWARGS
+    assert not bad, bad
+
+
+def _named_uses(path: pathlib.Path):
+    """(name, line, enclosing class/function chain) of every Name,
+    Attribute and imported alias in ``path``."""
+    tree = ast.parse(path.read_text(), str(path))
+
+    def visit(node, chain):
+        if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+            chain = chain + (node.name,)
+        if isinstance(node, ast.Name):
+            yield node.id, node.lineno, chain
+        elif isinstance(node, ast.Attribute):
+            yield node.attr, node.lineno, chain
+        elif isinstance(node, ast.alias):
+            yield node.name, node.lineno, chain
+        for child in ast.iter_child_nodes(node):
+            yield from visit(child, chain)
+
+    yield from visit(tree, ())
+
+
+def test_aggpush_runs_the_evaluators_solution_tail():
+    pkg = ROOT / "morph_xr2rml_spark"
+    bad = []
+    for name, line, _chain in _named_uses(pkg / "aggpush.py"):
+        if name == "term_order_keys":
+            bad.append(f"aggpush.py:{line}: {name}")
+    aggpush = pkg / "aggpush.py"
+    for node in ast.walk(ast.parse(aggpush.read_text(), str(aggpush))):
+        if isinstance(node, ast.Call) \
+                and isinstance(node.func, ast.Attribute) \
+                and node.func.attr in ("orderBy", "offset"):
+            bad.append(f"aggpush.py:{node.lineno}: .{node.func.attr}()")
+        if isinstance(node, ast.FunctionDef) and node.name in EVALUATOR_COPIES:
+            bad.append(f"aggpush.py:{node.lineno}: def {node.name}")
+    for name, line, chain in _named_uses(pkg / "sparql.py"):
+        if name == "term_order_keys" \
+                and chain[:2] != ("SparqlEngine", "_slice_solutions"):
+            bad.append(f"sparql.py:{line}: {'.'.join(chain) or '<module>'}")
     assert not bad, bad

@@ -176,6 +176,20 @@ def test_tm_offset_and_limit(spark):
     m = SparkMaterializer(spark, mapping, cat, tm_limit=3, tm_offset=2)
     subs = sorted(r.subj for r in m.triples().collect())
     assert subs == ["<http://d/2>", "<http://d/3>", "<http://d/4>"]
+    # the slice counts documents that pass the find() filter, whether the
+    # filter compiles to a Column ({v: "2"}) or runs in Python ({v: 2})
+    docs = spark.createDataFrame(
+        [(json.dumps({"id": i, "v": i % 3}),) for i in range(9)],
+        "content string").coalesce(1)
+    cat = SourceCatalog().register_collection("c", docs)
+    for flt in ("{v: '2'}", "{v: 2}"):
+        mapping = MappingDocument.from_text(SIMPLE_DOC_MAPPING.replace(
+            "db.docs.find({})", f"db.c.find({flt})"))
+        for kw, want in (({"tm_limit": 2}, ["<http://d/2>", "<http://d/5>"]),
+                         ({"tm_offset": 1, "tm_limit": 1}, ["<http://d/5>"])):
+            m = SparkMaterializer(spark, mapping, cat, **kw)
+            subs = sorted(r.subj for r in m.triples().collect())
+            assert subs == want, (flt, kw)
 
 
 def test_properties_offset_parsed():
