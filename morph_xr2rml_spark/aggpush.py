@@ -97,7 +97,6 @@ from pyspark.sql import types as T
 
 from . import namespaces as NS
 from .api import route_tier
-from .functions.templates import get_template_groups
 from .model import COLUMN, CONSTANT, TEMPLATE, MappingDocument, TermMap
 from .model import REFERENCE
 from .native import (NativeCompiler, subject_space, subject_spaces_disjoint,
@@ -170,22 +169,6 @@ def _expr_engine(spark: SparkSession) -> SparqlEngine:
     return SparqlEngine(spark.createDataFrame([], TRIPLE_SCHEMA))
 
 
-def _term_notnull(m: TermMap) -> Column:
-    """The exact null condition of `NativeCompiler.term_expr`: constants
-    never null, a COLUMN term is null iff the column is, a TEMPLATE term
-    is null iff ALL its groups are (NULL groups render '' --
-    MorphRDBDataTranslator.scala:357-372)."""
-    if m.kind == CONSTANT:
-        return F.lit(True)
-    if m.kind == COLUMN:
-        return F.col(m.column).isNotNull()
-    cond = None
-    for g in get_template_groups(m.template):
-        c = F.col(g).isNotNull()
-        cond = c if cond is None else (cond | c)
-    return cond if cond is not None else F.lit(True)
-
-
 def _numeric_mirror(compiler: NativeCompiler, df: DataFrame,
                     m: TermMap) -> Column:
     """Mirror of ``numeric_value(term_expr(m))`` (the evaluator's
@@ -254,7 +237,8 @@ class _BindingTier:
 
     def notnull(self, tm, k: str, df: DataFrame, m: TermMap) -> Column:
         if k == "tab":
-            return _term_notnull(m)
+            null = self.tab.term_null_cond(m)
+            return F.lit(True) if null is None else ~null
         # exact: tm_base filters on the same term expression's null-ness
         return self.term(tm, k, df, m).isNotNull()
 

@@ -32,7 +32,7 @@ from pyspark.sql.types import (ArrayType, IntegerType, LongType, StringType,
 from .model import MappingDocument, TriplesMap, parse_mongo_query
 from .mongo_filter import compile_filter, parse_filter
 from .native_json import track_persist
-from .sources import SourceCatalog, mongo_filter_to_column
+from .sources import SourceCatalog, mongo_filter_sql
 from .translate import CompiledTriplesMap, EngineConfig, expand_collection, \
     _compile_msp, CollTerm
 
@@ -359,7 +359,7 @@ class SparkMaterializer:
         py_filter = None
         if ls.is_find():
             _coll, filter_text = parse_mongo_query(ls.value)
-            if mongo_filter_to_column(filter_text, "content") is None:
+            if mongo_filter_sql(filter_text, "content") is None:
                 py_filter = filter_text
         return df, py_filter
 

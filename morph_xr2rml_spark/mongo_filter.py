@@ -7,7 +7,7 @@ that occurs in mappings: {}, {field: value}, {field: {$exists: b}},
 {field: {$in/$nin: [...]}} (numbers included),
 {field: {$regex: pat[, $options: flags]}} (also shell /pat/flags),
 {field: {$elemMatch: {...}}}, dotted field paths.  Filters are compiled
-once; where possible the Spark compiler translates them to native Column
+once; where possible the Spark compiler translates them to SQL
 predicates so they push down.
 """
 
@@ -148,7 +148,7 @@ def compile_filter(spec: dict) -> Callable[[Any], bool]:
                     # literal render, escaped like the engine's lexical
                     # (sparql.lexical_value never unescapes); numeric
                     # values also test their canonical lexical (the
-                    # native compiler's try_cast arm — kept in lockstep)
+                    # SQL compile's try_cast arm, sources.mongo_filter_sql)
                     from .functions.encoding import encode_literal
                     from .translate import nt_escape
 

@@ -3,9 +3,9 @@
 When a triples map only uses column references, templates over columns and
 constants (classic R2RML over an RDB — the reference's morph-xr2rml-rdb
 module, MorphRDBUnfolder.scala:196-348 / MorphRDBDataTranslator.scala:48-231),
-the whole materialization compiles to built-in Column expressions:
-`concat`, `replace` chains for percent-encoding, equi-joins for
-referencing object maps.  No Python runs per row — the plan stays inside
+the whole materialization compiles to built-in Catalyst expressions,
+composed as SQL text: `concat`, `replace` chains for percent-encoding,
+equi-joins for referencing object maps.  No Python runs per row — the plan stays inside
 whole-stage codegen, filters and column pruning push down to the scan,
 and Catalyst/AQE pick join strategies.
 
@@ -16,6 +16,8 @@ R2RML subset at parquet-native speed.
 
 from __future__ import annotations
 
+import math
+from decimal import Decimal, InvalidOperation
 from typing import Optional
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
@@ -68,38 +70,17 @@ def is_tabular_compilable(tm: TriplesMap) -> bool:
 
 
 # ---------------------------------------------------------------------------
-# Column-expression builders
+# SQL-text expression builders.
+#
+# Every expression the compilers build is composed as ONE SQL string and
+# parsed by a single F.expr call (or handed to where/selectExpr as text).
+# The Column DSL costs one py4j round trip PER OPERATOR — a single
+# percent-encoding chain is ~90 RPCs, a full kg_tpch compile ~3,700
+# (~0.7 s of driver time per query BUILD, profiled).  Unresolved column
+# references in the text resolve by name at analysis.  Each render rule below exists once; the reference
+# implementations they mirror are functions/encoding.py, str.strip() and
+# the Python tier's lexical forms.
 # ---------------------------------------------------------------------------
-
-def encode_reserved_col(col: Column) -> Column:
-    """GeneralUtility.encodeReservedChars as a chain of literal replaces
-    (JVM-side, codegen-friendly)."""
-    out = col
-    for old, new in _ENCODE_RESERVED:
-        out = F.replace(out, F.lit(old), F.lit(new))
-    return out
-
-
-def encode_url_col(col: Column) -> Column:
-    """GeneralUtility.encodeURI (URL-UNSAFE chars only — ':' '/' '%' etc.
-    stay) as native replaces; the whole-IRI encoding the Python tier
-    applies in _make_term (translate.py:332-333)."""
-    out = col
-    for old, new in _ENCODE_URL:
-        out = F.replace(out, F.lit(old), F.lit(new))
-    return out
-
-
-def encode_literal_col(col: Column, encode_quotes: bool = False) -> Column:
-    """GeneralUtility.encodeLiteral as native expressions (same order;
-    quote encoding off by default — see encoding.encode_literal)."""
-    out = F.replace(col, F.lit("\\"), F.lit("/"))
-    if encode_quotes:
-        out = F.replace(out, F.lit('"'), F.lit("%22"))
-    out = F.regexp_replace(out, "_{2,}", "_")
-    out = F.replace(out, F.lit("\n"), F.lit(""))
-    return F.replace(out, F.lit("\r"), F.lit(""))
-
 
 # Python str.strip()'s whitespace set (str.isspace() over all of
 # Unicode).  The Python translation tiers trim literals/IRIs with
@@ -107,41 +88,13 @@ def encode_literal_col(col: Column, encode_quotes: bool = False) -> Column:
 # MorphBaseDataTranslator.scala:261); every NATIVE render and every
 # native constraint mirror must trim the SAME set or a tab/NBSP-padded
 # value renders differently across tiers (and a pushed filter could
-# wrongly prune).  F.trim strips spaces only — never use it for the
+# wrongly prune).  SQL trim() strips spaces only — never use it for the
 # literal/IRI render.
 _PY_STRIP_WS = "".join(map(chr, (
     0x09, 0x0A, 0x0B, 0x0C, 0x0D, 0x1C, 0x1D, 0x1E, 0x1F, 0x20,
     0x85, 0xA0, 0x1680,
     0x2000, 0x2001, 0x2002, 0x2003, 0x2004, 0x2005, 0x2006, 0x2007,
     0x2008, 0x2009, 0x200A, 0x2028, 0x2029, 0x202F, 0x205F, 0x3000)))
-
-
-def strip_ws_col(col: Column) -> Column:
-    """Native twin of Python str.strip(): character-set trim over the
-    exact isspace() alphabet (btrim is a set trim — no regex cost)."""
-    return F.btrim(col, F.lit(_PY_STRIP_WS))
-
-
-def nt_escape_col(col: Column) -> Column:
-    out = F.replace(col, F.lit("\\"), F.lit("\\\\"))
-    out = F.replace(out, F.lit('"'), F.lit('\\"'))
-    out = F.replace(out, F.lit("\n"), F.lit("\\n"))
-    out = F.replace(out, F.lit("\r"), F.lit("\\r"))
-    return F.replace(out, F.lit("\t"), F.lit("\\t"))
-
-
-# ---------------------------------------------------------------------------
-# SQL-text twins of the Column builders above.
-#
-# Building a term expression through the Column DSL costs one py4j round
-# trip PER OPERATOR — a single percent-encoding chain is ~90 RPCs, a
-# full kg_tpch compile ~3,700 (~0.7 s of driver time per query BUILD,
-# profiled; guide §7.3 driver-side work).  Rendering the identical
-# expression as ONE SQL string and parsing it with a single F.expr call
-# removes that wall-clock without touching semantics: the strings below
-# are the exact SQL forms of the Column chains, and unresolved column
-# references behave identically (both resolve by name at analysis).
-# ---------------------------------------------------------------------------
 
 # default-graph sentinel: the graph column of a triple in the default
 # graph.  Compared by value — a per-row NULL graph means the default graph
@@ -157,9 +110,17 @@ def sql_lit(s: str) -> str:
     return "'" + out + "'"
 
 
+def double_sql(x: float) -> str:
+    """SQL DOUBLE literal for ``x`` (the ``3.5D`` form a Python float
+    becomes through the Column DSL; non-finite values by cast)."""
+    if math.isfinite(x):
+        return repr(x) + "D"
+    return f"CAST({sql_lit(str(x))} AS DOUBLE)"
+
+
 def check_sql_text_conf(spark: SparkSession) -> None:
-    """The SQL-text builders (sql_lit and every text twin) assume the
-    default parser.  Under the legacy escapedStringLiterals mode a
+    """The SQL-text builders (sql_lit and everything built on it) assume
+    the default parser.  Under the legacy escapedStringLiterals mode a
     backslash escape parses back differently and terms would silently
     change, so refuse to compile instead."""
     conf = "spark.sql.parser.escapedStringLiterals"
@@ -173,6 +134,28 @@ def sql_ident(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
+def _chain_sql(op: str, parts, empty: str) -> str:
+    out = None
+    for p in parts:
+        out = p if out is None else f"({out} {op} {p})"
+    return empty if out is None else out
+
+
+# the numeric comparison operators the pushdown mirrors emit
+CMP_OPS = ("=", "<", ">", "<=", ">=")
+
+
+def and_sql(parts) -> str:
+    """Left-nested conjunction, "true" when empty — the tree the Column
+    DSL's ``a & b & c`` builds (the SQL parser balances a flat chain)."""
+    return _chain_sql("AND", parts, "true")
+
+
+def or_sql(parts) -> str:
+    """Left-nested disjunction, "false" when empty (see and_sql)."""
+    return _chain_sql("OR", parts, "false")
+
+
 def _replace_chain_sql(inner: str, pairs) -> str:
     for old, new in pairs:
         inner = f"replace({inner}, {sql_lit(old)}, {sql_lit(new)})"
@@ -180,17 +163,21 @@ def _replace_chain_sql(inner: str, pairs) -> str:
 
 
 def encode_reserved_sql(inner: str) -> str:
-    """Text twin of encode_reserved_col."""
+    """GeneralUtility.encodeReservedChars (encoding.encode_reserved_chars)
+    as a chain of literal replaces."""
     return _replace_chain_sql(inner, _ENCODE_RESERVED)
 
 
 def encode_url_sql(inner: str) -> str:
-    """Text twin of encode_url_col."""
+    """GeneralUtility.encodeURI (encoding.encode_url): URL-UNSAFE chars
+    only — ':' '/' '%' etc. stay; the whole-IRI encoding the Python tier
+    applies in _make_term (translate.py:332-333)."""
     return _replace_chain_sql(inner, _ENCODE_URL)
 
 
 def encode_literal_sql(inner: str, encode_quotes: bool = False) -> str:
-    """Text twin of encode_literal_col (same operation order)."""
+    """GeneralUtility.encodeLiteral (encoding.encode_literal, same
+    operation order; quote encoding off by default)."""
     out = f"replace({inner}, {sql_lit(chr(92))}, '/')"
     if encode_quotes:
         out = f"replace({out}, '\"', '%22')"
@@ -200,15 +187,44 @@ def encode_literal_sql(inner: str, encode_quotes: bool = False) -> str:
 
 
 def strip_ws_sql(inner: str) -> str:
-    """Text twin of strip_ws_col (same isspace() alphabet)."""
+    """Python str.strip(): a character-set trim over the exact isspace()
+    alphabet (btrim is a set trim — no regex cost)."""
     return f"btrim({inner}, {sql_lit(_PY_STRIP_WS)})"
 
 
 def nt_escape_sql(inner: str) -> str:
-    """Text twin of nt_escape_col."""
+    """N-Triples escaping of a literal's lexical form (translate.nt_escape)."""
     return _replace_chain_sql(inner, (
         ("\\", "\\\\"), ('"', '\\"'), ("\n", "\\n"), ("\r", "\\r"),
         ("\t", "\\t")))
+
+
+def lexical_sql(sql: str, dtype: T.DataType) -> str:
+    """Lexical form of a typed value, NULL for NULL: timestamps in ISO
+    form with the 'T' separator (translateDateTime semantics), everything
+    else the string cast (booleans cast to lowercase, as Java's
+    toString).  A NULL value is no term (R2RML §11), whatever its type."""
+    if isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
+        return f"date_format({sql}, {sql_lit(chr(39).join(('yyyy-MM-dd', 'T', 'HH:mm:ss')))})"
+    return f"CAST({sql} AS STRING)"
+
+
+def iri_term_sql(inner: str) -> str:
+    return f"concat('<', {inner}, '>')"
+
+
+def literal_term_sql(inner: str, datatype: Optional[str],
+                     lang: Optional[str], escape: bool = True) -> str:
+    """Quoted N-Triples literal over the lexical ``inner``; ``escape``
+    False when the lexical provably needs no escaping (numbers,
+    booleans)."""
+    body = (f"concat('\"', {nt_escape_sql(inner) if escape else inner}, "
+            f"'\"')")
+    if lang:
+        return f"concat({body}, {sql_lit('@' + lang)})"
+    if datatype:
+        return f"concat({body}, {sql_lit('^^<' + datatype + '>')})"
+    return body
 
 
 _NATURAL_XSD = {
@@ -227,26 +243,8 @@ def natural_datatype(dtype: T.DataType) -> Optional[str]:
     return _NATURAL_XSD.get(type(dtype))
 
 
-def _col_as_string(df: DataFrame, name: str) -> Column:
-    dtype = df.schema[name].dataType
-    col = F.col(name)
-    if isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
-        # ISO lexical form with 'T' separator (translateDateTime semantics)
-        return F.date_format(col, "yyyy-MM-dd'T'HH:mm:ss")
-    if isinstance(dtype, T.BooleanType):
-        return F.when(col, "true").otherwise("false")
-    return col.cast("string")
-
-
-def _col_as_string_sql(df: DataFrame, name: str) -> str:
-    """Text twin of _col_as_string (same lexical forms)."""
-    dtype = df.schema[name].dataType
-    ident = sql_ident(name)
-    if isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
-        return f"date_format({ident}, {sql_lit(chr(39).join(('yyyy-MM-dd', 'T', 'HH:mm:ss')))})"
-    if isinstance(dtype, T.BooleanType):
-        return f"(CASE WHEN {ident} THEN 'true' ELSE 'false' END)"
-    return f"CAST({ident} AS STRING)"
+def _col_lexical_sql(df: DataFrame, name: str) -> str:
+    return lexical_sql(sql_ident(name), df.schema[name].dataType)
 
 
 class NativeCompiler:
@@ -271,7 +269,7 @@ class NativeCompiler:
         (template inversion), ('lexeq', lex) rendered-literal equality,
         ('cmp', ((op, num), ...)) numeric predicates, or
         ('lexpat', kind, pat) STRSTARTS/STRENDS/CONTAINS mirrors — see
-        _constraint_col."""
+        _constraint_sql."""
         check_sql_text_conf(spark)
         self.spark = spark
         self.mapping = mapping
@@ -290,64 +288,30 @@ class NativeCompiler:
         # rr:sqlQuery over registered temp views
         return self.spark.sql(ls.value)
 
-    def _iri_term(self, iri_value: Column) -> Column:
-        return F.concat(F.lit("<"), iri_value, F.lit(">"))
-
-    def _iri_term_sql(self, inner: str) -> str:
-        return f"concat('<', {inner}, '>')"
-
-    def _literal_term(self, value: Column, datatype: Optional[str],
-                      lang: Optional[str]) -> Column:
-        body = F.concat(F.lit('"'), nt_escape_col(value), F.lit('"'))
-        if lang:
-            return F.concat(body, F.lit("@" + lang))
-        if datatype:
-            return F.concat(body, F.lit(f"^^<{datatype}>"))
-        return body
-
-    def _literal_term_sql(self, inner: str, datatype: Optional[str],
-                          lang: Optional[str]) -> str:
-        body = f"concat('\"', {nt_escape_sql(inner)}, '\"')"
-        if lang:
-            return f"concat({body}, {sql_lit('@' + lang)})"
-        if datatype:
-            return f"concat({body}, {sql_lit('^^<' + datatype + '>')})"
-        return body
-
-    def term_null_cond(self, df: DataFrame, m: TermMap) -> Optional[Column]:
+    def term_null_cond(self, m: TermMap) -> Optional[Column]:
         """Column form of term_null_cond_sql (None = never NULL)."""
-        sql = self.term_null_cond_sql(df, m)
+        sql = self.term_null_cond_sql(m)
         return None if sql is None else F.expr(sql)
 
-    def term_null_cond_sql(self, df: DataFrame, m: TermMap) -> Optional[str]:
+    @staticmethod
+    def term_null_cond_sql(m: TermMap) -> Optional[str]:
         """Cheap per-row condition equivalent to ``term_expr(m).isNull()``
         — evaluated on the RAW source columns, so the null-guard filter
         does not have to build (and throw away) the rendered term string.
         None = the term is provably never NULL.
 
         Exactness: a CONSTANT term is never null; a COLUMN term is null
-        iff the column is null — except BOOLEAN columns, whose lexical is
-        when(col,'true').otherwise('false') and never null; a TEMPLATE
-        term is null iff EVERY group's lexical is null (NULL groups
-        render '', only the all-null row is dropped) — mirroring
+        iff the column is null (lexical_sql maps NULL to NULL for every
+        type); a TEMPLATE term is null iff EVERY group is null (NULL
+        groups render '', only the all-null row is dropped) — mirroring
         term_expr's all_null condition exactly."""
         if m.kind == CONSTANT:
             return None
-
-        def col_null(name: str) -> Optional[str]:
-            if isinstance(df.schema[name].dataType, T.BooleanType):
-                return None          # 'false' lexical, never null
-            return f"({sql_ident(name)} IS NULL)"
-
         if m.kind == COLUMN:
-            return col_null(m.column)
+            return f"({sql_ident(m.column)} IS NULL)"
         if m.kind == TEMPLATE:
-            conds = []
-            for g in get_template_groups(m.template):
-                c = col_null(g)
-                if c is None:
-                    return None      # one never-null group ⇒ term never null
-                conds.append(c)
+            conds = [f"({sql_ident(g)} IS NULL)"
+                     for g in get_template_groups(m.template)]
             if not conds:
                 return None          # group-less template: constant text
             return "(" + " AND ".join(conds) + ")"
@@ -370,13 +334,13 @@ class NativeCompiler:
         if m.kind == CONSTANT:
             c = m.constant
             if c[0] == "iri":
-                return self._iri_term_sql(sql_lit(c[1]))
+                return iri_term_sql(sql_lit(c[1]))
             if c[0] == "bnode":
                 return sql_lit(f"_:{c[1]}")
-            return self._literal_term_sql(sql_lit(c[1]), m.datatype or c[2],
-                                          m.language or c[3])
+            return literal_term_sql(sql_lit(c[1]), m.datatype or c[2],
+                                    m.language or c[3])
         if m.kind == COLUMN:
-            raw = _col_as_string_sql(df, m.column)
+            raw = _col_lexical_sql(df, m.column)
             if tt == NS.RR_IRI:
                 iri = raw
                 if isinstance(df.schema[m.column].dataType, T.StringType):
@@ -388,7 +352,7 @@ class NativeCompiler:
                         # is for TEMPLATE GROUP content, not column
                         # IRIs; translate.py:330-333)
                         iri = encode_url_sql(iri)
-                return self._iri_term_sql(iri)
+                return iri_term_sql(iri)
             dtype = m.datatype or (natural_datatype(df.schema[m.column].dataType)
                                    if self.cfg.infer_datatypes and not m.language
                                    else None)
@@ -397,7 +361,7 @@ class NativeCompiler:
                 val = strip_ws_sql(val)
             if isinstance(df.schema[m.column].dataType, T.StringType):
                 val = encode_literal_sql(val, self.cfg.encode_literal_quotes)
-            return self._literal_term_sql(val, dtype, m.language)
+            return literal_term_sql(val, dtype, m.language)
         if m.kind == TEMPLATE:
             return self._template_expr_sql(df, m, tt)
         raise ValueError(f"term map kind {m.kind} not native-compilable")
@@ -425,7 +389,7 @@ class NativeCompiler:
         for seg, g in zip(segments, groups):
             if seg:
                 parts.append(sql_lit(fix(seg)))
-            raw = _col_as_string_sql(df, g)
+            raw = _col_lexical_sql(df, g)
             if tt == NS.RR_IRI and self.cfg.encode_unsafe_chars_in_db_values \
                     and isinstance(df.schema[g].dataType, T.StringType):
                 raw = encode_reserved_sql(raw)
@@ -440,13 +404,19 @@ class NativeCompiler:
             all_null = " AND ".join(f"({ce} IS NULL)" for ce in col_exprs)
             expanded = f"(CASE WHEN {all_null} THEN NULL ELSE {expanded} END)"
         if tt == NS.RR_IRI:
-            return self._iri_term_sql(expanded)
+            return iri_term_sql(expanded)
         if tt == NS.RR_BLANKNODE:
             # format_bnode applies encodeURI unconditionally over the
             # whole id (translate.py:336) — groups included, since bnode
             # groups get no reserved-encoding pass
             return f"concat('_:', {encode_url_sql(expanded)})"
-        return self._literal_term_sql(expanded, m.datatype, m.language)
+        # createLiteral trims and encodes the whole expanded value
+        # (translate.py _make_term), fixed segments included
+        if self.cfg.literal_trim:
+            expanded = strip_ws_sql(expanded)
+        return literal_term_sql(
+            encode_literal_sql(expanded, self.cfg.encode_literal_quotes),
+            m.datatype, m.language)
 
     # -- triples map compilation ----------------------------------------
     def tm_triples(self, tm: TriplesMap) -> DataFrame:
@@ -458,10 +428,11 @@ class NativeCompiler:
         df = self._source_df(tm)
         flt = self.tm_row_filters.get(tm.name)
         if flt:
-            df = df.where(self._constraint_col(df, flt))
+            df = df.where(self._constraint_sql(df, flt))
         # every expression below is composed as SQL TEXT and parsed in
-        # one call per projection/filter (see the module's text twins:
-        # the Column-DSL build pays a py4j round trip per operator)
+        # one call per projection/filter (see the module's SQL-text
+        # builders: the Column-DSL build pays a py4j round trip per
+        # operator)
         subj_sql = self.term_expr_sql(df, tm.subject_map)
 
         # named graphs (R2RML §9/xR2RML quads): each class triple lands
@@ -489,7 +460,7 @@ class NativeCompiler:
             out.append((NULL_G, f"({allnull})"))
             return out
 
-        rdf_type = self._iri_term_sql(sql_lit(NS.RDF_TYPE))
+        rdf_type = iri_term_sql(sql_lit(NS.RDF_TYPE))
         po_trips: list[tuple] = []
         cond_parts: list[DataFrame] = []
         sub_variants = graph_variants(sub_gs, sub_kinds)
@@ -499,7 +470,7 @@ class NativeCompiler:
         # the guard tests the RAW source columns instead of
         # isNotNull(<rendered term string>), so the filter no longer
         # builds every term string a second time just to check nullness
-        subj_nn = self.term_null_cond_sql(df, tm.subject_map)
+        subj_nn = self.term_null_cond_sql(tm.subject_map)
 
         def guards(frame: DataFrame, obj_nn: Optional[str]) -> DataFrame:
             conds = []
@@ -509,7 +480,7 @@ class NativeCompiler:
                 conds.append(f"(NOT {obj_nn})")
             if not conds:
                 return frame
-            return frame.where(F.expr(" AND ".join(conds)))
+            return frame.where(" AND ".join(conds))
 
         def sel(frame: DataFrame, pred: str, obj: str, gc: str) -> DataFrame:
             return frame.selectExpr(
@@ -522,12 +493,12 @@ class NativeCompiler:
                 po_trips.append((pred, obj, gc, obj_nn))
             else:
                 cond_parts.append(
-                    sel(guards(df.where(F.expr(cond)), obj_nn),
+                    sel(guards(df.where(cond), obj_nn),
                         pred, obj, gc))
 
         for cls in tm.class_uris:
             for gc, cond in sub_variants:
-                emit(rdf_type, self._iri_term_sql(sql_lit(cls)), gc, cond,
+                emit(rdf_type, iri_term_sql(sql_lit(cls)), gc, cond,
                      None)
 
         rom_parts: list[DataFrame] = []
@@ -542,17 +513,12 @@ class NativeCompiler:
                 for om in pom.object_maps:
                     for gc, cond in gvars:
                         emit(pred, self.term_expr_sql(df, om), gc, cond,
-                             self.term_null_cond_sql(df, om))
+                             self.term_null_cond_sql(om))
                 for rom in pom.ref_object_maps:
                     for gc, cond in gvars:
                         rom_parts.append(self._rom_triples(
-                            df.where(F.expr(cond)) if cond is not None
-                            else df,
-                            F.expr(subj_sql).alias("subj"), F.expr(pred),
-                            rom,
-                            None if gc == NULL_G else F.expr(gc),
-                            subj_nn=None if subj_nn is None
-                            else F.expr(subj_nn)))
+                            df.where(cond) if cond is not None else df,
+                            subj_sql, pred, rom, gc, subj_nn))
 
         parts: list[DataFrame] = []
         if po_trips and (self.fuse_projections and len(po_trips) > 1):
@@ -647,9 +613,8 @@ class NativeCompiler:
             return False
         return True
 
-    def _rom_triples(self, child_df: DataFrame, subj: Column, pred: Column,
-                     rom, graph: Optional[Column] = None,
-                     subj_nn: Optional[Column] = None) -> DataFrame:
+    def _rom_triples(self, child_df: DataFrame, subj: str, pred: str,
+                     rom, graph: str, subj_nn: Optional[str]) -> DataFrame:
         """Referencing object map = equi-join child×parent on the join
         columns; the reference generates a SQL LEFT JOIN
         (MorphRDBUnfolder.scala:284-320) — inner join is equivalent for
@@ -661,7 +626,8 @@ class NativeCompiler:
         ~8-byte keys instead of ~70 bytes of pre-built IRI text per row.
         When the parent subject is keyed exactly by the join column the
         join itself collapses to a left_semi existence probe
-        (_parent_subj_from_child_key)."""
+        (_parent_subj_from_child_key).  ``subj``, ``pred``, ``graph`` and
+        ``subj_nn`` (the child subject's null condition) are SQL text."""
         if not rom.join_conditions:
             # zero join conditions: the reference's intersection of zero
             # term sets is empty — never a cross product
@@ -671,42 +637,38 @@ class NativeCompiler:
         pdf = self._source_df(parent_tm)
         pcols = [jc.parent_ref for jc in rom.join_conditions]
         ccols = [jc.child_ref for jc in rom.join_conditions]
-        out_cols = [subj, pred.alias("pred")]
         if subj_nn is not None:
             # cheap child-subject null guard BEFORE the join: same rows
             # dropped as the old isNotNull(<rendered subj>) post-filter,
             # but tested on raw columns and pruning join probes early
-            child_df = child_df.where(~subj_nn)
+            child_df = child_df.where(f"(NOT {subj_nn})")
 
         if self._parent_key_renders_object(parent_tm, pdf, child_df, rom):
             # existence probe: bare parent keys, no subject strings built
             parent_keys = pdf.select(F.col(pcols[0]).alias(ccols[0]))
             kept = child_df.join(parent_keys, ccols[0], "left_semi") \
                            .withColumn(pcols[0], F.col(ccols[0]))
-            key_obj = self.term_expr(kept, parent_tm.subject_map)
-            g = F.lit(None).cast("string") if graph is None else graph
-            return kept.select(*out_cols, key_obj.alias("obj"),
-                               g.alias("graph"))
+            key_obj = self.term_expr_sql(kept, parent_tm.subject_map)
+            return kept.selectExpr(f"{subj} AS subj", f"{pred} AS pred",
+                                   f"{key_obj} AS obj", f"{graph} AS graph")
 
-        parent_nn = self.term_null_cond(pdf, parent_tm.subject_map)
+        parent_nn = self.term_null_cond_sql(parent_tm.subject_map)
         if parent_nn is not None:
             # null parent subjects can never produce a triple (the old
             # plan dropped them via isNotNull(obj) AFTER the join)
-            pdf = pdf.where(~parent_nn)
+            pdf = pdf.where(f"(NOT {parent_nn})")
         parent_subj = self.term_expr(pdf, parent_tm.subject_map)
         parent_sel = pdf.select(
             parent_subj.alias("_psubj"),
             *[F.col(c).alias(f"_pk{i}") for i, c in enumerate(pcols)])
         # ship raw term-source columns through the exchange, not built
-        # strings: the subj/pred Columns reference child columns by name
+        # strings: the subj/pred expressions reference child columns by name
         # and resolve against the joined plan, so construction happens
         # AFTER the shuffle (Catalyst prunes the child side to the
         # source columns + join keys)
         joined = child_df.join(parent_sel, self._join_cond(ccols), "inner")
-        g = F.lit(None).cast("string") if graph is None else graph
-        return joined.select(*out_cols,
-                             F.col("_psubj").alias("obj"),
-                             g.alias("graph"))
+        return joined.selectExpr(f"{subj} AS subj", f"{pred} AS pred",
+                                 "_psubj AS obj", f"{graph} AS graph")
 
     @staticmethod
     def _join_cond(ccols: list) -> Column:
@@ -718,54 +680,60 @@ class NativeCompiler:
 
     _NUMERIC_TYPES = (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
                       T.FloatType, T.DoubleType, T.DecimalType)
-    _CMP_OPS = {"=": Column.__eq__, "<": Column.__lt__, ">": Column.__gt__,
-                "<=": Column.__le__, ">=": Column.__ge__}
-
-    def _constraint_col(self, df: DataFrame, constraints: list) -> Column:
-        """OR of constraint conjunctions.  Values are raw-equality strings
-        (template inversions), ('lexeq', lex) rendered-literal lexical
-        equality, or ('cmp', ((op, num), ...)) numeric value predicates.
+    def _constraint_sql(self, df: DataFrame, constraints: list) -> str:
+        """OR of constraint conjunctions, as SQL text.  Values are
+        raw-equality strings (template inversions), ('irieq', lex)
+        stripped COLUMN-IRI equality, ('lexeq', lex) rendered-literal
+        lexical equality, ('cmp', ((op, num), ...)) numeric value
+        predicates or ('lexpat', kind, pat) pattern predicates.
         Equalities/comparisons on numeric columns convert to the native
         type so they reach the parquet scan as PushedFilters; string
         literal equality mirrors the render pipeline exactly (trim +
         encode_literal + NT escape) so it is sound AND exact."""
-        def typed_eq(col: str, value: str) -> Column:
+        def typed_eq(col: str, value: str) -> str:
             dtype = df.schema[col].dataType
+            ident = sql_ident(col)
             try:
                 if isinstance(dtype, (T.ByteType, T.ShortType,
                                       T.IntegerType, T.LongType)):
-                    return F.col(col) == int(value)
+                    return f"({ident} = {int(value)})"
                 if isinstance(dtype, (T.FloatType, T.DoubleType,
                                       T.DecimalType)):
-                    return F.col(col) == float(value)
+                    return f"({ident} = {double_sql(float(value))})"
             except ValueError:
-                return F.lit(False)   # non-numeric lexical: no row matches
+                return "false"        # non-numeric lexical: no row matches
             if isinstance(dtype, T.StringType):
-                return F.col(col) == value
-            return _col_as_string(df, col) == value
+                return f"({ident} = {sql_lit(value)})"
+            return f"({_col_lexical_sql(df, col)} = {sql_lit(value)})"
 
-        def rendered_lexical(col: str) -> Column:
+        def rendered_lexical(col: str) -> str:
             # the COLUMN-literal lexical pipeline of term_expr, mirrored
-            val = _col_as_string(df, col)
+            val = _col_lexical_sql(df, col)
             if self.cfg.literal_trim:
-                val = strip_ws_col(val)
+                val = strip_ws_sql(val)
             if isinstance(df.schema[col].dataType, T.StringType):
-                val = encode_literal_col(val, self.cfg.encode_literal_quotes)
-            return nt_escape_col(val)
+                val = encode_literal_sql(val, self.cfg.encode_literal_quotes)
+            return nt_escape_sql(val)
 
-        def lex_eq(col: str, lex: str) -> Column:
+        def lex_eq(col: str, lex: str) -> str:
             dtype = df.schema[col].dataType
             if isinstance(dtype, self._NUMERIC_TYPES):
                 # value equality is a SUPERSET of lexical equality (the
                 # evaluator re-applies the exact term match) and pushes
                 # to parquet as an EqualTo on the native type
                 return typed_eq(col, lex)
-            return rendered_lexical(col) == lex
+            return f"({rendered_lexical(col)} = {sql_lit(lex)})"
 
-        def num_cmp(col: str, ops) -> Column:
+        def num_cmp(col: str, ops) -> str:
             dtype = df.schema[col].dataType
-            base = F.col(col) if isinstance(dtype, self._NUMERIC_TYPES) \
-                else _col_as_string(df, col).try_cast("double")
+            ident = sql_ident(col)
+            # a non-numeric column mirrors numeric_value of the RENDERED
+            # literal, trimmed like the render (an NBSP-padded "7" is 7)
+            lex = _col_lexical_sql(df, col)
+            if self.cfg.literal_trim:
+                lex = strip_ws_sql(lex)
+            base = ident if isinstance(dtype, self._NUMERIC_TYPES) \
+                else f"try_cast({lex} AS DOUBLE)"
             # natively-DECIMAL columns: a double literal forces
             # cast(col as double) > lit, which parquet cannot push.  When
             # the literal is exactly representable at the column's scale
@@ -774,39 +742,39 @@ class NativeCompiler:
             # identical to the engine's double compare and lands in
             # PushedFilters (row-group skipping at scale).
             dec_ok = isinstance(dtype, T.DecimalType) and dtype.precision <= 15
-            cond = None
+            conds = []
             for op, lex in ops:
-                if op not in self._CMP_OPS:
+                if op not in CMP_OPS:
                     continue    # unknown op: skip the conjunct (superset,
-                    # sound) — rewrite.py only emits the five _CMP_OPS
-                rhs = None
+                    # sound) — rewrite.py only emits the five CMP_OPS
+                cond = None
                 if dec_ok:
-                    from decimal import Decimal, InvalidOperation
                     try:
                         d = Decimal(lex)
                         dq = d.quantize(Decimal(1).scaleb(-dtype.scale))
                         if d == dq and \
                                 len(dq.as_tuple().digits) <= dtype.precision:
-                            rhs = (F.col(col), F.lit(dq).cast(dtype))
+                            cond = (f"({ident} {op} CAST({format(dq, 'f')}BD"
+                                    f" AS {dtype.simpleString().upper()}))")
                     except (InvalidOperation, ValueError):
-                        return F.lit(False)
-                if rhs is None:
+                        return "false"
+                if cond is None:
                     try:
-                        rhs = (base, F.lit(float(lex)))
+                        cond = f"({base} {op} {double_sql(float(lex))})"
                     except ValueError:
-                        return F.lit(False)
-                c = self._CMP_OPS[op](*rhs)
-                cond = c if cond is None else (cond & c)
-            return cond if cond is not None else F.lit(True)
+                        return "false"
+                conds.append(cond)
+            return and_sql(conds)
 
-        def pred_col(col: str, value) -> Column:
+        def pred_sql(col: str, value) -> str:
             if isinstance(value, tuple):
                 if value[0] == "irieq":
                     # COLUMN-IRI render strips the value (createIRI trim)
                     # — mirror on the stripped column; non-string columns
                     # render from the cast (no padding possible)
                     if isinstance(df.schema[col].dataType, T.StringType):
-                        return strip_ws_col(F.col(col)) == value[1]
+                        return (f"({strip_ws_sql(sql_ident(col))} = "
+                                f"{sql_lit(value[1])})")
                     return typed_eq(col, value[1])
                 if value[0] == "lexeq":
                     return lex_eq(col, value[1])
@@ -815,27 +783,19 @@ class NativeCompiler:
                 if value[0] == "lexpat":
                     # STRSTARTS/STRENDS/CONTAINS over the rendered
                     # lexical (STR() of the produced literal)
-                    rendered = rendered_lexical(col)
-                    kind, pat = value[1], value[2]
-                    if kind == "strstarts":
-                        return rendered.startswith(pat)
-                    if kind == "strends":
-                        return rendered.endswith(pat)
-                    return rendered.contains(pat)
+                    fn = {"strstarts": "startswith",
+                          "strends": "endswith"}.get(value[1], "contains")
+                    return (f"{fn}({rendered_lexical(col)}, "
+                            f"{sql_lit(value[2])})")
             return typed_eq(col, value)
 
-        ored = None
-        for conj in constraints:
-            c = F.lit(True)
-            for col, value in conj.items():
-                if col not in df.columns:
-                    # a non-column reference (doc-tier constraint leaking
-                    # into a tabular scan): dropping the term keeps a
-                    # SUPERSET of the rows — sound
-                    continue
-                c = c & pred_col(col, value)
-            ored = c if ored is None else (ored | c)
-        return ored if ored is not None else F.lit(True)
+        # a non-column reference (doc-tier constraint leaking into a
+        # tabular scan) is dropped: that keeps a SUPERSET of the rows —
+        # sound
+        return or_sql([and_sql([pred_sql(col, value)
+                                for col, value in conj.items()
+                                if col in df.columns])
+                       for conj in constraints]) if constraints else "true"
 
     # -- compile-time uniqueness proof (dedup elimination) ---------------
     def _subject_unique(self, tm: TriplesMap, df: DataFrame) -> bool:

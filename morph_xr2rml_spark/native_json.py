@@ -36,9 +36,9 @@ from .functions.templates import compile_template, get_template_groups
 from .model import (COLUMN, CONSTANT, REFERENCE, TEMPLATE, MappingDocument,
                     TermMap, TriplesMap)
 from .native import (NULL_G, check_sql_text_conf, encode_literal_sql,
-                     encode_reserved_sql, encode_url_sql, nt_escape_col,
-                     sql_lit, strip_ws_sql)
-from .sources import SourceCatalog
+                     encode_reserved_sql, encode_url_sql, iri_term_sql,
+                     lexical_sql, literal_term_sql, sql_lit, strip_ws_sql)
+from .sources import SourceCatalog, mongo_filter_sql
 from .translate import EngineConfig
 
 _SIMPLE_PATH = re.compile(r"^\$(\.[A-Za-z_][A-Za-z0-9_]*)+$")
@@ -53,8 +53,8 @@ def _static_path(ref: Optional[str]) -> Optional[list[str]]:
 
 def compilable(tm: TriplesMap) -> bool:
     """True when every path in the TM is static (see module docstring)
-    AND the source's find() filter compiles to a native Column predicate
-    — a filter that only the Python fallback can evaluate ($or with
+    AND the source's find() filter compiles to a SQL predicate — a
+    filter that only the Python fallback can evaluate ($or with
     numeric branches, $regex, $elemMatch, numeric equality) must route
     the TM to the document compiler, which applies it; this tier would
     silently scan UNFILTERED."""
@@ -63,12 +63,11 @@ def compilable(tm: TriplesMap) -> bool:
         return False
     if ls.is_find():
         from .model import parse_mongo_query
-        from .sources import mongo_filter_native_ok
         try:
             _coll, filter_text = parse_mongo_query(ls.value)
         except Exception:
             return False
-        if not mongo_filter_native_ok(filter_text):
+        if mongo_filter_sql(filter_text, "content") is None:
             return False
     if ls.iterator is not None and not _SIMPLE_ITER.match(ls.iterator):
         return False
@@ -385,7 +384,7 @@ class JsonNativeCompiler:
                 return
             if it_prefix and p[0] in pushdown_fields:
                 # pushed-down fields SHADOW same-named item fields
-                # (_field_col resolves them against the parent doc), so
+                # (_field_sql resolves them against the parent doc), so
                 # no lines.*.<field> schema entry exists or is needed
                 return
             paths.append(it_prefix + ["__*__"] + p if it_prefix else p)
@@ -478,35 +477,6 @@ class JsonNativeCompiler:
         return self.catalog.schema_samples[key][1]
 
     # -- term expressions --------------------------------------------------
-    def _field_col(self, tm: TriplesMap, root: Column, item: Optional[Column],
-                   ref: str) -> tuple[Column, T.DataType]:
-        """Resolve a static reference against the parsed doc (root) and
-        the iterated item; returns (col, type)."""
-        if ref == "$._id":
-            ref = "$._id.$oid"
-        parts = _static_path(ref)
-        schema = self._schema_for(tm)
-        it = tm.logical_source.iterator
-        pushdown_fields = {pd.target_field for pd in tm.logical_source.pushdowns}
-        src_col, src_schema = (item, self._item_schema(tm)) \
-            if it is not None else (root, schema)
-        # pushed-down fields live on the PARENT doc and SHADOW same-named
-        # item fields (xR2RMLPushDown inserts with put(), overwriting)
-        if it is not None and parts[0] in pushdown_fields:
-            if len(parts) > 1:
-                # pushed values are scalar strings; deeper paths match nothing
-                return F.lit(None).cast("string"), T.StringType()
-            for pd in tm.logical_source.pushdowns:
-                if pd.target_field == parts[0]:
-                    pparts = _static_path(
-                        "$._id.$oid" if pd.reference == "$._id"
-                        else pd.reference)
-                    col, dt = _descend(root, schema, pparts)
-                    # pushDown stringifies values (xR2RMLPushDown semantics)
-                    return _as_lexical(col, dt), T.StringType()
-        col, dt = _descend(src_col, src_schema, parts)
-        return col, dt
-
     def _item_schema(self, tm: TriplesMap) -> T.DataType:
         schema = self._schema_for(tm)
         it_parts = tm.logical_source.iterator[2:-2].split(".")
@@ -518,8 +488,9 @@ class JsonNativeCompiler:
 
     def _field_sql(self, tm: TriplesMap, root_sql: str,
                    item_sql: Optional[str], ref: str) -> tuple[str, T.DataType]:
-        """Text twin of _field_col: (sql fragment, type) for a static
-        reference — leaves are the named parse columns."""
+        """(sql fragment, type) of a static reference resolved against
+        the parsed doc (root) and the iterated item — leaves are the
+        named parse columns."""
         if ref == "$._id":
             ref = "$._id.$oid"
         parts = _static_path(ref)
@@ -528,8 +499,11 @@ class JsonNativeCompiler:
         pushdown_fields = {pd.target_field for pd in tm.logical_source.pushdowns}
         src_sql, src_schema = (item_sql, self._item_schema(tm)) \
             if it is not None else (root_sql, schema)
+        # pushed-down fields live on the PARENT doc and SHADOW same-named
+        # item fields (xR2RMLPushDown inserts with put(), overwriting)
         if it is not None and parts[0] in pushdown_fields:
             if len(parts) > 1:
+                # pushed values are scalar strings; deeper paths match nothing
                 return "CAST(NULL AS STRING)", T.StringType()
             for pd in tm.logical_source.pushdowns:
                 if pd.target_field == parts[0]:
@@ -537,14 +511,15 @@ class JsonNativeCompiler:
                         "$._id.$oid" if pd.reference == "$._id"
                         else pd.reference)
                     sql, dt = _descend_sql(root_sql, schema, pparts)
-                    return _as_lexical_sql(sql, dt), T.StringType()
+                    # pushDown stringifies values (xR2RMLPushDown semantics)
+                    return lexical_sql(sql, dt), T.StringType()
         return _descend_sql(src_sql, src_schema, parts)
 
     def _term_expr(self, tm: TriplesMap, root_sql: str,
                    item_sql: Optional[str], m: TermMap) -> Column:
         """Term map → Column, composed as ONE SQL string parsed by a
         single F.expr (the Column-DSL build costs one py4j round trip
-        per operator — see native.py's text twins)."""
+        per operator — see native.py's SQL-text builders)."""
         return F.expr(self._term_expr_sql(tm, root_sql, item_sql, m))
 
     def _term_expr_sql(self, tm: TriplesMap, root_sql: str,
@@ -561,11 +536,11 @@ class JsonNativeCompiler:
                 return sql_lit(f"<{c[1]}>")
             if c[0] == "bnode":
                 return sql_lit(f"_:{c[1]}")
-            return _literal_term_sql(sql_lit(c[1]), m.datatype or c[2],
-                                     m.language or c[3])
+            return literal_term_sql(sql_lit(c[1]), m.datatype or c[2],
+                                    m.language or c[3])
         if m.kind == REFERENCE:
             sql, dt = self._field_sql(tm, root_sql, item_sql, m.reference)
-            lex = _as_lexical_sql(sql, dt)
+            lex = lexical_sql(sql, dt)
             is_str = isinstance(dt, T.StringType)
             if tt == NS.RR_IRI:
                 # createIRI: trim + encodeUrl; numeric lexicals can't
@@ -574,7 +549,7 @@ class JsonNativeCompiler:
                     lex = strip_ws_sql(lex)
                     if cfg.encode_unsafe_chars_in_uri:
                         lex = encode_url_sql(lex)
-                return f"concat('<', {lex}, '>')"
+                return iri_term_sql(lex)
             if is_str and cfg.literal_trim:
                 lex = strip_ws_sql(lex)
             if is_str:
@@ -582,7 +557,7 @@ class JsonNativeCompiler:
             dtype = m.datatype
             if dtype is None and m.language is None and cfg.infer_datatypes:
                 dtype = _mongo_xsd(dt)
-            return _literal_term_sql(lex, dtype, m.language, escape=is_str)
+            return literal_term_sql(lex, dtype, m.language, escape=is_str)
         if m.kind == TEMPLATE:
             segs = compile_template(m.template)
             groups = get_template_groups(m.template)
@@ -595,15 +570,13 @@ class JsonNativeCompiler:
                 segs = [_enc_url(s) for s in segs]
             parts: list[str] = []
             null_conds: list[str] = []
-            any_str = False
             parts.append(sql_lit(segs[0]))
             for i, g in enumerate(groups):
                 sql, dt = self._field_sql(tm, root_sql, item_sql, g)
-                lex = _as_lexical_sql(sql, dt)
-                if isinstance(dt, T.StringType):
-                    any_str = True
-                    if tt == NS.RR_IRI and cfg.encode_unsafe_chars_in_db_values:
-                        lex = encode_reserved_sql(lex)
+                lex = lexical_sql(sql, dt)
+                if isinstance(dt, T.StringType) and tt == NS.RR_IRI \
+                        and cfg.encode_unsafe_chars_in_db_values:
+                    lex = encode_reserved_sql(lex)
                 null_conds.append(f"({lex} IS NULL)")
                 parts.append(f"coalesce({lex}, '')")
                 parts.append(sql_lit(segs[i + 1]))
@@ -613,11 +586,17 @@ class JsonNativeCompiler:
                 expanded = (f"(CASE WHEN {all_null} THEN NULL "
                             f"ELSE {expanded} END)")
             if tt == NS.RR_IRI:
-                return f"concat('<', {expanded}, '>')"
+                return iri_term_sql(expanded)
             if tt == NS.RR_BLANKNODE:
-                return f"concat('_:', {expanded})"
-            return _literal_term_sql(expanded, m.datatype, m.language,
-                                     escape=any_str)
+                # format_bnode encodes the whole id (translate.py:336)
+                return f"concat('_:', {encode_url_sql(expanded)})"
+            # createLiteral trims and encodes the whole expanded value
+            # (translate.py _make_term), fixed segments included
+            if cfg.literal_trim:
+                expanded = strip_ws_sql(expanded)
+            return literal_term_sql(
+                encode_literal_sql(expanded, cfg.encode_literal_quotes),
+                m.datatype, m.language)
         raise ValueError(f"not json-native compilable: {m.kind}")
 
     # -- triples map --------------------------------------------------------
@@ -640,9 +619,10 @@ class JsonNativeCompiler:
         per-pattern branch pruning is unaffected.  (A plain extra
         nondeterministic column does not work: ColumnPruning drops it
         and the Project turns deterministic again.)"""
-        doc = F.when(F.monotonically_increasing_id() >= 0,
-                     F.from_json(F.col("content"), schema))
-        return src.select(doc.alias("_doc"), "_seq")
+        return src.selectExpr(
+            "CASE WHEN monotonically_increasing_id() >= 0 THEN "
+            f"from_json(content, {sql_lit(schema.json())}) END AS _doc",
+            "_seq")
 
     def tm_base(self, tm: TriplesMap) -> DataFrame:
         """Scan → from_json → (explode) → fused (pred, obj) array explode.
@@ -681,10 +661,9 @@ class JsonNativeCompiler:
 
 
         # expressions composed as SQL TEXT, one parse per projection —
-        # see the text twins in native.py (a Column-DSL build pays one
-        # py4j round trip per operator)
+        # see the SQL-text builders in native.py (a Column-DSL build pays
+        # one py4j round trip per operator)
         subj_sql = self._term_expr_sql(tm, root, item, tm.subject_map)
-        subj = F.expr(subj_sql).alias("subj")
         rdf_type = sql_lit(f"<{NS.RDF_TYPE}>")
 
         # named graphs: subject ∪ POM target-graph union, NULL render
@@ -741,22 +720,20 @@ class JsonNativeCompiler:
             out_parts.append(fused.selectExpr(
                 "subj", "_po.pred AS pred", "_po.obj AS obj",
                 "_po.graph AS graph")
-                .where(F.expr("subj IS NOT NULL AND obj IS NOT NULL")))
+                .where("subj IS NOT NULL AND obj IS NOT NULL"))
         elif po_specs:
             # unfused: one branch per (pred, obj, graph) entry — constant
             # preds fold against downstream pattern filters, so only the
             # branches a pattern can match keep their scan in the plan
             for pred, obj, gc, cond in po_specs:
-                b = parsed if cond is None else parsed.where(F.expr(cond))
+                b = parsed if cond is None else parsed.where(cond)
                 out_parts.append(
                     b.selectExpr(f"{subj_sql} AS subj", f"{pred} AS pred",
                                  f"{obj} AS obj", f"{gc} AS graph")
-                     .where(F.expr("subj IS NOT NULL AND obj IS NOT NULL")))
+                     .where("subj IS NOT NULL AND obj IS NOT NULL"))
         for pred, rom, gc, cond in rom_selects:
             out_parts.append(self._rom_triples(
-                tm, parsed, root, item, subj, F.expr(pred), rom,
-                None if gc == NULL_G else F.expr(gc),
-                None if cond is None else F.expr(cond)))
+                tm, parsed, root, item, subj_sql, pred, rom, gc, cond))
         if not out_parts:
             # subject-only TM (no class, no POM): R2RML emits rows only
             # per POM/class — same as the tabular compiler
@@ -768,22 +745,19 @@ class JsonNativeCompiler:
         return out
 
     def _join_key(self, tm: TriplesMap, root_sql: str,
-                  item_sql: Optional[str], ref: str) -> Column:
+                  item_sql: Optional[str], ref: str) -> str:
         """Join-key canonicalization matching translate.msp_join_keys
         (json.dumps of the raw scalar: strings quoted+escaped, booleans
         lowercase, numbers bare)."""
         sql, dt = self._field_sql(tm, root_sql, item_sql, ref)
         if isinstance(dt, T.StringType):
-            return F.expr(
-                f"concat('\"', {nt_escape_json_sql(sql)}, '\"')")
-        if isinstance(dt, T.BooleanType):
-            return F.expr(
-                f"(CASE WHEN {sql} IS NULL THEN CAST(NULL AS STRING) "
-                f"WHEN {sql} THEN 'true' ELSE 'false' END)")
-        return F.expr(f"CAST({sql} AS STRING)")
+            return f"concat('\"', {nt_escape_json_sql(sql)}, '\"')"
+        return lexical_sql(sql, dt)
 
-    def _rom_triples(self, tm, parsed, root, item, subj, pred, rom,
-                     graph=None, cond=None) -> DataFrame:
+    def _rom_triples(self, tm, parsed, root, item, subj: str, pred: str,
+                     rom, graph: str, cond: Optional[str]) -> DataFrame:
+        """ROM triples by a join on canonical join keys; ``subj``,
+        ``pred``, ``graph`` and the row condition ``cond`` are SQL text."""
         if not rom.join_conditions:
             # intersection of zero per-condition sets = empty (matches the
             # document engine / reference), never a cross product
@@ -806,19 +780,17 @@ class JsonNativeCompiler:
             pparsed = pparsed.select("_doc", "_seq",
                                      F.explode(arr).alias("_item"))
             pitem = "`_item`"
-        psubj = self._term_expr(parent_tm, proot, pitem,
-                                parent_tm.subject_map)
+        psubj = self._term_expr_sql(parent_tm, proot, pitem,
+                                    parent_tm.subject_map)
         child_src = parsed if cond is None else parsed.where(cond)
-        gcol = (F.lit(None).cast("string") if graph is None
-                else graph).alias("graph")
-        child_sel = child_src.select(
-            subj, pred.alias("pred"), gcol,
-            *[self._join_key(tm, root, item, jc.child_ref).alias(f"_ck{i}")
+        child_sel = child_src.selectExpr(
+            f"{subj} AS subj", f"{pred} AS pred", f"{graph} AS graph",
+            *[f"{self._join_key(tm, root, item, jc.child_ref)} AS _ck{i}"
               for i, jc in enumerate(rom.join_conditions)])
-        parent_sel = pparsed.select(
-            psubj.alias("_psubj"),
-            *[self._join_key(parent_tm, proot, pitem, jc.parent_ref)
-              .alias(f"_pk{i}") for i, jc in enumerate(rom.join_conditions)])
+        parent_sel = pparsed.selectExpr(
+            f"{psubj} AS _psubj",
+            *[f"{self._join_key(parent_tm, proot, pitem, jc.parent_ref)}"
+              f" AS _pk{i}" for i, jc in enumerate(rom.join_conditions)])
         jcond = None
         for i in range(len(rom.join_conditions)):
             c = F.col(f"_ck{i}") == F.col(f"_pk{i}")
@@ -842,29 +814,10 @@ def _schema_has(schema: T.DataType, parts: list[str]) -> bool:
     return True
 
 
-def _descend(col: Column, schema: T.DataType,
-             parts: list[str]) -> tuple[Column, T.DataType]:
-    dt = schema
-    for p in parts:
-        if not isinstance(dt, T.StructType) or p not in dt.fieldNames():
-            return F.lit(None).cast("string"), T.StringType()
-        col = col[p]
-        dt = dt[p].dataType
-    return col, dt
-
-
-def _as_lexical(col: Column, dt: T.DataType) -> Column:
-    """Java-toString lexical forms (booleans lowercase, doubles like
-    Python str — JSON shortest form both ways)."""
-    if isinstance(dt, T.BooleanType):
-        return F.when(col.isNull(), F.lit(None).cast("string")) \
-                .when(col, "true").otherwise("false")
-    return col.cast("string")
-
-
 def _descend_sql(base_sql: str, schema: T.DataType,
                  parts: list[str]) -> tuple[str, T.DataType]:
-    """Text twin of _descend (struct field walk over a named column)."""
+    """Struct field walk over a named column: (sql, type), a NULL
+    string where the sampled schema has no such field."""
     dt = schema
     sql = base_sql
     for p in parts:
@@ -873,27 +826,6 @@ def _descend_sql(base_sql: str, schema: T.DataType,
         sql = f"{sql}.`" + p.replace("`", "``") + "`"
         dt = dt[p].dataType
     return sql, dt
-
-
-def _as_lexical_sql(sql: str, dt: T.DataType) -> str:
-    """Text twin of _as_lexical."""
-    if isinstance(dt, T.BooleanType):
-        return (f"(CASE WHEN {sql} IS NULL THEN CAST(NULL AS STRING) "
-                f"WHEN {sql} THEN 'true' ELSE 'false' END)")
-    return f"CAST({sql} AS STRING)"
-
-
-def _literal_term_sql(inner: str, datatype: Optional[str],
-                      lang: Optional[str], escape: bool = True) -> str:
-    """Text twin of _literal_term."""
-    from .native import nt_escape_sql
-    body = (f"concat('\"', {nt_escape_sql(inner) if escape else inner}, "
-            f"'\"')")
-    if lang:
-        return f"concat({body}, {sql_lit('@' + lang)})"
-    if datatype:
-        return f"concat({body}, {sql_lit('^^<' + datatype + '>')})"
-    return body
 
 
 def _mongo_xsd(dt: T.DataType) -> Optional[str]:
@@ -905,17 +837,6 @@ def _mongo_xsd(dt: T.DataType) -> Optional[str]:
     if isinstance(dt, T.BooleanType):
         return NS.XSD_BOOLEAN
     return None
-
-
-def _literal_term(value: Column, datatype: Optional[str],
-                  lang: Optional[str], escape: bool = True) -> Column:
-    body = F.concat(F.lit('"'), nt_escape_col(value) if escape else value,
-                    F.lit('"'))
-    if lang:
-        return F.concat(body, F.lit("@" + lang))
-    if datatype:
-        return F.concat(body, F.lit(f"^^<{datatype}>"))
-    return body
 
 
 def nt_escape_json_sql(inner: str) -> str:

@@ -51,6 +51,7 @@ from typing import Optional, Union
 from pyspark.sql import SparkSession
 
 from . import namespaces as NS
+from .functions.encoding import encode_literal
 from .functions.templates import get_template_groups
 from .model import (COLUMN, CONSTANT, REFERENCE, TEMPLATE, MappingDocument,
                     TriplesMap, parse_mongo_query)
@@ -95,6 +96,27 @@ def invert_template(template: str, value: str):
             return AMBIGUOUS
         out[g] = v
     return out
+
+
+def template_literal_may_render(template: str, lex: str) -> bool:
+    """False when no row renders ``lex`` as a literal of this template.
+    The render is encode_literal of the expanded value, trimmed first
+    when literal_trim is on.  A fixed head (tail) that starts (ends)
+    with no whitespace and holds no quote reads the same under every
+    render setting, and its rstripped (lstripped) encoding stays a
+    prefix (suffix) of the encoded whole."""
+    groups = get_template_groups(template)
+    head = template.partition("{" + groups[0] + "}")[0] if groups \
+        else template
+    tail = template.rpartition("{" + groups[-1] + "}")[2] if groups \
+        else template
+    if head[:1] and not head[:1].isspace() and '"' not in head and \
+            not lex.startswith(encode_literal(head.rstrip())):
+        return False
+    if tail[-1:] and not tail[-1:].isspace() and '"' not in tail and \
+            not lex.endswith(encode_literal(tail.lstrip())):
+        return False
+    return True
 
 
 def invert_subject(tm: TriplesMap, iri: str):
@@ -385,10 +407,13 @@ def invert_object_literal(mapping: MappingDocument, tm: TriplesMap,
             else:
                 candidates.append({om.reference: ("lexeq", lex)})
         elif om.kind == TEMPLATE:
-            inv = invert_template(om.template, lex)
-            if inv is None:
-                continue
-            candidates.append(inv if inv is not AMBIGUOUS else AMBIGUOUS)
+            # the render trims and encodes the whole expanded value
+            # (createLiteral), which no raw group equality inverts — no
+            # row constraint, but fixed ends that cannot render the
+            # lexical rule the TM out
+            if om.datatype in (NS.XSD_DATETIME, NS.XSD_BOOLEAN) or \
+                    template_literal_may_render(om.template, lex):
+                candidates.append(AMBIGUOUS)
         else:
             # constant literal: may match every row — no row constraint
             candidates.append(AMBIGUOUS)

@@ -4,7 +4,7 @@ The canonical input is an Iceberg-style table of source-code repositories
 ``(repo, path, commit, lang, content)`` where ``content`` plays the role
 of the MongoDB JSON document (BASELINE.json input_hint).  A mapping's
 ``xrr:query "db.<collection>.find({...})"`` resolves to a filtered view of
-that table; the find() filter compiles to NATIVE Column predicates on
+that table; the find() filter compiles to one SQL predicate over
 ``get_json_object`` so Catalyst keeps the scan pruned and pushes the
 partition filters down (the reference ships the filter to MongoDB —
 MorphMongoDataSourceReader.scala:52-70; our equivalent is a pushed-down
@@ -16,208 +16,158 @@ from __future__ import annotations
 import json
 from typing import Callable, Optional
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .model import LogicalSource, parse_mongo_query
 from .mongo_filter import normalize_filter_text
+from .native import (CMP_OPS, and_sql, check_sql_text_conf, double_sql,
+                     encode_literal_sql, nt_escape_sql, or_sql, sql_ident,
+                     sql_lit, strip_ws_sql)
 
 
-def mongo_filter_to_column(filter_text: str, content_col: str):
-    """Compile a find() filter to a native Column predicate, or None if the
-    filter uses operators we can only evaluate in Python.  Supported
-    natively: {}, {field: value}, {field: {$exists: b}}, {$and: [...]},
-    dotted paths — which covers every filter in the reference's examples."""
-    spec = json.loads(normalize_filter_text(filter_text))
-    return _spec_to_column(spec, content_col)
-
-
-def _spec_to_column(spec: dict, content_col: str):
-    cond = F.lit(True)
-    for key, val in spec.items():
-        if key == "$and":
-            for sub in val:
-                c = _spec_to_column(sub, content_col)
-                if c is None:
-                    return None
-                cond = cond & c
-        elif key == "$or":
-            parts = [_spec_to_column(sub, content_col) for sub in val]
-            if not parts or any(p is None for p in parts):
-                return None
-            ored = parts[0]
-            for p in parts[1:]:
-                ored = ored | p
-            cond = cond & ored
-        elif key.startswith("$"):
-            return None
-        else:
-            extracted = F.get_json_object(F.col(content_col), f"$.{key}")
-            if isinstance(val, dict):
-                ops = list(val.items())
-                for op, operand in ops:
-                    if op == "$exists":
-                        cond = cond & (extracted.isNotNull() if operand
-                                       else extracted.isNull())
-                    elif op == "$eq":
-                        if _is_number(operand):
-                            # numeric equality is cross-representation in
-                            # Mongo/Python ({a:3} matches 3.0) but the
-                            # extracted lexical form is "3" vs "3.0" —
-                            # only the Python filter gets this right
-                            return None
-                        cond = cond & (extracted == F.lit(_json_scalar(operand)))
-                    elif op == "$ne":
-                        if _is_number(operand):
-                            return None
-                        # $ne keeps documents where the field is MISSING
-                        # (extracted NULL): a bare != would evaluate to
-                        # NULL there and wrongly drop them
-                        cond = cond & (extracted.isNull() |
-                                       (extracted != F.lit(_json_scalar(operand))))
-                    elif op in ("$gt", "$gte", "$lt", "$lte") and \
-                            _is_number(operand):
-                        num = extracted.try_cast("double")
-                        cond = cond & {
-                            "$gt": num > operand, "$gte": num >= operand,
-                            "$lt": num < operand, "$lte": num <= operand,
-                        }[op]
-                    elif op == "$in" and isinstance(operand, list):
-                        if any(_is_number(v) for v in operand):
-                            return None
-                        cond = cond & extracted.isin(
-                            [_json_scalar(v) for v in operand])
-                    elif op == "$lexIn" and isinstance(operand, list):
-                        # INTERNAL pushdown operator (rewrite.py): matches
-                        # when the field's JSON lexical form is in the
-                        # list — deliberately type-blind (number 7 and
-                        # string "7" both have lexical '7'), which makes
-                        # it natively compilable where Mongo's
-                        # type-sensitive numeric equality is not
-                        cond = cond & extracted.isin(
-                            [str(v) for v in operand])
-                    elif op == "$renderIn" and isinstance(operand, list):
-                        # INTERNAL (rewrite.py object-literal pushdown):
-                        # the doc-tier LITERAL RENDER of the field (trim
-                        # + encode_literal of the lexical) is in the
-                        # list, OR — for numeric members — the value
-                        # compares numerically equal (a raw "7.50"
-                        # renders "7.5"; the numeric arm keeps it)
-                        from .native import encode_literal_col, strip_ws_col
-                        rendered = encode_literal_col(strip_ws_col(extracted))
-                        c = rendered.isin([str(v) for v in operand])
-                        nums = [float(v) for v in operand
-                                if _is_number(v) or
-                                _looks_numeric(str(v))]
-                        if nums:
-                            c = c | extracted.try_cast("double").isin(nums)
-                        cond = cond & c
-                    elif op == "$renderPat" and isinstance(operand, list) \
-                            and len(operand) == 2:
-                        # INTERNAL (rewrite.py STRSTARTS/STRENDS/CONTAINS
-                        # pushdown): pattern predicate over the doc-tier
-                        # LITERAL RENDER of the field.  The engine
-                        # compares the ESCAPED lexical (sparql.py
-                        # lexical_value extracts without unescaping), so
-                        # the mirror nt-escapes like the render does.
-                        # Numeric values render their CANONICAL lexical
-                        # ('1e3' → '1000.0'), which the raw text misses —
-                        # the cast arm keeps those (superset, sound).
-                        from .native import (encode_literal_col,
-                                             nt_escape_col, strip_ws_col)
-                        kind, pat = operand
-
-                        def _pat(c, kind=kind, pat=str(pat)):
-                            if kind == "strstarts":
-                                return c.startswith(pat)
-                            if kind == "strends":
-                                return c.endswith(pat)
-                            return c.contains(pat)
-
-                        rendered = nt_escape_col(
-                            encode_literal_col(strip_ws_col(extracted)))
-                        num = extracted.try_cast("double")
-                        cond = cond & (_pat(rendered) |
-                                       (num.isNotNull() &
-                                        _pat(num.cast("string"))))
-                    elif op == "$numCmp" and isinstance(operand, dict):
-                        # INTERNAL (rewrite.py comparison FILTERs):
-                        # numeric value predicates; non-numeric lexicals
-                        # try_cast to NULL and never match (the engine's
-                        # numeric_value semantics)
-                        num = extracted.try_cast("double")
-                        for o, v in operand.items():
-                            c = {"=": num == float(v), "<": num < float(v),
-                                 ">": num > float(v), "<=": num <= float(v),
-                                 ">=": num >= float(v)}.get(o)
-                            if c is None:
-                                return None
-                            cond = cond & c
-                    else:
-                        return None
-            else:
-                if _is_number(val):
-                    return None
-                cond = cond & (extracted == F.lit(_json_scalar(val)))
-    return cond
-
-
-def mongo_filter_native_ok(filter_text: str) -> bool:
-    """Session-free predicate: would mongo_filter_to_column succeed?
-    (Column construction needs an active SparkContext; routing decisions
-    — native_json.compilable — must not.)  Kept in lockstep with
-    _spec_to_column; test_mongo_filter_breadth asserts parity."""
+def mongo_filter_sql(filter_text: str, content_col: str) -> Optional[str]:
+    """Compile a find() filter to a SQL predicate over the JSON text
+    column, or None if the filter uses operators or operands only the
+    Python fallback evaluates.  Session-free, so routing decisions
+    (native_json.compilable) use it directly.  Compiled: {},
+    {field: value}, {field: {$exists/$eq/$ne/$gt/$gte/$lt/$lte/$in: v}},
+    {$and/$or: [...]}, dotted paths and the internal pushdown operators
+    $lexIn, $renderIn, $renderPat, $numCmp — which covers every filter
+    in the reference's examples."""
     try:
         spec = json.loads(normalize_filter_text(filter_text))
     except ValueError:
-        return False
-    return _spec_native_ok(spec)
+        return None
+    return _spec_sql(spec, sql_ident(content_col)) \
+        if isinstance(spec, dict) else None
 
 
-def _spec_native_ok(spec: dict) -> bool:
+def mongo_filter_to_column(filter_text: str, content_col: str):
+    """mongo_filter_sql as a Column predicate (None = Python fallback).
+    Refuses a session whose parser would read the SQL text's string
+    literals differently (check_sql_text_conf)."""
+    sql = mongo_filter_sql(filter_text, content_col)
+    if sql is None:
+        return None
+    check_sql_text_conf(SparkSession.active())
+    return F.expr(sql)
+
+
+def _spec_sql(spec: dict, content: str) -> Optional[str]:
+    conds: list[str] = []
     for key, val in spec.items():
         if key in ("$and", "$or"):
-            if not isinstance(val, list) or not all(
-                    isinstance(s, dict) and _spec_native_ok(s) for s in val):
-                return False
-            if key == "$or" and not val:
-                return False
-        elif key.startswith("$"):
-            return False
-        elif isinstance(val, dict):
+            if not isinstance(val, list) or (key == "$or" and not val):
+                return None
+            parts = [_spec_sql(sub, content) if isinstance(sub, dict)
+                     else None for sub in val]
+            if any(p is None for p in parts):
+                return None
+            if key == "$and":
+                conds.extend(parts)
+            else:
+                conds.append(or_sql(parts))
+        elif key.startswith("$") or _is_number(val):
+            return None         # numeric equality: see $eq below
+        else:
+            x = f"get_json_object({content}, {sql_lit('$.' + key)})"
+            if not isinstance(val, dict):
+                conds.append(f"({x} = {sql_lit(_json_scalar(val))})")
+                continue
+            num = f"try_cast({x} AS DOUBLE)"
+            # the internal operators mirror the engine's numeric_value
+            # of the RENDERED literal, which is trimmed first: an
+            # NBSP-padded "7" renders "7" (Spark's cast trims ASCII
+            # whitespace only)
+            rnum = f"try_cast({strip_ws_sql(x)} AS DOUBLE)"
             for op, operand in val.items():
                 if op == "$exists":
-                    continue
-                if op in ("$eq", "$ne"):
+                    conds.append(f"({x} IS NOT NULL)" if operand
+                                 else f"({x} IS NULL)")
+                elif op in ("$eq", "$ne"):
                     if _is_number(operand):
-                        return False
-                elif op in ("$gt", "$gte", "$lt", "$lte"):
-                    if not _is_number(operand):
-                        return False
-                elif op == "$in":
-                    if not isinstance(operand, list) or \
-                            any(_is_number(v) for v in operand):
-                        return False
-                elif op == "$lexIn":
-                    if not isinstance(operand, list):
-                        return False
-                elif op == "$renderIn":
-                    if not isinstance(operand, list):
-                        return False
-                elif op == "$renderPat":
-                    if not (isinstance(operand, list) and len(operand) == 2
-                            and operand[0] in ("strstarts", "strends",
-                                               "contains")):
-                        return False
-                elif op == "$numCmp":
-                    if not isinstance(operand, dict) or not all(
-                            o in ("=", "<", ">", "<=", ">=")
-                            and _is_number(v) for o, v in operand.items()):
-                        return False
+                        # numeric equality is cross-representation in
+                        # Mongo/Python ({a:3} matches 3.0) but the
+                        # extracted lexical form is "3" vs "3.0" — only
+                        # the Python filter gets this right
+                        return None
+                    lit = sql_lit(_json_scalar(operand))
+                    # $ne keeps documents where the field is MISSING
+                    # (extracted NULL): a bare != would evaluate to NULL
+                    # there and wrongly drop them
+                    conds.append(f"({x} = {lit})" if op == "$eq"
+                                 else f"(({x} IS NULL) OR ({x} != {lit}))")
+                elif op in _CMP_SQL and _is_number(operand):
+                    rhs = double_sql(operand) if isinstance(operand, float) \
+                        else str(operand)
+                    conds.append(f"({num} {_CMP_SQL[op]} {rhs})")
+                elif op == "$in" and isinstance(operand, list):
+                    if any(_is_number(v) for v in operand):
+                        return None
+                    conds.append(_in_sql(x, [sql_lit(_json_scalar(v))
+                                             for v in operand]))
+                elif op == "$lexIn" and isinstance(operand, list):
+                    # INTERNAL pushdown operator (rewrite.py): matches
+                    # when the field's JSON lexical form is in the list
+                    # — deliberately type-blind (number 7 and string "7"
+                    # both have lexical '7'), which makes it natively
+                    # compilable where Mongo's type-sensitive numeric
+                    # equality is not
+                    conds.append(_in_sql(x, [sql_lit(str(v))
+                                             for v in operand]))
+                elif op == "$renderIn" and isinstance(operand, list):
+                    # INTERNAL (rewrite.py object-literal pushdown): the
+                    # doc-tier LITERAL RENDER of the field (trim +
+                    # encode_literal of the lexical) is in the list, OR —
+                    # for numeric members — the value compares
+                    # numerically equal (a raw "7.50" renders "7.5"; the
+                    # numeric arm keeps it)
+                    rendered = encode_literal_sql(strip_ws_sql(x))
+                    c = _in_sql(rendered, [sql_lit(str(v)) for v in operand])
+                    nums = [double_sql(float(v)) for v in operand
+                            if _is_number(v) or _looks_numeric(str(v))]
+                    if nums:
+                        c = f"({c} OR {_in_sql(rnum, nums)})"
+                    conds.append(c)
+                elif op == "$renderPat" and isinstance(operand, list) \
+                        and len(operand) == 2 and operand[0] in _PAT_SQL:
+                    # INTERNAL (rewrite.py STRSTARTS/STRENDS/CONTAINS
+                    # pushdown): pattern predicate over the doc-tier
+                    # LITERAL RENDER of the field.  The engine compares
+                    # the ESCAPED lexical (sparql.py lexical_value
+                    # extracts without unescaping), so the mirror
+                    # nt-escapes like the render does.  Numeric values
+                    # render their CANONICAL lexical ('1e3' → '1000.0'),
+                    # which the raw text misses — the cast arm keeps
+                    # those (superset, sound).
+                    fn, pat = _PAT_SQL[operand[0]], sql_lit(str(operand[1]))
+                    rendered = nt_escape_sql(
+                        encode_literal_sql(strip_ws_sql(x)))
+                    conds.append(
+                        f"({fn}({rendered}, {pat}) OR (({rnum} IS NOT NULL)"
+                        f" AND {fn}(CAST({rnum} AS STRING), {pat})))")
+                elif op == "$numCmp" and isinstance(operand, dict):
+                    # INTERNAL (rewrite.py comparison FILTERs): numeric
+                    # value predicates; non-numeric lexicals try_cast to
+                    # NULL and never match (the engine's numeric_value
+                    # semantics)
+                    for o, v in operand.items():
+                        if o not in CMP_OPS or not _is_number(v):
+                            return None
+                        conds.append(f"({rnum} {o} {double_sql(float(v))})")
                 else:
-                    return False
-        elif _is_number(val):
-            return False
-    return True
+                    return None
+    return and_sql(conds)
+
+
+_CMP_SQL = {"$gt": ">", "$gte": ">=", "$lt": "<", "$lte": "<="}
+_PAT_SQL = {"strstarts": "startswith", "strends": "endswith",
+            "contains": "contains"}
+
+
+def _in_sql(x: str, items: list) -> str:
+    # Spark SQL has no empty IN list; an empty Mongo $in matches nothing
+    return f"({x} IN ({', '.join(items)}))" if items else "false"
 
 
 def _is_number(v) -> bool:

@@ -311,3 +311,79 @@ def test_catalog_table_answers_equal_full_plan(spark, fallback_env, qi):
     want = sorted(tuple(r) for r in
                   _eng_answer(spark, engine, parse_sparql(q)).collect())
     assert got == want and got
+
+
+BOOL_MAPPING = """
+@prefix rr: <http://www.w3.org/ns/r2rml#> .
+@prefix xrr: <http://i3s.unice.fr/xr2rml#> .
+@prefix ex: <http://example.com/> .
+<#B> rr:logicalTable [ rr:tableName "b"; xrr:uniqueRef "id" ];
+  rr:subjectMap [ rr:template "http://example.org/t/{id}" ];
+  rr:predicateObjectMap [ rr:predicate ex:f; rr:objectMap [ rr:column "b" ] ].
+"""
+
+
+def test_null_boolean_column_is_no_term(spark):
+    """A NULL boolean renders no term (R2RML §11), like every other NULL
+    value: materialization, a SELECT and a COUNT all agree with the
+    local engine (2 triples, n = 2), on the native tier and through
+    aggregate pushdown."""
+    from morph_xr2rml_spark.aggpush import try_aggregate_pushdown_auto
+    from morph_xr2rml_spark.api import answer_auto
+    from morph_xr2rml_spark.sparql import parse_sparql
+    mapping = MappingDocument.from_text(BOOL_MAPPING)
+    rows = [(1, True), (2, None), (3, False)]
+    tables = {"b": spark.createDataFrame(rows, "id int, b boolean")}
+    want = materialize_local(mapping, {"b": [{"id": i, "b": b}
+                                             for i, b in rows]})
+    assert len(want) == 2
+    got = {tuple(r) for r in
+           materialize_auto(spark, mapping, tables=tables).collect()}
+    assert got == want
+    P = "PREFIX ex: <http://example.com/>\n"
+    sel = answer_auto(spark, mapping, P + "SELECT ?s ?f WHERE { ?s ex:f ?f }",
+                      tables=tables)
+    assert sorted(tuple(r) for r in sel.collect()) == \
+        sorted((s, o) for s, _p, o, _g in want)
+    count = P + "SELECT (COUNT(?f) AS ?n) WHERE { ?s ex:f ?f }"
+    assert try_aggregate_pushdown_auto(spark, mapping, parse_sparql(count),
+                                       tables=tables) is not None
+    n = answer_auto(spark, mapping, count, tables=tables).collect()
+    assert [str(r.n) for r in n] == ["2"]
+
+
+def test_numeric_filter_pushdown_keeps_padded_numbers(spark):
+    """A comparison FILTER pushed to a string column mirrors numeric
+    value of the RENDERED literal, which is trimmed: an NBSP-padded "7"
+    is 7 to the evaluator, so the pushed scan filter must keep its row
+    (native tier and json-native tier alike)."""
+    from morph_xr2rml_spark.api import answer_auto
+    P = "PREFIX ex: <http://example.com/>\n"
+    q = P + "SELECT ?s WHERE { ?s ex:v ?v FILTER(?v <= 7) }"
+    rows = [(1, "\xa07\xa0"), (2, "8"), (3, "x"), (4, " 6 ")]
+    tab = MappingDocument.from_text("""
+@prefix rr: <http://www.w3.org/ns/r2rml#> .
+@prefix ex: <http://example.com/> .
+<#V> rr:logicalTable [ rr:tableName "v" ];
+  rr:subjectMap [ rr:template "http://example.org/t/{id}" ];
+  rr:predicateObjectMap [ rr:predicate ex:v; rr:objectMap [ rr:column "v" ] ].
+""")
+    tables = {"v": spark.createDataFrame(rows, "id int, v string")}
+    got = sorted(r.s for r in answer_auto(spark, tab, q,
+                                          tables=tables).collect())
+    assert got == ["<http://example.org/t/1>", "<http://example.org/t/4>"]
+    doc = MappingDocument.from_text("""
+@prefix rr: <http://www.w3.org/ns/r2rml#> .
+@prefix xrr: <http://i3s.unice.fr/xr2rml#> .
+@prefix ex: <http://example.com/> .
+<#V> xrr:logicalSource [ xrr:query "db.v.find({})" ];
+  rr:subjectMap [ rr:template "http://example.org/t/{$.id}" ];
+  rr:predicateObjectMap [ rr:predicate ex:v;
+    rr:objectMap [ xrr:reference "$.v" ] ].
+""")
+    cat = SourceCatalog().register_collection("v", spark.createDataFrame(
+        [(json.dumps({"id": i, "v": v}),) for i, v in rows],
+        "content string"))
+    got = sorted(r.s for r in answer_auto(spark, doc, q,
+                                          catalog=cat).collect())
+    assert got == ["<http://example.org/t/1>", "<http://example.org/t/4>"]

@@ -4,15 +4,21 @@
 The reference ships the filter verbatim to MongoDB
 (MongoDBQuery.scala:67-90), so all of these work there; here the Python
 fallback evaluates them with Mongo semantics and $or additionally
-compiles to a native Column predicate.
+compiles to a SQL predicate.  The internal pushdown operators ($lexIn,
+$renderIn, $renderPat, $numCmp) compile to SQL too; their row selection
+is checked against the Python evaluator on adversarial documents.
 """
 
+import json
+
 import pytest
+from pyspark.sql import functions as F
 
 from morph_xr2rml_spark.mongo_filter import (compile_filter,
                                              normalize_filter_text,
                                              parse_filter)
-from morph_xr2rml_spark.sources import mongo_filter_to_column
+from morph_xr2rml_spark.native_json import compilable
+from morph_xr2rml_spark.sources import mongo_filter_sql, mongo_filter_to_column
 
 
 def _f(text):
@@ -92,7 +98,7 @@ def test_native_or_falls_back_when_branch_unsupported():
 
 
 def test_python_native_parity_on_or(spark):
-    """The same $or filter through the native Column and the Python
+    """The same $or filter through the SQL predicate and the Python
     fallback must select the same documents."""
     import json
     docs = [{"a": "x"}, {"b": "y"}, {"a": "z", "b": "y"}, {}, {"a": "y"}]
@@ -106,11 +112,9 @@ def test_python_native_parity_on_or(spark):
     assert got == want
 
 
-def test_native_ok_parity_with_column_compiler(spark):
-    """mongo_filter_native_ok (session-free routing predicate) must agree
-    with mongo_filter_to_column on every filter shape."""
-    from morph_xr2rml_spark.sources import (mongo_filter_native_ok,
-                                            mongo_filter_to_column)
+def test_native_ok_parity_with_column_compiler():
+    """Routing: a find() TM is json-native compilable exactly when its
+    filter compiles to SQL (one compiler decides both)."""
     filters = [
         "{}", "{a: 'x'}", "{a: 1}", "{a: {$exists: true}}",
         "{a: {$eq: 'x'}}", "{a: {$eq: 3}}", "{a: {$ne: 'x'}}",
@@ -123,35 +127,104 @@ def test_native_ok_parity_with_column_compiler(spark):
         "{a: {$regex: 'x'}}", "{a: /x/i}",
         "{a: {$elemMatch: {b: 1}}}", "{a: {$nin: ['x']}}",
         "{'a.b.c': 'deep'}",
+        "{a: {$lexIn: ['7', 7]}}", "{a: {$renderIn: ['7.5']}}",
+        "{a: {$renderPat: ['strstarts', 'x']}}",
+        "{a: {$renderPat: ['prefix', 'x']}}",
+        "{a: {$numCmp: {'>': 5}}}", "{a: {$numCmp: {'!=': 5}}}",
+        "{a: {$numCmp: {'>': '5'}}}",
     ]
+    expect_sql = {"{}", "{a: 'x'}", "{a: {$exists: true}}",
+                  "{a: {$eq: 'x'}}", "{a: {$ne: 'x'}}", "{a: {$gt: 5}}",
+                  "{a: {$in: ['x', 'y']}}",
+                  "{$and: [{a: 'x'}, {b: {$lt: 2}}]}",
+                  "{$or: [{a: 'x'}, {b: 'y'}]}", "{'a.b.c': 'deep'}",
+                  "{a: {$lexIn: ['7', 7]}}", "{a: {$renderIn: ['7.5']}}",
+                  "{a: {$renderPat: ['strstarts', 'x']}}",
+                  "{a: {$numCmp: {'>': 5}}}"}
     for text in filters:
-        ok = mongo_filter_native_ok(text)
-        col = mongo_filter_to_column(text, "content")
-        assert ok == (col is not None), \
-            f"{text}: native_ok={ok} but column={'None' if col is None else 'Column'}"
+        sql = mongo_filter_sql(text, "content")
+        assert (sql is not None) == (text in expect_sql), text
+        assert compilable(_find_tm(text)) == (sql is not None), text
+
+
+# adversarial values for the internal operators: padding (ASCII and
+# NBSP), underscores encode_literal collapses, quotes and backslashes
+# the N-Triples escape doubles, numeric spellings whose canonical
+# lexical differs from the raw text, a boolean, NULL and a missing field
+_ADVERSARIAL = [
+    {"a": "  7  "}, {"a": "\xa07\xa0"}, {"a": "\t7.5\n"}, {"a": "7"},
+    {"a": 7}, {"a": "7.50"}, {"a": 7.5}, {"a": 1e3}, {"a": "1e3"},
+    {"a": -2}, {"a": "a__b"}, {"a": "a_b"}, {"a": " a__b "},
+    {"a": "q\"uo'te"}, {"a": "back\\slash"}, {"a": "back/slash"},
+    {"a": True}, {"a": "true"}, {"a": None}, {}, {"b": "7"},
+    {"a": "Cu#1"}, {"a": " Cu#1"},
+]
+
+_INTERNAL_FILTERS = [
+    {"a": {"$lexIn": ["7", "7.5", "1000.0", "a__b", "true", "-2",
+                      "q\"uo'te", "back\\slash", "  7  "]}},
+    {"a": {"$lexIn": [7, True]}},
+    {"a": {"$renderIn": ["7", "7.5", "a_b", "true", "back/slash",
+                         "q\"uo'te", "1000", "Cu#1"]}},
+    {"a": {"$renderIn": [7.5, -2]}},
+    {"a": {"$renderPat": ["strstarts", "7"]}},
+    {"a": {"$renderPat": ["strstarts", "Cu"]}},
+    {"a": {"$renderPat": ["strends", "0"]}},
+    {"a": {"$renderPat": ["strends", "b"]}},
+    {"a": {"$renderPat": ["contains", "_b"]}},
+    {"a": {"$renderPat": ["contains", "q\\\""]}},
+    {"a": {"$renderPat": ["contains", "/"]}},
+    {"a": {"$numCmp": {">": 7}}},
+    {"a": {"$numCmp": {"=": 7.5}}},
+    {"a": {"$numCmp": {">=": 1000, "<": 1001}}},
+    {"a": {"$numCmp": {"<": 0}}},
+    {"a": {"$numCmp": {"<=": 7}}},
+]
+
+
+@pytest.mark.parametrize("spec", _INTERNAL_FILTERS,
+                         ids=[json.dumps(f) for f in _INTERNAL_FILTERS])
+def test_internal_operators_match_python_evaluator(spark, spec):
+    """The SQL predicate of each internal pushdown operator selects the
+    same documents as mongo_filter.py's evaluator."""
+    text = json.dumps(spec)
+    sql = mongo_filter_sql(text, "content")
+    assert sql is not None, text
+    df = spark.createDataFrame(
+        [(i, json.dumps(d)) for i, d in enumerate(_ADVERSARIAL)],
+        "i int, content string")
+    got = sorted(r.i for r in df.where(F.expr(sql)).collect())
+    pyf = _f(text)
+    want = [i for i, d in enumerate(_ADVERSARIAL) if pyf(d)]
+    assert got == want, [(i, _ADVERSARIAL[i])
+                         for i in sorted(set(got) ^ set(want))]
+
+
+_FIND_TM = """
+@prefix rr: <http://www.w3.org/ns/r2rml#> .
+@prefix xrr: <http://i3s.unice.fr/xr2rml#> .
+@prefix rml: <http://semweb.mmlab.be/ns/rml#> .
+@prefix ex: <http://example.com/> .
+<#TM> a rr:TriplesMap;
+  xrr:logicalSource [ xrr:query "db.c.find(FILTER)";
+                      rml:iterator "$.xs.*" ];
+  rr:subjectMap [ rr:template "http://e/{$.t}" ];
+  rr:predicateObjectMap [ rr:predicate ex:y;
+                          rr:objectMap [ xrr:reference "$.y" ] ].
+"""
+
+
+def _find_tm(flt):
+    from morph_xr2rml_spark.model import MappingDocument
+    m = MappingDocument.from_text(_FIND_TM.replace("FILTER", flt))
+    return list(m.triples_maps.values())[0]
 
 
 def test_json_native_routing_respects_filter(spark):
     """A TM whose find() needs the Python fallback must leave the
     json-native tier (it would scan unfiltered there) — and an empty /
     native filter must stay, session or not."""
-    from morph_xr2rml_spark.model import MappingDocument
-    from morph_xr2rml_spark.native_json import compilable
-    base = """
-    @prefix rr: <http://www.w3.org/ns/r2rml#> .
-    @prefix xrr: <http://i3s.unice.fr/xr2rml#> .
-    @prefix rml: <http://semweb.mmlab.be/ns/rml#> .
-    @prefix ex: <http://example.com/> .
-    <#TM> a rr:TriplesMap;
-      xrr:logicalSource [ xrr:query "db.c.find(FILTER)";
-                          rml:iterator "$.xs.*" ];
-      rr:subjectMap [ rr:template "http://e/{$.t}" ];
-      rr:predicateObjectMap [ rr:predicate ex:y;
-                              rr:objectMap [ xrr:reference "$.y" ] ].
-    """
-    def tm_for(flt):
-        m = MappingDocument.from_text(base.replace("FILTER", flt))
-        return list(m.triples_maps.values())[0]
+    tm_for = _find_tm
     assert compilable(tm_for("{}"))
     assert compilable(tm_for("{a: 'x'}"))
     assert not compilable(tm_for("{a: {$regex: 'x'}}"))
@@ -168,5 +241,4 @@ def test_size_operator():
     assert not f({"actors": ["A", "B"]})               # no match
     assert not f({"actors": "T. Leung"}) and not f({})
     # $size stays on the Python path
-    from morph_xr2rml_spark.sources import mongo_filter_native_ok
-    assert not mongo_filter_native_ok("{a: {$size: 2}}")
+    assert mongo_filter_sql("{a: {$size: 2}}", "content") is None

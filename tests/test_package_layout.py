@@ -2,8 +2,10 @@
 training-data operator suite nor the removed legacy bench harness,
 ``__spark_entry__`` pairs every query with an oracle, SPARQL answering
 has one entry point, one router picks every triples map's tier, only
-the router's ``api._routed_plan`` builds a whole-mapping plan, and
-aggregate pushdown runs the evaluator's own SELECT tail."""
+the router's ``api._routed_plan`` builds a whole-mapping plan,
+aggregate pushdown runs the evaluator's own SELECT tail, and the
+Catalyst compilers and the find() compiler build expressions as SQL
+text only, with one find()-filter walker."""
 
 import ast
 import pathlib
@@ -27,6 +29,10 @@ DELETED_OPTIONS = {"term_style", "broadcast_parents", "tm_skip",
 NO_KWARGS = {"materialize_auto", "answer_auto", "_routed_plan"}
 # evaluator code aggpush calls instead of keeping its own copy
 EVALUATOR_COPIES = {"_values_lex", "_collect_aggrefs", "_resolve"}
+# Column-DSL builders of render rules that exist once, as SQL text
+SQL_TEXT_ONLY = ("native.py", "native_json.py", "sources.py")
+COLUMN_RENDER_DSL = {"replace", "btrim", "regexp_replace", "concat",
+                     "get_json_object", "when"}
 
 
 def _sources():
@@ -208,4 +214,27 @@ def test_aggpush_runs_the_evaluators_solution_tail():
         if name == "term_order_keys" \
                 and chain[:2] != ("SparqlEngine", "_slice_solutions"):
             bad.append(f"sparql.py:{line}: {'.'.join(chain) or '<module>'}")
+    assert not bad, bad
+
+
+def test_render_rules_are_sql_text_only():
+    pkg = ROOT / "morph_xr2rml_spark"
+    bad = []
+    for name in SQL_TEXT_ONLY:
+        path = pkg / name
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, ast.Call) \
+                    and isinstance(node.func, ast.Attribute) \
+                    and isinstance(node.func.value, ast.Name) \
+                    and node.func.value.id == "F" \
+                    and node.func.attr in COLUMN_RENDER_DSL:
+                bad.append(f"{name}:{node.lineno}: F.{node.func.attr}()")
+    # one find()-filter walker: the only function that handles "$and"
+    sources = pkg / "sources.py"
+    walkers = [fn.name for fn in ast.walk(ast.parse(sources.read_text()))
+               if isinstance(fn, ast.FunctionDef)
+               and any(isinstance(c, ast.Constant) and c.value == "$and"
+                       for c in ast.walk(fn))]
+    if len(walkers) != 1:
+        bad.append(f"sources.py find() walkers: {walkers}")
     assert not bad, bad

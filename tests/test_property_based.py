@@ -135,6 +135,29 @@ def test_invert_template_never_wrong(values, sep, prefix):
         assert inv is AMBIGUOUS
 
 
+_LIT_PART = st.text(alphabet=["a", "b", "_", " ", "\xa0", "\t", "\n", "\r",
+                                "\\", '"'], max_size=5)
+
+
+@given(st.lists(_LIT_PART, min_size=1, max_size=4), st.data(),
+       st.booleans(), st.booleans())
+@settings(max_examples=300, deadline=None)
+def test_template_literal_prune_never_drops_a_render(fixed, data, trim,
+                                                     quotes):
+    """Whatever the group values and render settings, the lexical a
+    template literal renders (encode_literal of the expanded value,
+    trimmed when literal_trim is on) is never ruled out by the fixed-end
+    check rewrite.py prunes template-literal TMs with."""
+    from morph_xr2rml_spark.functions.encoding import encode_literal
+    from morph_xr2rml_spark.rewrite import template_literal_may_render
+    values = [data.draw(_LIT_PART) for _ in fixed[1:]]
+    template = fixed[0] + "".join("{g%d}" % i + f
+                                  for i, f in enumerate(fixed[1:]))
+    expanded = fixed[0] + "".join(v + f for v, f in zip(values, fixed[1:]))
+    lex = encode_literal(expanded.strip() if trim else expanded, quotes)
+    assert template_literal_may_render(template, lex)
+
+
 @given(st.one_of(st.integers(-10**6, 10**6),
                  st.floats(allow_nan=False, allow_infinity=False,
                            width=32),

@@ -370,7 +370,7 @@ def _products_catalog(spark):
 def test_doc_literal_composes_renderin(spark):
     from morph_xr2rml_spark.rewrite import (constrained_plan,
                                             derive_tm_constraints)
-    from morph_xr2rml_spark.sources import mongo_filter_native_ok
+    from morph_xr2rml_spark.sources import mongo_filter_sql
     mapping = MappingDocument.from_text(DOC_MAPPING)
     cons = derive_tm_constraints(mapping,
                                  PREFIX + 'SELECT ?s WHERE { ?s ex:name "n3" }')
@@ -379,7 +379,8 @@ def test_doc_literal_composes_renderin(spark):
     find = m2.triples_maps["#P"].logical_source.value
     assert '"$renderIn": ["n3"]' in find
     # the composed filter stays NATIVELY compilable (json tier keeps it)
-    assert mongo_filter_native_ok(find.split("find(", 1)[1][:-1])
+    assert mongo_filter_sql(find.split("find(", 1)[1][:-1],
+                            "content") is not None
 
 
 def test_doc_literal_answer_and_edges(spark):
@@ -545,3 +546,43 @@ def test_eq_plus_strstarts_conjunction_not_unsat(spark):
                 && STRSTARTS(STR(?n), "Customer")) }""", tables=tables)
     assert [r.c for r in df.collect()] == \
         ["<http://example.org/customer/1>"]
+
+
+TEMPLATE_LIT_MAPPING = """
+@prefix rr: <http://www.w3.org/ns/r2rml#> .
+@prefix ex: <http://example.com/> .
+<#N> rr:logicalTable [ rr:tableName "t" ];
+  rr:subjectMap [ rr:template "http://example.org/n/{id}" ];
+  rr:predicateObjectMap [ rr:predicate ex:label;
+    rr:objectMap [ rr:template "nation {v} "; rr:termType rr:Literal ] ].
+<#R> rr:logicalTable [ rr:tableName "t" ];
+  rr:subjectMap [ rr:template "http://example.org/r/{id}" ];
+  rr:predicateObjectMap [ rr:predicate ex:label;
+    rr:objectMap [ rr:template "region__{v}"; rr:termType rr:Literal ] ].
+"""
+
+
+@pytest.mark.parametrize("lex,want", [
+    ("nation a_b", {"#N": None, "#R": []}),
+    ("region_x", {"#N": [], "#R": None}),
+    ("nation", {"#N": None, "#R": []}),
+    ("other", {"#N": [], "#R": []}),
+])
+def test_template_literal_fixed_ends_prune_tms(spark, lex, want):
+    """A template literal renders encode_literal of the trimmed expanded
+    value, so no row constraint inverts it; its fixed head and tail
+    still rule out a TM that cannot render the lexical.  Answers equal
+    the local engine's on the same rows."""
+    from morph_xr2rml_spark.local_engine import materialize_local
+    from morph_xr2rml_spark.rewrite import derive_tm_constraints
+    mapping = MappingDocument.from_text(TEMPLATE_LIT_MAPPING)
+    rows = [(1, "a__b"), (2, "x"), (3, " "), (4, None)]
+    tables = {"t": spark.createDataFrame(rows, "id int, v string")}
+    q = PREFIX + f'SELECT ?s WHERE {{ ?s ex:label "{lex}" }}'
+    assert derive_tm_constraints(mapping, q, tables) == want
+    triples = materialize_local(mapping, {"t": [{"id": i, "v": v}
+                                                for i, v in rows]})
+    exp = sorted(s for s, _p, o, _g in triples if o == f'"{lex}"')
+    got = sorted(r.s for r in answer_auto(spark, mapping, q,
+                                          tables=tables).collect())
+    assert got == exp and (len(got) > 0) == (lex != "other")

@@ -278,10 +278,11 @@ def test_docpat_composes_renderpat_and_stays_native(spark):
     m2, _ = constrained_plan(mapping, constraints)
     find = m2.triples_maps["#ODoc"].logical_source.value
     assert '"$renderPat": ["strstarts", "1-URG"]' in find
-    from morph_xr2rml_spark.sources import mongo_filter_native_ok
+    from morph_xr2rml_spark.sources import mongo_filter_sql
     from morph_xr2rml_spark.model import parse_mongo_query
     _coll, ftext = parse_mongo_query(find)
-    assert mongo_filter_native_ok(ftext)    # stays json-native compilable
+    # stays json-native compilable
+    assert mongo_filter_sql(ftext, "content") is not None
 
 
 DOC_PAT_DIFFERENTIAL = [
@@ -342,8 +343,8 @@ def test_doc_pat_rewritten_equals_full_scan(spark, doc_env, qi):
 
 
 def test_renderpat_python_fallback_parity():
-    """The Python find() fallback and the native Column compiler accept
-    the same documents for $renderPat (lockstep invariant)."""
+    """The Python find() fallback and the SQL find() compiler accept
+    the same documents for $renderPat."""
     from morph_xr2rml_spark.mongo_filter import compile_filter
     f = compile_filter({"pr": {"$renderPat": ["strstarts", "1-URG"]}})
     assert f({"pr": "1-URGENT"})

@@ -18,7 +18,7 @@ from morph_xr2rml_spark.model import MappingDocument, parse_mongo_query
 from morph_xr2rml_spark.rewrite import (AMBIGUOUS, constrained_plan,
                                         derive_tm_constraints,
                                         invert_template)
-from morph_xr2rml_spark.sources import SourceCatalog, mongo_filter_native_ok
+from morph_xr2rml_spark.sources import SourceCatalog, mongo_filter_sql
 
 SF_DIR = "/root/testdata/sf0.001"
 PREFIX = "PREFIX ex: <http://example.com/> "
@@ -175,7 +175,7 @@ def test_doc_pushdown_composes_native_filter():
     # only the doc-level pushDown ref ($.ok) is pushable; $.ln is
     # iterator-relative and dropped; the filter stays natively compilable
     assert "$lexIn" in ftext and "ok" in ftext and "ln" not in ftext
-    assert mongo_filter_native_ok(ftext)
+    assert mongo_filter_sql(ftext, "content") is not None
 
 
 def test_doc_point_query_parity_and_native_plan(spark):

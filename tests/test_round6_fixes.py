@@ -51,9 +51,9 @@ def test_native_num_cmp_ignores_unknown_op(spark):
     mapping = MappingDocument.from_text(TPCH_KG_MAPPING)
     tables = tpch_tables(spark, SF_DIR)
     c = NativeCompiler(spark, mapping, tables)
-    col = c._constraint_col(tables["orders"],
-                            [{"o_totalprice": ("cmp", (("!=", "1.0"),))}])
-    assert tables["orders"].where(col).count() == tables["orders"].count()
+    cond = c._constraint_sql(tables["orders"],
+                             [{"o_totalprice": ("cmp", (("!=", "1.0"),))}])
+    assert tables["orders"].where(cond).count() == tables["orders"].count()
 
 
 def test_mongo_num_cmp_ignores_unknown_op():
@@ -72,13 +72,12 @@ def test_py_strip_ws_set_is_exact():
     assert set(map(ord, _PY_STRIP_WS)) == expected
 
 
-def test_strip_ws_col_matches_python_strip(spark):
-    from morph_xr2rml_spark.native import strip_ws_col
+def test_strip_ws_sql_matches_python_strip(spark):
+    from morph_xr2rml_spark.native import strip_ws_sql
     vals = ["  x  ", "\tx\n", " x ", "\x1c x \x1f", "x",
             "　x ", "", "   ", "a b", "\ta\tb\t"]
     df = spark.createDataFrame([(v,) for v in vals], "v string")
-    got = [r[0] for r in
-           df.select(strip_ws_col(F.col("v"))).collect()]
+    got = [r[0] for r in df.selectExpr(strip_ws_sql("v")).collect()]
     assert got == [v.strip() for v in vals]
 
 

@@ -62,7 +62,7 @@ def test_native_gt_in_filters(spark):
     <#U> xrr:logicalSource [ xrr:query "db.d.find({tag: {$in: ['a','b']}})" ];
       rr:subjectMap [ rr:template "http://y/{$.k}"; rr:class ex:U ].
     """)
-    # both filters compile to native Column predicates (no Python fallback)
+    # both filters compile to SQL predicates (no Python fallback)
     assert mongo_filter_to_column("{k: {$gt: 5}}", "content") is not None
     assert mongo_filter_to_column("{tag: {$in: ['a','b']}}", "content") is not None
 

@@ -1,21 +1,29 @@
-"""The native compiler renders term expressions as SQL text (one F.expr
-parse instead of one py4j round trip per operator — OPTIMIZATION_r07).
-These tests pin the text builders to the Column-DSL twins byte-for-byte
-over adversarial values, so the two can never drift apart.
+"""The Catalyst tiers build every expression as SQL text (one F.expr
+parse instead of one py4j round trip per operator — OPTIMIZATION_r07),
+and each render rule exists once, in native.py.  These tests pin the
+text builders to the package's real references over adversarial values:
+each helper against functions/encoding.py, str.strip() and the Python
+tier's N-Triples escape; whole term expressions of both Catalyst
+compilers against local_engine.materialize_local on the same rows.
 """
 
 import sys
+from decimal import Decimal
 
 import pytest
 from pyspark.sql import functions as F
 
 sys.path.insert(0, "/root/repo")
 
+from conftest import tier_pool  # noqa: E402
+from morph_xr2rml_spark.functions.encoding import (  # noqa: E402
+    encode_literal, encode_reserved_chars, encode_url)
+from morph_xr2rml_spark.local_engine import materialize_local  # noqa: E402
+from morph_xr2rml_spark.model import MappingDocument  # noqa: E402
 from morph_xr2rml_spark.native import (  # noqa: E402
-    _PY_STRIP_WS, encode_literal_col, encode_literal_sql,
-    encode_reserved_col, encode_reserved_sql, encode_url_col,
-    encode_url_sql, nt_escape_col, nt_escape_sql, sql_ident, sql_lit,
-    strip_ws_col, strip_ws_sql)
+    _PY_STRIP_WS, encode_literal_sql, encode_reserved_sql, encode_url_sql,
+    nt_escape_sql, sql_ident, sql_lit, strip_ws_sql)
+from morph_xr2rml_spark.translate import nt_escape  # noqa: E402
 
 NASTY = [
     "plain",
@@ -39,11 +47,12 @@ def nasty_df(spark):
     return spark.createDataFrame([(s,) for s in NASTY], "s string")
 
 
-def _cmp(df, col_version, sql_text):
-    rows = df.select(col_version.alias("a"),
-                     F.expr(sql_text).alias("b")).collect()
-    for r in rows:
-        assert r.a == r.b, (r.a, r.b)
+def _cmp(df, sql_text, reference):
+    """The SQL expression over column s equals ``reference`` (a Python
+    function, None passed through) on every NASTY value."""
+    for s, got in df.select("s", F.expr(sql_text).alias("b")).collect():
+        want = None if s is None else reference(s)
+        assert got == want, (s, got, want)
 
 
 def test_sql_lit_roundtrip(nasty_df):
@@ -56,110 +65,47 @@ def test_sql_lit_roundtrip(nasty_df):
 
 
 def test_strip_ws_twin(nasty_df):
-    _cmp(nasty_df, strip_ws_col(F.col("s")), strip_ws_sql(sql_ident("s")))
+    _cmp(nasty_df, strip_ws_sql(sql_ident("s")), str.strip)
 
 
 def test_encode_url_twin(nasty_df):
-    _cmp(nasty_df, encode_url_col(F.col("s")), encode_url_sql(sql_ident("s")))
+    _cmp(nasty_df, encode_url_sql(sql_ident("s")), encode_url)
 
 
 def test_encode_reserved_twin(nasty_df):
-    _cmp(nasty_df, encode_reserved_col(F.col("s")),
-         encode_reserved_sql(sql_ident("s")))
+    _cmp(nasty_df, encode_reserved_sql(sql_ident("s")),
+         encode_reserved_chars)
 
 
 def test_encode_literal_twin(nasty_df):
-    _cmp(nasty_df, encode_literal_col(F.col("s")),
-         encode_literal_sql(sql_ident("s")))
-    _cmp(nasty_df, encode_literal_col(F.col("s"), True),
-         encode_literal_sql(sql_ident("s"), True))
+    _cmp(nasty_df, encode_literal_sql(sql_ident("s")), encode_literal)
+    _cmp(nasty_df, encode_literal_sql(sql_ident("s"), True),
+         lambda s: encode_literal(s, True))
 
 
 def test_nt_escape_twin(nasty_df):
-    _cmp(nasty_df, nt_escape_col(F.col("s")), nt_escape_sql(sql_ident("s")))
+    _cmp(nasty_df, nt_escape_sql(sql_ident("s")), nt_escape)
 
 
-def _legacy_term_expr(comp, df, m):
-    """The pre-r7 Column-DSL term_expr, reconstructed verbatim — the
-    differential baseline for the text build."""
-    from pyspark.sql import types as T
-    from morph_xr2rml_spark import namespaces as NS
-    from morph_xr2rml_spark.functions.encoding import encode_url
-    from morph_xr2rml_spark.functions.templates import get_template_groups
-    from morph_xr2rml_spark.model import COLUMN, CONSTANT, TEMPLATE
-    from morph_xr2rml_spark.native import _col_as_string, natural_datatype
-
-    tt = m.infer_term_type()
-    if m.kind == CONSTANT:
-        c = m.constant
-        if c[0] == "iri":
-            return comp._iri_term(F.lit(c[1]))
-        if c[0] == "bnode":
-            return F.lit(f"_:{c[1]}")
-        return comp._literal_term(F.lit(c[1]), m.datatype or c[2],
-                                  m.language or c[3])
-    if m.kind == COLUMN:
-        raw = _col_as_string(df, m.column)
-        if tt == NS.RR_IRI:
-            iri = raw
-            if isinstance(df.schema[m.column].dataType, T.StringType):
-                iri = strip_ws_col(iri)
-                if comp.cfg.encode_unsafe_chars_in_uri:
-                    iri = encode_url_col(iri)
-            return comp._iri_term(iri)
-        dtype = m.datatype or (
-            natural_datatype(df.schema[m.column].dataType)
-            if comp.cfg.infer_datatypes and not m.language else None)
-        val = raw
-        if comp.cfg.literal_trim:
-            val = strip_ws_col(val)
-        if isinstance(df.schema[m.column].dataType, T.StringType):
-            val = encode_literal_col(val, comp.cfg.encode_literal_quotes)
-        return comp._literal_term(val, dtype, m.language)
-    assert m.kind == TEMPLATE
-    groups = get_template_groups(m.template)
-    segments, rest = [], m.template
-    for g in groups:
-        fixed, _, rest = rest.partition("{" + g + "}")
-        segments.append(fixed)
-
-    def fix(seg):
-        if tt == NS.RR_IRI and comp.cfg.encode_unsafe_chars_in_uri:
-            return encode_url(seg)
-        return seg
-
-    parts, col_exprs = [], []
-    for seg, g in zip(segments, groups):
-        if seg:
-            parts.append(F.lit(fix(seg)))
-        raw = _col_as_string(df, g)
-        if tt == NS.RR_IRI and comp.cfg.encode_unsafe_chars_in_db_values \
-                and isinstance(df.schema[g].dataType, T.StringType):
-            raw = encode_reserved_col(raw)
-        col_exprs.append(raw)
-        parts.append(F.coalesce(raw, F.lit("")))
-    if rest:
-        parts.append(F.lit(fix(rest)))
-    expanded = F.concat(*parts)
-    all_null = None
-    for ce in col_exprs:
-        cond = ce.isNull()
-        all_null = cond if all_null is None else (all_null & cond)
-    if all_null is not None:
-        expanded = F.when(all_null, F.lit(None)).otherwise(expanded)
-    if tt == NS.RR_IRI:
-        return comp._iri_term(expanded)
-    return comp._literal_term(expanded, m.datatype, m.language)
+def _java_double(x: float) -> str:
+    """Double.toString, the lexical form a relational source hands over
+    for a DOUBLE: plain decimal in [1e-3, 1e7) (where Python's repr
+    agrees), else one digit, a fraction and an exponent ("1.0E16")."""
+    if x == 0 or 1e-3 <= abs(x) < 1e7:
+        return repr(x)
+    sign, digits, exp = Decimal(repr(x)).as_tuple()
+    d = "".join(map(str, digits)).rstrip("0") or "0"
+    return (("-" if sign else "") + d[0] + "." + (d[1:] or "0")
+            + f"E{exp + len(digits) - 1}")
 
 
-def test_term_expr_matches_legacy_dsl(spark):
-    """Differential: the text-built term_expr must equal the pre-r7
-    Column-DSL build byte-for-byte over adversarial values, for every
-    term map kind (constant / column incl. bool, double, timestamp /
-    template with multiple groups)."""
-    from morph_xr2rml_spark.model import MappingDocument
-    from morph_xr2rml_spark.native import NativeCompiler
-
+def test_term_expr_matches_local_engine(spark):
+    """The native compiler's triples equal the local engine's on the
+    same rows, for every term map kind: constant IRI/literal, column
+    literal (string, double, boolean with a NULL, timestamp), column
+    IRI, multi-group templates with NULL groups.  The local engine reads
+    each row as a document holding the source's lexical forms: a
+    DOUBLE's is Java's Double.toString, a TIMESTAMP's its SQL text."""
     rows = [
         (1, "a b'c\\d", 2.5, True, "2024-05-06 07:08:09"),
         (2, None, None, False, None),
@@ -169,53 +115,50 @@ def test_term_expr_matches_legacy_dsl(spark):
     df = spark.createDataFrame(
         rows, "k int, name string, val double, flag boolean, ts_s string")
     df = df.withColumn("ts", F.col("ts_s").cast("timestamp"))
+    docs = [{"k": k, "name": name,
+             "val": None if val is None else _java_double(val),
+             "flag": flag, "ts": ts}
+            for k, name, val, flag, ts in rows]
     mapping = MappingDocument.from_text("""
 @prefix rr: <http://www.w3.org/ns/r2rml#> .
 @prefix ex: <http://example.com/> .
+@prefix xsd: <http://www.w3.org/2001/XMLSchema#> .
 <#T> rr:logicalTable [ rr:tableName "t" ];
-  rr:subjectMap [ rr:template "http://example.org/x/{k}/{name}" ];
+  rr:subjectMap [ rr:template "http://example.org/x/{k}/{name}";
+                  rr:class ex:Row ];
   rr:predicateObjectMap [ rr:predicate ex:name;
     rr:objectMap [ rr:column "name" ] ];
   rr:predicateObjectMap [ rr:predicate ex:val;
-    rr:objectMap [ rr:column "val" ] ];
+    rr:objectMap [ rr:column "val"; rr:datatype xsd:double ] ];
   rr:predicateObjectMap [ rr:predicate ex:flag;
     rr:objectMap [ rr:column "flag" ] ];
   rr:predicateObjectMap [ rr:predicate ex:ts;
-    rr:objectMap [ rr:column "ts" ] ];
+    rr:objectMap [ rr:column "ts"; rr:datatype xsd:dateTime ] ];
   rr:predicateObjectMap [ rr:predicate ex:iriCol;
-    rr:objectMap [ rr:column "name"; rr:termType rr:IRI ] ].
+    rr:objectMap [ rr:column "name"; rr:termType rr:IRI ] ];
+  rr:predicateObjectMap [ rr:predicate ex:label;
+    rr:objectMap [ rr:template "{name}|{k}"; rr:termType rr:Literal ] ];
+  rr:predicateObjectMap [ rr:predicate ex:node;
+    rr:objectMap [ rr:template "n {name}"; rr:termType rr:BlankNode ] ];
+  rr:predicateObjectMap [ rr:predicate ex:const;
+    rr:objectMap [ rr:constant "c\\"q"@en ] ].
 """)
-    comp = NativeCompiler(spark, mapping, {"t": df})
-    tm = list(mapping.triples_maps.values())[0]
-    maps = [tm.subject_map]
-    for pom in tm.predicate_object_maps:
-        maps.extend(pom.predicate_maps + pom.object_maps)
-    cols = []
-    for i, m in enumerate(maps):
-        cols.append(comp.term_expr(df, m).alias(f"new{i}"))
-        cols.append(_legacy_term_expr(comp, df, m).alias(f"old{i}"))
-    for r in df.select(*cols).collect():
-        for i in range(len(maps)):
-            assert getattr(r, f"new{i}") == getattr(r, f"old{i}"), \
-                (i, getattr(r, f"new{i}"), getattr(r, f"old{i}"))
+    got = {tuple(r) for r in
+           tier_pool(spark, mapping, "native", tables={"t": df}).collect()}
+    want = materialize_local(mapping, {"t": docs})
+    assert got == want, (sorted(got - want), sorted(want - got))
+    # the NULL boolean is no term (R2RML §11), not "false"
+    assert not any(s == "<http://example.org/x/3/%20pad%09ded%20%20>"
+                   and p == "<http://example.com/flag>"
+                   for s, p, _o, _g in got)
 
 
-def test_json_term_expr_matches_legacy_dsl(spark):
-    """Differential for the json-native tier: the text-built _term_expr
-    must equal a Column-DSL reconstruction (via the retained _field_col/
-    _as_lexical helpers) byte-for-byte, for reference and template term
-    maps over string/long/double/boolean fields and an iterator."""
+def test_json_term_expr_matches_local_engine(spark):
+    """The json-native compiler's triples equal the local engine's on
+    the same documents, for reference and template (IRI, literal, blank
+    node) term maps over string/long/double/boolean fields, NULL and
+    missing values."""
     import json as _json
-    from morph_xr2rml_spark import namespaces as NS
-    from morph_xr2rml_spark.functions.templates import (compile_template,
-                                                        get_template_groups)
-    from morph_xr2rml_spark.model import (CONSTANT, REFERENCE, TEMPLATE,
-                                          MappingDocument)
-    from morph_xr2rml_spark.native_json import (JsonNativeCompiler,
-                                                _as_lexical, _literal_term)
-    from morph_xr2rml_spark.native import (encode_url_col as _nat_enc_url,
-                                           encode_literal_col,
-                                           encode_reserved_col, strip_ws_col)
     from morph_xr2rml_spark.sources import SourceCatalog
 
     docs = [
@@ -223,8 +166,9 @@ def test_json_term_expr_matches_legacy_dsl(spark):
          "lines": [{"ln": 1, "tag": " pad %x_ "}, {"ln": 2, "tag": None}]},
         {"name": None, "qty": None, "price": -0.0, "ok": False,
          "lines": [{"ln": 3, "tag": "t\"q"}]},
+        {"name": " pad\tded__x ", "qty": 7, "price": 0.125, "ok": None},
     ]
-    df = spark.createDataFrame([( _json.dumps(d),) for d in docs],
+    df = spark.createDataFrame([(_json.dumps(d),) for d in docs],
                                "content string")
     catalog = SourceCatalog().register_collection("docs", df)
     mapping = MappingDocument.from_text("""
@@ -235,84 +179,36 @@ def test_json_term_expr_matches_legacy_dsl(spark):
   rr:subjectMap [ rr:template "http://example.org/d/{$.name}/{$.qty}" ];
   rr:predicateObjectMap [ rr:predicate ex:name;
     rr:objectMap [ xrr:reference "$.name" ] ];
+  rr:predicateObjectMap [ rr:predicate ex:qty;
+    rr:objectMap [ xrr:reference "$.qty" ] ];
   rr:predicateObjectMap [ rr:predicate ex:price;
     rr:objectMap [ xrr:reference "$.price" ] ];
   rr:predicateObjectMap [ rr:predicate ex:ok;
-    rr:objectMap [ xrr:reference "$.ok" ] ].
+    rr:objectMap [ xrr:reference "$.ok" ] ];
+  rr:predicateObjectMap [ rr:predicate ex:label;
+    rr:objectMap [ rr:template "{$.name}|{$.ok}"; rr:termType rr:Literal ] ];
+  rr:predicateObjectMap [ rr:predicate ex:node;
+    rr:objectMap [ rr:template "n {$.name}"; rr:termType rr:BlankNode ] ].
 """)
-    comp = JsonNativeCompiler(spark, mapping, catalog)
-    tm = list(mapping.triples_maps.values())[0]
-    schema = comp._schema_for(tm)
-    parsed = df.select(
-        F.from_json(F.col("content"), schema).alias("_doc"))
-    root_c = F.col("_doc")
-
-    def legacy(m):
-        tt = m.infer_term_type()
-        cfg = comp.cfg
-        if m.kind == REFERENCE:
-            col, dt = comp._field_col(tm, root_c, None, m.reference)
-            lex = _as_lexical(col, dt)
-            from pyspark.sql import types as T
-            is_str = isinstance(dt, T.StringType)
-            if is_str and cfg.literal_trim:
-                lex = strip_ws_col(lex)
-            if is_str:
-                lex = encode_literal_col(lex, cfg.encode_literal_quotes)
-            dtype = m.datatype
-            if dtype is None and m.language is None and cfg.infer_datatypes:
-                from morph_xr2rml_spark.native_json import _mongo_xsd
-                dtype = _mongo_xsd(dt)
-            return _literal_term(lex, dtype, m.language, escape=is_str)
-        assert m.kind == TEMPLATE
-        from pyspark.sql import types as T
-        segs = compile_template(m.template)
-        groups = get_template_groups(m.template)
-        if tt == NS.RR_IRI and cfg.encode_unsafe_chars_in_uri:
-            from morph_xr2rml_spark.functions.encoding import encode_url
-            segs = [encode_url(s) for s in segs]
-        parts, null_conds, any_str = [F.lit(segs[0])], [], False
-        for i, g in enumerate(groups):
-            col, dt = comp._field_col(tm, root_c, None, g)
-            lex = _as_lexical(col, dt)
-            if isinstance(dt, T.StringType):
-                any_str = True
-                if tt == NS.RR_IRI and cfg.encode_unsafe_chars_in_db_values:
-                    lex = encode_reserved_col(lex)
-            null_conds.append(lex.isNull())
-            parts.append(F.coalesce(lex, F.lit("")))
-            parts.append(F.lit(segs[i + 1]))
-        expanded = F.concat(*parts)
-        all_null = null_conds[0]
-        for c in null_conds[1:]:
-            all_null = all_null & c
-        expanded = F.when(all_null, F.lit(None)).otherwise(expanded)
-        if tt == NS.RR_IRI:
-            return F.concat(F.lit("<"), expanded, F.lit(">"))
-        return _literal_term(expanded, m.datatype, m.language,
-                             escape=any_str)
-
-    maps = [tm.subject_map] + [m for pom in tm.predicate_object_maps
-                               for m in pom.object_maps]
-    cols = []
-    for i, m in enumerate(maps):
-        cols.append(comp._term_expr(tm, "`_doc`", None, m).alias(f"new{i}"))
-        cols.append(legacy(m).alias(f"old{i}"))
-    for r in parsed.select(*cols).collect():
-        for i in range(len(maps)):
-            assert getattr(r, f"new{i}") == getattr(r, f"old{i}"), \
-                (i, getattr(r, f"new{i}"), getattr(r, f"old{i}"))
+    got = {tuple(r) for r in
+           tier_pool(spark, mapping, "json", catalog=catalog).collect()}
+    want = materialize_local(mapping, {"docs": docs})
+    assert got == want, (sorted(got - want), sorted(want - got))
 
 
 def test_compilers_refuse_escaped_string_literals(spark):
     """sql_lit assumes the default parser; under the legacy
-    escapedStringLiterals mode both native compilers fail loudly instead
-    of emitting silently different terms."""
-    from morph_xr2rml_spark.model import MappingDocument
+    escapedStringLiterals mode both native compilers and the find()
+    filter path fail loudly instead of emitting silently different
+    terms or selecting different documents."""
+    from morph_xr2rml_spark.model import LogicalSource
     from morph_xr2rml_spark.native import NativeCompiler
     from morph_xr2rml_spark.native_json import JsonNativeCompiler
     from morph_xr2rml_spark.sources import SourceCatalog
     mapping = MappingDocument.from_text("")
+    catalog = SourceCatalog().register_collection(
+        "c", spark.createDataFrame([('{"a": "x"}',)], "content string"))
+    find = LogicalSource(kind="query", value="db.c.find({a: 'x'})")
     conf = "spark.sql.parser.escapedStringLiterals"
     old = spark.conf.get(conf, "false")
     spark.conf.set(conf, "true")
@@ -321,7 +217,10 @@ def test_compilers_refuse_escaped_string_literals(spark):
             NativeCompiler(spark, mapping, {})
         with pytest.raises(ValueError, match="escapedStringLiterals"):
             JsonNativeCompiler(spark, mapping, SourceCatalog())
+        with pytest.raises(ValueError, match="escapedStringLiterals"):
+            catalog.resolve(find)
     finally:
         spark.conf.set(conf, old)
     NativeCompiler(spark, mapping, {})
     JsonNativeCompiler(spark, mapping, SourceCatalog())
+    assert catalog.resolve(find)[0].count() == 1
