@@ -24,7 +24,7 @@ per-pattern target queries and evaluates joins/aggregates in Jena over
 the materialized model (MorphMongoQueryProcessor.scala:45-150 evaluates
 the SPARQL against an in-memory Model; aggregation never reaches the
 source).  Proving bindings == rows needs the compile-time uniqueness
-theorems (native.subject_renders_unique) that only exist here.
+theorems (the compilers' subject_unique) that only exist here.
 
 Soundness discipline (same as rewrite.py): this is a FAST PATH -- on
 ANY shape or provability doubt `try_aggregate_pushdown_auto` returns
@@ -63,7 +63,7 @@ preconditions:
 * a contributing TM emits EVERY pattern predicate through exactly one
   plain object slot (no RefObjectMap, no same-pred second slot);
 * bindings == rows needs distinct triples and a self-join-free subject
-  join, so each contributor must pass `subject_renders_unique`
+  join, so each contributor must pass its compiler's `subject_unique`
   (xrr:uniqueRef through an injective render).  Exception: a
   SINGLE-pattern DISTINCT-only query projects away multiplicity, so it
   pushes with no uniqueness proof at all (filters are deterministic,
@@ -75,7 +75,7 @@ over doubles):
 * COUNT(?v) / COUNT(*): every surviving row binds ?v (the not-null
   conditions are the binding conditions), so ``count(1)`` is exact;
 * COUNT(DISTINCT ?v) / SAMPLE / GROUP_CONCAT: computed over the exact
-  rendered term (same `NativeCompiler.term_expr` the pool would use);
+  rendered term (same `term_sql` the pool would use);
 * SUM/AVG/MIN/MAX: ``cast(col as double)`` where the lexical round-trip
   is provably value-identical (integral, decimal, double columns --
   both paths round-to-nearest-double the same value); everything else
@@ -97,11 +97,8 @@ from pyspark.sql import types as T
 
 from . import namespaces as NS
 from .api import route_tier
-from .model import COLUMN, CONSTANT, TEMPLATE, MappingDocument, TermMap
-from .model import REFERENCE
-from .native import (NativeCompiler, subject_space, subject_spaces_disjoint,
-                     subject_renders_unique,
-                     subject_renders_unique_schemaless)
+from .model import COLUMN, CONSTANT, REFERENCE, MappingDocument, TermMap
+from .native import NativeCompiler, subject_space, subject_spaces_disjoint
 from .sources import SourceCatalog
 from .sparql import (SelectQuery, SparqlEngine, TriplePattern,
                      aggregate_specs, distinct_numeric_agg, lexical_value,
@@ -169,35 +166,44 @@ def _expr_engine(spark: SparkSession) -> SparqlEngine:
     return SparqlEngine(spark.createDataFrame([], TRIPLE_SCHEMA))
 
 
-def _numeric_mirror(compiler: NativeCompiler, df: DataFrame,
-                    m: TermMap) -> Column:
-    """Mirror of ``numeric_value(term_expr(m))`` (the evaluator's
-    SUM/AVG/MIN/MAX input and numeric-constant pattern probe), using a
-    native cast exactly where the round-trip is provably
-    value-identical."""
-    if m.kind == COLUMN:
-        dtype = df.schema[m.column].dataType
+def _term(c, ctx, m: TermMap) -> Column:
+    """The term the tier's materialized pool renders for ``m``."""
+    return F.expr(c.term_sql(ctx, m))
+
+
+def _notnull(c, ctx, m: TermMap) -> Column:
+    """Exact: the pool drops a row on the same leaf null test."""
+    null = c.term_null_sql(ctx, m)
+    return F.lit(True) if null is None else ~F.expr(null)
+
+
+def _numeric(c, ctx, m: TermMap) -> Column:
+    """Mirror of ``numeric_value(term)`` (the evaluator's SUM/AVG/MIN/MAX
+    input and numeric-constant pattern probe), using a native cast
+    exactly where the round-trip is provably value-identical (not under
+    an explicit xsd:boolean, whose render normalizes the lexical)."""
+    if m.kind in (COLUMN, REFERENCE) and m.datatype != NS.XSD_BOOLEAN:
+        sql, dtype = c.leaf(ctx, m.column if m.kind == COLUMN
+                            else m.reference)
         if isinstance(dtype, _EXACT_DOUBLE_CAST):
-            return F.col(m.column).cast("double")
+            return F.expr(f"CAST({sql} AS DOUBLE)")
         if isinstance(dtype, _NEVER_NUMERIC):
             return F.lit(None).cast("double")
-    return numeric_value(compiler.term_expr(df, m))
+    return numeric_value(_term(c, ctx, m))
 
 
 class _BindingTier:
-    """Per-TM adapter producing the bindings-frame ingredients (scan,
-    exact term/notnull/numeric expressions, uniqueness proof) for the two
-    Catalyst tiers.  The tier is the router's (api.route_tier): only a
-    TM routed native ("tab") or json-native ("doc") is a candidate, so
-    the mirror renders are the SAME expressions the materialized pool
-    would use (native_json._term_expr on the doc side); a TM routed to
-    the Python document compiler refuses.  Own refusals on top: graph
-    maps (quads multiply bindings per graph) and iterator / pushDown TMs
-    (one subject spans several items, which breaks bindings == rows)."""
+    """Picks each TM's Catalyst compiler for the bindings frames.  The
+    tier is the router's (api.route_tier): only a TM routed native or
+    json-native is a candidate, so the mirror renders are the SAME
+    expressions the materialized pool would use (``term_sql`` over the
+    compiler's ``scan``); a TM routed to the Python document compiler
+    refuses.  Own refusals on top: graph maps (quads multiply bindings
+    per graph) and iterator / pushDown TMs (one subject spans several
+    items, which breaks bindings == rows)."""
 
     def __init__(self, spark, mapping, cfg, tables, catalog):
         from .native_json import JsonNativeCompiler
-        self.spark = spark
         self.mapping = mapping
         self.tables = tables or {}
         self.tab = NativeCompiler(spark, mapping, self.tables, cfg,
@@ -205,7 +211,8 @@ class _BindingTier:
         self.doc = JsonNativeCompiler(spark, mapping,
                                       catalog or SourceCatalog(), cfg)
 
-    def kind(self, tm) -> Optional[str]:
+    def kind(self, tm):
+        """The TM's compiler, or None."""
         if tm.graph_maps or any(pom.graph_maps
                                 for pom in tm.predicate_object_maps):
             return None          # quads multiply bindings per graph
@@ -216,41 +223,7 @@ class _BindingTier:
             tier = route_tier(self.mapping, tm, self.tables, self.doc)
         except Exception:
             return None          # unresolvable source / schema conflict
-        return {"native": "tab", "json": "doc"}.get(tier)
-
-    def om_kinds(self, k: str) -> tuple:
-        return (CONSTANT, COLUMN, TEMPLATE) if k == "tab" \
-            else (CONSTANT, REFERENCE, TEMPLATE)
-
-    def open(self, tm, k: str) -> DataFrame:
-        if k == "tab":
-            return self.tab._source_df(tm)
-        src, _tab = self.doc.catalog.resolve(tm.logical_source)
-        schema = self.doc._schema_for(tm)
-        return src.select(F.from_json(F.col("content"), schema)
-                          .alias("_doc"))
-
-    def term(self, tm, k: str, df: DataFrame, m: TermMap) -> Column:
-        if k == "tab":
-            return self.tab.term_expr(df, m)
-        return self.doc._term_expr(tm, "`_doc`", None, m)
-
-    def notnull(self, tm, k: str, df: DataFrame, m: TermMap) -> Column:
-        if k == "tab":
-            null = self.tab.term_null_cond(m)
-            return F.lit(True) if null is None else ~null
-        # exact: tm_base filters on the same term expression's null-ness
-        return self.term(tm, k, df, m).isNotNull()
-
-    def numeric(self, tm, k: str, df: DataFrame, m: TermMap) -> Column:
-        if k == "tab":
-            return _numeric_mirror(self.tab, df, m)
-        return numeric_value(self.term(tm, k, df, m))
-
-    def unique(self, tm, k: str, df: DataFrame) -> bool:
-        if k == "tab":
-            return subject_renders_unique(tm, df)
-        return subject_renders_unique_schemaless(tm)
+        return {"native": self.tab, "json": self.doc}.get(tier)
 
 
 def _tm_needed_slots(tm, needed: set) -> Optional[dict]:
@@ -312,10 +285,10 @@ def _tm_type_consts(tm) -> Optional[set]:
     return out
 
 
-def _const_obj_cond(tier, tm, k, df, om, okind, oval) -> Optional[Column]:
+def _const_obj_cond(c, ctx, om, okind, oval) -> Optional[Column]:
     """Constant-object row condition mirroring `_pattern_df`'s four
     match forms; None = unmirrorable numeric lexical (caller refuses)."""
-    t = tier.term(tm, k, df, om)
+    t = _term(c, ctx, om)
     if okind == "iri":
         return t == f"<{oval}>"
     if okind == "lit":
@@ -324,7 +297,7 @@ def _const_obj_cond(tier, tm, k, df, om, okind, oval) -> Optional[Column]:
     if okind == "lit_exact":
         return t == oval
     try:
-        return tier.numeric(tm, k, df, om) == float(oval)
+        return _numeric(c, ctx, om) == float(oval)
     except ValueError:
         return None
 
@@ -340,7 +313,7 @@ def _emits_input(func: str, var, dist: bool, computed: set,
             and not (func == "COUNT" and not dist and var not in nullable))
 
 
-def _frame_cols(tier, tm, k, df, home, term_vars: list, specs: list,
+def _frame_cols(c, ctx, home, term_vars: list, specs: list,
                 computed: set, nullable: set) -> list:
     """One TM frame's term columns and aggregate-input columns.
     ``home(v)`` is ``(here, m)``: whether v lives on this frame, and
@@ -351,7 +324,7 @@ def _frame_cols(tier, tm, k, df, home, term_vars: list, specs: list,
         here, m = home(v)
         if here:
             cols.append((F.lit(None).cast("string") if m is None
-                         else tier.term(tm, k, df, m)).alias(v))
+                         else _term(c, ctx, m)).alias(v))
     for i, (func, var, dist, _alias, _sep) in enumerate(specs):
         if not _emits_input(func, var, dist, computed, nullable):
             continue
@@ -361,17 +334,17 @@ def _frame_cols(tier, tm, k, df, home, term_vars: list, specs: list,
         if m is None:            # absent optional/branch slot: typed NULLs
             dt = "double" if (func in ("SUM", "AVG", "MIN", "MAX")
                               and not dist) else "string"
-            c = F.lit(None).cast(dt)
+            col = F.lit(None).cast(dt)
         elif dist and func in ("SUM", "AVG"):
             # DISTINCT dedupes TERMS first: ship the exact term
-            c = tier.term(tm, k, df, m)
+            col = _term(c, ctx, m)
         elif func in ("SUM", "AVG", "MIN", "MAX"):
-            c = tier.numeric(tm, k, df, m)
+            col = _numeric(c, ctx, m)
         elif func == "GROUP_CONCAT":
-            c = lexical_value(tier.term(tm, k, df, m))
+            col = lexical_value(_term(c, ctx, m))
         else:                    # COUNT (DISTINCT) / SAMPLE: exact term
-            c = tier.term(tm, k, df, m)
-        cols.append(c.alias(f"#a{i}"))
+            col = _term(c, ctx, m)
+        cols.append(col.alias(f"#a{i}"))
     return cols
 
 
@@ -558,11 +531,11 @@ def _build_join_frame(tier, mapping: MappingDocument, groups: dict,
     # ---- tier + uniqueness (joins always need it) ---------------------
     kinds: dict = {}
     for gv, tm in cover.items():
-        k = tier.kind(tm)
-        if k != "tab":
-            return None          # cross-tier ROM joins: keep evaluator
-        kinds[gv] = k
-        if not tier.unique(tm, k, tier.open(tm, k)):
+        c = tier.kind(tm)
+        if c is not tier.tab:
+            return None          # raw-key joins need tabular columns
+        kinds[gv] = c
+        if not c.subject_unique(tm):
             return None
 
     # ---- OPTIONAL slots: nullable columns on the owning group --------
@@ -585,7 +558,7 @@ def _build_join_frame(tier, mapping: MappingDocument, groups: dict,
         if ent is None:
             opt_slot[var] = (gv, None)   # never emitted: NULL column
         else:
-            om = _sole_om(ent, tier.om_kinds(kinds[gv]))
+            om = _sole_om(ent, kinds[gv].TERM_KINDS)
             if om is None:
                 return None
             opt_slot[var] = (gv, om)
@@ -605,25 +578,24 @@ def _build_join_frame(tier, mapping: MappingDocument, groups: dict,
     # ---- per-group frames ---------------------------------------------
     frames: dict = {}
     for gv, grp in groups.items():
-        tm, k = cover[gv], kinds[gv]
-        df = tier.open(tm, k)
-        cond = tier.notnull(tm, k, df, tm.subject_map)
+        tm, c = cover[gv], kinds[gv]
+        df, ctx = c.scan(tm)
+        cond = _notnull(c, ctx, tm.subject_map)
         for v, pred in grp["var_pred"].items():
             if v not in groups:
-                cond = cond & tier.notnull(tm, k, df,
-                                           _cover_slot(gv, pred)[1])
+                cond = cond & _notnull(c, ctx, _cover_slot(gv, pred)[1])
         for pred, okind, oval in grp["const"]:
-            c = _const_obj_cond(tier, tm, k, df,
-                                _cover_slot(gv, pred)[1], okind, oval)
-            if c is None:
+            oc = _const_obj_cond(c, ctx, _cover_slot(gv, pred)[1], okind,
+                                 oval)
+            if oc is None:
                 return None
-            cond = cond & c
+            cond = cond & oc
         def home(v: str):
             hg, m = var_home(v)
             return hg == gv, m
 
-        cols = _frame_cols(tier, tm, k, df, home, term_vars, specs,
-                           computed, nullable)
+        cols = _frame_cols(c, ctx, home, term_vars, specs, computed,
+                           nullable)
         for ei, (cgv, pgv, rom) in enumerate(edges):
             if gv == cgv:
                 cols.extend(F.col(jc.child_ref).alias(f"#ck{ei}_{i}")
@@ -698,7 +670,7 @@ def _build_single_frame(tier, mapping: MappingDocument, groups: dict,
             return None          # optional over a plain object var
     opt_preds = {pred for _gv, pred in opt_binding.values()}
     contributors = []            # (tm, full_slots or None, opt_slots)
-    kinds: dict = {}             # tm name -> "tab" | "doc"
+    kinds: dict = {}             # tm name -> its compiler
     for tm in mapping.triples_maps.values():
         slots = _tm_needed_slots(tm, needed | opt_preds)
         if slots is None:
@@ -712,14 +684,14 @@ def _build_single_frame(tier, mapping: MappingDocument, groups: dict,
         full_slots = None
         opt_slots: dict = {}
         # route the TM only when every needed slot is one plain object map
-        k = tier.kind(tm) if covers and all(
+        c = tier.kind(tm) if covers and all(
             not slots[p][1] and len(slots[p][0]) == 1 for p in needed) \
             else None
-        if k is not None:
-            oms = {p: _sole_om(slots[p], tier.om_kinds(k)) for p in needed}
+        if c is not None:
+            oms = {p: _sole_om(slots[p], c.TERM_KINDS) for p in needed}
             if None not in oms.values():
                 full_slots = oms
-                kinds[tm.name] = k
+                kinds[tm.name] = c
                 # optional slots this candidate emits: must be solely
                 # and exactly mirrorable, else the left join cannot
                 # collapse to a column
@@ -727,7 +699,7 @@ def _build_single_frame(tier, mapping: MappingDocument, groups: dict,
                     if p not in slots:
                         opt_slots[p] = None      # never emitted: NULL
                         continue
-                    opt_slots[p] = _sole_om(slots[p], tier.om_kinds(k))
+                    opt_slots[p] = _sole_om(slots[p], c.TERM_KINDS)
                     if opt_slots[p] is None:
                         full_slots = None
                         break
@@ -756,23 +728,22 @@ def _build_single_frame(tier, mapping: MappingDocument, groups: dict,
         or len({p for p in seen_pats if p[0] != NS.RDF_TYPE}) > 1
     if need_unique:
         for tm, _slots, _opts in cands:
-            k = kinds[tm.name]
-            if not tier.unique(tm, k, tier.open(tm, k)):
+            if not kinds[tm.name].subject_unique(tm):
                 return None
 
     # ---- per-TM binding frames ----------------------------------------
     frames = []
     for tm, slots, opts in cands:
-        k = kinds[tm.name]
-        df = tier.open(tm, k)
-        cond = tier.notnull(tm, k, df, tm.subject_map)
+        c = kinds[tm.name]
+        df, ctx = c.scan(tm)
+        cond = _notnull(c, ctx, tm.subject_map)
         for p in sorted(needed):
-            cond = cond & tier.notnull(tm, k, df, slots[p])
+            cond = cond & _notnull(c, ctx, slots[p])
         for pred, okind, oval in const_pats:
-            c = _const_obj_cond(tier, tm, k, df, slots[pred], okind, oval)
-            if c is None:
+            oc = _const_obj_cond(c, ctx, slots[pred], okind, oval)
+            if oc is None:
                 return None
-            cond = cond & c
+            cond = cond & oc
 
         def home(v: str):
             if v in absent:
@@ -783,8 +754,8 @@ def _build_single_frame(tier, mapping: MappingDocument, groups: dict,
                 return True, opts[opt_binding[v][1]]   # None = absent slot
             return True, slots[var_pred[v]]
 
-        cols = _frame_cols(tier, tm, k, df, home, term_vars, specs,
-                           computed, nullable)
+        cols = _frame_cols(c, ctx, home, term_vars, specs, computed,
+                           nullable)
         frames.append(df.where(cond).select(*cols))
 
     u = frames[0]

@@ -23,10 +23,10 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .engine import SparkMaterializer, TRIPLE_SCHEMA
+from .engine import SparkMaterializer
 from .model import MappingDocument, TriplesMap
-from .native import (NativeCompiler, is_tabular_compilable, subject_space,
-                     subject_spaces_disjoint)
+from .native import (NativeCompiler, is_tabular_compilable,
+                     provably_distinct, union_all)
 from .sources import SourceCatalog
 from .translate import EngineConfig
 
@@ -92,7 +92,7 @@ def _routed_plan(spark: SparkSession, mapping: MappingDocument,
                                                 push_render)
         skip = frozenset(n for n, c in constraints.items() if c == [])
 
-    from .native_json import JsonNativeCompiler, provably_distinct_json
+    from .native_json import JsonNativeCompiler
     jc = JsonNativeCompiler(spark, mapping, catalog, cfg,
                             fuse_projections=not answering)
     tiers = {n: route_tier(mapping, tm, tables, jc)
@@ -113,42 +113,23 @@ def _routed_plan(spark: SparkSession, mapping: MappingDocument,
                         fuse_projections=not answering,
                         tm_row_filters=row_filters)
     parts = [nc.tm_triples(tm) for tm in by_tier["native"]]
-    parts += [jc.tm_base(tm) for tm in by_tier["json"]]
+    parts += [jc.tm_triples(tm) for tm in by_tier["json"]]
     if by_tier["doc"]:
         sm = SparkMaterializer(spark, mapping, catalog, cfg)
         parts += [sm._tm_triples(tm) for tm in by_tier["doc"]]
 
-    if not parts:
-        out = spark.createDataFrame([], TRIPLE_SCHEMA)
-    else:
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-
     def distinct() -> bool:
-        """The plan provably emits no duplicate triple: the native tier
-        by NativeCompiler.provably_distinct, the other two by the
-        tier-independent provably_distinct_json, each over the TMs it
-        emits; across the two, every pair of TMs has disjoint subject
-        spaces or disjoint constant predicate sets."""
-        from .rewrite import tm_pred_iris
-        native = by_tier["native"]
-        other = by_tier["json"] + by_tier["doc"]
-        if not provably_distinct_json(other) \
-                or not nc.provably_distinct(native):
-            return False
-        for t1 in native:
-            for t2 in other:
-                if subject_spaces_disjoint(subject_space(t1),
-                                           subject_space(t2)):
-                    continue
-                p1, p2 = tm_pred_iris(t1), tm_pred_iris(t2)
-                if p1 is not None and p2 is not None and not (p1 & p2):
-                    continue
-                return False
-        return True
+        """The plan provably emits no duplicate triple: each native TM
+        by the tabular compiler's check, each json-native or document TM
+        by the schemaless one (the proof is about mapping semantics, so
+        both document tiers share it), and every pair of emitting TMs
+        disjoint."""
+        return provably_distinct(
+            [mapping.triples_maps[n] for n in tiers],
+            lambda tm: (nc if tiers[tm.name] == "native" else jc)
+            .tm_distinct(tm))
 
-    return out, tiers, distinct
+    return union_all(spark, parts), tiers, distinct
 
 
 def materialize_auto(spark: SparkSession, mapping: MappingDocument,

@@ -112,7 +112,11 @@ def dedup_triples(df: DataFrame, exact: bool = False,
              .withColumn("_h2", F.xxhash64(F.lit(1), *cols)))
     if prepartition:
         out = out.repartition(F.col("_h1"), F.col("_h2"))
-    return out.dropDuplicates(["_h1", "_h2"]).drop("_h1", "_h2")
+    # an explicit aggregate, not dropDuplicates: the Deduplicate node
+    # re-uses the input's attribute ids, and a later exceptAll over the
+    # result failed with INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND (Spark 4.1)
+    return out.groupBy("_h1", "_h2").agg(
+        *[F.any_value(c).alias(c) for c in df.columns]).drop("_h1", "_h2")
 
 
 def _make_child_fn(tm: TriplesMap, cfg: EngineConfig, rom_base: int,

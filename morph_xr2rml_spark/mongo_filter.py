@@ -17,6 +17,8 @@ import json
 import re
 from typing import Any, Callable
 
+from .functions.datatypes import to_lexical
+
 _SINGLE_QUOTED = re.compile(r"'((?:[^'\\]|\\.)*)'")
 _UNQUOTED_KEY = re.compile(r"([{,]\s*)([$A-Za-z_][$\w.]*)(\s*:)")
 # shell regex literal in value position: field: /pat/flags
@@ -67,11 +69,9 @@ def _json_lex(v: Any) -> str:
     """The JSON lexical form get_json_object would return for a value
     (structures re-serialized to compact JSON, matching both
     get_json_object and the doc-tier term render _obj_to_text)."""
-    if isinstance(v, bool):
-        return "true" if v else "false"
     if isinstance(v, (dict, list)):
         return json.dumps(v, separators=(",", ":"), ensure_ascii=False)
-    return str(v)
+    return to_lexical(v)
 
 
 def _num(v: Any):
@@ -169,7 +169,7 @@ def compile_filter(spec: dict) -> Callable[[Any], bool]:
                                 _json_lex(x).strip()))):
                             return True
                         n = _num(x)
-                        return n is not None and m(str(n))
+                        return n is not None and m(to_lexical(n))
                     conds.append(render_pat)
                 elif op == "$numCmp":
                     # internal pushdown operator (rewrite.py comparison

@@ -11,7 +11,9 @@ and Catalyst/AQE pick join strategies.
 
 This is the scale path: the document compiler (engine.py) covers full
 xR2RML (JSONPath, iterators, nested term maps); this one covers the
-R2RML subset at parquet-native speed.
+R2RML subset at parquet-native speed.  ``CatalystCompiler`` is the core
+it shares with the json-native tier (native_json.py): term render,
+class/POM walk, unfused branches and duplicate-freeness check.
 """
 
 from __future__ import annotations
@@ -25,10 +27,10 @@ from pyspark.sql import types as T
 
 from . import namespaces as NS
 from .functions.encoding import _ENCODE_RESERVED, _ENCODE_URL, encode_url
-from .functions.templates import get_template_groups
+from .functions.templates import compile_template, get_template_groups
 from .model import (COLUMN, CONSTANT, TEMPLATE, MappingDocument, TermMap,
                     TriplesMap)
-from .translate import EngineConfig
+from .translate import EngineConfig, nt_escape
 
 TRIPLE_COLS = ("subj", "pred", "obj", "graph")
 
@@ -209,17 +211,26 @@ def lexical_sql(sql: str, dtype: T.DataType) -> str:
     return f"CAST({sql} AS STRING)"
 
 
+def _col_lexical_sql(df: DataFrame, name: str) -> str:
+    return lexical_sql(sql_ident(name), df.schema[name].dataType)
+
+
+# source types whose lexical form holds no whitespace, no N-Triples
+# metacharacter and nothing the literal/IRI encoders rewrite: their
+# renders skip the trim, encode and escape chains
+_CLEAN_LEXICAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
+                  T.FloatType, T.DoubleType, T.DecimalType, T.BooleanType,
+                  T.DateType, T.TimestampType, T.TimestampNTZType)
+
+
 def iri_term_sql(inner: str) -> str:
     return f"concat('<', {inner}, '>')"
 
 
-def literal_term_sql(inner: str, datatype: Optional[str],
-                     lang: Optional[str], escape: bool = True) -> str:
-    """Quoted N-Triples literal over the lexical ``inner``; ``escape``
-    False when the lexical provably needs no escaping (numbers,
-    booleans)."""
-    body = (f"concat('\"', {nt_escape_sql(inner) if escape else inner}, "
-            f"'\"')")
+def literal_term_sql(body: str, datatype: Optional[str],
+                     lang: Optional[str]) -> str:
+    """Quoted N-Triples literal over the escaped lexical ``body``."""
+    body = f"concat('\"', {body}, '\"')"
     if lang:
         return f"concat({body}, {sql_lit('@' + lang)})"
     if datatype:
@@ -227,40 +238,337 @@ def literal_term_sql(inner: str, datatype: Optional[str],
     return body
 
 
-_NATURAL_XSD = {
-    T.IntegerType: NS.XSD_INTEGER, T.LongType: NS.XSD_INTEGER,
-    T.ShortType: NS.XSD_INTEGER, T.ByteType: NS.XSD_INTEGER,
-    T.DoubleType: NS.XSD + "double", T.FloatType: NS.XSD + "double",
-    T.DecimalType: NS.XSD_DECIMAL, T.BooleanType: NS.XSD_BOOLEAN,
-    T.TimestampType: NS.XSD_DATETIME, T.TimestampNTZType: NS.XSD_DATETIME,
-    T.DateType: NS.XSD + "date",
-}
+def normalize_datetime_sql(inner: str) -> str:
+    """functions/datatypes.normalize_datetime: strip, ' ' → 'T'."""
+    return f"replace({strip_ws_sql(inner)}, ' ', 'T')"
 
 
-def natural_datatype(dtype: T.DataType) -> Optional[str]:
-    """R2RML natural mapping, mirroring the reference's DatatypeMapper
-    (MorphRDBDataTranslator.scala:59-74)."""
-    return _NATURAL_XSD.get(type(dtype))
+def normalize_boolean_sql(inner: str) -> str:
+    """functions/datatypes.normalize_boolean (NULL stays NULL)."""
+    return (f"(CASE WHEN lower({inner}) IN ('t', 'true', '1') THEN 'true' "
+            f"WHEN {inner} IS NOT NULL THEN 'false' END)")
 
 
-def _col_lexical_sql(df: DataFrame, name: str) -> str:
-    return lexical_sql(sql_ident(name), df.schema[name].dataType)
+def union_all(spark: SparkSession, parts: list) -> DataFrame:
+    """The union of triple frames; an empty one for no part (a TM with
+    no class and no predicate-object map emits nothing — R2RML
+    generates rows only per POM/class)."""
+    if not parts:
+        from .engine import TRIPLE_SCHEMA
+        return spark.createDataFrame([], TRIPLE_SCHEMA)
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    return out
 
 
-class NativeCompiler:
-    """Compile tabular triples maps into a plan of native DataFrame ops."""
+class CatalystCompiler:
+    """The compiler core of both Catalyst tiers, as SQL text: the term
+    renderer, the class/predicate-object walk, the unfused per-entry
+    branches and the per-TM duplicate-freeness check.  A tier supplies
+    only what depends on where a value comes from:
+
+      - ``leaf(ctx, ref)``: a reference's (SQL, source type) in the
+        tier's row context, and ``NATURAL_XSD``, its natural datatypes;
+      - ``scan(tm)``: the source frame and its row context;
+      - ``subject_unique(tm)``, ``_slot_ok(om)`` and ``_rom_ok(rom)``:
+        the facts the duplicate-freeness check rests on;
+      - ``_rom_triples`` and ``_fused``: its ROM join and fused
+        projection.
+
+    The reference applies term types once too, in morph-base
+    (MorphBaseDataTranslator.scala:219-285, normalization :313-322),
+    for both its RDB and MongoDB translators."""
+
+    NATURAL_XSD: dict = {}
+    TERM_KINDS: tuple = ()
+
+    def __init__(self, spark: SparkSession, mapping: MappingDocument,
+                 cfg: Optional[EngineConfig], fuse_projections: bool):
+        check_sql_text_conf(spark)
+        self.spark = spark
+        self.mapping = mapping
+        self.cfg = cfg or EngineConfig()
+        self.fuse_projections = fuse_projections
+
+    # -- terms ----------------------------------------------------------
+    def term_sql(self, ctx, m: TermMap) -> str:
+        """Term map → its N-Triples term as SQL text (NULL: no term),
+        the Python tier's _make_term (translate.py) over the row context
+        ``ctx``.  Unresolved column references resolve by name at
+        analysis (the tabular ROM join relies on that)."""
+        cfg = self.cfg
+        tt = m.infer_term_type()
+        if m.kind == CONSTANT:
+            kind, value = m.constant[0], m.constant[1]
+            if kind == "iri":
+                return sql_lit(f"<{value}>")
+            if kind == "bnode":
+                return sql_lit(f"_:{value}")
+            return literal_term_sql(sql_lit(nt_escape(value)),
+                                    m.datatype or m.constant[2],
+                                    m.language or m.constant[3])
+        if m.kind == TEMPLATE:
+            return self._template_sql(ctx, m, tt)
+        sql, dt = self.leaf(ctx, m.column if m.kind == COLUMN
+                            else m.reference)
+        lex = lexical_sql(sql, dt)
+        clean = isinstance(dt, _CLEAN_LEXICAL)
+        if tt == NS.RR_IRI:
+            if not clean:
+                # createIRI trims, then encodeURI over the whole IRI:
+                # URL-unsafe characters only, ':' '/' etc. stay (the
+                # reserved-chars encoder is for template group content)
+                lex = strip_ws_sql(lex)
+                if cfg.encode_unsafe_chars_in_uri:
+                    lex = encode_url_sql(lex)
+            return iri_term_sql(lex)
+        if tt == NS.RR_BLANKNODE:
+            # format_bnode encodes the whole id (translate.py _make_term)
+            return f"concat('_:', {lex if clean else encode_url_sql(lex)})"
+        dtype = m.datatype
+        if dtype is None and m.language is None and cfg.infer_datatypes:
+            dtype = self.NATURAL_XSD.get(type(dt))
+        return literal_term_sql(self.literal_lexical_sql(lex, dt, m.datatype),
+                                dtype, m.language)
+
+    def literal_lexical_sql(self, lex: str, dt: T.DataType,
+                            datatype: Optional[str]) -> str:
+        """The escaped lexical form of a literal over the value lexical
+        ``lex`` of source type ``dt``, in _make_term's order:
+        createLiteral's trim and encodeLiteral, the normalization of an
+        explicit xsd:dateTime / xsd:boolean ``datatype``, then N-Triples
+        escaping."""
+        cfg = self.cfg
+        if not isinstance(dt, _CLEAN_LEXICAL):
+            if cfg.literal_trim:
+                lex = strip_ws_sql(lex)
+            lex = encode_literal_sql(lex, cfg.encode_literal_quotes)
+            if datatype == NS.XSD_DATETIME:
+                lex = normalize_datetime_sql(lex)
+            lex = nt_escape_sql(lex)
+        if datatype == NS.XSD_BOOLEAN and not isinstance(dt, T.BooleanType):
+            # 'true'/'false' commute with the escape
+            lex = normalize_boolean_sql(lex)
+        return lex
+
+    def _template_sql(self, ctx, m: TermMap, tt: str) -> str:
+        cfg = self.cfg
+        iri = tt == NS.RR_IRI
+        segs = compile_template(m.template)
+        if iri and cfg.encode_unsafe_chars_in_uri:
+            # the Python tier applies encodeURI over the WHOLE expanded
+            # IRI; group content is already reserved-encoded (a superset
+            # of the URL-unsafe set), so that pass only ever touches the
+            # fixed segments — encode them at compile time
+            segs = [encode_url(s) for s in segs]
+        parts = [sql_lit(segs[0])]
+        nulls = []
+        for g, seg in zip(get_template_groups(m.template), segs[1:]):
+            sql, dt = self.leaf(ctx, g)
+            lex = lexical_sql(sql, dt)
+            if iri and cfg.encode_unsafe_chars_in_db_values \
+                    and isinstance(dt, T.StringType):
+                lex = encode_reserved_sql(lex)
+            nulls.append(f"({lex} IS NULL)")
+            # a NULL value contributes '' (MorphRDBDataTranslator.scala:357-372)
+            parts += [f"coalesce({lex}, '')", sql_lit(seg)]
+        expanded = f"concat({', '.join(parts)})"
+        if nulls:
+            # all groups NULL → no term
+            expanded = (f"(CASE WHEN {' AND '.join(nulls)} THEN NULL "
+                        f"ELSE {expanded} END)")
+        if iri:
+            return iri_term_sql(expanded)
+        if tt == NS.RR_BLANKNODE:
+            # format_bnode encodes the whole id, groups included
+            return f"concat('_:', {encode_url_sql(expanded)})"
+        # createLiteral trims and encodes the whole expanded value
+        return literal_term_sql(
+            self.literal_lexical_sql(expanded, T.StringType(), m.datatype),
+            m.datatype, m.language)
+
+    def term_null_sql(self, ctx, m: TermMap) -> Optional[str]:
+        """SQL text true exactly where ``term_sql(ctx, m)`` is NULL,
+        tested on the leaves so a null guard does not build the term
+        string twice; None when the term is never NULL.  A reference is
+        NULL iff its value is (every lexical keeps NULL as NULL), a
+        template iff every group is (NULL groups render '')."""
+        if m.kind == CONSTANT:
+            return None
+        refs = get_template_groups(m.template) if m.kind == TEMPLATE \
+            else [m.column if m.kind == COLUMN else m.reference]
+        if not refs:
+            return None              # group-less template: constant text
+        return "(" + " AND ".join(f"({self.leaf(ctx, r)[0]} IS NULL)"
+                                  for r in refs) + ")"
+
+    # -- triples map ------------------------------------------------------
+    def graph_variants(self, ctx, gms: list) -> list:
+        """[(graph sql, row condition sql | None)] of a triple whose
+        graph maps are ``gms``: quad combination (translate.py:419-452)
+        — no graph map is the default graph; a graph map that renders
+        NULL drops that graph, and only a row where every render is
+        NULL falls back to the default graph (constant graph maps fold
+        to unconditional variants)."""
+        gsqls = [self.term_sql(ctx, gm) for gm in gms]
+        if not gsqls:
+            return [(NULL_G, None)]
+        if all(gm.kind == CONSTANT for gm in gms):
+            return [(g, None) for g in gsqls]
+        allnull = " AND ".join(f"({g} IS NULL)" for g in gsqls)
+        return [(g, f"({g} IS NOT NULL)") for g in gsqls] \
+            + [(NULL_G, f"({allnull})")]
+
+    def _entries(self, ctx, tm: TriplesMap) -> tuple[list, list]:
+        """A TM's per-row emissions as SQL text: ``(pred, obj, graph,
+        cond, obj_null)`` entries for its classes and object maps, and
+        ``(pred, rom, graph, cond)`` ROM slots.  A class triple lands in
+        the subject map's graphs, a POM triple in subject ∪ POM graphs."""
+        rdf_type = sql_lit(f"<{NS.RDF_TYPE}>")
+        sub_vars = self.graph_variants(ctx, tm.graph_maps)
+        entries = [(rdf_type, sql_lit(f"<{cls}>"), gc, cond, None)
+                   for cls in tm.class_uris for gc, cond in sub_vars]
+        roms = []
+        for pom in tm.predicate_object_maps:
+            gvars = self.graph_variants(ctx, tm.graph_maps + pom.graph_maps)
+            for pm in pom.predicate_maps:
+                pred = self.term_sql(ctx, pm)
+                for om in pom.object_maps:
+                    obj = self.term_sql(ctx, om)
+                    obj_null = self.term_null_sql(ctx, om)
+                    entries += [(pred, obj, gc, cond, obj_null)
+                                for gc, cond in gvars]
+                roms += [(pred, rom, gc, cond)
+                         for rom in pom.ref_object_maps
+                         for gc, cond in gvars]
+        return entries, roms
+
+    def tm_triples(self, tm: TriplesMap) -> DataFrame:
+        """One triples map → (subj, pred, obj, graph) over ONE scan of
+        its source.  Materialization fuses every entry into the tier's
+        one projection (the compile-time analogue of the reference's
+        self-union elimination, AbstractQueryAtomicMongo.scala:331-349);
+        answering emits one branch per entry with a constant pred, which
+        Catalyst folds away when a downstream pattern filter cannot
+        match it.  Each ROM slot is a join."""
+        frame, ctx = self.scan(tm)
+        subj = self.term_sql(ctx, tm.subject_map)
+        subj_null = self.term_null_sql(ctx, tm.subject_map)
+        entries, roms = self._entries(ctx, tm)
+        if self.fuse_projections and entries:
+            parts = self._fused(frame, subj, subj_null, entries)
+        else:
+            parts = [self._branch(frame, subj, subj_null, *e)
+                     for e in entries]
+        parts += [self._rom_triples(ctx, frame, subj, subj_null, *r)
+                  for r in roms]
+        return union_all(self.spark, parts)
+
+    @staticmethod
+    def _branch(frame: DataFrame, subj: str, subj_null: Optional[str],
+                pred: str, obj: str, graph: str, cond: Optional[str],
+                obj_null: Optional[str]) -> DataFrame:
+        """One entry as its own projection.  The null guards test the
+        leaves (term_null_sql): a row is dropped iff its subject or
+        object renders NULL, without rendering either twice."""
+        if cond is not None:
+            frame = frame.where(cond)
+        guards = [f"(NOT {n})" for n in (subj_null, obj_null)
+                  if n is not None]
+        if guards:
+            frame = frame.where(" AND ".join(guards))
+        return frame.selectExpr(f"{subj} AS subj", f"{pred} AS pred",
+                                f"{obj} AS obj", f"{graph} AS graph")
+
+    # -- compile-time duplicate-freeness (dedup elimination) ------------
+    def tm_distinct(self, tm: TriplesMap) -> bool:
+        """The TM alone provably emits no duplicate triple: one row is
+        one subject (no iterator or pushDown, a subject unique per row
+        by the tier's ``subject_unique``), no named graphs (quads
+        multiply per (s, p, o)), constant IRI predicates, every object
+        slot single-valued (``_slot_ok``) and every ROM of multiplicity
+        one per row (``_rom_ok``), and a predicate emitted twice only
+        with pairwise-distinct constant objects."""
+        ls = tm.logical_source
+        if ls.iterator or ls.pushdowns or tm.graph_maps \
+                or not self.subject_unique(tm):
+            return False
+        by_pred: dict = {NS.RDF_TYPE: [("iri", cls)
+                                       for cls in tm.class_uris]}
+        for pom in tm.predicate_object_maps:
+            if pom.graph_maps:
+                return False
+            for pm in pom.predicate_maps:
+                if pm.kind != CONSTANT or pm.constant is None \
+                        or pm.constant[0] != "iri":
+                    return False
+                sigs = by_pred.setdefault(pm.constant[1], [])
+                for om in pom.object_maps:
+                    if not self._slot_ok(om):
+                        return False
+                    # None: a per-row value, which may equal another's
+                    sigs.append(tuple(om.constant) if om.kind == CONSTANT
+                                and om.constant is not None else None)
+                for rom in pom.ref_object_maps:
+                    if not self._rom_ok(rom):
+                        return False
+                    sigs.append(None)
+        return all(len(sigs) < 2 or (None not in sigs
+                                     and len(set(sigs)) == len(sigs))
+                   for sigs in by_pred.values())
+
+
+def provably_distinct(tms, tm_distinct) -> bool:
+    """True when the triples maps ``tms`` together provably emit no
+    duplicate triple, so the dedup exchange can be skipped — the
+    compile-time counterpart of the reference's Jena-set semantics (it
+    needs a Model because it cannot prove this; we can, from
+    xrr:uniqueRef + constant predicates + single-valued slots).  Each TM
+    by ``tm_distinct`` (its tier's CatalystCompiler.tm_distinct); every
+    pair of TMs with disjoint subject spaces (distinct term types, or
+    neither fixed prefix a prefix of the other) or disjoint constant
+    predicate sets."""
+    from .rewrite import tm_pred_iris
+    tms = list(tms)
+    if not all(tm_distinct(tm) for tm in tms):
+        return False
+    infos = [(subject_space(tm), tm_pred_iris(tm)) for tm in tms]
+    for i, (sp_a, pr_a) in enumerate(infos):
+        for sp_b, pr_b in infos[i + 1:]:
+            if subject_spaces_disjoint(sp_a, sp_b):
+                continue
+            if pr_a is not None and pr_b is not None and not (pr_a & pr_b):
+                continue
+            return False
+    return True
+
+
+class NativeCompiler(CatalystCompiler):
+    """The tabular tier: leaves are the columns of a table or SQL
+    query."""
+
+    # R2RML natural mapping, the reference's DatatypeMapper
+    # (MorphRDBDataTranslator.scala:59-74)
+    NATURAL_XSD = {
+        T.IntegerType: NS.XSD_INTEGER, T.LongType: NS.XSD_INTEGER,
+        T.ShortType: NS.XSD_INTEGER, T.ByteType: NS.XSD_INTEGER,
+        T.DoubleType: NS.XSD + "double", T.FloatType: NS.XSD + "double",
+        T.DecimalType: NS.XSD_DECIMAL, T.BooleanType: NS.XSD_BOOLEAN,
+        T.TimestampType: NS.XSD_DATETIME, T.TimestampNTZType: NS.XSD_DATETIME,
+        T.DateType: NS.XSD + "date",
+    }
+    TERM_KINDS = (CONSTANT, COLUMN, TEMPLATE)
 
     def __init__(self, spark: SparkSession, mapping: MappingDocument,
                  tables: dict[str, DataFrame],
                  cfg: Optional[EngineConfig] = None,
                  fuse_projections: bool = True,
                  tm_row_filters: Optional[dict] = None):
-        """fuse_projections: True → ONE scan per TM (explode over an array of
-        (pred, obj) structs) — best for materialization throughput.
-        False → one union branch per predicate-object map with a CONSTANT
-        pred per branch, which lets Catalyst constant-fold away branches
-        that a downstream pred filter can't match — best when querying the
-        un-materialized pipeline (SPARQL over the plan).
+        """fuse_projections: True → ONE projection per TM (index explode
+        + CASE) — best for materialization throughput.  False → one
+        union branch per entry with a CONSTANT pred — best when querying
+        the un-materialized pipeline (SPARQL over the plan).
 
         tm_row_filters: {tm_name: [ {col: constraint, ...}, ... ]} —
         OR-of-conjunctions row constraints derived by rewrite.py's
@@ -270,15 +578,10 @@ class NativeCompiler:
         ('cmp', ((op, num), ...)) numeric predicates, or
         ('lexpat', kind, pat) STRSTARTS/STRENDS/CONTAINS mirrors — see
         _constraint_sql."""
-        check_sql_text_conf(spark)
-        self.spark = spark
-        self.mapping = mapping
+        super().__init__(spark, mapping, cfg, fuse_projections)
         self.tables = tables
-        self.cfg = cfg or EngineConfig()
-        self.fuse_projections = fuse_projections
         self.tm_row_filters = tm_row_filters or {}
 
-    # -- term expressions ----------------------------------------------
     def _source_df(self, tm: TriplesMap) -> DataFrame:
         ls = tm.logical_source
         if ls.kind == "table":
@@ -288,285 +591,63 @@ class NativeCompiler:
         # rr:sqlQuery over registered temp views
         return self.spark.sql(ls.value)
 
-    def term_null_cond(self, m: TermMap) -> Optional[Column]:
-        """Column form of term_null_cond_sql (None = never NULL)."""
-        sql = self.term_null_cond_sql(m)
-        return None if sql is None else F.expr(sql)
-
-    @staticmethod
-    def term_null_cond_sql(m: TermMap) -> Optional[str]:
-        """Cheap per-row condition equivalent to ``term_expr(m).isNull()``
-        — evaluated on the RAW source columns, so the null-guard filter
-        does not have to build (and throw away) the rendered term string.
-        None = the term is provably never NULL.
-
-        Exactness: a CONSTANT term is never null; a COLUMN term is null
-        iff the column is null (lexical_sql maps NULL to NULL for every
-        type); a TEMPLATE term is null iff EVERY group is null (NULL
-        groups render '', only the all-null row is dropped) — mirroring
-        term_expr's all_null condition exactly."""
-        if m.kind == CONSTANT:
-            return None
-        if m.kind == COLUMN:
-            return f"({sql_ident(m.column)} IS NULL)"
-        if m.kind == TEMPLATE:
-            conds = [f"({sql_ident(g)} IS NULL)"
-                     for g in get_template_groups(m.template)]
-            if not conds:
-                return None          # group-less template: constant text
-            return "(" + " AND ".join(conds) + ")"
-        raise ValueError(f"term map kind {m.kind} not native-compilable")
-
-    def term_expr(self, df: DataFrame, m: TermMap) -> Column:
-        """Term map → Column producing the term (NULL → no triple).
-
-        Internally composed as ONE SQL string parsed by a single
-        F.expr call — the Column-DSL build of the same tree costs one
-        py4j round trip per operator (~90 for one percent-encoding
-        chain; ~0.7 s of driver time per kg_tpch build, profiled).
-        Unresolved column references resolve by name exactly as the
-        F.col-based build did (the ROM join relies on that)."""
-        return F.expr(self.term_expr_sql(df, m))
-
-    def term_expr_sql(self, df: DataFrame, m: TermMap) -> str:
-        """term_expr as SQL text (the single source of truth)."""
-        tt = m.infer_term_type()
-        if m.kind == CONSTANT:
-            c = m.constant
-            if c[0] == "iri":
-                return iri_term_sql(sql_lit(c[1]))
-            if c[0] == "bnode":
-                return sql_lit(f"_:{c[1]}")
-            return literal_term_sql(sql_lit(c[1]), m.datatype or c[2],
-                                    m.language or c[3])
-        if m.kind == COLUMN:
-            raw = _col_lexical_sql(df, m.column)
-            if tt == NS.RR_IRI:
-                iri = raw
-                if isinstance(df.schema[m.column].dataType, T.StringType):
-                    # createIRI trims unconditionally (translate.py:331)
-                    iri = strip_ws_sql(iri)
-                    if self.cfg.encode_unsafe_chars_in_uri:
-                        # whole-IRI encodeURI: URL-UNSAFE chars only —
-                        # ':' '/' etc. stay (the reserved-chars encoder
-                        # is for TEMPLATE GROUP content, not column
-                        # IRIs; translate.py:330-333)
-                        iri = encode_url_sql(iri)
-                return iri_term_sql(iri)
-            dtype = m.datatype or (natural_datatype(df.schema[m.column].dataType)
-                                   if self.cfg.infer_datatypes and not m.language
-                                   else None)
-            val = raw
-            if self.cfg.literal_trim:
-                val = strip_ws_sql(val)
-            if isinstance(df.schema[m.column].dataType, T.StringType):
-                val = encode_literal_sql(val, self.cfg.encode_literal_quotes)
-            return literal_term_sql(val, dtype, m.language)
-        if m.kind == TEMPLATE:
-            return self._template_expr_sql(df, m, tt)
-        raise ValueError(f"term map kind {m.kind} not native-compilable")
-
-    def _template_expr_sql(self, df: DataFrame, m: TermMap, tt: str) -> str:
-        groups = get_template_groups(m.template)
-        # split the template on the groups to get fixed segments
-        segments = []
-        rest = m.template
-        for g in groups:
-            fixed, _, rest = rest.partition("{" + g + "}")
-            segments.append(fixed)
-        # the Python tier applies encodeURI over the WHOLE expanded IRI
-        # (_make_term, translate.py:332-333); group content is already
-        # reserved-encoded (a superset of the URL-unsafe set), so the
-        # whole-string pass only ever touches the FIXED segments —
-        # encode them at compile time
-        def fix(seg: str) -> str:
-            if tt == NS.RR_IRI and self.cfg.encode_unsafe_chars_in_uri:
-                return encode_url(seg)
-            return seg
-
-        parts: list[str] = []
-        col_exprs: list[str] = []
-        for seg, g in zip(segments, groups):
-            if seg:
-                parts.append(sql_lit(fix(seg)))
-            raw = _col_lexical_sql(df, g)
-            if tt == NS.RR_IRI and self.cfg.encode_unsafe_chars_in_db_values \
-                    and isinstance(df.schema[g].dataType, T.StringType):
-                raw = encode_reserved_sql(raw)
-            col_exprs.append(raw)
-            # NULL column value contributes '' (MorphRDBDataTranslator.scala:357-372)
-            parts.append(f"coalesce({raw}, '')")
-        if rest:
-            parts.append(sql_lit(fix(rest)))
-        expanded = f"concat({', '.join(parts)})"
-        # all-groups-NULL → no term
-        if col_exprs:
-            all_null = " AND ".join(f"({ce} IS NULL)" for ce in col_exprs)
-            expanded = f"(CASE WHEN {all_null} THEN NULL ELSE {expanded} END)"
-        if tt == NS.RR_IRI:
-            return iri_term_sql(expanded)
-        if tt == NS.RR_BLANKNODE:
-            # format_bnode applies encodeURI unconditionally over the
-            # whole id (translate.py:336) — groups included, since bnode
-            # groups get no reserved-encoding pass
-            return f"concat('_:', {encode_url_sql(expanded)})"
-        # createLiteral trims and encodes the whole expanded value
-        # (translate.py _make_term), fixed segments included
-        if self.cfg.literal_trim:
-            expanded = strip_ws_sql(expanded)
-        return literal_term_sql(
-            encode_literal_sql(expanded, self.cfg.encode_literal_quotes),
-            m.datatype, m.language)
-
-    # -- triples map compilation ----------------------------------------
-    def tm_triples(self, tm: TriplesMap) -> DataFrame:
-        """ONE scan per triples map: every (predicate, object) projection
-        becomes an element of an array of structs exploded over the scan —
-        the compile-time analogue of the reference's self-union
-        elimination (AbstractQueryAtomicMongo.scala:331-349): N predicate-
-        object maps cost one pass over the source, not N."""
+    def scan(self, tm: TriplesMap):
+        """The TM's rows, row filters applied; the row context is the
+        frame itself."""
         df = self._source_df(tm)
         flt = self.tm_row_filters.get(tm.name)
         if flt:
             df = df.where(self._constraint_sql(df, flt))
-        # every expression below is composed as SQL TEXT and parsed in
-        # one call per projection/filter (see the module's SQL-text
-        # builders: the Column-DSL build pays a py4j round trip per
-        # operator)
-        subj_sql = self.term_expr_sql(df, tm.subject_map)
+        return df, df
 
-        # named graphs (R2RML §9/xR2RML quads): each class triple lands
-        # in the subject map's graphs, each POM triple in subject ∪ POM
-        # graphs; empty set = the default graph (NULL) — same expansion
-        # as the document tier (translate.py:419-452, quad combination).
-        # A NON-CONSTANT graph map can render NULL per row: the Python
-        # tier drops that graph from the row's list and falls back to
-        # the default graph only when EVERY render is null — mirrored
-        # here with per-variant row conditions (constant graph maps fold
-        # to unconditional variants)
-        sub_gs = [self.term_expr_sql(df, gm) for gm in tm.graph_maps]
-        sub_kinds = [gm.kind for gm in tm.graph_maps]
+    @staticmethod
+    def leaf(df: DataFrame, ref: str) -> tuple[str, T.DataType]:
+        return sql_ident(ref), df.schema[ref].dataType
 
-        def graph_variants(gsqls: list, kinds: list
-                           ) -> list[tuple[str, Optional[str]]]:
-            """[(graph sql, row condition sql | None)] per quad-
-            combination semantics over this POM's graph-map renders."""
-            if not gsqls:
-                return [(NULL_G, None)]
-            if all(k == CONSTANT for k in kinds):
-                return [(g, None) for g in gsqls]
-            out = [(g, f"({g} IS NOT NULL)") for g in gsqls]
-            allnull = " AND ".join(f"({g} IS NULL)" for g in gsqls)
-            out.append((NULL_G, f"({allnull})"))
-            return out
+    def subject_unique(self, tm: TriplesMap) -> bool:
+        return subject_renders_unique(tm, self._source_df(tm))
 
-        rdf_type = iri_term_sql(sql_lit(NS.RDF_TYPE))
-        po_trips: list[tuple] = []
-        cond_parts: list[DataFrame] = []
-        sub_variants = graph_variants(sub_gs, sub_kinds)
+    @staticmethod
+    def _slot_ok(om: TermMap) -> bool:
+        return True                  # is_tabular_compilable admits only these
 
-        # CHEAP null guards (r7): the produced triple set is unchanged —
-        # a row is dropped iff its subject/object term renders NULL — but
-        # the guard tests the RAW source columns instead of
-        # isNotNull(<rendered term string>), so the filter no longer
-        # builds every term string a second time just to check nullness
-        subj_nn = self.term_null_cond_sql(tm.subject_map)
+    def _rom_ok(self, rom) -> bool:
+        """Multiplicity one per child row: a join condition on a
+        declared-unique parent key."""
+        parent = self.mapping.triples_maps[rom.parent_tm]
+        puniq = set(parent.logical_source.unique_refs)
+        return any(jc.parent_ref in puniq for jc in rom.join_conditions)
 
-        def guards(frame: DataFrame, obj_nn: Optional[str]) -> DataFrame:
-            conds = []
-            if subj_nn is not None:
-                conds.append(f"(NOT {subj_nn})")
-            if obj_nn is not None:
-                conds.append(f"(NOT {obj_nn})")
-            if not conds:
-                return frame
-            return frame.where(" AND ".join(conds))
+    def _fused(self, df: DataFrame, subj: str, subj_null: Optional[str],
+               entries: list) -> list:
+        """Explode a flat INDEX over the scan and pick each row's (pred,
+        obj, graph) with a CASE — one output string per produced row
+        instead of an array of N pre-built structs per source row (~10%
+        off the translate stage at 33M triples).  Entries under a
+        per-row graph condition stay branches."""
+        flat = [e for e in entries if e[3] is None]
+        conditional = [e for e in entries if e[3] is not None]
+        if len(flat) < 2:
+            return [self._branch(df, subj, subj_null, *e)
+                    for e in flat + conditional]
+        base = df.selectExpr(
+            "*", f"explode(sequence(0, {len(flat) - 1})) AS _i")
 
-        def sel(frame: DataFrame, pred: str, obj: str, gc: str) -> DataFrame:
-            return frame.selectExpr(
-                f"{subj_sql} AS subj", f"{pred} AS pred",
-                f"{obj} AS obj", f"{gc} AS graph")
+        def case_over(vals) -> str:
+            whens = " ".join(f"WHEN _i = {i} THEN {v}"
+                             for i, v in enumerate(vals))
+            return f"(CASE {whens} END)"
 
-        def emit(pred: str, obj: str, gc: str, cond: Optional[str],
-                 obj_nn: Optional[str]) -> None:
-            if cond is None:
-                po_trips.append((pred, obj, gc, obj_nn))
-            else:
-                cond_parts.append(
-                    sel(guards(df.where(cond), obj_nn),
-                        pred, obj, gc))
-
-        for cls in tm.class_uris:
-            for gc, cond in sub_variants:
-                emit(rdf_type, iri_term_sql(sql_lit(cls)), gc, cond,
-                     None)
-
-        rom_parts: list[DataFrame] = []
-        for pom in tm.predicate_object_maps:
-            gvars = graph_variants(
-                sub_gs + [self.term_expr_sql(df, gm)
-                          for gm in pom.graph_maps],
-                sub_kinds + [gm.kind for gm in pom.graph_maps])
-            pred_sqls = [self.term_expr_sql(df, pm)
-                         for pm in pom.predicate_maps]
-            for pred in pred_sqls:
-                for om in pom.object_maps:
-                    for gc, cond in gvars:
-                        emit(pred, self.term_expr_sql(df, om), gc, cond,
-                             self.term_null_cond_sql(om))
-                for rom in pom.ref_object_maps:
-                    for gc, cond in gvars:
-                        rom_parts.append(self._rom_triples(
-                            df.where(cond) if cond is not None else df,
-                            subj_sql, pred, rom, gc, subj_nn))
-
-        parts: list[DataFrame] = []
-        if po_trips and (self.fuse_projections and len(po_trips) > 1):
-            # fused: explode a flat INDEX and pick the (pred, obj, graph)
-            # triple with a CASE — one output string per produced row,
-            # instead of materializing an array of N pre-built structs
-            # per source row (same strings, minus the array/struct
-            # wrappers — ~10% off the translate stage at 33M triples)
-            base = df.selectExpr(
-                "*", f"explode(sequence(0, {len(po_trips) - 1})) AS _i")
-
-            def case_over(vals: list[str]) -> str:
-                whens = " ".join(f"WHEN _i = {i} THEN {v}"
-                                 for i, v in enumerate(vals))
-                return f"(CASE {whens} END)"
-
-            pred_c = case_over([p for p, _o, _gc, _nn in po_trips])
-            obj_c = case_over([o for _p, o, _gc, _nn in po_trips])
-            # graph-less mapping (the common case): keep the constant
-            # NULL instead of a per-row CASE over the index
-            all_default = all(gc == NULL_G for _p, _o, gc, _nn in po_trips)
-            graph_c = NULL_G if all_default else case_over(
-                [gc for _p, _o, gc, _nn in po_trips])
-            objnull_c: Optional[str] = None
-            if any(nn is not None for _p, _o, _gc, nn in po_trips):
-                objnull_c = case_over(
-                    [nn if nn is not None else "false"
-                     for _p, _o, _gc, nn in po_trips])
-            base = guards(base, objnull_c)
-            parts.append(base.selectExpr(
-                f"{subj_sql} AS subj", f"{pred_c} AS pred",
-                f"{obj_c} AS obj", f"{graph_c} AS graph"))
-        elif po_trips:
-            # unfused: one branch per (pred, obj, graph) with constant
-            # preds — prunable by downstream pattern filters
-            for p, o, gc, nn in po_trips:
-                parts.append(sel(guards(df, nn), p, o, gc))
-        parts.extend(cond_parts)
-        parts.extend(rom_parts)
-        if not parts:
-            # a subject-only TM (no class, no predicate-object map) emits
-            # no triples — R2RML generates rows only per POM/class
-            from .engine import TRIPLE_SCHEMA
-            return self.spark.createDataFrame([], TRIPLE_SCHEMA)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        preds, objs, graphs, _conds, obj_nulls = zip(*flat)
+        # graph-less mapping (the common case): keep the constant NULL
+        # instead of a per-row CASE over the index
+        graph = NULL_G if all(g == NULL_G for g in graphs) \
+            else case_over(graphs)
+        obj_null = None if all(n is None for n in obj_nulls) \
+            else case_over([n or "false" for n in obj_nulls])
+        return [self._branch(base, subj, subj_null, case_over(preds),
+                             case_over(objs), graph, None, obj_null)] \
+            + [self._branch(df, subj, subj_null, *e) for e in conditional]
 
     @staticmethod
     def _term_source_columns(m: TermMap) -> list[str]:
@@ -613,8 +694,9 @@ class NativeCompiler:
             return False
         return True
 
-    def _rom_triples(self, child_df: DataFrame, subj: str, pred: str,
-                     rom, graph: str, subj_nn: Optional[str]) -> DataFrame:
+    def _rom_triples(self, _ctx, child_df: DataFrame, subj: str,
+                     subj_nn: Optional[str], pred: str, rom, graph: str,
+                     cond: Optional[str]) -> DataFrame:
         """Referencing object map = equi-join child×parent on the join
         columns; the reference generates a SQL LEFT JOIN
         (MorphRDBUnfolder.scala:284-320) — inner join is equivalent for
@@ -626,17 +708,19 @@ class NativeCompiler:
         ~8-byte keys instead of ~70 bytes of pre-built IRI text per row.
         When the parent subject is keyed exactly by the join column the
         join itself collapses to a left_semi existence probe
-        (_parent_subj_from_child_key).  ``subj``, ``pred``, ``graph`` and
-        ``subj_nn`` (the child subject's null condition) are SQL text."""
+        (_parent_subj_from_child_key).  ``subj``, ``pred``, ``graph``,
+        ``subj_nn`` (the child subject's null condition) and the row
+        condition ``cond`` are SQL text."""
         if not rom.join_conditions:
             # zero join conditions: the reference's intersection of zero
             # term sets is empty — never a cross product
-            from .engine import TRIPLE_SCHEMA
-            return self.spark.createDataFrame([], TRIPLE_SCHEMA)
+            return union_all(self.spark, [])
         parent_tm = self.mapping.triples_maps[rom.parent_tm]
         pdf = self._source_df(parent_tm)
         pcols = [jc.parent_ref for jc in rom.join_conditions]
         ccols = [jc.child_ref for jc in rom.join_conditions]
+        if cond is not None:
+            child_df = child_df.where(cond)
         if subj_nn is not None:
             # cheap child-subject null guard BEFORE the join: same rows
             # dropped as the old isNotNull(<rendered subj>) post-filter,
@@ -648,18 +732,17 @@ class NativeCompiler:
             parent_keys = pdf.select(F.col(pcols[0]).alias(ccols[0]))
             kept = child_df.join(parent_keys, ccols[0], "left_semi") \
                            .withColumn(pcols[0], F.col(ccols[0]))
-            key_obj = self.term_expr_sql(kept, parent_tm.subject_map)
+            key_obj = self.term_sql(kept, parent_tm.subject_map)
             return kept.selectExpr(f"{subj} AS subj", f"{pred} AS pred",
                                    f"{key_obj} AS obj", f"{graph} AS graph")
 
-        parent_nn = self.term_null_cond_sql(parent_tm.subject_map)
+        parent_nn = self.term_null_sql(pdf, parent_tm.subject_map)
         if parent_nn is not None:
             # null parent subjects can never produce a triple (the old
             # plan dropped them via isNotNull(obj) AFTER the join)
             pdf = pdf.where(f"(NOT {parent_nn})")
-        parent_subj = self.term_expr(pdf, parent_tm.subject_map)
         parent_sel = pdf.select(
-            parent_subj.alias("_psubj"),
+            F.expr(self.term_sql(pdf, parent_tm.subject_map)).alias("_psubj"),
             *[F.col(c).alias(f"_pk{i}") for i, c in enumerate(pcols)])
         # ship raw term-source columns through the exchange, not built
         # strings: the subj/pred expressions reference child columns by name
@@ -707,13 +790,11 @@ class NativeCompiler:
             return f"({_col_lexical_sql(df, col)} = {sql_lit(value)})"
 
         def rendered_lexical(col: str) -> str:
-            # the COLUMN-literal lexical pipeline of term_expr, mirrored
-            val = _col_lexical_sql(df, col)
-            if self.cfg.literal_trim:
-                val = strip_ws_sql(val)
-            if isinstance(df.schema[col].dataType, T.StringType):
-                val = encode_literal_sql(val, self.cfg.encode_literal_quotes)
-            return nt_escape_sql(val)
+            # the COLUMN-literal lexical of term_sql (rewrite.py leaves
+            # explicit xsd:dateTime/boolean columns unconstrained)
+            dtype = df.schema[col].dataType
+            return self.literal_lexical_sql(_col_lexical_sql(df, col),
+                                            dtype, None)
 
         def lex_eq(col: str, lex: str) -> str:
             dtype = df.schema[col].dataType
@@ -796,109 +877,6 @@ class NativeCompiler:
                                 for col, value in conj.items()
                                 if col in df.columns])
                        for conj in constraints]) if constraints else "true"
-
-    # -- compile-time uniqueness proof (dedup elimination) ---------------
-    def _subject_unique(self, tm: TriplesMap, df: DataFrame) -> bool:
-        return subject_renders_unique(tm, df)
-
-    def _tm_po_signatures(self, tm: TriplesMap):
-        """[(pred_iri, object_signature)] for the TM's per-row projections
-        (ROMs excluded), or None when a predicate is non-constant.  The
-        object signature is ('const', rendered) for constants and
-        ('expr', i) — unique per slot — otherwise."""
-        sigs = []
-        for cls in tm.class_uris:
-            sigs.append((NS.RDF_TYPE, ("const", "iri", cls)))
-        slot = 0
-        for pom in tm.predicate_object_maps:
-            preds = []
-            for pm in pom.predicate_maps:
-                if pm.kind != CONSTANT or pm.constant is None \
-                        or pm.constant[0] != "iri":
-                    return None
-                preds.append(pm.constant[1])
-            for p in preds:
-                for om in pom.object_maps:
-                    if om.kind == CONSTANT and om.constant is not None:
-                        sigs.append((p, ("const",) + tuple(om.constant)))
-                    else:
-                        sigs.append((p, ("expr", slot)))
-                    slot += 1
-        return sigs
-
-    def _tm_branches_distinct(self, tm: TriplesMap, df: DataFrame) -> bool:
-        """All of a TM's branches are duplicate-free and pairwise disjoint:
-        distinct subjects per row (unique key), and per-row (pred, obj)
-        slots that cannot collide (distinct constant preds, or the same
-        pred only with pairwise-distinct constant objects)."""
-        if not self._subject_unique(tm, df):
-            return False
-        sigs = self._tm_po_signatures(tm)
-        if sigs is None:
-            return False
-        by_pred: dict = {}
-        for p, sig in sigs:
-            by_pred.setdefault(p, []).append(sig)
-        rom_preds = []
-        for pom in tm.predicate_object_maps:
-            for pm in pom.predicate_maps:
-                for _rom in pom.ref_object_maps:
-                    rom_preds.append(pm.constant[1])
-                    by_pred.setdefault(pm.constant[1], []).append(
-                        ("rom", len(rom_preds)))
-        for p, entries in by_pred.items():
-            if len(entries) == 1:
-                continue
-            # same predicate twice: only provably disjoint when every
-            # entry is a constant object and all constants differ
-            if any(e[0] != "const" for e in entries):
-                return False
-            if len({e for e in entries}) != len(entries):
-                return False
-        # every ROM must have multiplicity exactly 1 per child row:
-        # single- or multi-condition join against a declared-unique
-        # parent key (the probe collapse implies this already)
-        for pom in tm.predicate_object_maps:
-            for rom in pom.ref_object_maps:
-                parent = self.mapping.triples_maps[rom.parent_tm]
-                puniq = set(parent.logical_source.unique_refs)
-                if not any(jc.parent_ref in puniq
-                           for jc in rom.join_conditions):
-                    return False
-        return True
-
-    def provably_distinct(self, tms) -> bool:
-        """True when the triples maps ``tms`` together provably emit no
-        duplicate triple, so the global dedup exchange can be skipped —
-        the compile-time counterpart of the reference's Jena-set semantics
-        (it needs a Model because it cannot prove this; we can, from
-        xrr:uniqueRef + constant predicates + single-valued columns).
-        Per-TM: subject unique per row and per-row slots disjoint
-        (_tm_branches_distinct).  Across TMs: pairwise disjoint subject
-        spaces (distinct term types, or neither fixed template prefix a
-        prefix of the other) or disjoint constant predicate sets."""
-        from .rewrite import tm_pred_iris
-        infos = []
-        for tm in tms:
-            if tm.graph_maps or any(pom.graph_maps
-                                    for pom in tm.predicate_object_maps):
-                # named graphs multiply quads per (s,p,o); the branch
-                # proofs below are triple-level -- keep the dedup
-                return False
-            df = self._source_df(tm)
-            if not self._tm_branches_distinct(tm, df):
-                return False
-            infos.append((subject_space(tm), tm_pred_iris(tm)))
-        for i in range(len(infos)):
-            for j in range(i + 1, len(infos)):
-                (sp_a, pr_a), (sp_b, pr_b) = infos[i], infos[j]
-                if subject_spaces_disjoint(sp_a, sp_b):
-                    continue
-                if pr_a is not None and pr_b is not None \
-                        and not (pr_a & pr_b):
-                    continue
-                return False
-        return True
 
 
 # ---------------------------------------------------------------------------

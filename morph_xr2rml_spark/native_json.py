@@ -12,7 +12,8 @@ headline corpus pipeline) only uses STATIC paths:
 
 Those compile to pure Catalyst: ONE from_json per source (schema inferred
 by sampling), explode for the iterator, native concat/encode chains for
-terms — whole-stage codegen, zero Python workers.  The JSON datatype →
+terms (native.CatalystCompiler's renderer, shared with the tabular tier)
+— whole-stage codegen, zero Python workers.  The JSON datatype →
 XSD mapping matches the document engine (long→xsd:integer,
 double→xsd:decimal, boolean→xsd:boolean —
 MorphMongoDataTranslator.scala:403-419), so both compilers emit identical
@@ -32,12 +33,11 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
 from . import namespaces as NS
-from .functions.templates import compile_template, get_template_groups
-from .model import (COLUMN, CONSTANT, REFERENCE, TEMPLATE, MappingDocument,
-                    TermMap, TriplesMap)
-from .native import (NULL_G, check_sql_text_conf, encode_literal_sql,
-                     encode_reserved_sql, encode_url_sql, iri_term_sql,
-                     lexical_sql, literal_term_sql, sql_lit, strip_ws_sql)
+from .functions.templates import get_template_groups
+from .model import (CONSTANT, REFERENCE, TEMPLATE, MappingDocument, TermMap,
+                    TriplesMap)
+from .native import (CatalystCompiler, lexical_sql, sql_lit,
+                     subject_renders_unique_schemaless, union_all)
 from .sources import SourceCatalog, mongo_filter_sql
 from .translate import EngineConfig
 
@@ -113,105 +113,6 @@ def compilable(tm: TriplesMap) -> bool:
 
 
 # ---------------------------------------------------------------------------
-# Compile-time duplicate-freeness (document tier, r6)
-# ---------------------------------------------------------------------------
-
-def provably_distinct_json(tms) -> bool:
-    """Document-tier twin of NativeCompiler.provably_distinct — tier-
-    independent (the proof is about mapping semantics: the same shapes
-    emit identically from the json-native and the Arrow document
-    compilers).  True when the triples maps ``tms`` together provably
-    emit no duplicate triple, so the global dedup exchange / the
-    evaluator's per-pattern dropDuplicates are compile-time no-ops.
-    Per TM:
-
-      - NO iterator and no logical-source pushDown (one row == one
-        document; under an iterator a subject repeats across items);
-      - subject unique per document (xrr:uniqueRef through a
-        single-group template — subject_renders_unique_schemaless);
-      - no referencing object maps, graph maps, nested maps,
-        collections, language references;
-      - every predicate a constant IRI and every object slot
-        single-valued (constant, or a STATIC non-wildcard reference /
-        template — a static path yields ONE value per document, arrays
-        render as their JSON dump);
-      - a predicate emitted twice only with pairwise-distinct constant
-        objects (two references under one predicate could hold equal
-        values → same triple).
-
-    Across TMs: pairwise-disjoint subject spaces or disjoint constant
-    predicate sets (mirrors the tabular proof).  Iterator mappings
-    (e.g. the lineitem example) correctly stay unprovable."""
-    from .native import (subject_renders_unique_schemaless, subject_space,
-                         subject_spaces_disjoint)
-    from .rewrite import tm_pred_iris
-
-    def om_sig(om):
-        """Object signature, or None = unprovable slot."""
-        if om.nested is not None or om.language_ref is not None \
-                or om.is_collection_type():
-            return None
-        if om.kind == CONSTANT and om.constant is not None:
-            return ("const",) + tuple(om.constant)
-        if om.kind == REFERENCE:
-            if _static_path(om.reference) is None:
-                return None
-            return ("ref", om.reference, om.datatype, om.language)
-        if om.kind == TEMPLATE:
-            groups = get_template_groups(om.template)
-            if any(_static_path(g) is None for g in groups):
-                return None
-            return ("tpl", om.template, om.datatype, om.language)
-        return None
-
-    infos = []
-    for tm in tms:
-        ls = tm.logical_source
-        if ls.iterator or ls.pushdowns:
-            return False
-        if not subject_renders_unique_schemaless(tm):
-            return False
-        if tm.graph_maps:
-            return False
-        by_pred: dict = {}
-        for cls in tm.class_uris:
-            by_pred.setdefault(NS.RDF_TYPE, []).append(("const", "iri", cls))
-        for pom in tm.predicate_object_maps:
-            if pom.graph_maps or pom.ref_object_maps:
-                return False
-            preds = []
-            for pm in pom.predicate_maps:
-                if pm.kind != CONSTANT or pm.constant is None \
-                        or pm.constant[0] != "iri":
-                    return False
-                preds.append(pm.constant[1])
-            for p in preds:
-                for om in pom.object_maps:
-                    sig = om_sig(om)
-                    if sig is None:
-                        return False
-                    by_pred.setdefault(p, []).append(sig)
-        for _p, entries in by_pred.items():
-            if len(entries) == 1:
-                continue
-            if any(e[0] != "const" for e in entries):
-                return False
-            if len(set(entries)) != len(entries):
-                return False
-        infos.append((subject_space(tm), tm_pred_iris(tm)))
-    for i in range(len(infos)):
-        for j in range(i + 1, len(infos)):
-            (sp_a, pr_a), (sp_b, pr_b) = infos[i], infos[j]
-            if sp_a is not None and sp_b is not None \
-                    and subject_spaces_disjoint(sp_a, sp_b):
-                continue
-            if pr_a is not None and pr_b is not None and not (pr_a & pr_b):
-                continue
-            return False
-    return True
-
-
-# ---------------------------------------------------------------------------
 # Schema inference by sampling
 # ---------------------------------------------------------------------------
 
@@ -283,7 +184,7 @@ def _tree_to_struct(tree: dict) -> T.StructType:
 # Answering-mode persist tracker
 # ---------------------------------------------------------------------------
 # The unfused (answering) plan persists each resolved, filtered source
-# (tm_base / _rom_triples), and the Python tier persists each ROM TM's
+# (JsonNativeCompiler.scan), and the Python tier persists each ROM TM's
 # child stage (engine.SparkMaterializer._tm_triples); both register here,
 # and ``cleanup()`` releases everything.  A long-lived session answering
 # many queries would otherwise accumulate executor storage.
@@ -343,32 +244,32 @@ def cleanup() -> int:
     return n
 
 
-class JsonNativeCompiler:
-    """Compile eligible triples maps into from_json/explode/concat plans."""
+class JsonNativeCompiler(CatalystCompiler):
+    """The json-native tier: leaves are static paths into the parsed
+    document (and the iterated item), typed by sampling."""
+
+    # JSON type → XSD, MorphMongoDataTranslator.scala:403-419
+    NATURAL_XSD = {T.LongType: NS.XSD_INTEGER, T.DoubleType: NS.XSD_DECIMAL,
+                   T.BooleanType: NS.XSD_BOOLEAN}
+    TERM_KINDS = (CONSTANT, REFERENCE, TEMPLATE)
 
     def __init__(self, spark: SparkSession, mapping: MappingDocument,
                  catalog: SourceCatalog, cfg: Optional[EngineConfig] = None,
                  sample_n: int = 200, fuse_projections: bool = True):
-        """fuse_projections mirrors NativeCompiler: True → ONE scan per TM
-        (explode over an array of (pred, obj, graph) structs) — best for
-        materialization throughput.  False → one union branch per
-        predicate-object entry with a CONSTANT pred per branch, which
-        lets Catalyst constant-fold away branches a downstream pattern's
-        pred filter can't match — the SPARQL evaluator's per-pattern
-        ``pred = <iri>`` then prunes every non-matching collection scan
-        (and its from_json parse) out of the plan entirely."""
-        check_sql_text_conf(spark)
-        self.spark = spark
-        self.mapping = mapping
+        """fuse_projections mirrors NativeCompiler: True → ONE projection
+        per TM (explode over an array of (pred, obj, graph) structs) —
+        best for materialization throughput.  False → one union branch
+        per entry with a CONSTANT pred, so the SPARQL evaluator's
+        per-pattern ``pred = <iri>`` prunes every non-matching
+        collection scan (and its from_json parse) out of the plan.
+
+        Schema sampling costs a driver-side collect() job per (source,
+        path-set): memoized in the catalog's schema_samples, keyed by the
+        needed-path set, so repeated queries over the same registered
+        data pay it once and mappings sharing a catalog never collide."""
+        super().__init__(spark, mapping, cfg, fuse_projections)
         self.catalog = catalog
-        self.cfg = cfg or EngineConfig()
         self.sample_n = sample_n
-        self.fuse_projections = fuse_projections
-        # schema sampling costs a driver-side collect() job per (source,
-        # path-set): memoized in the catalog's schema_samples so repeated
-        # queries over the same registered data pay it once, not once per
-        # compile.  The key carries the needed-path set, so different
-        # mappings sharing a catalog never collide.
 
     # -- schema ----------------------------------------------------------
     def _needed_paths(self, tm: TriplesMap) -> list[list[str]]:
@@ -515,89 +416,9 @@ class JsonNativeCompiler:
                     return lexical_sql(sql, dt), T.StringType()
         return _descend_sql(src_sql, src_schema, parts)
 
-    def _term_expr(self, tm: TriplesMap, root_sql: str,
-                   item_sql: Optional[str], m: TermMap) -> Column:
-        """Term map → Column, composed as ONE SQL string parsed by a
-        single F.expr (the Column-DSL build costs one py4j round trip
-        per operator — see native.py's SQL-text builders)."""
-        return F.expr(self._term_expr_sql(tm, root_sql, item_sql, m))
-
-    def _term_expr_sql(self, tm: TriplesMap, root_sql: str,
-                       item_sql: Optional[str], m: TermMap) -> str:
-        # leaves are SQL TEXT ("`_doc`" / "`_item`"): a Column here would
-        # silently interpolate its repr into the generated SQL
-        assert isinstance(root_sql, str), root_sql
-        assert item_sql is None or isinstance(item_sql, str), item_sql
-        tt = m.infer_term_type()
-        cfg = self.cfg
-        if m.kind == CONSTANT:
-            c = m.constant
-            if c[0] == "iri":
-                return sql_lit(f"<{c[1]}>")
-            if c[0] == "bnode":
-                return sql_lit(f"_:{c[1]}")
-            return literal_term_sql(sql_lit(c[1]), m.datatype or c[2],
-                                    m.language or c[3])
-        if m.kind == REFERENCE:
-            sql, dt = self._field_sql(tm, root_sql, item_sql, m.reference)
-            lex = lexical_sql(sql, dt)
-            is_str = isinstance(dt, T.StringType)
-            if tt == NS.RR_IRI:
-                # createIRI: trim + encodeUrl; numeric lexicals can't
-                # contain unsafe chars — keep the chain off the plan
-                if is_str:
-                    lex = strip_ws_sql(lex)
-                    if cfg.encode_unsafe_chars_in_uri:
-                        lex = encode_url_sql(lex)
-                return iri_term_sql(lex)
-            if is_str and cfg.literal_trim:
-                lex = strip_ws_sql(lex)
-            if is_str:
-                lex = encode_literal_sql(lex, cfg.encode_literal_quotes)
-            dtype = m.datatype
-            if dtype is None and m.language is None and cfg.infer_datatypes:
-                dtype = _mongo_xsd(dt)
-            return literal_term_sql(lex, dtype, m.language, escape=is_str)
-        if m.kind == TEMPLATE:
-            segs = compile_template(m.template)
-            groups = get_template_groups(m.template)
-            if tt == NS.RR_IRI and cfg.encode_unsafe_chars_in_uri:
-                # fixed segments are static: encode them at COMPILE time
-                # with the exact reference function; group values get the
-                # (superset) reserved-chars encoding below, making the
-                # runtime whole-string encodeUrl a provable no-op
-                from .functions.encoding import encode_url as _enc_url
-                segs = [_enc_url(s) for s in segs]
-            parts: list[str] = []
-            null_conds: list[str] = []
-            parts.append(sql_lit(segs[0]))
-            for i, g in enumerate(groups):
-                sql, dt = self._field_sql(tm, root_sql, item_sql, g)
-                lex = lexical_sql(sql, dt)
-                if isinstance(dt, T.StringType) and tt == NS.RR_IRI \
-                        and cfg.encode_unsafe_chars_in_db_values:
-                    lex = encode_reserved_sql(lex)
-                null_conds.append(f"({lex} IS NULL)")
-                parts.append(f"coalesce({lex}, '')")
-                parts.append(sql_lit(segs[i + 1]))
-            expanded = f"concat({', '.join(parts)})"
-            if null_conds:
-                all_null = " AND ".join(null_conds)
-                expanded = (f"(CASE WHEN {all_null} THEN NULL "
-                            f"ELSE {expanded} END)")
-            if tt == NS.RR_IRI:
-                return iri_term_sql(expanded)
-            if tt == NS.RR_BLANKNODE:
-                # format_bnode encodes the whole id (translate.py:336)
-                return f"concat('_:', {encode_url_sql(expanded)})"
-            # createLiteral trims and encodes the whole expanded value
-            # (translate.py _make_term), fixed segments included
-            if cfg.literal_trim:
-                expanded = strip_ws_sql(expanded)
-            return literal_term_sql(
-                encode_literal_sql(expanded, cfg.encode_literal_quotes),
-                m.datatype, m.language)
-        raise ValueError(f"not json-native compilable: {m.kind}")
+    def leaf(self, ctx, ref: str) -> tuple[str, T.DataType]:
+        tm, root_sql, item_sql = ctx
+        return self._field_sql(tm, root_sql, item_sql, ref)
 
     # -- triples map --------------------------------------------------------
     @staticmethod
@@ -624,9 +445,9 @@ class JsonNativeCompiler:
             f"from_json(content, {sql_lit(schema.json())}) END AS _doc",
             "_seq")
 
-    def tm_base(self, tm: TriplesMap) -> DataFrame:
-        """Scan → from_json → (explode) → fused (pred, obj) array explode.
-        Returns (subj, pred, obj, graph) plus join-key columns per ROM."""
+    def scan(self, tm: TriplesMap):
+        """Scan → from_json (→ explode the iterator); the row context is
+        (tm, parsed-doc SQL, item SQL or None)."""
         src, _pyf = self.catalog.resolve(tm.logical_source)
         if not self.fuse_projections:
             # answering mode emits one union branch per (pred, obj)
@@ -647,172 +468,106 @@ class JsonNativeCompiler:
             # raw registered source, so its limit(n).collect() stays an
             # incremental first-partition take, not this shuffle.
             src = track_persist(spread(src))
-        schema = self._schema_for(tm)
-        parsed = self._parse_select(src, schema)
-        root, item = "`_doc`", None
-        if tm.logical_source.iterator is not None:
-            it_parts = tm.logical_source.iterator[2:-2].split(".")
-            arr: Column = F.col("_doc")
-            for p in it_parts:
-                arr = arr[p]
-            parsed = parsed.select("_doc", "_seq",
-                                   F.explode(arr).alias("_item"))
-            item = "`_item`"
+        parsed = self._parse_select(src, self._schema_for(tm))
+        if tm.logical_source.iterator is None:
+            return parsed, (tm, "`_doc`", None)
+        arr: Column = F.col("_doc")
+        for p in tm.logical_source.iterator[2:-2].split("."):
+            arr = arr[p]
+        return (parsed.select("_doc", "_seq", F.explode(arr).alias("_item")),
+                (tm, "`_doc`", "`_item`"))
 
+    @staticmethod
+    def subject_unique(tm: TriplesMap) -> bool:
+        return subject_renders_unique_schemaless(tm)
 
-        # expressions composed as SQL TEXT, one parse per projection —
-        # see the SQL-text builders in native.py (a Column-DSL build pays
-        # one py4j round trip per operator)
-        subj_sql = self._term_expr_sql(tm, root, item, tm.subject_map)
-        rdf_type = sql_lit(f"<{NS.RDF_TYPE}>")
+    @staticmethod
+    def _slot_ok(om: TermMap) -> bool:
+        """A single-valued object slot: a constant, or a static
+        non-wildcard reference / template (a static path yields ONE
+        value per document; arrays render as their JSON dump)."""
+        if om.nested is not None or om.language_ref is not None \
+                or om.is_collection_type():
+            return False
+        if om.kind == CONSTANT:
+            return om.constant is not None
+        if om.kind == REFERENCE:
+            return _static_path(om.reference) is not None
+        if om.kind == TEMPLATE:
+            return all(_static_path(g) is not None
+                       for g in get_template_groups(om.template))
+        return False
 
-        # named graphs: subject ∪ POM target-graph union, NULL render
-        # drops the graph, all-null falls back to the default graph —
-        # identical to the Python tier's quad combination
-        # (translate.py:419-452) and the native tabular compiler
-        sub_gs = [self._term_expr_sql(tm, root, item, gm)
-                  for gm in tm.graph_maps]
-        sub_kinds = [gm.kind for gm in tm.graph_maps]
+    @staticmethod
+    def _rom_ok(rom) -> bool:
+        return False                 # document joins: no multiplicity proof
 
-        def graph_variants(gsqls, kinds):
-            if not gsqls:
-                return [(NULL_G, None)]
-            if all(k == CONSTANT for k in kinds):
-                return [(g, None) for g in gsqls]
-            out = [(g, f"({g} IS NOT NULL)") for g in gsqls]
-            allnull = " AND ".join(f"({g} IS NULL)" for g in gsqls)
-            out.append((NULL_G, f"({allnull})"))
-            return out
+    def _fused(self, parsed: DataFrame, subj: str, _subj_null,
+               entries: list) -> list:
+        """Every entry as an element of one (pred, obj, graph) struct
+        array exploded over the parsed rows — an index explode would
+        carry ``_doc``/``_item`` through the Generate once per triple.
+        A false graph condition nulls its element; the null filter after
+        the explode drops it."""
+        structs = []
+        for pred, obj, graph, cond, _obj_null in entries:
+            st = f"struct({pred} AS pred, {obj} AS obj, {graph} AS graph)"
+            structs.append(st if cond is None
+                           else f"(CASE WHEN {cond} THEN {st} END)")
+        fused = parsed.selectExpr(
+            f"{subj} AS subj", f"explode(array({', '.join(structs)})) AS _po")
+        return [fused.selectExpr("subj", "_po.pred AS pred", "_po.obj AS obj",
+                                 "_po.graph AS graph")
+                .where("subj IS NOT NULL AND obj IS NOT NULL")]
 
-        def entry(pred, obj, gc, cond):
-            s = f"struct({pred} AS pred, {obj} AS obj, {gc} AS graph)"
-            # a false condition nulls the array element; the obj-notnull
-            # filter below drops it after the explode
-            return s if cond is None else f"(CASE WHEN {cond} THEN {s} END)"
-
-        sub_variants = graph_variants(sub_gs, sub_kinds)
-        po_specs = []
-        for cls in tm.class_uris:
-            for gc, cond in sub_variants:
-                po_specs.append((rdf_type, sql_lit(f"<{cls}>"), gc, cond))
-        rom_selects = []
-        for pom in tm.predicate_object_maps:
-            gvars = graph_variants(
-                sub_gs + [self._term_expr_sql(tm, root, item, gm)
-                          for gm in pom.graph_maps],
-                sub_kinds + [gm.kind for gm in pom.graph_maps])
-            preds = [self._term_expr_sql(tm, root, item, pm)
-                     for pm in pom.predicate_maps]
-            for pred in preds:
-                for om in pom.object_maps:
-                    obj = self._term_expr_sql(tm, root, item, om)
-                    for gc, cond in gvars:
-                        po_specs.append((pred, obj, gc, cond))
-                for rom in pom.ref_object_maps:
-                    for gc, cond in gvars:
-                        rom_selects.append((pred, rom, gc, cond))
-        out_parts = []
-        if po_specs and (self.fuse_projections or len(po_specs) == 1):
-            po_entries = [entry(*spec) for spec in po_specs]
-            fused = parsed.selectExpr(
-                f"{subj_sql} AS subj",
-                f"explode(array({', '.join(po_entries)})) AS _po")
-            out_parts.append(fused.selectExpr(
-                "subj", "_po.pred AS pred", "_po.obj AS obj",
-                "_po.graph AS graph")
-                .where("subj IS NOT NULL AND obj IS NOT NULL"))
-        elif po_specs:
-            # unfused: one branch per (pred, obj, graph) entry — constant
-            # preds fold against downstream pattern filters, so only the
-            # branches a pattern can match keep their scan in the plan
-            for pred, obj, gc, cond in po_specs:
-                b = parsed if cond is None else parsed.where(cond)
-                out_parts.append(
-                    b.selectExpr(f"{subj_sql} AS subj", f"{pred} AS pred",
-                                 f"{obj} AS obj", f"{gc} AS graph")
-                     .where("subj IS NOT NULL AND obj IS NOT NULL"))
-        for pred, rom, gc, cond in rom_selects:
-            out_parts.append(self._rom_triples(
-                tm, parsed, root, item, subj_sql, pred, rom, gc, cond))
-        if not out_parts:
-            # subject-only TM (no class, no POM): R2RML emits rows only
-            # per POM/class — same as the tabular compiler
-            from .engine import TRIPLE_SCHEMA
-            return self.spark.createDataFrame([], TRIPLE_SCHEMA)
-        out = out_parts[0]
-        for p in out_parts[1:]:
-            out = out.unionByName(p)
-        return out
-
-    def _join_key(self, tm: TriplesMap, root_sql: str,
-                  item_sql: Optional[str], ref: str) -> str:
+    def _join_key(self, ctx, ref: str) -> str:
         """Join-key canonicalization matching translate.msp_join_keys
         (json.dumps of the raw scalar: strings quoted+escaped, booleans
         lowercase, numbers bare)."""
-        sql, dt = self._field_sql(tm, root_sql, item_sql, ref)
+        sql, dt = self.leaf(ctx, ref)
         if isinstance(dt, T.StringType):
             return f"concat('\"', {nt_escape_json_sql(sql)}, '\"')"
         return lexical_sql(sql, dt)
 
-    def _rom_triples(self, tm, parsed, root, item, subj: str, pred: str,
-                     rom, graph: str, cond: Optional[str]) -> DataFrame:
+    def _rom_triples(self, ctx, parsed: DataFrame, subj: str,
+                     subj_null: Optional[str], pred: str, rom, graph: str,
+                     cond: Optional[str]) -> DataFrame:
         """ROM triples by a join on canonical join keys; ``subj``,
-        ``pred``, ``graph`` and the row condition ``cond`` are SQL text."""
+        ``subj_null``, ``pred``, ``graph`` and the row condition ``cond``
+        are SQL text.  The parent must be json-native compilable too."""
         if not rom.join_conditions:
             # intersection of zero per-condition sets = empty (matches the
             # document engine / reference), never a cross product
-            from .engine import TRIPLE_SCHEMA
-            return self.spark.createDataFrame([], TRIPLE_SCHEMA)
+            return union_all(self.spark, [])
         parent_tm = self.mapping.triples_maps[rom.parent_tm]
-        # parent side must also be json-native compilable
-        psrc, _ = self.catalog.resolve(parent_tm.logical_source)
-        if not self.fuse_projections:
-            # same spread+reuse argument as the child source in tm_base
-            psrc = track_persist(spread(psrc))
-        pschema = self._schema_for(parent_tm)
-        pparsed = self._parse_select(psrc, pschema)
-        proot, pitem = "`_doc`", None
-        if parent_tm.logical_source.iterator is not None:
-            it_parts = parent_tm.logical_source.iterator[2:-2].split(".")
-            arr: Column = F.col("_doc")
-            for p in it_parts:
-                arr = arr[p]
-            pparsed = pparsed.select("_doc", "_seq",
-                                     F.explode(arr).alias("_item"))
-            pitem = "`_item`"
-        psubj = self._term_expr_sql(parent_tm, proot, pitem,
-                                    parent_tm.subject_map)
-        child_src = parsed if cond is None else parsed.where(cond)
-        child_sel = child_src.selectExpr(
+        pparsed, pctx = self.scan(parent_tm)
+        psubj_null = self.term_null_sql(pctx, parent_tm.subject_map)
+        # null subjects on either side never make a triple: drop them
+        # before the exchange
+        child = parsed if cond is None else parsed.where(cond)
+        if subj_null is not None:
+            child = child.where(f"(NOT {subj_null})")
+        if psubj_null is not None:
+            pparsed = pparsed.where(f"(NOT {psubj_null})")
+        child_sel = child.selectExpr(
             f"{subj} AS subj", f"{pred} AS pred", f"{graph} AS graph",
-            *[f"{self._join_key(tm, root, item, jc.child_ref)} AS _ck{i}"
+            *[f"{self._join_key(ctx, jc.child_ref)} AS _ck{i}"
               for i, jc in enumerate(rom.join_conditions)])
         parent_sel = pparsed.selectExpr(
-            f"{psubj} AS _psubj",
-            *[f"{self._join_key(parent_tm, proot, pitem, jc.parent_ref)}"
-              f" AS _pk{i}" for i, jc in enumerate(rom.join_conditions)])
+            f"{self.term_sql(pctx, parent_tm.subject_map)} AS _psubj",
+            *[f"{self._join_key(pctx, jc.parent_ref)} AS _pk{i}"
+              for i, jc in enumerate(rom.join_conditions)])
         jcond = None
         for i in range(len(rom.join_conditions)):
             c = F.col(f"_ck{i}") == F.col(f"_pk{i}")
             jcond = c if jcond is None else (jcond & c)
-        joined = child_sel.join(parent_sel, jcond)
-        return joined.select("subj", "pred",
-                             F.col("_psubj").alias("obj"), "graph") \
-                     .where(F.col("subj").isNotNull() & F.col("obj").isNotNull())
+        return child_sel.join(parent_sel, jcond).selectExpr(
+            "subj", "pred", "_psubj AS obj", "graph")
 
 
 # ---------------------------------------------------------------------------
 # helpers
 # ---------------------------------------------------------------------------
-
-def _schema_has(schema: T.DataType, parts: list[str]) -> bool:
-    dt = schema
-    for p in parts:
-        if not isinstance(dt, T.StructType) or p not in dt.fieldNames():
-            return False
-        dt = dt[p].dataType
-    return True
-
 
 def _descend_sql(base_sql: str, schema: T.DataType,
                  parts: list[str]) -> tuple[str, T.DataType]:
@@ -826,17 +581,6 @@ def _descend_sql(base_sql: str, schema: T.DataType,
         sql = f"{sql}.`" + p.replace("`", "``") + "`"
         dt = dt[p].dataType
     return sql, dt
-
-
-def _mongo_xsd(dt: T.DataType) -> Optional[str]:
-    """JSON type → XSD, matching MorphMongoDataTranslator.scala:403-419."""
-    if isinstance(dt, T.LongType):
-        return NS.XSD_INTEGER
-    if isinstance(dt, T.DoubleType):
-        return NS.XSD_DECIMAL
-    if isinstance(dt, T.BooleanType):
-        return NS.XSD_BOOLEAN
-    return None
 
 
 def nt_escape_json_sql(inner: str) -> str:

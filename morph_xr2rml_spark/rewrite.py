@@ -397,15 +397,14 @@ def invert_object_literal(mapping: MappingDocument, tm: TriplesMap,
                     continue
         # kind == 'lit': the engine prefix-matches '"lex"' — any
         # datatype/lang suffix is acceptable, only the lexical binds
-        if om.kind == COLUMN:
-            candidates.append({om.column: ("lexeq", lex)})
-        elif om.kind == REFERENCE:
+        if om.kind in (COLUMN, REFERENCE):
             if om.datatype in (NS.XSD_DATETIME, NS.XSD_BOOLEAN):
                 # normalize_datetime/boolean rewrite the lexical AFTER
                 # encoding — the render mirror would diverge
                 candidates.append(AMBIGUOUS)
             else:
-                candidates.append({om.reference: ("lexeq", lex)})
+                candidates.append({om.column or om.reference:
+                                   ("lexeq", lex)})
         elif om.kind == TEMPLATE:
             # the render trims and encodes the whole expanded value
             # (createLiteral), which no raw group equality inverts — no
@@ -446,18 +445,16 @@ def invert_object_lexpat(mapping: MappingDocument, tm: TriplesMap,
             continue
         for om in pom.object_maps:
             found = True
-            if om.kind == COLUMN \
-                    and om.infer_term_type() == NS.RR_LITERAL:
-                candidates.append({om.column: ("lexpat", kind, pat)})
-            elif om.kind == REFERENCE \
+            if om.kind in (COLUMN, REFERENCE) \
                     and om.infer_term_type() == NS.RR_LITERAL \
                     and om.datatype not in (NS.XSD_DATETIME,
                                             NS.XSD_BOOLEAN):
-                # document tier (r6): rendered-lexical pattern on the
-                # field, pushed as the internal $renderPat find()
-                # operator; dateTime/boolean normalizers rewrite the
-                # lexical post-encode, so those stay AMBIGUOUS
-                candidates.append({om.reference: ("lexpat", kind, pat)})
+                # rendered-lexical pattern on the column, or on the
+                # field as the internal $renderPat find() operator;
+                # dateTime/boolean normalizers rewrite the lexical
+                # post-encode, so those stay AMBIGUOUS
+                candidates.append({om.column or om.reference:
+                                   ("lexpat", kind, pat)})
             else:
                 candidates.append(AMBIGUOUS)
         for _rom in pom.ref_object_maps:

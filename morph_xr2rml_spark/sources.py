@@ -30,10 +30,10 @@ def mongo_filter_sql(filter_text: str, content_col: str) -> Optional[str]:
     column, or None if the filter uses operators or operands only the
     Python fallback evaluates.  Session-free, so routing decisions
     (native_json.compilable) use it directly.  Compiled: {},
-    {field: value}, {field: {$exists/$eq/$ne/$gt/$gte/$lt/$lte/$in: v}},
-    {$and/$or: [...]}, dotted paths and the internal pushdown operators
-    $lexIn, $renderIn, $renderPat, $numCmp — which covers every filter
-    in the reference's examples."""
+    {field: value}, {field: {$exists/$eq/$ne/$gt/$gte/$lt/$lte/$in: v}}
+    (equality on strings no other JSON value reads as:
+    _string_eq_lit), {$and/$or: [...]}, dotted paths and the internal
+    pushdown operators $lexIn, $renderIn, $renderPat, $numCmp."""
     try:
         spec = json.loads(normalize_filter_text(filter_text))
     except ValueError:
@@ -67,12 +67,15 @@ def _spec_sql(spec: dict, content: str) -> Optional[str]:
                 conds.extend(parts)
             else:
                 conds.append(or_sql(parts))
-        elif key.startswith("$") or _is_number(val):
-            return None         # numeric equality: see $eq below
+        elif key.startswith("$"):
+            return None
         else:
             x = f"get_json_object({content}, {sql_lit('$.' + key)})"
             if not isinstance(val, dict):
-                conds.append(f"({x} = {sql_lit(_json_scalar(val))})")
+                lit = _string_eq_lit(val)
+                if lit is None:
+                    return None
+                conds.append(f"({x} = {lit})")
                 continue
             num = f"try_cast({x} AS DOUBLE)"
             # the internal operators mirror the engine's numeric_value
@@ -85,13 +88,9 @@ def _spec_sql(spec: dict, content: str) -> Optional[str]:
                     conds.append(f"({x} IS NOT NULL)" if operand
                                  else f"({x} IS NULL)")
                 elif op in ("$eq", "$ne"):
-                    if _is_number(operand):
-                        # numeric equality is cross-representation in
-                        # Mongo/Python ({a:3} matches 3.0) but the
-                        # extracted lexical form is "3" vs "3.0" — only
-                        # the Python filter gets this right
+                    lit = _string_eq_lit(operand)
+                    if lit is None:
                         return None
-                    lit = sql_lit(_json_scalar(operand))
                     # $ne keeps documents where the field is MISSING
                     # (extracted NULL): a bare != would evaluate to NULL
                     # there and wrongly drop them
@@ -102,10 +101,10 @@ def _spec_sql(spec: dict, content: str) -> Optional[str]:
                         else str(operand)
                     conds.append(f"({num} {_CMP_SQL[op]} {rhs})")
                 elif op == "$in" and isinstance(operand, list):
-                    if any(_is_number(v) for v in operand):
+                    lits = [_string_eq_lit(v) for v in operand]
+                    if None in lits:
                         return None
-                    conds.append(_in_sql(x, [sql_lit(_json_scalar(v))
-                                             for v in operand]))
+                    conds.append(_in_sql(x, lits))
                 elif op == "$lexIn" and isinstance(operand, list):
                     # INTERNAL pushdown operator (rewrite.py): matches
                     # when the field's JSON lexical form is in the list
@@ -182,11 +181,16 @@ def _looks_numeric(s: str) -> bool:
         return False
 
 
-def _json_scalar(v) -> str:
-    """get_json_object returns the JSON lexical form of scalars."""
-    if isinstance(v, bool):
-        return "true" if v else "false"
-    return str(v)
+def _string_eq_lit(v) -> Optional[str]:
+    """SQL literal for a find() equality operand, or None when comparing
+    get_json_object text would not be Mongo's typed equality: only a
+    string whose text no number, boolean, null, object or array shares
+    compiles (number 7 and string "7" both read '7'; numeric equality
+    is also cross-representation, {a:3} matching 3.0)."""
+    if not isinstance(v, str) or v in ("true", "false", "null") \
+            or v[:1] in ("{", "[") or _looks_numeric(v):
+        return None
+    return sql_lit(v)
 
 
 class SourceCatalog:

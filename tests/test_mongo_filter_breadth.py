@@ -101,7 +101,8 @@ def test_python_native_parity_on_or(spark):
     """The same $or filter through the SQL predicate and the Python
     fallback must select the same documents."""
     import json
-    docs = [{"a": "x"}, {"b": "y"}, {"a": "z", "b": "y"}, {}, {"a": "y"}]
+    docs = [{"a": "x"}, {"b": "y"}, {"a": "z", "b": "y"}, {}, {"a": "y"}] \
+        + _TYPED_PROBE
     text = "{$or: [{a: 'x'}, {b: 'y'}]}"
     pyf = _f(text)
     want = sorted(json.dumps(d) for d in docs if pyf(d))
@@ -110,6 +111,41 @@ def test_python_native_parity_on_or(spark):
     col = mongo_filter_to_column(text, "content")
     got = sorted(r.content for r in df.where(col).collect())
     assert got == want
+
+
+# one value per JSON type whose get_json_object text collides with
+# another's: '7' (number 7, string "7"), 'true' (true, "true"), NULL
+# (null, missing field)
+_TYPED_PROBE = [{"a": 7}, {"a": "7"}, {"a": True}, {"a": "true"},
+                {"a": None}, {}]
+
+_EQUALITY_FILTERS = ["{a: 'x'}", "{a: 'y'}", "{a: {$eq: 'x'}}",
+                     "{a: {$ne: 'x'}}", "{a: {$in: ['x', 'z']}}",
+                     "{a: {$ne: 'y'}, b: 'y'}",
+                     # Python only: the text compare is not typed equality
+                     "{a: '7'}", "{a: true}", "{a: 'true'}", "{a: null}",
+                     "{a: {$eq: 7}}", "{a: {$ne: '7'}}", "{a: {$ne: null}}",
+                     "{a: {$in: ['x', '7']}}", "{a: {$in: ['x', false]}}",
+                     "{a: '[1]'}", "{a: {$eq: '{}'}}"]
+
+
+@pytest.mark.parametrize("text", _EQUALITY_FILTERS)
+def test_equality_filters_are_typed(spark, text):
+    """Scalar, $eq, $ne and $in equality compile to SQL only where
+    comparing get_json_object text is Mongo's typed equality, and then
+    select what mongo_filter.py selects."""
+    docs = [{"a": "x"}, {"b": "y"}, {"a": "z", "b": "y"}, {"a": "y"}] \
+        + _TYPED_PROBE
+    sql = mongo_filter_sql(text, "content")
+    assert (sql is None) == (_EQUALITY_FILTERS.index(text) >= 6), text
+    if sql is None:
+        return
+    df = spark.createDataFrame(
+        [(i, json.dumps(d)) for i, d in enumerate(docs)],
+        "i int, content string")
+    got = sorted(r.i for r in df.where(F.expr(sql)).collect())
+    pyf = _f(text)
+    assert got == [i for i, d in enumerate(docs) if pyf(d)], text
 
 
 def test_native_ok_parity_with_column_compiler():

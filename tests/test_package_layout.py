@@ -3,9 +3,10 @@ training-data operator suite nor the removed legacy bench harness,
 ``__spark_entry__`` pairs every query with an oracle, SPARQL answering
 has one entry point, one router picks every triples map's tier, only
 the router's ``api._routed_plan`` builds a whole-mapping plan,
-aggregate pushdown runs the evaluator's own SELECT tail, and the
+aggregate pushdown runs the evaluator's own SELECT tail, the
 Catalyst compilers and the find() compiler build expressions as SQL
-text only, with one find()-filter walker."""
+text only, with one find()-filter walker, and the two Catalyst tiers
+share one compiler core."""
 
 import ast
 import pathlib
@@ -238,3 +239,50 @@ def test_render_rules_are_sql_text_only():
     if len(walkers) != 1:
         bad.append(f"sources.py find() walkers: {walkers}")
     assert not bad, bad
+
+
+def _own_nodes(node):
+    """The AST nodes of a function outside the functions nested in it."""
+    for child in ast.iter_child_nodes(node):
+        if not isinstance(child, (ast.FunctionDef, ast.Lambda)):
+            yield child
+            yield from _own_nodes(child)
+
+
+def _pairwise_loop(fn) -> bool:
+    """A loop nested in a loop that tests subject-space disjointness,
+    in a function that also reads the TMs' predicate sets: the
+    cross-TM duplicate-freeness proof."""
+    own = list(_own_nodes(fn))
+    if not any(isinstance(c, ast.Call) and getattr(c.func, "id", None)
+               == "tm_pred_iris" for c in own):
+        return False
+    loops = [n for n in own if isinstance(n, ast.For)]
+    return any(inner is not outer and isinstance(inner, ast.For)
+               and any(isinstance(c, ast.Call)
+                       and getattr(c.func, "id", None)
+                       == "subject_spaces_disjoint"
+                       for c in ast.walk(inner))
+               for outer in loops for inner in ast.walk(outer))
+
+
+def test_compiler_core_is_written_once():
+    """graph_variants, the template render (the only SQL text building
+    a ``coalesce(`` per group) and the pairwise cross-TM proof loop each
+    have one definition in the package, nested functions included."""
+    graph_variants, template_renders, proof_loops = [], [], []
+    for path in _sources():
+        for fn in ast.walk(ast.parse(path.read_text(), str(path))):
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            where = f"{path.relative_to(ROOT)}:{fn.lineno}: {fn.name}"
+            if fn.name == "graph_variants":
+                graph_variants.append(where)
+            if any(isinstance(c, ast.Constant) and isinstance(c.value, str)
+                   and "coalesce(" in c.value for c in _own_nodes(fn)):
+                template_renders.append(where)
+            if _pairwise_loop(fn):
+                proof_loops.append(where)
+    assert len(graph_variants) == 1, graph_variants
+    assert len(template_renders) == 1, template_renders
+    assert len(proof_loops) == 1, proof_loops

@@ -177,19 +177,26 @@ def test_tm_offset_and_limit(spark):
     subs = sorted(r.subj for r in m.triples().collect())
     assert subs == ["<http://d/2>", "<http://d/3>", "<http://d/4>"]
     # the slice counts documents that pass the find() filter, whether the
-    # filter compiles to a Column ({v: "2"}) or runs in Python ({v: 2})
+    # filter compiles to a Column ({t: "z"}) or runs in Python ({v: 2})
     docs = spark.createDataFrame(
-        [(json.dumps({"id": i, "v": i % 3}),) for i in range(9)],
+        [(json.dumps({"id": i, "v": i % 3, "t": "xyz"[i % 3]}),)
+         for i in range(9)],
         "content string").coalesce(1)
     cat = SourceCatalog().register_collection("c", docs)
-    for flt in ("{v: '2'}", "{v: 2}"):
-        mapping = MappingDocument.from_text(SIMPLE_DOC_MAPPING.replace(
+
+    def doc_mapping(flt):
+        return MappingDocument.from_text(SIMPLE_DOC_MAPPING.replace(
             "db.docs.find({})", f"db.c.find({flt})"))
+
+    for flt in ("{t: 'z'}", "{v: 2}"):
         for kw, want in (({"tm_limit": 2}, ["<http://d/2>", "<http://d/5>"]),
                          ({"tm_offset": 1, "tm_limit": 1}, ["<http://d/5>"])):
-            m = SparkMaterializer(spark, mapping, cat, **kw)
+            m = SparkMaterializer(spark, doc_mapping(flt), cat, **kw)
             subs = sorted(r.subj for r in m.triples().collect())
             assert subs == want, (flt, kw)
+    # equality is typed, as in Mongo: the string '2' matches no number
+    m = SparkMaterializer(spark, doc_mapping("{v: '2'}"), cat, tm_limit=2)
+    assert m.triples().count() == 0
 
 
 def test_properties_offset_parsed():

@@ -19,7 +19,7 @@ import pytest
 from morph_xr2rml_spark.api import _routed_plan
 from morph_xr2rml_spark.examples import TPCH_KG_MAPPING, tpch_tables
 from morph_xr2rml_spark.model import MappingDocument
-from morph_xr2rml_spark.native import NativeCompiler
+from morph_xr2rml_spark.native import NativeCompiler, provably_distinct
 from morph_xr2rml_spark.rewrite import (_path_iris, derive_tm_constraints,
                                         invert_object)
 
@@ -46,7 +46,7 @@ def test_tpch_mapping_provably_distinct(spark):
     mapping = MappingDocument.from_text(TPCH_KG_MAPPING)
     tables = tpch_tables(spark, SF_DIR)
     c = NativeCompiler(spark, mapping, tables)
-    assert c.provably_distinct(mapping.triples_maps.values())
+    assert provably_distinct(mapping.triples_maps.values(), c.tm_distinct)
     df = tier_pool(spark, mapping, "native", tables)
     assert _plan_distinct(spark, mapping, tables)
     # the dedup exchange is a HashAggregate over the hash pair — the
@@ -75,7 +75,7 @@ def test_no_uniqueref_keeps_dedup(spark):
     mapping = MappingDocument.from_text(text)
     tables = tpch_tables(spark, SF_DIR)
     c = NativeCompiler(spark, mapping, tables)
-    assert not c.provably_distinct(mapping.triples_maps.values())
+    assert not provably_distinct(mapping.triples_maps.values(), c.tm_distinct)
     df = tier_pool(spark, mapping, "native", tables)
     assert not _plan_distinct(spark, mapping, tables)
     assert "Aggregate" in _physical_plan(df)
@@ -96,7 +96,7 @@ def test_duplicate_pred_blocks_proof(spark):
     """
     mapping = MappingDocument.from_text(text)
     c = NativeCompiler(spark, mapping, tpch_tables(spark, SF_DIR))
-    assert not c.provably_distinct(mapping.triples_maps.values())
+    assert not provably_distinct(mapping.triples_maps.values(), c.tm_distinct)
 
 
 def test_overlapping_subject_space_needs_disjoint_preds(spark):
@@ -117,13 +117,13 @@ def test_overlapping_subject_space_needs_disjoint_preds(spark):
     """
     mapping = MappingDocument.from_text(text)
     c = NativeCompiler(spark, mapping, tpch_tables(spark, SF_DIR))
-    assert not c.provably_distinct(mapping.triples_maps.values())
+    assert not provably_distinct(mapping.triples_maps.values(), c.tm_distinct)
     # same shape but DISTINCT predicates → disjoint, proof holds
     mapping2 = MappingDocument.from_text(text.replace(
         "rr:predicate ex:name; rr:objectMap [ rr:column \"n_comment\" ]",
         "rr:predicate ex:comment; rr:objectMap [ rr:column \"n_comment\" ]"))
     c2 = NativeCompiler(spark, mapping2, tpch_tables(spark, SF_DIR))
-    assert c2.provably_distinct(mapping2.triples_maps.values())
+    assert provably_distinct(mapping2.triples_maps.values(), c2.tm_distinct)
 
 
 def test_multi_group_template_proof(spark):
@@ -140,11 +140,11 @@ def test_multi_group_template_proof(spark):
     """
     tables = tpch_tables(spark, SF_DIR)
     amb = MappingDocument.from_text(base.replace("SEP", "-"))
-    assert not NativeCompiler(spark, amb, tables).provably_distinct(
-        amb.triples_maps.values())
+    assert not provably_distinct(amb.triples_maps.values(),
+                                 NativeCompiler(spark, amb, tables).tm_distinct)
     safe = MappingDocument.from_text(base.replace("SEP", "/"))
-    assert NativeCompiler(spark, safe, tables).provably_distinct(
-        safe.triples_maps.values())
+    assert provably_distinct(safe.triples_maps.values(),
+                             NativeCompiler(spark, safe, tables).tm_distinct)
 
 
 # ---------------------------------------------------------------------------

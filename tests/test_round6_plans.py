@@ -9,7 +9,7 @@ target query: AbstractQuery.limit, find().limit(n)
 MorphMongoDataSourceReader.scala:65-68; Catalyst's top-k does it one
 better once the exchange is gone).
 
-Json-native dedup elimination: provably_distinct_json extends the
+Json-native dedup elimination: the document tiers' tm_distinct extends the
 tabular dedup-elimination proof to no-iterator document mappings
 (xrr:uniqueRef subjects, constant distinct predicates, static
 single-valued object slots) — materialize_auto skips the global dedup
@@ -24,7 +24,8 @@ from morph_xr2rml_spark.examples import (LINEITEM_JSON_MAPPING,
                                          TPCH_KG_MAPPING, orderdocs_df,
                                          orderflat_catalog, tpch_tables)
 from morph_xr2rml_spark.model import MappingDocument
-from morph_xr2rml_spark.native_json import provably_distinct_json
+from morph_xr2rml_spark.native import provably_distinct
+from morph_xr2rml_spark.native_json import JsonNativeCompiler
 from morph_xr2rml_spark.sources import SourceCatalog
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -33,6 +34,12 @@ P = "PREFIX ex: <http://example.com/>\n"
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _doc_distinct(spark, mapping) -> bool:
+    """The document tiers' duplicate-freeness proof over every TM."""
+    jc = JsonNativeCompiler(spark, mapping, SourceCatalog())
+    return provably_distinct(mapping.triples_maps.values(), jc.tm_distinct)
 
 
 # ---------------------------------------------------------------------------
@@ -82,7 +89,7 @@ def test_point_query_no_exchange(spark):
 
 def test_doc_mapping_provably_distinct_skips_dedup(spark):
     mapping = MappingDocument.from_text(ORDERDOC_FLAT_MAPPING)
-    assert provably_distinct_json(mapping.triples_maps.values())
+    assert _doc_distinct(spark, mapping)
     df = materialize_auto(spark, mapping,
                           catalog=orderflat_catalog(spark, SF_DIR))
     plan = _plan(df)
@@ -104,7 +111,7 @@ def test_doc_dedup_elimination_matches_forced_dedup(spark):
 
 def test_iterator_mapping_stays_unprovable(spark):
     mapping = MappingDocument.from_text(LINEITEM_JSON_MAPPING)
-    assert not provably_distinct_json(mapping.triples_maps.values())
+    assert not _doc_distinct(spark, mapping)
     cat = SourceCatalog().register_collection(
         "orderdocs", orderdocs_df(spark, SF_DIR))
     df = materialize_auto(spark, mapping, catalog=cat)
@@ -192,13 +199,12 @@ def test_ask_through_answer_paths(spark):
     assert [r["ask"] for r in d.collect()] == [True]
 
 
-def test_no_uniqueref_stays_unprovable():
+def test_no_uniqueref_stays_unprovable(spark):
     text = ORDERDOC_FLAT_MAPPING.replace('; xrr:uniqueRef "$.ok"', "")
-    assert not provably_distinct_json(
-        MappingDocument.from_text(text).triples_maps.values())
+    assert not _doc_distinct(spark, MappingDocument.from_text(text))
 
 
-def test_same_pred_two_refs_stays_unprovable():
+def test_same_pred_two_refs_stays_unprovable(spark):
     # two references under ONE predicate could hold equal values →
     # identical triples are possible
     text = ORDERDOC_FLAT_MAPPING.replace(
@@ -206,18 +212,16 @@ def test_same_pred_two_refs_stays_unprovable():
         'rr:objectMap [ xrr:reference "$.ck" ] ];',
         'rr:predicateObjectMap [ rr:predicate ex:status; '
         'rr:objectMap [ xrr:reference "$.ck" ] ];')
-    assert not provably_distinct_json(
-        MappingDocument.from_text(text).triples_maps.values())
+    assert not _doc_distinct(spark, MappingDocument.from_text(text))
 
 
-def test_wildcard_object_stays_unprovable():
+def test_wildcard_object_stays_unprovable(spark):
     text = ORDERDOC_FLAT_MAPPING.replace('xrr:reference "$.ck"',
                                          'xrr:reference "$.ck.*"')
-    assert not provably_distinct_json(
-        MappingDocument.from_text(text).triples_maps.values())
+    assert not _doc_distinct(spark, MappingDocument.from_text(text))
 
 
-def test_overlapping_subject_spaces_stay_unprovable():
+def test_overlapping_subject_spaces_stay_unprovable(spark):
     # second TM rendering into the SAME subject space with an
     # overlapping predicate set → cross-TM duplicates possible
     extra = """
@@ -227,6 +231,73 @@ def test_overlapping_subject_spaces_stay_unprovable():
     rr:subjectMap [ rr:template "http://example.org/odoc/{$.ok}" ];
     rr:predicateObjectMap [ rr:predicate ex:status; rr:objectMap [ xrr:reference "$.st" ] ].
 """
-    assert not provably_distinct_json(
-        MappingDocument.from_text(ORDERDOC_FLAT_MAPPING + extra)
-        .triples_maps.values())
+    assert not _doc_distinct(
+        spark, MappingDocument.from_text(ORDERDOC_FLAT_MAPPING + extra))
+
+
+def test_except_all_over_deduplicated_output(spark):
+    """exceptAll over materialize_auto's deduplicated triples: the dedup
+    is an explicit aggregate, whose output attributes a later exceptAll
+    resolves (dropDuplicates on the hash pair failed here with
+    INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND)."""
+    mapping = MappingDocument.from_text(LINEITEM_JSON_MAPPING)
+    cat = SourceCatalog().register_collection(
+        "orderdocs", orderdocs_df(spark, SF_DIR))
+    full = materialize_auto(spark, mapping, catalog=cat)
+    assert "hashpartitioning" in _plan(full)    # the dedup runs
+    qty = full.where("pred = '<http://example.com/qty>'")
+    assert full.exceptAll(qty).count() == full.count() - qty.count()
+    assert full.exceptAll(full).count() == 0
+
+
+# distinct() of the routed plan, materialization and answering mode, for
+# every mapping in examples.py and the adversarial variants above — the
+# values the tier-specific proofs gave before the one shared proof:
+# name -> (examples mapping, (old, new) edit or None, distinct)
+_ODOC2 = """<#ODoc2>
+    a rr:TriplesMap;
+    xrr:logicalSource [ xrr:query "db.orderflat.find({})"; xrr:uniqueRef "$.ok" ];
+    rr:subjectMap [ rr:template "http://example.org/odoc/{$.ok}" ];
+    rr:predicateObjectMap [ rr:predicate ex:status; rr:objectMap [ xrr:reference "$.st" ] ].
+"""
+_DISTINCT_TABLE = {
+    "graph": ("GRAPH_KG_MAPPING", None, False),
+    "lang": ("LANG_KG_MAPPING", None, False),
+    "lineitem_json": ("LINEITEM_JSON_MAPPING", None, False),
+    "mixed": ("MIXED_KG_MAPPING", None, True),
+    "orderdoc_flat": ("ORDERDOC_FLAT_MAPPING", None, True),
+    "tpch": ("TPCH_KG_MAPPING", None, True),
+    "mixed_weak": ("MIXED_KG_MAPPING", ('; xrr:uniqueRef "$.ok"', ""),
+                   False),
+    "mixed_clash": ("MIXED_KG_MAPPING", ("http://example.org/odoc/{$.ok}",
+                                         "http://example.org/customer/"
+                                         "{$.ok}"), False),
+    "no_uniqueref": ("ORDERDOC_FLAT_MAPPING",
+                     ('; xrr:uniqueRef "$.ok"', ""), False),
+    "same_pred_two_refs": ("ORDERDOC_FLAT_MAPPING",
+                           ("ex:cust; rr:objectMap", "ex:status; "
+                            "rr:objectMap"), False),
+    "wildcard": ("ORDERDOC_FLAT_MAPPING",
+                 ('xrr:reference "$.ck"', 'xrr:reference "$.ck.*"'), False),
+    "overlap": ("ORDERDOC_FLAT_MAPPING", ("<#ODoc>", _ODOC2 + "<#ODoc>"),
+                False),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_DISTINCT_TABLE))
+def test_distinct_table(spark, name):
+    from morph_xr2rml_spark import examples
+    from morph_xr2rml_spark.api import _routed_plan
+    base, edit, want = _DISTINCT_TABLE[name]
+    text = getattr(examples, base)
+    if edit is not None:
+        assert edit[0] in text
+        text = text.replace(*edit)
+    catalog = orderflat_catalog(spark, SF_DIR) if "orderflat" in text \
+        else SourceCatalog().register_collection(
+            "orderdocs", orderdocs_df(spark, SF_DIR))
+    mapping = MappingDocument.from_text(text)
+    for constraints in (None, {}):
+        assert _routed_plan(spark, mapping, catalog,
+                            tpch_tables(spark, SF_DIR),
+                            constraints=constraints)[2]() is want
