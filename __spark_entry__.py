@@ -29,9 +29,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         # xR2RML materialization — native (tabular/R2RML) compiler
         "kg_tpch_triples": examples.kg_tpch_triples,
-        # xR2RML materialization — document compiler (iterator + pushDown +
-        # reference/template term maps over JSON, refobjectmap joins inside
-        # kg_tpch via native path)
+        # xR2RML materialization over JSON documents (iterator + pushDown +
+        # reference/template term maps) through materialize_auto, which
+        # routes the TM to the json-native compiler
         "kg_lineitem_json_triples": examples.kg_lineitem_json_triples,
     }
     for name in examples.SPARQL_QUERIES:

@@ -26,13 +26,14 @@ import json
 from typing import Iterator, Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import (ArrayType, IntegerType, LongType, StringType,
+from pyspark.sql.types import (IntegerType, LongType, StringType,
                                StructField, StructType)
 
-from .model import MappingDocument, TriplesMap, parse_mongo_query
+from .model import MappingDocument, TriplesMap
 from .mongo_filter import compile_filter, parse_filter
+from .native import union_all
 from .native_json import track_persist
-from .sources import SourceCatalog, mongo_filter_sql
+from .sources import SourceCatalog
 from .translate import CompiledTriplesMap, EngineConfig, expand_collection, \
     _compile_msp, CollTerm
 
@@ -119,38 +120,55 @@ def dedup_triples(df: DataFrame, exact: bool = False,
         *[F.any_value(c).alias(c) for c in df.columns]).drop("_h1", "_h2")
 
 
-def _make_child_fn(tm: TriplesMap, cfg: EngineConfig, rom_base: int,
-                   py_filter_text: Optional[str]):
+def _doc_reader(py_filter_text: Optional[str]):
+    """The one document walk of the Python tier, built once per task:
+    ``docs(contents)`` yields ``(row index, parsed document)`` for every
+    content value that parses and passes the find() filter the Catalyst
+    compile could not express.  Bad docs skip-and-continue, as the
+    reference logs and continues."""
+    loads = _fast_loads()
+    keep = (compile_filter(parse_filter(py_filter_text))
+            if py_filter_text else None)
+
+    def docs(contents) -> Iterator:
+        for i, raw in enumerate(contents):
+            if raw is None:
+                continue
+            try:
+                doc = loads(raw)
+            except (ValueError, TypeError):
+                continue
+            if keep is None or keep(doc):
+                yield i, doc
+
+    return docs
+
+
+def _make_child_fn(tm: TriplesMap, cfg: EngineConfig,
+                   rom_base: Optional[int], py_filter_text: Optional[str]):
     """Build the Arrow-batched translation stage for one triples map.
     The compiled TM is built lazily per task (compiled closures aren't
-    picklable; the model dataclasses are)."""
+    picklable; the model dataclasses are).
+
+    ``rom_base=None`` (a ROM-free TM) emits the 4 TRIPLE_SCHEMA columns
+    from the content column alone: the 5 join-bookkeeping columns of
+    CHILD_SCHEMA would be all-NULL, per-row pandas/Arrow work for dead
+    cells (guide §4.1: pass only the columns the stage needs).  A TM
+    with ROMs reads ``_seq`` too and emits CHILD_SCHEMA rows, kind=0
+    triples then kind=2 join rows."""
 
     def translate_batches(batches: Iterator) -> Iterator:
         import pandas as pd
-        ctm = CompiledTriplesMap(tm, cfg, rom_base)
-        pyfilter = (compile_filter(parse_filter(py_filter_text))
-                    if py_filter_text else None)
-        cols = ("kind", "subj", "pred", "obj", "graph",
-                "rom_id", "cond_id", "key", "uid")
-        loads = _fast_loads()
+        ctm = CompiledTriplesMap(tm, cfg, rom_base or 0)
+        docs = _doc_reader(py_filter_text)
         for pdf in batches:
             # tuple-row buffers: one append per row, columnized once per
             # batch with zip (C speed) — the per-row dict/append path costs
             # real memory bandwidth at fleet scale
             trips: list[tuple] = []
             joins: list[tuple] = []
-            contents = pdf["content"].values
-            seqs = pdf["_seq"].values
-            for i in range(len(contents)):
-                raw = contents[i]
-                if raw is None:
-                    continue
-                try:
-                    doc = loads(raw)
-                except (ValueError, TypeError):
-                    continue  # bad docs skip-and-continue
-                if pyfilter is not None and not pyfilter(doc):
-                    continue
+            seqs = pdf["_seq"].values if rom_base is not None else None
+            for i, doc in docs(pdf["content"].values):
                 for idx, sub in enumerate(ctm.iterate(doc)):
                     res = ctm.translate_doc(sub)
                     trips.extend(res.triples)
@@ -160,99 +178,40 @@ def _make_child_fn(tm: TriplesMap, cfg: EngineConfig, rom_base: int,
                         trips.extend(ctriples)
                     if res.join_rows:
                         uid = f"{seqs[i]}-{idx}"
-                        for rom_id, cond_id, key, s, p, g in res.join_rows:
-                            joins.append((rom_id, cond_id, key, s, p, g, uid))
+                        joins.extend(row + (uid,) for row in res.join_rows)
+            ts, tp, to, tg = zip(*trips) if trips else ((),) * 4
+            if rom_base is None:
+                yield pd.DataFrame({"subj": list(ts), "pred": list(tp),
+                                    "obj": list(to), "graph": list(tg)})
+                continue
             n_t, n_j = len(trips), len(joins)
-            data = {}
-            if n_j == 0:
-                ts, tp, to, tg = zip(*trips) if trips else ((), (), (), ())
-                data = {"kind": [0] * n_t, "subj": list(ts), "pred": list(tp),
-                        "obj": list(to), "graph": list(tg),
-                        "rom_id": [None] * n_t, "cond_id": [None] * n_t,
-                        "key": [None] * n_t, "uid": [None] * n_t}
-            else:
-                ts, tp, to, tg = zip(*trips) if trips else ((), (), (), ())
-                jr, jc, jk, js, jp, jg, ju = zip(*joins)
-                data = {
-                    "kind": [0] * n_t + [2] * n_j,
-                    "subj": list(ts) + list(js),
-                    "pred": list(tp) + list(jp),
-                    "obj": list(to) + [None] * n_j,
-                    "graph": list(tg) + list(jg),
-                    "rom_id": [None] * n_t + list(jr),
-                    "cond_id": [None] * n_t + list(jc),
-                    "key": [None] * n_t + list(jk),
-                    "uid": [None] * n_t + list(ju),
-                }
-            yield pd.DataFrame(data)
+            jr, jc, jk, js, jp, jg, ju = zip(*joins) if joins else ((),) * 7
+            yield pd.DataFrame({
+                "kind": [0] * n_t + [2] * n_j,
+                "subj": list(ts) + list(js),
+                "pred": list(tp) + list(jp),
+                "obj": list(to) + [None] * n_j,
+                "graph": list(tg) + list(jg),
+                "rom_id": [None] * n_t + list(jr),
+                "cond_id": [None] * n_t + list(jc),
+                "key": [None] * n_t + list(jk),
+                "uid": [None] * n_t + list(ju),
+            })
 
     return translate_batches
 
 
 def _make_filter_fn(py_filter_text: str):
-    """A find() filter the Column compiler cannot express, as its own
+    """A find() filter the Catalyst compile cannot express, as its own
     stage over the source rows: keeps the rows whose document matches
     (bad docs never match)."""
 
     def keep_matching(batches: Iterator) -> Iterator:
-        import pandas as pd
-        pyfilter = compile_filter(parse_filter(py_filter_text))
-        loads = _fast_loads()
-
-        def matches(raw) -> bool:
-            if raw is None:
-                return False
-            try:
-                doc = loads(raw)
-            except (ValueError, TypeError):
-                return False
-            return bool(pyfilter(doc))
-
+        docs = _doc_reader(py_filter_text)
         for pdf in batches:
-            yield pdf[pd.Series([matches(raw) for raw in pdf["content"]],
-                                index=pdf.index, dtype=bool)]
+            yield pdf.iloc[[i for i, _doc in docs(pdf["content"].values)]]
 
     return keep_matching
-
-
-def _make_child_fn_lean(tm: TriplesMap, cfg: EngineConfig,
-                        py_filter_text: Optional[str]):
-    """ROM-free translation stage: emits the 4 triple columns directly.
-    The unified CHILD_SCHEMA carries 5 extra join-bookkeeping columns
-    (rom_id/cond_id/key/uid/kind) that are all-NULL when the TM has no
-    referencing object map — per-row pandas/Arrow work for 18M × 5 dead
-    cells on the corpus bench (guide §4.1: pass only the columns the
-    stage needs), plus a kind==0 filter pass downstream."""
-
-    def translate_batches(batches: Iterator) -> Iterator:
-        import pandas as pd
-        ctm = CompiledTriplesMap(tm, cfg, 0)
-        pyfilter = (compile_filter(parse_filter(py_filter_text))
-                    if py_filter_text else None)
-        loads = _fast_loads()
-        for pdf in batches:
-            trips: list[tuple] = []
-            for raw in pdf["content"].values:
-                if raw is None:
-                    continue
-                try:
-                    doc = loads(raw)
-                except (ValueError, TypeError):
-                    continue  # bad docs skip-and-continue
-                if pyfilter is not None and not pyfilter(doc):
-                    continue
-                for sub in ctm.iterate(doc):
-                    res = ctm.translate_doc(sub)
-                    trips.extend(res.triples)
-                    for s, p, coll, g in res.collections:
-                        head, ctriples = expand_collection(s, p, coll, g)
-                        trips.append((s, p, head, g))
-                        trips.extend(ctriples)
-            ts, tp, to, tg = zip(*trips) if trips else ((), (), (), ())
-            yield pd.DataFrame({"subj": list(ts), "pred": list(tp),
-                                "obj": list(to), "graph": list(tg)})
-
-    return translate_batches
 
 
 def _make_parent_fn(parent_tm: TriplesMap, cfg: EngineConfig,
@@ -265,43 +224,17 @@ def _make_parent_fn(parent_tm: TriplesMap, cfg: EngineConfig,
         ctm = CompiledTriplesMap(parent_tm, cfg, 0)
         refform = parent_tm.logical_source.ref_formulation
         msps = [_compile_msp(r, refform) for r in parent_refs]
-        pyfilter = (compile_filter(parse_filter(py_filter_text))
-                    if py_filter_text else None)
-        loads = _fast_loads()
+        docs = _doc_reader(py_filter_text)
         for pdf in batches:
-            out = {k: [] for k in ("rom_id", "cond_id", "key", "psubj",
-                                   "pseq", "pidx")}
-            contents = pdf["content"].values
             seqs = pdf["_seq"].values
-            for i in range(len(contents)):
-                raw = contents[i]
-                if raw is None:
-                    continue
-                try:
-                    doc = loads(raw)
-                except (ValueError, TypeError):
-                    continue
-                if pyfilter is not None and not pyfilter(doc):
-                    continue
-                for idx, sub in enumerate(ctm.iterate(doc)):
-                    for cond_id, key, subj in ctm.parent_rows(sub, msps):
-                        out["rom_id"].append(rom_id)
-                        out["cond_id"].append(cond_id)
-                        out["key"].append(key)
-                        out["psubj"].append(subj)
-                        out["pseq"].append(int(seqs[i]))
-                        out["pidx"].append(idx)
-            yield pd.DataFrame(out)
+            yield pd.DataFrame(
+                [(rom_id, cond_id, key, subj, int(seqs[i]), idx)
+                 for i, doc in docs(pdf["content"].values)
+                 for idx, sub in enumerate(ctm.iterate(doc))
+                 for cond_id, key, subj in ctm.parent_rows(sub, msps)],
+                columns=PARENT_SCHEMA.fieldNames())
 
     return extract_batches
-
-
-_COLL_OUT_SCHEMA = StructType([
-    StructField("subj", StringType(), False),
-    StructField("pred", StringType(), False),
-    StructField("obj", StringType(), False),
-    StructField("graph", StringType(), True),
-])
 
 
 def _expand_rom_collections(ctype: str):
@@ -352,31 +285,10 @@ class SparkMaterializer:
             base += sum(len(pom.ref_object_maps)
                         for pom in tm.predicate_object_maps)
 
-    # ------------------------------------------------------------------
-    def _source_and_pyfilter(self, tm: TriplesMap):
-        """Resolve the TM's scan; returns (df, python_filter_text_or_None).
-        When the find() filter compiled to a native predicate it is already
-        applied inside resolve(); otherwise we pass the filter text to the
-        translation stage."""
-        ls = tm.logical_source
-        df, _tabular = self.catalog.resolve(ls)
-        py_filter = None
-        if ls.is_find():
-            _coll, filter_text = parse_mongo_query(ls.value)
-            if mongo_filter_sql(filter_text, "content") is None:
-                py_filter = filter_text
-        return df, py_filter
-
     def triples(self, dedup: bool = True) -> DataFrame:
         """The full materialization DataFrame (subj, pred, obj, graph)."""
-        parts: list[DataFrame] = []
-        for name, tm in self.mapping.triples_maps.items():
-            parts.append(self._tm_triples(tm))
-        if not parts:
-            return self.spark.createDataFrame([], TRIPLE_SCHEMA)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
+        out = union_all(self.spark, [self._tm_triples(tm) for tm in
+                                     self.mapping.triples_maps.values()])
         if dedup:
             # prepartition (skip the map-side partial aggregate) when NO
             # triples map has an iterator: iterator re-emission is the
@@ -393,7 +305,7 @@ class SparkMaterializer:
     # ------------------------------------------------------------------
     def _tm_triples(self, tm: TriplesMap) -> DataFrame:
         rom_base = self._rom_bases[tm.name]
-        src, py_filter = self._source_and_pyfilter(tm)
+        src, py_filter = self.catalog.resolve(tm.logical_source)
         if py_filter is not None and (self.tm_offset is not None
                                       or self.tm_limit is not None):
             # MongoDB slices find(f) AFTER f: filter before the slice
@@ -408,15 +320,14 @@ class SparkMaterializer:
                     r for pom in tm.predicate_object_maps
                     for r in pom.ref_object_maps)]
         if not roms:
-            # ROM-free TM: lean 4-column stage, no kind filter, no
-            # persist — same triples, 5 fewer all-NULL Arrow columns.
-            # Project to content ONLY: the lean stage never reads the
-            # _seq ordering column (it exists for ROM collection
-            # ordering), and MapInPandas ships every input column
-            # through Arrow — column pruning cannot reach inside the
-            # Python function (guide §4.1), so drop it here
+            # ROM-free TM: 4-column stage, no kind filter, no persist.
+            # Project to content ONLY: the stage never reads the _seq
+            # ordering column (it exists for ROM collection ordering),
+            # and MapInPandas ships every input column through Arrow —
+            # column pruning cannot reach inside the Python function
+            # (guide §4.1), so drop it here
             return src.select("content").mapInPandas(
-                _make_child_fn_lean(tm, self.cfg, py_filter), TRIPLE_SCHEMA)
+                _make_child_fn(tm, self.cfg, None, py_filter), TRIPLE_SCHEMA)
         child = src.mapInPandas(
             _make_child_fn(tm, self.cfg, rom_base, py_filter), CHILD_SCHEMA)
         # ROMs present (the ROM-free case early-returned above): the child
@@ -431,13 +342,8 @@ class SparkMaterializer:
 
         base = child.where(F.col("kind") == 0) \
                     .select("subj", "pred", "obj", "graph")
-        parts = [base]
-        for rom_id, rom in roms:
-            parts.append(self._rom_triples(child, rom_id, rom))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return union_all(self.spark, [base] + [
+            self._rom_triples(child, rom_id, rom) for rom_id, rom in roms])
 
     def cleanup(self) -> None:
         """Unpersist the child stages cached for ROM reuse.  Call after the
@@ -456,9 +362,9 @@ class SparkMaterializer:
             # the reference intersects the per-condition parent-subject sets;
             # the intersection of ZERO sets is List() (GeneralUtility.
             # intersectMultipleTermSets) — a no-condition ROM yields nothing
-            return self.spark.createDataFrame([], TRIPLE_SCHEMA)
+            return union_all(self.spark, [])
         parent_tm = self.mapping.triples_maps[rom.parent_tm]
-        psrc, p_pyfilter = self._source_and_pyfilter(parent_tm)
+        psrc, p_pyfilter = self.catalog.resolve(parent_tm.logical_source)
         parent_refs = [jc.parent_ref for jc in rom.join_conditions]
         parent = psrc.mapInPandas(
             _make_parent_fn(parent_tm, self.cfg, rom_id, parent_refs,
@@ -516,14 +422,8 @@ class SparkMaterializer:
                 ).alias("members"))
             return grouped.select("subj", "pred", "graph", "members") \
                           .mapInPandas(_expand_rom_collections(rom.term_type),
-                                       _COLL_OUT_SCHEMA) \
+                                       TRIPLE_SCHEMA) \
                           .select("subj", "pred", "obj", "graph")
         return result.select("subj", "pred",
                              F.col("psubj").alias("obj"), "graph")
 
-
-def materialize(spark: SparkSession, mapping: MappingDocument,
-                catalog: SourceCatalog,
-                cfg: Optional[EngineConfig] = None, **kw) -> DataFrame:
-    """One-call API: mapping + sources → deduplicated triples DataFrame."""
-    return SparkMaterializer(spark, mapping, catalog, cfg, **kw).triples()

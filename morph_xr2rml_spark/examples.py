@@ -6,7 +6,8 @@ Two pipelines:
     which routes every TM to the NATIVE compiler (pure Catalyst: codegen,
     pushdown, equi-joins);
   - ``kg_lineitem_json``: JSON documents with rml:iterator + xrr:pushDown
-    → DOCUMENT compiler (Arrow-batched mapInPandas).
+    → materialize_auto, which routes the TM to the JSON-NATIVE compiler
+    (from_json + explode, Catalyst end to end).
 
 Each has an exact DuckDB oracle (same strings, same rows).
 """
@@ -15,7 +16,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .engine import materialize
 from .model import MappingDocument
 from .sources import SourceCatalog
 
@@ -1198,13 +1198,6 @@ EXTRA_QUERIES = {
 }
 
 
-def _register_stream_gate() -> None:
-    """stream_kg_lineitem_json is defined below the EXTRA_QUERIES dict;
-    registered at import end (oracle: same triples as the batch run)."""
-    EXTRA_QUERIES["stream_kg_lineitem_json"] = (
-        stream_kg_lineitem_json, kg_lineitem_json_oracle_sql())
-
-
 # ---------------------------------------------------------------------------
 # Document pipeline: lineitems nested in order JSON docs, iterator + pushDown
 # ---------------------------------------------------------------------------
@@ -1247,45 +1240,11 @@ def orderdocs_df(spark: SparkSession, sf_dir: str,
 
 
 def kg_lineitem_json_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .api import materialize_auto
     mapping = MappingDocument.from_text(LINEITEM_JSON_MAPPING)
     catalog = SourceCatalog().register_collection("orderdocs",
                                                   orderdocs_df(spark, sf_dir))
-    return materialize(spark, mapping, catalog)
-
-
-def stream_kg_lineitem_json(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming gate (VERDICT r2 item 8): the SAME lineitem JSON mapping
-    materialized through Structured Streaming micro-batches — readStream
-    over the order docs written to files, stream_triples per micro-batch
-    (maxFilesPerTrigger=2 forces several), memory sink, then the batch
-    set-dedup compaction.  Must equal the batch engine output, so it
-    shares kg_lineitem_json's DuckDB oracle."""
-    import os
-    import tempfile
-    import uuid
-
-    from .streaming import stream_triples
-
-    mapping = MappingDocument.from_text(LINEITEM_JSON_MAPPING)
-    base = tempfile.mkdtemp(prefix="mxs_stream_gate_")
-    docs_dir = os.path.join(base, "docs")
-    ckpt = os.path.join(base, "ckpt")
-    # identical input to the batch query, as text files the stream tails
-    orderdocs_df(spark, sf_dir).select("content") \
-        .repartition(8).write.mode("overwrite").text(docs_dir)
-    stream = (spark.readStream.format("text")
-              .option("maxFilesPerTrigger", 2)
-              .load(docs_dir)
-              .withColumnRenamed("value", "content"))
-    out = stream_triples(mapping, stream, content_col="content")
-    qname = "stream_gate_" + uuid.uuid4().hex[:8]
-    q = (out.writeStream.format("memory").queryName(qname)
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination(600)
-    # batch compaction: set semantics over the accumulated micro-batches
-    return (spark.table(qname)
-            .select("subj", "pred", "obj", "graph").distinct())
+    return materialize_auto(spark, mapping, catalog)
 
 
 def kg_lineitem_json_oracle_sql() -> str:
@@ -1299,5 +1258,3 @@ def kg_lineitem_json_oracle_sql() -> str:
     return (f"SELECT DISTINCT subj, pred, obj, CAST(NULL AS VARCHAR) AS graph "
             f"FROM (\n{body}\n) t(subj, pred, obj)")
 
-
-_register_stream_gate()

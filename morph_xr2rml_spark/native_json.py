@@ -38,7 +38,7 @@ from .model import (CONSTANT, REFERENCE, TEMPLATE, MappingDocument, TermMap,
                     TriplesMap)
 from .native import (CatalystCompiler, lexical_sql, sql_lit,
                      subject_renders_unique_schemaless, union_all)
-from .sources import SourceCatalog, mongo_filter_sql
+from .sources import SourceCatalog, python_filter
 from .translate import EngineConfig
 
 _SIMPLE_PATH = re.compile(r"^\$(\.[A-Za-z_][A-Za-z0-9_]*)+$")
@@ -61,14 +61,11 @@ def compilable(tm: TriplesMap) -> bool:
     ls = tm.logical_source
     if ls.kind not in ("query",):
         return False
-    if ls.is_find():
-        from .model import parse_mongo_query
-        try:
-            _coll, filter_text = parse_mongo_query(ls.value)
-        except Exception:
+    try:
+        if python_filter(ls) is not None:
             return False
-        if mongo_filter_sql(filter_text, "content") is None:
-            return False
+    except Exception:
+        return False
     if ls.iterator is not None and not _SIMPLE_ITER.match(ls.iterator):
         return False
     for pd in ls.pushdowns:
@@ -184,10 +181,12 @@ def _tree_to_struct(tree: dict) -> T.StructType:
 # Answering-mode persist tracker
 # ---------------------------------------------------------------------------
 # The unfused (answering) plan persists each resolved, filtered source
-# (JsonNativeCompiler.scan), and the Python tier persists each ROM TM's
-# child stage (engine.SparkMaterializer._tm_triples); both register here,
-# and ``cleanup()`` releases everything.  A long-lived session answering
-# many queries would otherwise accumulate executor storage.
+# (JsonNativeCompiler.scan), and the Python document tier persists the
+# child stage of each TM with ROMs (engine.SparkMaterializer._tm_triples,
+# reached through api._routed_plan, SparkMaterializer.triples and
+# sink.ResumableMaterializer); both register here, and ``cleanup()``
+# releases everything.  A long-lived session answering many queries
+# would otherwise accumulate executor storage.
 
 _PERSISTED: list = []
 # live-entry cap: long sessions answering many distinct queries would
@@ -271,6 +270,18 @@ class JsonNativeCompiler(CatalystCompiler):
         self.catalog = catalog
         self.sample_n = sample_n
 
+    def _source(self, tm: TriplesMap) -> DataFrame:
+        """The TM's resolved, find()-filtered source rows.  A filter the
+        Catalyst compile cannot express would leave them unfiltered here:
+        only the Python document tier applies it, so refuse loudly."""
+        src, py_filter = self.catalog.resolve(tm.logical_source)
+        if py_filter is not None:
+            raise ValueError(
+                f"triples map {tm.name}: find() filter {py_filter!r} does "
+                "not compile to SQL; only the Python document tier "
+                "applies it")
+        return src
+
     # -- schema ----------------------------------------------------------
     def _needed_paths(self, tm: TriplesMap) -> list[list[str]]:
         paths: list[list[str]] = []
@@ -335,8 +346,7 @@ class JsonNativeCompiler(CatalystCompiler):
                     node["__array__"] = True
                     continue
                 node = node.setdefault(part, {})
-        src, _ = self.catalog.resolve(tm.logical_source)
-        sample = [r.content for r in src.select("content")
+        sample = [r.content for r in self._source(tm).select("content")
                   .limit(self.sample_n).collect()]
         for raw in sample:
             try:
@@ -448,7 +458,7 @@ class JsonNativeCompiler(CatalystCompiler):
     def scan(self, tm: TriplesMap):
         """Scan → from_json (→ explode the iterator); the row context is
         (tm, parsed-doc SQL, item SQL or None)."""
-        src, _pyf = self.catalog.resolve(tm.logical_source)
+        src = self._source(tm)
         if not self.fuse_projections:
             # answering mode emits one union branch per (pred, obj)
             # entry and the evaluator references the plan once per
@@ -464,7 +474,7 @@ class JsonNativeCompiler(CatalystCompiler):
             # persist sits BELOW the nondeterministic parse barrier:
             # the cached subplan stays deterministic, so Catalyst's
             # cache matching (sameResult) recognizes every reference.
-            # Schema sampling (catalog.resolve in _schema_for) sees the
+            # Schema sampling (_source in _schema_for) sees the
             # raw registered source, so its limit(n).collect() stays an
             # incremental first-partition take, not this shuffle.
             src = track_persist(spread(src))

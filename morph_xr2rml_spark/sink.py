@@ -24,9 +24,9 @@ import re
 import time
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
-from .engine import SparkMaterializer
+from .engine import SparkMaterializer, dedup_triples
 from .lineage import partition_metrics
 from .model import MappingDocument
 from .sources import SourceCatalog
@@ -77,19 +77,20 @@ class ResumableMaterializer:
             if done.get(key, {}).get("complete"):
                 continue
             t0 = time.time()
-            from .engine import dedup_triples
-            triples = dedup_triples(self.materializer._tm_triples(tm))
-            part_dir = os.path.join(self.out_path, f"tm={key}")
-            triples.write.mode("overwrite").parquet(part_dir)
-            n = self.spark.read.parquet(part_dir).count()
+            # count the rows as they are written: no re-read of the parquet
+            written = Observation()
+            triples = dedup_triples(self.materializer._tm_triples(tm)) \
+                .observe(written, F.count(F.lit(1)).alias("n"))
+            triples.write.mode("overwrite").parquet(
+                os.path.join(self.out_path, f"tm={key}"))
             entry = {
                 "complete": True,
-                "triples": n,
+                "triples": written.get["n"],
                 "seconds": round(time.time() - t0, 3),
                 "source": tm.logical_source.source_id(),
             }
             if record_lineage:
-                src, _pyf = self.materializer._source_and_pyfilter(tm)
+                src, _pyf = self.catalog.resolve(tm.logical_source)
                 entry["input_partitions"] = [
                     row.asDict() for row in partition_metrics(src).collect()]
             done[key] = entry

@@ -28,8 +28,7 @@ from .native import (CMP_OPS, and_sql, check_sql_text_conf, double_sql,
 def mongo_filter_sql(filter_text: str, content_col: str) -> Optional[str]:
     """Compile a find() filter to a SQL predicate over the JSON text
     column, or None if the filter uses operators or operands only the
-    Python fallback evaluates.  Session-free, so routing decisions
-    (native_json.compilable) use it directly.  Compiled: {},
+    Python fallback evaluates.  Compiled: {},
     {field: value}, {field: {$exists/$eq/$ne/$gt/$gte/$lt/$lte/$in: v}}
     (equality on strings no other JSON value reads as:
     _string_eq_lit), {$and/$or: [...]}, dotted paths and the internal
@@ -51,6 +50,18 @@ def mongo_filter_to_column(filter_text: str, content_col: str):
         return None
     check_sql_text_conf(SparkSession.active())
     return F.expr(sql)
+
+
+def python_filter(ls: LogicalSource) -> Optional[str]:
+    """The find() filter text of ``ls`` when it does not compile to SQL
+    (only the Python document tier applies it), else None.  Session-free,
+    so routing (native_json.compilable) uses it."""
+    if not ls.is_find():
+        return None
+    _coll, filter_text = parse_mongo_query(ls.value)
+    if mongo_filter_sql(filter_text, "content") is None:
+        return filter_text
+    return None
 
 
 def _spec_sql(spec: dict, content: str) -> Optional[str]:
@@ -267,8 +278,11 @@ class SourceCatalog:
         return self
 
     # -- resolution --------------------------------------------------------
-    def resolve(self, ls: LogicalSource) -> tuple[DataFrame, bool]:
-        """LogicalSource → (docs DataFrame(content, _seq), is_tabular)."""
+    def resolve(self, ls: LogicalSource) -> tuple[DataFrame, Optional[str]]:
+        """LogicalSource → (docs DataFrame(content, _seq), python_filter):
+        a find() filter that compiles is applied here; one that does not
+        comes back as its text (None otherwise), for the Python document
+        tier's translation stage to apply."""
         if ls.is_find():
             coll, filter_text = parse_mongo_query(ls.value)
             if coll not in self._collections:
@@ -277,9 +291,8 @@ class SourceCatalog:
             df = self._collections[coll]
             cond = mongo_filter_to_column(filter_text, "content")
             if cond is not None:
-                return df.where(cond), False
-            # fallback: Python-side filter inside the translation stage
-            return df, False
+                return df.where(cond), None
+            return df, filter_text
         # tabular source: rr:tableName or rr:sqlQuery
         name = ls.value
         if ls.kind == "sql":
@@ -291,7 +304,7 @@ class SourceCatalog:
         elif name in self._tables:
             tdf = self._tables[name]
         elif name in self._collections:
-            return self._collections[name], False
+            return self._collections[name], None
         else:
             raise KeyError(f"Table {name!r} not registered")
         # represent each row as a JSON doc so column references resolve
@@ -299,4 +312,4 @@ class SourceCatalog:
         doc = F.to_json(F.struct(*[F.col(c) for c in tdf.columns]))
         out = tdf.select(doc.alias("content")) \
                  .withColumn("_seq", F.monotonically_increasing_id())
-        return out, True
+        return out, None

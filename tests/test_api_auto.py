@@ -186,6 +186,15 @@ DOC_PARENT_MAPPING = EX + """
                           rr:objectMap [ xrr:reference "$.st" ] ].
 """
 
+# a find() filter the SQL compile cannot express: only the Python
+# document tier applies it
+REGEX_FIND_MAPPING = EX + """
+<#T> xrr:logicalSource [ xrr:query "db.docs.find({name: {$regex: '^a'}})" ];
+  rr:subjectMap [ rr:template "http://d/{$.id}" ];
+  rr:predicateObjectMap [ rr:predicate ex:name;
+                          rr:objectMap [ xrr:reference "$.name" ] ].
+"""
+
 
 def _route_case(spark, case: str):
     """(mapping, tables, catalog, expected tiers) for one router case."""
@@ -209,6 +218,12 @@ def _route_case(spark, case: str):
             "docs", spark.createDataFrame([(json.dumps(d),) for d in docs],
                                           "content string"))
         return GUARDED_DOC_MAPPING, {}, cat, {"#T": "doc"}
+    if case == "regex_find":
+        docs = [{"id": 1, "name": "ab"}, {"id": 2, "name": "b"}]
+        cat = SourceCatalog().register_collection(
+            "docs", spark.createDataFrame([(json.dumps(d),) for d in docs],
+                                          "content string"))
+        return REGEX_FIND_MAPPING, {}, cat, {"#T": "doc"}
     if case == "doc_parent":
         return (DOC_PARENT_MAPPING, {"customer": tables["customer"]},
                 ex.orderflat_catalog(spark, ROUTE_SF),
@@ -217,7 +232,8 @@ def _route_case(spark, case: str):
 
 
 @pytest.mark.parametrize("case", ["tpch", "orderdocs", "mixed",
-                                  "schema_guard", "doc_parent"])
+                                  "schema_guard", "doc_parent",
+                                  "regex_find"])
 def test_router_decisions(spark, case):
     from morph_xr2rml_spark.api import route_tier
     from morph_xr2rml_spark.native_json import JsonNativeCompiler
@@ -227,6 +243,20 @@ def test_router_decisions(spark, case):
     got = {n: route_tier(mapping, tm, tables, jc)
            for n, tm in mapping.triples_maps.items()}
     assert got == want
+
+
+def test_json_native_refuses_an_uncompiled_find(spark):
+    """The json-native tier applies only find() filters that compile to
+    SQL: handed one that does not, it raises instead of scanning
+    unfiltered rows, and the routed plan filters on the Python tier."""
+    from morph_xr2rml_spark.native_json import JsonNativeCompiler
+    text, _tables, catalog, _want = _route_case(spark, "regex_find")
+    mapping = MappingDocument.from_text(text)
+    tm = mapping.triples_maps["#T"]
+    with pytest.raises(ValueError, match="find"):
+        JsonNativeCompiler(spark, mapping, catalog).scan(tm)
+    got = {r.subj for r in materialize_auto(spark, mapping, catalog).collect()}
+    assert got == {"<http://d/1>"}
 
 
 def _parquet_tables(df) -> set:

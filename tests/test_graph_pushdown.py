@@ -214,7 +214,7 @@ def test_null_graph_renders_and_column_iri_encoding_parity(spark):
     NOT the template-group reserved-chars encoder — ':' and '/' must
     survive."""
     from conftest import tier_pool
-    from morph_xr2rml_spark.engine import materialize
+    from morph_xr2rml_spark.engine import SparkMaterializer
     from morph_xr2rml_spark.model import MappingDocument
     from morph_xr2rml_spark.sources import SourceCatalog
     t = spark.createDataFrame(
@@ -226,7 +226,8 @@ def test_null_graph_renders_and_column_iri_encoding_parity(spark):
     mapping = MappingDocument.from_text(NULLABLE_GRAPHS_MAPPING)
     cat = SourceCatalog()
     cat.register_table("t", t)
-    want = sorted(tuple(r) for r in materialize(spark, mapping, cat)
+    want = sorted(tuple(r) for r in
+                  SparkMaterializer(spark, mapping, cat).triples()
                   .collect())
     for fuse in (True, False):
         got = sorted(tuple(r) for r in

@@ -5,7 +5,7 @@ import json
 
 import pytest
 
-from morph_xr2rml_spark.engine import materialize
+from morph_xr2rml_spark.engine import SparkMaterializer
 from morph_xr2rml_spark.local_engine import materialize_local
 from morph_xr2rml_spark.model import MappingDocument
 from morph_xr2rml_spark.native_json import compilable
@@ -119,7 +119,8 @@ def test_corpus_mapping_json_native_equals_doc_engine(spark):
     cat2 = SourceCatalog().register_collection("orderdocs", docs)
     native = {tuple(r) for r in
               tier_pool(spark, mapping, "json", catalog=cat1).collect()}
-    pyudf = {tuple(r) for r in materialize(spark, mapping, cat2).collect()}
+    pyudf = {tuple(r) for r in
+             SparkMaterializer(spark, mapping, cat2).triples().collect()}
     assert native == pyudf
 
 
@@ -152,7 +153,7 @@ def test_json_native_graph_quads_match_python_tier(spark):
     ROM quads in the subject graphs, and a subject-only parent TM
     emitting nothing — byte-parity against the document engine."""
     import json as _json
-    from morph_xr2rml_spark.engine import materialize
+    from morph_xr2rml_spark.engine import SparkMaterializer
     from morph_xr2rml_spark.native_json import compilable
     from morph_xr2rml_spark.sources import SourceCatalog
     docs = [_json.dumps(d) for d in [
@@ -170,7 +171,8 @@ def test_json_native_graph_quads_match_python_tier(spark):
     assert compilable(mapping.triples_maps["#D"])
     got = sorted(tuple(r) for r in
                  tier_pool(spark, mapping, "json", catalog=cat).collect())
-    want = sorted(tuple(r) for r in materialize(spark, mapping, cat)
+    want = sorted(tuple(r) for r in
+                  SparkMaterializer(spark, mapping, cat).triples()
                   .collect())
     assert got == want and len(got) == 10
     graphs = {r[3] for r in got}

@@ -5,8 +5,9 @@ has one entry point, one router picks every triples map's tier, only
 the router's ``api._routed_plan`` builds a whole-mapping plan,
 aggregate pushdown runs the evaluator's own SELECT tail, the
 Catalyst compilers and the find() compiler build expressions as SQL
-text only, with one find()-filter walker, and the two Catalyst tiers
-share one compiler core."""
+text only, with one find()-filter walker, the two Catalyst tiers
+share one compiler core, and the Python document tier has one find()
+decision and one document walk."""
 
 import ast
 import pathlib
@@ -15,7 +16,8 @@ import sys
 ROOT = pathlib.Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(ROOT))
 
-FORBIDDEN = ("morph_xr2rml_spark.ops", "bench", "bench_extra")
+FORBIDDEN = ("morph_xr2rml_spark.ops", "morph_xr2rml_spark.streaming",
+             "morph_xr2rml_spark.engine.materialize", "bench", "bench_extra")
 # answering entry points folded into api.answer_auto
 DELETED = {"answer_tabular", "answer_documents", "constrained_mapping",
            "plan_provably_distinct", "try_aggregate_pushdown",
@@ -286,3 +288,39 @@ def test_compiler_core_is_written_once():
     assert len(graph_variants) == 1, graph_variants
     assert len(template_renders) == 1, template_renders
     assert len(proof_loops) == 1, proof_loops
+
+
+def _calls(path: pathlib.Path):
+    """(callee name, line) of every call in ``path``."""
+    for node in ast.walk(ast.parse(path.read_text(), str(path))):
+        if isinstance(node, ast.Call):
+            f = node.func
+            name = f.id if isinstance(f, ast.Name) else \
+                f.attr if isinstance(f, ast.Attribute) else None
+            yield name, node.lineno
+
+
+def test_python_document_tier_is_written_once():
+    """One find() decision: only sources.py compiles a find() filter
+    (``resolve`` hands the tiers the text it could not compile).  One
+    document walk: engine.py parses documents in one place.  And the
+    ``engine.materialize`` alias stays gone."""
+    pkg = ROOT / "morph_xr2rml_spark"
+    bad = [f"{path.relative_to(ROOT)}:{line}: mongo_filter_sql()"
+           for path in _sources() if path.name != "sources.py"
+           for name, line in _calls(path) if name == "mongo_filter_sql"]
+    engine = pkg / "engine.py"
+    tree = ast.parse(engine.read_text(), str(engine))
+    loads = [line for name, line in _calls(engine) if name == "_fast_loads"]
+    parse_guards = [h.lineno for h in ast.walk(tree)
+                    if isinstance(h, ast.ExceptHandler)
+                    and isinstance(h.type, ast.Tuple)
+                    and {getattr(e, "id", None) for e in h.type.elts}
+                    == {"ValueError", "TypeError"}]
+    if len(loads) != 1:
+        bad.append(f"engine.py _fast_loads() calls: {loads}")
+    if len(parse_guards) != 1:
+        bad.append(f"engine.py parse guards: {parse_guards}")
+    bad += [f"engine.py:{fn.lineno}: def materialize" for fn in tree.body
+            if isinstance(fn, ast.FunctionDef) and fn.name == "materialize"]
+    assert not bad, bad

@@ -500,8 +500,8 @@ def doc_graph_env(spark):
         "gdocs", spark.createDataFrame([(d,) for d in docs],
                                        "content string"))
     mapping = MappingDocument.from_text(GRAPH_DOC_FUZZ_MAPPING)
-    from morph_xr2rml_spark.engine import materialize
-    pool = materialize(spark, mapping, cat)
+    from morph_xr2rml_spark.engine import SparkMaterializer
+    pool = SparkMaterializer(spark, mapping, cat).triples()
     return mapping, cat, SparqlEngine(pool)
 
 

@@ -77,25 +77,27 @@ def test_mapping5_slidewiki_array_iterator():
 
 
 def test_mapping5_spark_parity(spark):
-    from morph_xr2rml_spark.engine import materialize
+    from morph_xr2rml_spark.engine import SparkMaterializer
     from morph_xr2rml_spark.sources import SourceCatalog
     mapping = MappingDocument.from_file(f"{REF}/mapping5.ttl")
     docs = [json.dumps(d) for d in SLIDES]
     cat = SourceCatalog().register_collection(
         "slides2", spark.createDataFrame([(d,) for d in docs], "content string"))
-    got = {tuple(r) for r in materialize(spark, mapping, cat).collect()}
+    got = {tuple(r) for r in
+           SparkMaterializer(spark, mapping, cat).triples().collect()}
     want = materialize_local(mapping, {"slides2": SLIDES})
     assert got == want
 
 
 def test_mapping3_mapping4_spark_parity(spark):
-    from morph_xr2rml_spark.engine import materialize
+    from morph_xr2rml_spark.engine import SparkMaterializer
     from morph_xr2rml_spark.sources import SourceCatalog
     for m in ("mapping3.ttl", "mapping4.ttl"):
         mapping = MappingDocument.from_file(f"{REF}/{m}")
         cat = SourceCatalog().register_collection(
             "students",
             spark.createDataFrame([(d,) for d in STUDENTS_JSON], "content string"))
-        got = {tuple(r) for r in materialize(spark, mapping, cat).collect()}
+        got = {tuple(r) for r in
+               SparkMaterializer(spark, mapping, cat).triples().collect()}
         want = materialize_local(mapping, {"students": STUDENTS})
         assert got == want, m

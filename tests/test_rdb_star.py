@@ -150,7 +150,7 @@ def test_colors_rdflist_and_null_column():
 
 
 def test_spark_parity_rdb_star(spark):
-    from morph_xr2rml_spark.engine import materialize
+    from morph_xr2rml_spark.engine import SparkMaterializer
     from morph_xr2rml_spark.sources import SourceCatalog
     student_df = spark.createDataFrame(
         [(r["id"], r["comments"], r.get("name"), r.get("sport"),
@@ -165,7 +165,8 @@ def test_spark_parity_rdb_star(spark):
            .register_table("student", student_df)
            .register_table("sport", sport_df))
     mapping = MappingDocument.from_file(MAPPING)
-    got = {tuple(r) for r in materialize(spark, mapping, cat).collect()}
+    got = {tuple(r) for r in
+           SparkMaterializer(spark, mapping, cat).triples().collect()}
     want = _local()
     assert got == want
 
@@ -176,7 +177,7 @@ def test_mysql_rewriting_example_query(spark):
     query.sparql shape answered over the result — reference: SPARQL→SQL
     rewriting; here: materialize-then-query.  Hobbies come from the
     JSONPath reference over the comments column."""
-    from morph_xr2rml_spark.engine import materialize
+    from morph_xr2rml_spark.engine import SparkMaterializer
     from morph_xr2rml_spark.sources import SourceCatalog
     from morph_xr2rml_spark.sparql import SparqlEngine
 
@@ -199,7 +200,7 @@ def test_mysql_rewriting_example_query(spark):
         [(d.get("id"), d.get("name"), d.get("code"), d.get("shirt_colors"))
          for d in SPORTS],
         "id long, name string, code string, shirt_colors string"))
-    triples = materialize(spark, mapping, cat)
+    triples = SparkMaterializer(spark, mapping, cat).triples()
     eng = SparqlEngine(triples.cache())
     rows = eng.sql("""
         PREFIX ex: <http://example.com/>

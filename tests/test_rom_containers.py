@@ -2,7 +2,7 @@
 
 import json
 
-from morph_xr2rml_spark.engine import materialize
+from morph_xr2rml_spark.engine import SparkMaterializer
 from morph_xr2rml_spark.local_engine import materialize_local
 from morph_xr2rml_spark.model import MappingDocument
 from morph_xr2rml_spark.sources import SourceCatalog
@@ -49,6 +49,7 @@ def test_rom_bag_spark_parity(spark):
     for name, docs in (("c", C_DOCS), ("p", P_DOCS)):
         cat.register_collection(name, spark.createDataFrame(
             [(json.dumps(d),) for d in docs], "content string"))
-    got = {tuple(r) for r in materialize(spark, mapping, cat).collect()}
+    got = {tuple(r) for r in
+           SparkMaterializer(spark, mapping, cat).triples().collect()}
     want = materialize_local(mapping, {"c": C_DOCS, "p": P_DOCS})
     assert got == want

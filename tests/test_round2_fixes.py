@@ -1,15 +1,13 @@
 """Round-2 fixes: property-path fixpoint, zero-condition ROMs, $ne /
-numeric-eq filter semantics, per-TM OFFSET, streaming filter parity."""
+numeric-eq filter semantics, per-TM OFFSET."""
 
 import json
-import os
-import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
 from morph_xr2rml_spark.api import materialize_auto
-from morph_xr2rml_spark.engine import SparkMaterializer, materialize
+from morph_xr2rml_spark.engine import SparkMaterializer
 from morph_xr2rml_spark.model import MappingDocument
 from morph_xr2rml_spark.sources import SourceCatalog, mongo_filter_to_column
 from morph_xr2rml_spark.sparql import SparqlEngine
@@ -86,7 +84,7 @@ def test_nocond_rom_document_engine_empty(spark):
     cat.register_collection("b", spark.createDataFrame(
         [(json.dumps({"id": i, "name": f"n{i}"}),) for i in range(3)],
         "content string"))
-    out = materialize(spark, mapping, cat).collect()
+    out = SparkMaterializer(spark, mapping, cat).triples().collect()
     ref_triples = [r for r in out if r.pred == "<http://example.com/ref>"]
     assert ref_triples == []          # NOT a 3x3 cross product
     assert len(out) > 0               # other triples still produced
@@ -124,7 +122,7 @@ def test_ne_keeps_missing_field_docs(spark):
     cat = SourceCatalog().register_collection(
         "docs", spark.createDataFrame([(json.dumps(d),) for d in docs],
                                       "content string"))
-    out = materialize(spark, mapping, cat).collect()
+    out = SparkMaterializer(spark, mapping, cat).triples().collect()
     subs = {r.subj for r in out}
     assert subs == {"<http://d/2>", "<http://d/3>"}
 
@@ -149,7 +147,7 @@ def test_numeric_eq_matches_cross_representation(spark):
     cat = SourceCatalog().register_collection(
         "docs", spark.createDataFrame([(json.dumps(d),) for d in docs],
                                       "content string"))
-    out = materialize(spark, mapping, cat).collect()
+    out = SparkMaterializer(spark, mapping, cat).triples().collect()
     assert {r.subj for r in out} == {"<http://d/1>", "<http://d/2>"}
 
 
@@ -204,43 +202,6 @@ def test_properties_offset_parsed():
     p = MorphProperties.from_text(
         "datatranslation.limit=5\ndatatranslation.offset=7\n")
     assert p.tm_limit == 5 and p.tm_offset == 7
-
-
-# ---------------------------------------------------------------------------
-# streaming honors per-TM find() filters (batch parity)
-# ---------------------------------------------------------------------------
-
-FILTERED_STREAM_MAPPING = """
-@prefix rr: <http://www.w3.org/ns/r2rml#> .
-@prefix xrr: <http://i3s.unice.fr/xr2rml#> .
-@prefix ex: <http://example.com/> .
-<#T> xrr:logicalSource [ xrr:query "db.docs.find({kind: 'keep'})" ];
-  rr:subjectMap [ rr:template "http://d/{$.id}" ];
-  rr:predicateObjectMap [ rr:predicate ex:id; rr:objectMap [ xrr:reference "$.id" ] ].
-"""
-
-
-def test_stream_applies_find_filter(spark):
-    from morph_xr2rml_spark.streaming import stream_triples
-    stream_dir, ckpt = "/tmp/mxs_stream_filt", "/tmp/mxs_stream_filt_ckpt"
-    shutil.rmtree(stream_dir, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    os.makedirs(stream_dir)
-    docs = [{"id": 1, "kind": "keep"}, {"id": 2, "kind": "drop"},
-            {"id": 3, "kind": "keep"}]
-    with open(f"{stream_dir}/docs.json", "w") as f:
-        for d in docs:
-            f.write(json.dumps(d) + "\n")
-    mapping = MappingDocument.from_text(FILTERED_STREAM_MAPPING)
-    stream = spark.readStream.format("text").load(stream_dir) \
-        .withColumnRenamed("value", "content")
-    q = (stream_triples(mapping, stream)
-         .writeStream.format("memory").queryName("t_filt")
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    subs = {r.subj for r in spark.sql("select subj from t_filt").collect()}
-    assert subs == {"<http://d/1>", "<http://d/3>"}
 
 
 # ---------------------------------------------------------------------------

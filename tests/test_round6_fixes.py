@@ -126,7 +126,7 @@ def test_padded_render_matches_python_tier(spark):
     literals for whitespace-padded values."""
     import json
 
-    from morph_xr2rml_spark.engine import SparkMaterializer, materialize
+    from morph_xr2rml_spark.engine import SparkMaterializer
     from morph_xr2rml_spark.sources import SourceCatalog
     mapping_native = MappingDocument.from_text(
         PADDED_DOC_MAPPING.replace(
@@ -194,11 +194,11 @@ def _graph_env(spark):
 
 def test_native_graph_quads_match_python_tier(spark):
     from conftest import tier_pool
-    from morph_xr2rml_spark.engine import materialize
+    from morph_xr2rml_spark.engine import SparkMaterializer
     mapping, tables, cat = _graph_env(spark)
     for fuse in (True, False):
         nat = tier_pool(spark, mapping, "native", tables, fused=fuse)
-        ora = materialize(spark, mapping, cat)
+        ora = SparkMaterializer(spark, mapping, cat).triples()
         a = sorted(tuple(r) for r in nat.collect())
         b = sorted(tuple(r) for r in ora.collect())
         assert a == b and len(a) > 0

@@ -6,7 +6,7 @@ import json
 import pytest
 from fixtures_data import MAPPING1_PATH, MOVIES, MOVIES_JSON, STUDENTS, STUDENTS_JSON
 
-from morph_xr2rml_spark.engine import materialize
+from morph_xr2rml_spark.engine import SparkMaterializer
 from morph_xr2rml_spark.local_engine import materialize_local
 from morph_xr2rml_spark.model import MappingDocument
 from morph_xr2rml_spark.sources import SourceCatalog
@@ -21,7 +21,7 @@ def _spark_triples(spark, mapping, collections):
     for name, docs in collections.items():
         df = spark.createDataFrame([(d,) for d in docs], "content string")
         catalog.register_collection(name, df)
-    out = materialize(spark, mapping, catalog)
+    out = SparkMaterializer(spark, mapping, catalog).triples()
     return {tuple(r) for r in out.collect()}
 
 

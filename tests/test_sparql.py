@@ -3,7 +3,7 @@
 import pytest
 from fixtures_data import MAPPING1_PATH, MOVIES_JSON, STUDENTS_JSON
 
-from morph_xr2rml_spark.engine import materialize
+from morph_xr2rml_spark.engine import SparkMaterializer
 from morph_xr2rml_spark.model import MappingDocument
 from morph_xr2rml_spark.sources import SourceCatalog
 from morph_xr2rml_spark.sparql import SparqlEngine, parse_sparql
@@ -22,7 +22,7 @@ def engine(spark):
     for name, docs in (("students", STUDENTS_JSON), ("movies", MOVIES_JSON)):
         cat.register_collection(
             name, spark.createDataFrame([(d,) for d in docs], "content string"))
-    triples = materialize(spark, mapping, cat).cache()
+    triples = SparkMaterializer(spark, mapping, cat).triples().cache()
     return SparqlEngine(triples)
 
 

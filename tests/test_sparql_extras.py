@@ -5,7 +5,7 @@ import json
 import pytest
 from fixtures_data import MOVIES_JSON, STUDENTS_JSON, MAPPING1_PATH
 
-from morph_xr2rml_spark.engine import materialize
+from morph_xr2rml_spark.engine import SparkMaterializer
 from morph_xr2rml_spark.model import MappingDocument
 from morph_xr2rml_spark.sources import SourceCatalog, mongo_filter_to_column
 from morph_xr2rml_spark.sparql import (SparqlEngine, to_sparql_csv,
@@ -25,7 +25,8 @@ def engine(spark):
     for name, docs in (("students", STUDENTS_JSON), ("movies", MOVIES_JSON)):
         cat.register_collection(
             name, spark.createDataFrame([(d,) for d in docs], "content string"))
-    return SparqlEngine(materialize(spark, mapping, cat).cache())
+    return SparqlEngine(
+        SparkMaterializer(spark, mapping, cat).triples().cache())
 
 
 def test_ask(engine):
@@ -70,7 +71,8 @@ def test_native_gt_in_filters(spark):
             for k, t in [(3, "a"), (5, "b"), (6, "c"), (7, "a")]]
     cat = SourceCatalog().register_collection(
         "d", spark.createDataFrame([(d,) for d in docs], "content string"))
-    got = {r.subj for r in materialize(spark, mapping, cat).collect()}
+    got = {r.subj for r in
+           SparkMaterializer(spark, mapping, cat).triples().collect()}
     assert got == {"<http://x/6>", "<http://x/7>",    # k > 5
                    "<http://y/3>", "<http://y/5>", "<http://y/7>"}  # tag in a,b
 

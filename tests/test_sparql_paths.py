@@ -5,7 +5,7 @@ import json
 
 import pytest
 
-from morph_xr2rml_spark.engine import materialize
+from morph_xr2rml_spark.engine import SparkMaterializer
 from morph_xr2rml_spark.model import MappingDocument
 from morph_xr2rml_spark.sources import SourceCatalog
 from morph_xr2rml_spark.sparql import SparqlEngine
@@ -40,7 +40,8 @@ def engine(spark):
     cat = SourceCatalog().register_collection(
         "taxa", spark.createDataFrame([(json.dumps(d),) for d in DOCS],
                                       "content string"))
-    return SparqlEngine(materialize(spark, mapping, cat).cache())
+    return SparqlEngine(
+        SparkMaterializer(spark, mapping, cat).triples().cache())
 
 
 def test_sequence_path(engine):
@@ -128,7 +129,8 @@ def graph_engine(spark):
     cat = SourceCatalog().register_collection(
         "d", spark.createDataFrame([(json.dumps(d),) for d in docs],
                                    "content string"))
-    return SparqlEngine(materialize(spark, mapping, cat).cache())
+    return SparqlEngine(
+        SparkMaterializer(spark, mapping, cat).triples().cache())
 
 
 def test_graph_variable(graph_engine):

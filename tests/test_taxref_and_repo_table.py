@@ -7,7 +7,7 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
-from morph_xr2rml_spark.engine import materialize
+from morph_xr2rml_spark.engine import SparkMaterializer
 from morph_xr2rml_spark.lineage import integrity_violations
 from morph_xr2rml_spark.model import MappingDocument
 from morph_xr2rml_spark.sources import SourceCatalog
@@ -82,7 +82,8 @@ def test_canonical_repo_table_end_to_end(spark):
     <#B> xrr:logicalSource [ xrr:query "db.beta.find({})" ];
       rr:subjectMap [ rr:template "http://x/b/{$.k}"; rr:class ex:B ].
     """)
-    got = {(r.subj, r.obj) for r in materialize(spark, mapping, cat).collect()}
+    got = {(r.subj, r.obj) for r in
+           SparkMaterializer(spark, mapping, cat).triples().collect()}
     assert got == {(f"<http://x/a/{i}>", "<http://example.com/A>")
                    for i in (0, 2, 4)} | \
                   {(f"<http://x/b/{i}>", "<http://example.com/B>")

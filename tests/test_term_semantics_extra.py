@@ -99,7 +99,7 @@ def test_constant_literal_with_datatype_and_language_precedence():
 
 
 def test_spark_parity_containers(spark):
-    from morph_xr2rml_spark.engine import materialize
+    from morph_xr2rml_spark.engine import SparkMaterializer
     from morph_xr2rml_spark.sources import SourceCatalog
     mapping = MappingDocument.from_text(PRE + """
     <#T> xrr:logicalSource [ xrr:query "db.d.find({})" ];
@@ -111,7 +111,8 @@ def test_spark_parity_containers(spark):
     docs = [{"k": 1, "names": ["a", "b"]}, {"k": 2, "names": ["c"]}]
     df = spark.createDataFrame([(json.dumps(d),) for d in docs],
                                "content string")
-    got = {tuple(r) for r in materialize(
-        spark, mapping, SourceCatalog().register_collection("d", df)).collect()}
+    cat = SourceCatalog().register_collection("d", df)
+    got = {tuple(r) for r in
+           SparkMaterializer(spark, mapping, cat).triples().collect()}
     want = materialize_local(mapping, {"d": docs})
     assert got == want

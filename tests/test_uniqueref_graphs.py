@@ -4,7 +4,7 @@ import json
 
 import pytest
 
-from morph_xr2rml_spark.engine import materialize
+from morph_xr2rml_spark.engine import SparkMaterializer
 from morph_xr2rml_spark.local_engine import materialize_local
 from morph_xr2rml_spark.model import MappingDocument
 from morph_xr2rml_spark.sources import SourceCatalog
@@ -81,7 +81,7 @@ def test_taxref_spark_parity_and_scan_reuse(spark):
     docs = [json.dumps(d) for d in _taxa()]
     df = spark.createDataFrame([(d,) for d in docs], "content string")
     cat = SourceCatalog().register_collection("taxa", df)
-    out = materialize(spark, mapping, cat)
+    out = SparkMaterializer(spark, mapping, cat).triples()
     got = {tuple(r) for r in out.collect()}
     want = materialize_local(mapping, {"taxa": _taxa()})
     assert got == want
@@ -125,5 +125,6 @@ def test_named_graphs_local_and_spark(spark):
     df = spark.createDataFrame([(json.dumps(d),) for d in docs],
                                "content string")
     cat = SourceCatalog().register_collection("d", df)
-    got = {tuple(r) for r in materialize(spark, mapping, cat).collect()}
+    got = {tuple(r) for r in
+           SparkMaterializer(spark, mapping, cat).triples().collect()}
     assert got == triples
