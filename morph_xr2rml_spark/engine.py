@@ -23,8 +23,10 @@ by construction; tests assert it.
 from __future__ import annotations
 
 import json
+import weakref
 from typing import Iterator, Optional
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (IntegerType, LongType, StringType,
                                StructField, StructType)
@@ -32,7 +34,6 @@ from pyspark.sql.types import (IntegerType, LongType, StringType,
 from .model import MappingDocument, TriplesMap
 from .mongo_filter import compile_filter, parse_filter
 from .native import union_all
-from .native_json import track_persist
 from .sources import SourceCatalog
 from .translate import CompiledTriplesMap, EngineConfig, expand_collection, \
     _compile_msp, CollTerm
@@ -88,15 +89,13 @@ TRIPLE_SCHEMA = StructType([
 ])
 
 
-def dedup_triples(df: DataFrame, exact: bool = False,
-                  prepartition: bool = False) -> DataFrame:
+def dedup_triples(df: DataFrame, prepartition: bool = False) -> DataFrame:
     """Set-semantics dedup of a triple DataFrame (Jena model equivalence).
 
-    Default: group on a 128-bit key (two independently-streamed xxhash64
+    Groups on a 128-bit key (two independently-streamed xxhash64
     values) instead of the ~150-byte string tuple — measured 3.6× faster
     at 16.5M triples (the aggregation hashtable compares 16-byte keys).
     Collision odds for DISTINCT triples ≈ n²/2^129: ~1.5e-15 at n=10^12.
-    ``exact=True`` falls back to full-string comparison.
 
     ``prepartition=True`` repartitions by the hash pair BEFORE the
     aggregate, which makes the planner skip the map-side partial
@@ -106,8 +105,6 @@ def dedup_triples(df: DataFrame, exact: bool = False,
     data — measured ~18%% faster end-to-end at 33M triples.  Keep the
     default for document flows, where iterators re-emit the same triples
     and map-side collapse pays for itself."""
-    if exact:
-        return df.dropDuplicates(["subj", "pred", "obj", "graph"])
     cols = ["subj", "pred", "obj", "graph"]
     out = (df.withColumn("_h1", F.xxhash64(*cols))
              .withColumn("_h2", F.xxhash64(F.lit(1), *cols)))
@@ -118,6 +115,46 @@ def dedup_triples(df: DataFrame, exact: bool = False,
     # result failed with INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND (Spark 4.1)
     return out.groupBy("_h1", "_h2").agg(
         *[F.any_value(c).alias(c) for c in df.columns]).drop("_h1", "_h2")
+
+
+# The package's one home for cached state: per SparkSession, the frames
+# the Python tier persisted (``"persisted"``, oldest first) and the
+# example loaders' memos.  Weakly keyed, so a session's entries leave
+# with the session and nothing outlives it.
+_SESSION_STATE: "weakref.WeakKeyDictionary[SparkSession, dict]" = \
+    weakref.WeakKeyDictionary()
+# live persists per session: evicting the oldest is always safe — a
+# later run of its plan just recomputes from the source
+_MAX_PERSISTED = 16
+
+
+def session_state(spark: SparkSession) -> dict:
+    """The cached state ``spark`` owns (created on first use)."""
+    return _SESSION_STATE.setdefault(spark, {"persisted": []})
+
+
+def _persist(spark: SparkSession, df: DataFrame) -> DataFrame:
+    """persist(MEMORY_AND_DISK) ``df`` as ``spark``'s; beyond
+    _MAX_PERSISTED live frames the session's oldest is released."""
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    live = session_state(spark)["persisted"]
+    live.append(df)
+    while len(live) > _MAX_PERSISTED:
+        live.pop(0).unpersist()
+    return df
+
+
+def release(spark: SparkSession) -> int:
+    """Unpersist every frame ``spark`` persisted; returns how many.  A
+    stopped session's frames are only forgotten: its cache went with
+    its context."""
+    live = session_state(spark)["persisted"]
+    n = len(live)
+    if spark.sparkContext._jsc is not None:
+        for df in live:
+            df.unpersist()
+    live.clear()
+    return n
 
 
 def _doc_reader(py_filter_text: Optional[str]):
@@ -276,8 +313,6 @@ class SparkMaterializer:
         # OFFSET skips first, LIMIT caps what remains
         self.tm_limit = tm_limit
         self.tm_offset = tm_offset
-        # children persisted for ROM reuse; release via cleanup()
-        self._persisted: list[DataFrame] = []
         self._rom_bases: dict[str, int] = {}
         base = 0
         for name, tm in mapping.triples_maps.items():
@@ -333,12 +368,10 @@ class SparkMaterializer:
         # ROMs present (the ROM-free case early-returned above): the child
         # stage has two consumers (base triples + join rows) — persist so
         # the JSON-parse-heavy stage runs once; disk overflow for
-        # executor-memory safety at scale.  Tracked by native_json's
-        # persist registry too: the routed plan drops this materializer,
-        # and native_json.cleanup() (and its live-entry cap) must still
+        # executor-memory safety at scale.  Owned by the session: the
+        # routed plan drops this materializer, and release() must still
         # reach the persist
-        child = track_persist(child)
-        self._persisted.append(child)
+        child = _persist(self.spark, child)
 
         base = child.where(F.col("kind") == 0) \
                     .select("subj", "pred", "obj", "graph")
@@ -346,13 +379,11 @@ class SparkMaterializer:
             self._rom_triples(child, rom_id, rom) for rom_id, rom in roms])
 
     def cleanup(self) -> None:
-        """Unpersist the child stages cached for ROM reuse.  Call after the
-        returned DataFrame has been materialized (written / collected) —
-        long-lived sessions running many materializations would otherwise
-        accumulate executor storage until eviction pressure."""
-        for df in self._persisted:
-            df.unpersist()
-        self._persisted.clear()
+        """Unpersist the child stages the session cached for ROM reuse
+        (``release``).  Call after the returned DataFrame has been
+        materialized (written / collected) — long-lived sessions running
+        many materializations would otherwise hold executor storage."""
+        release(self.spark)
 
     def _rom_triples(self, child: DataFrame, rom_id: int, rom) -> DataFrame:
         """One referencing-object-map: equi-join replacing the reference's

@@ -16,6 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .engine import session_state
 from .model import MappingDocument
 from .sources import SourceCatalog
 
@@ -75,16 +76,13 @@ def tpch_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Load the TPC-H-ish tables; doubles are cast to DECIMAL(12,2) so the
     literal lexical forms are engine/oracle stable.
 
-    The lazy DataFrame HANDLES are memoized on the session (a session
-    catalog, as any real deployment registers tables once): repeated
-    calls skip re-reading five parquet footers (~0.5 s of driver time
-    per call).  Nothing computed is cached — every execution of the
-    returned plans reads the parquet files; the memo dies with the
-    session."""
-    cache = getattr(spark, "_mxs_tpch_tables", None)
-    if cache is None:
-        cache = {}
-        spark._mxs_tpch_tables = cache
+    The lazy DataFrame HANDLES are memoized in the session's state
+    (``engine.session_state``; a session catalog, as any real deployment
+    registers tables once): repeated calls skip re-reading five parquet
+    footers (~0.5 s of driver time per call).  Nothing computed is
+    cached — every execution of the returned plans reads the parquet
+    files; the memo dies with the session."""
+    cache = session_state(spark).setdefault("tpch_tables", {})
     if sf_dir not in cache:
         tables = {}
         for name in ("region", "nation", "customer", "orders", "lineitem"):
@@ -696,10 +694,7 @@ def orderflat_catalog(spark: SparkSession, sf_dir: str) -> SourceCatalog:
     # memoized on the session, like tpch_tables: a deployment registers
     # a collection once, and rebuilding it per query re-paid both the
     # parquet-footer read and the sampling collect on every call.
-    cache = getattr(spark, "_mxs_orderflat_catalog", None)
-    if cache is None:
-        cache = {}
-        spark._mxs_orderflat_catalog = cache
+    cache = session_state(spark).setdefault("orderflat_catalog", {})
     if sf_dir not in cache:
         docs = (spark.read.parquet(f"{sf_dir}/orders.parquet")
                 .select(F.to_json(F.struct(

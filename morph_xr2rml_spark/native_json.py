@@ -177,26 +177,6 @@ def _tree_to_struct(tree: dict) -> T.StructType:
     return T.StructType(fields)
 
 
-# ---------------------------------------------------------------------------
-# Answering-mode persist tracker
-# ---------------------------------------------------------------------------
-# The unfused (answering) plan persists each resolved, filtered source
-# (JsonNativeCompiler.scan), and the Python document tier persists the
-# child stage of each TM with ROMs (engine.SparkMaterializer._tm_triples,
-# reached through api._routed_plan, SparkMaterializer.triples and
-# sink.ResumableMaterializer); both register here, and ``cleanup()``
-# releases everything.  A long-lived session answering many queries
-# would otherwise accumulate executor storage.
-
-_PERSISTED: list = []
-# live-entry cap: long sessions answering many distinct queries would
-# otherwise accumulate cached source frames indefinitely (each distinct
-# find() filter caches its own filtered copy).  Evicting the OLDEST
-# entry is always safe — a later re-execution of its plan just
-# recomputes from the source.  cleanup() remains the explicit release.
-_MAX_LIVE = 16
-
-
 def spread(df):
     """Scale-adaptive read-side parallelism fix (guide §2.5, input skew:
     "one huge unsplittable file ... repartition immediately after the
@@ -211,36 +191,6 @@ def spread(df):
     if df.rdd.getNumPartitions() >= par:
         return df
     return df.repartition(par)
-
-
-def track_persist(df):
-    """persist(MEMORY_AND_DISK) + register for cleanup().
-    Keeps at most _MAX_LIVE tracked entries: beyond that the oldest is
-    unpersisted (lazily recomputable — correctness unaffected)."""
-    from pyspark import StorageLevel
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(df)
-    while len(_PERSISTED) > _MAX_LIVE:
-        old = _PERSISTED.pop(0)
-        try:
-            old.unpersist()
-        except Exception:
-            pass   # session already stopped — nothing to release
-    return df
-
-
-def cleanup() -> int:
-    """Unpersist every frame registered by track_persist(); returns how
-    many frames were released."""
-    n = 0
-    for df in _PERSISTED:
-        try:
-            df.unpersist()
-            n += 1
-        except Exception:
-            pass   # session already stopped — nothing to release
-    _PERSISTED.clear()
-    return n
 
 
 class JsonNativeCompiler(CatalystCompiler):
@@ -460,24 +410,7 @@ class JsonNativeCompiler(CatalystCompiler):
         (tm, parsed-doc SQL, item SQL or None)."""
         src = self._source(tm)
         if not self.fuse_projections:
-            # answering mode emits one union branch per (pred, obj)
-            # entry and the evaluator references the plan once per
-            # pattern: without a persist every surviving branch re-runs
-            # the source build + find() filter.  Spread the (filtered)
-            # rows to cluster parallelism first — local test collections
-            # are single-row-group files whose scans yield 1-2 tasks,
-            # which would serialize the per-row parse; no-op with
-            # plentiful splits (guide §2.5) — then lazy-persist the
-            # RESOLVED, FILTERED content rows: computed when the first
-            # branch executes, shared by the rest (guide §5: reused +
-            # expensive to recompute; released via cleanup()).  The
-            # persist sits BELOW the nondeterministic parse barrier:
-            # the cached subplan stays deterministic, so Catalyst's
-            # cache matching (sameResult) recognizes every reference.
-            # Schema sampling (_source in _schema_for) sees the
-            # raw registered source, so its limit(n).collect() stays an
-            # incremental first-partition take, not this shuffle.
-            src = track_persist(spread(src))
+            src = spread(src)
         parsed = self._parse_select(src, self._schema_for(tm))
         if tm.logical_source.iterator is None:
             return parsed, (tm, "`_doc`", None)

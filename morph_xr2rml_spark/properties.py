@@ -3,10 +3,10 @@ file format (MorphProperties.scala) so an existing morph-xr2rml user can
 point this engine at their current config + mapping unchanged.
 
 Database connection entries (MongoDB/MySQL URLs) don't apply — sources
-are DataFrames here — but the semantic switches do:
+are DataFrames here — and neither does querytranslator.cachequeryresult:
+both are ignored.  The semantic switches do apply:
   literal.trim, uricolumn.encode_unsafe_chars_*, output.syntax.rdf,
-  mappingdocument.file.path, querytranslator.cachequeryresult,
-  datatranslation.limit.
+  mappingdocument.file.path, datatranslation.limit/offset.
 """
 
 from __future__ import annotations
@@ -44,7 +44,6 @@ class MorphProperties:
     mapping_path: Optional[str]
     config: EngineConfig
     output_syntax: str              # TURTLE | N-TRIPLE | ...
-    cache_query_result: bool
     tm_limit: Optional[int]
     tm_offset: Optional[int] = None
 
@@ -67,8 +66,6 @@ class MorphProperties:
             mapping_path=mapping,
             config=cfg,
             output_syntax=props.get("output.syntax.rdf", "TURTLE"),
-            cache_query_result=_bool(props, "querytranslator.cachequeryresult",
-                                     False),
             tm_limit=int(limit) if limit else None,
             tm_offset=int(offset) if offset else None,
         )

@@ -77,24 +77,29 @@ class ResumableMaterializer:
             if done.get(key, {}).get("complete"):
                 continue
             t0 = time.time()
-            # count the rows as they are written: no re-read of the parquet
-            written = Observation()
-            triples = dedup_triples(self.materializer._tm_triples(tm)) \
-                .observe(written, F.count(F.lit(1)).alias("n"))
-            triples.write.mode("overwrite").parquet(
-                os.path.join(self.out_path, f"tm={key}"))
-            entry = {
-                "complete": True,
-                "triples": written.get["n"],
-                "seconds": round(time.time() - t0, 3),
-                "source": tm.logical_source.source_id(),
-            }
-            if record_lineage:
-                src, _pyf = self.catalog.resolve(tm.logical_source)
-                entry["input_partitions"] = [
-                    row.asDict() for row in partition_metrics(src).collect()]
-            done[key] = entry
-            self._save_manifest(manifest)
+            try:
+                # count the rows as they are written: no parquet re-read
+                written = Observation()
+                triples = dedup_triples(self.materializer._tm_triples(tm)) \
+                    .observe(written, F.count(F.lit(1)).alias("n"))
+                triples.write.mode("overwrite").parquet(
+                    os.path.join(self.out_path, f"tm={key}"))
+                entry = {
+                    "complete": True,
+                    "triples": written.get["n"],
+                    "seconds": round(time.time() - t0, 3),
+                    "source": tm.logical_source.source_id(),
+                }
+                if record_lineage:
+                    src, _pyf = self.catalog.resolve(tm.logical_source)
+                    entry["input_partitions"] = [
+                        row.asDict()
+                        for row in partition_metrics(src).collect()]
+                done[key] = entry
+                self._save_manifest(manifest)
+            finally:
+                # the TM's ROM child stage is cached for this TM alone
+                self.materializer.cleanup()
         return manifest
 
     def triples(self) -> DataFrame:

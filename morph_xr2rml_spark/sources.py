@@ -231,7 +231,8 @@ class SourceCatalog:
         # the json-native compiler's sampled schemas and unsafe-path
         # verdicts, by (source, needed paths, sample size); every
         # registration clears it, so new data is never served a stale
-        # sample
+        # sample.  Kept here, not in engine.session_state: it describes
+        # this catalog's registered data and holds no Spark storage
         self.schema_samples: dict = {}
 
     # -- registration ----------------------------------------------------

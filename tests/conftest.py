@@ -1,9 +1,11 @@
+import pathlib
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
+TESTS = pathlib.Path(__file__).resolve().parent
+sys.path.insert(0, str(TESTS.parent))
+sys.path.insert(0, str(TESTS))
 
 
 @pytest.fixture(scope="session")

@@ -4,6 +4,7 @@ scale).  Heavy — enabled via MXS_FULL_GATE=1; the per-op sf0.001
 equivalents run in the default suite."""
 
 import os
+import pathlib
 
 import duckdb
 import pytest
@@ -25,7 +26,7 @@ def _duck(sql: str):
 
 def _entry():
     import sys
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
     import __spark_entry__ as e
     return e
 

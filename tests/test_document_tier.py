@@ -1,7 +1,9 @@
 """The Python document tier, one path per job: ``SparkMaterializer``'s
 ``triples()`` and ``ResumableMaterializer.run`` emit what the
 single-process ``local_engine`` emits, and the resumable sink counts each
-triples map's rows while it writes them instead of re-reading them."""
+triples map's rows while it writes them instead of re-reading them.
+The ROM child stages the tier persists belong to the session that made
+them and are released by ``release`` (and after each resumable TM)."""
 
 import json
 import os
@@ -9,7 +11,8 @@ import uuid
 
 import pytest
 
-from morph_xr2rml_spark.engine import SparkMaterializer, dedup_triples
+from morph_xr2rml_spark.engine import (SparkMaterializer, dedup_triples,
+                                       release, session_state)
 from morph_xr2rml_spark.local_engine import materialize_local
 from morph_xr2rml_spark.model import MappingDocument
 from morph_xr2rml_spark.sink import ResumableMaterializer
@@ -138,3 +141,38 @@ def test_resumable_counts_while_writing(spark, tmp_path):
     stored = spark.read.parquet(os.path.join(out, "tm=Lines")).count()
     raw = SparkMaterializer(spark, mapping, cat).triples(dedup=False).count()
     assert entry["triples"] == stored == 6 < raw
+
+
+def _persisted_rdds(spark) -> int:
+    return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+
+def _cached(df) -> bool:
+    return df.storageLevel.useMemory or df.storageLevel.useDisk
+
+
+def test_resumable_run_leaves_nothing_persisted(spark, tmp_path):
+    """Each ROM TM's child stage is released once its triples are
+    written and committed.  Other tests' RDDs may leave asynchronously
+    (ContextCleaner), so the count may fall during the run, but must
+    not rise."""
+    mapping = MappingDocument.from_text(ROM_MAPPING)
+    cat = _catalog(spark, {"c": C_DOCS, "p": P_DOCS})
+    before = _persisted_rdds(spark)
+    ResumableMaterializer(spark, mapping, cat, _out_dir(tmp_path)).run()
+    assert _persisted_rdds(spark) <= before
+
+
+def test_sessions_do_not_share_persists(spark):
+    """A persist belongs to the session that made it: releasing another
+    session on the same SparkContext leaves it cached, releasing its
+    own session frees it."""
+    mapping = MappingDocument.from_text(ROM_MAPPING)
+    release(spark)
+    SparkMaterializer(spark, mapping, _catalog(
+        spark, {"c": C_DOCS, "p": P_DOCS})).triples().collect()
+    (child,) = session_state(spark)["persisted"]
+    assert release(spark.newSession()) == 0
+    assert _cached(child)
+    assert release(spark) == 1
+    assert not _cached(child)

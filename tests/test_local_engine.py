@@ -3,6 +3,7 @@ via the single-process materializer (the executable spec the Spark
 engine must match)."""
 
 import json
+import pathlib
 
 from fixtures_data import MAPPING1_PATH, MOVIES, STUDENTS
 
@@ -26,7 +27,9 @@ def _mat(mapping_text=None):
 def test_against_golden_fixture():
     triples = _mat()
     golden = set()
-    with open("/root/repo/fixtures/students_movies_golden.nt") as f:
+    golden_nt = (pathlib.Path(__file__).resolve().parent.parent
+                 / "fixtures" / "students_movies_golden.nt")
+    with open(golden_nt) as f:
         for line in f:
             line = line.strip()
             if line:

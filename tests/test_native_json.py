@@ -217,31 +217,31 @@ def test_schema_sampling_cached_on_catalog(spark):
     assert "v" not in s3.fieldNames()
 
 
-def test_cleanup_releases_persisted_sources(spark):
-    """Answering mode persists each resolved, filtered document source;
-    native_json.cleanup() must release every tracked persist so a
-    long-lived session does not leak executor storage."""
+def test_answering_persists_nothing(spark):
+    """An answering plan over a json-native source caches nothing: no
+    InMemoryRelation in its plan, and running it leaves the session's
+    persisted-RDD count where it was, so no later call can read (or a
+    long-lived session accumulate) a frame this call made."""
     from test_examples_oracle import SF_DIR
 
-    from morph_xr2rml_spark import examples, native_json
-    native_json.cleanup()   # reset anything earlier tests tracked
+    from morph_xr2rml_spark import examples
     jsc = spark.sparkContext._jsc.sc()
-    examples.sparql_pushdown_doclit(spark, SF_DIR).collect()
-    # raw getPersistentRDDs counts are racy — unreferenced RDDs from
-    # earlier tests are garbage-collected asynchronously by the
-    # ContextCleaner.  Assert on the DELTA the tracked cleanup produces.
-    mid = jsc.getPersistentRDDs().size()
-    released = native_json.cleanup()
-    assert released >= 1
-    assert jsc.getPersistentRDDs().size() <= mid - released
+    # other tests' RDDs may leave asynchronously (ContextCleaner), so
+    # the count may fall while this runs, but must not rise
+    before = jsc.getPersistentRDDs().size()
+    df = examples.sparql_pushdown_doclit(spark, SF_DIR)
+    df.collect()
+    assert jsc.getPersistentRDDs().size() <= before
+    assert "InMemoryRelation" not in \
+        df._jdf.queryExecution().optimizedPlan().toString()
 
 
 def test_cleanup_releases_python_tier_rom_persists(spark):
     """A document-tier TM with a ROM persists its child stage; the routed
     plan drops the SparkMaterializer that made it, so the persist must be
-    tracked by native_json too, or nothing can ever release it."""
-    from morph_xr2rml_spark import native_json
+    owned by the session, or nothing can ever release it."""
     from morph_xr2rml_spark.api import _routed_plan, answer_auto
+    from morph_xr2rml_spark.engine import release
     mapping = MappingDocument.from_text(JOIN_MAPPING.replace(
         '''    rr:subjectMap [ rr:template "http://x/c/{$.id}" ];''',
         '''    rr:subjectMap [ rr:template "http://x/c/{$.id}" ];
@@ -255,7 +255,7 @@ def test_cleanup_releases_python_tier_rom_persists(spark):
         [(json.dumps({"id": 10, "v": "x"}),)], "content string"))
     assert _routed_plan(spark, mapping, cat)[1] == {"#Child": "doc",
                                                     "#Parent": "json"}
-    native_json.cleanup()   # reset anything earlier tests tracked
+    release(spark)          # reset anything earlier tests persisted
     jsc = spark.sparkContext._jsc.sc()
     for i in (1, 2, 3):
         rows = answer_auto(spark, mapping, "SELECT ?p ?o WHERE "
@@ -263,6 +263,6 @@ def test_cleanup_releases_python_tier_rom_persists(spark):
                            catalog=cat).collect()
         assert len(rows) == 3          # two tags + the ROM reference
     mid = jsc.getPersistentRDDs().size()
-    released = native_json.cleanup()
+    released = release(spark)
     assert released >= 3
     assert jsc.getPersistentRDDs().size() <= mid - released

@@ -6,8 +6,9 @@ the router's ``api._routed_plan`` builds a whole-mapping plan,
 aggregate pushdown runs the evaluator's own SELECT tail, the
 Catalyst compilers and the find() compiler build expressions as SQL
 text only, with one find()-filter walker, the two Catalyst tiers
-share one compiler core, and the Python document tier has one find()
-decision and one document walk."""
+share one compiler core, the Python document tier has one find()
+decision and one document walk, cached state has one session-owned
+home, and the tests import their own checkout."""
 
 import ast
 import pathlib
@@ -323,4 +324,36 @@ def test_python_document_tier_is_written_once():
         bad.append(f"engine.py parse guards: {parse_guards}")
     bad += [f"engine.py:{fn.lineno}: def materialize" for fn in tree.body
             if isinstance(fn, ast.FunctionDef) and fn.name == "materialize"]
+    assert not bad, bad
+
+
+def test_cached_state_has_one_session_owned_home():
+    """One ``.persist(`` in the package, in engine.py (the session-keyed
+    registry); no memo is monkeypatched onto a SparkSession; and the
+    process-global persist registry stays gone."""
+    pkg = ROOT / "morph_xr2rml_spark"
+    persists = [f"{path.relative_to(ROOT)}:{line}"
+                for path in _sources() for name, line in _calls(path)
+                if name == "persist"]
+    assert len(persists) == 1 and persists[0].startswith(
+        "morph_xr2rml_spark/engine.py:"), persists
+    bad = [f"{path.relative_to(ROOT)}" for path in _sources()
+           if 'getattr(spark, "_mxs_' in path.read_text()]
+    native_json = pkg / "native_json.py"
+    tree = ast.parse(native_json.read_text(), str(native_json))
+    defined = {n.name for n in tree.body if isinstance(n, ast.FunctionDef)}
+    defined |= {t.id for n in tree.body if isinstance(n, ast.Assign)
+                for t in n.targets if isinstance(t, ast.Name)}
+    bad += [f"native_json.{name}" for name in
+            ("_PERSISTED", "_MAX_LIVE", "track_persist", "cleanup")
+            if name in defined]
+    assert not bad, bad
+
+
+def test_tests_import_their_own_checkout():
+    """No test names this checkout's absolute path: the suite run from
+    any checkout imports and reads that checkout's own files."""
+    bad = [str(path.relative_to(ROOT))
+           for path in sorted((ROOT / "tests").rglob("*.py"))
+           if str(ROOT) in path.read_text()]
     assert not bad, bad

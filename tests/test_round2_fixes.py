@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from morph_xr2rml_spark.api import materialize_auto
-from morph_xr2rml_spark.engine import SparkMaterializer
+from morph_xr2rml_spark.engine import SparkMaterializer, release, session_state
 from morph_xr2rml_spark.model import MappingDocument
 from morph_xr2rml_spark.sources import SourceCatalog, mongo_filter_to_column
 from morph_xr2rml_spark.sparql import SparqlEngine
@@ -215,11 +215,13 @@ def test_materializer_cleanup_unpersists(spark):
         [(json.dumps({"id": 1}),)], "content string"))
     cat.register_collection("b", spark.createDataFrame(
         [(json.dumps({"id": 1, "name": "n"}),)], "content string"))
+    release(spark)                           # earlier tests' persists
     m = SparkMaterializer(spark, mapping, cat)
     m.triples().collect()
-    assert m._persisted                      # child stage was cached
-    cached = m._persisted[0]
+    live = session_state(spark)["persisted"]
+    assert live                              # child stage was cached
+    cached = live[0]
     assert cached.storageLevel.useMemory or cached.storageLevel.useDisk
     m.cleanup()
-    assert not m._persisted
+    assert not live
     assert not (cached.storageLevel.useMemory or cached.storageLevel.useDisk)

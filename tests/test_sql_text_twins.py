@@ -9,11 +9,12 @@ local_engine.materialize_local on the same rows; the Python tier's
 double lexical against Spark's own cast.
 """
 
+import pathlib
 import sys
 import pytest
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
 
 from conftest import tier_pool  # noqa: E402
 from morph_xr2rml_spark.functions.datatypes import to_lexical  # noqa: E402
