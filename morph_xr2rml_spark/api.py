@@ -13,22 +13,25 @@ paper's modes.
 ``materialize_auto`` (graph materialization, the reference's
 ``MorphRunner``, MorphRunner.scala:28-115) and ``answer_auto`` (query
 rewriting) both compile through ``_routed_plan``: derived constraints
-applied per tier, every TM routed, each tier compiled, one union, and
-one duplicate-freeness proof.
+applied per tier, every TM routed, each tier compiled, one union, one
+duplicate-freeness proof and, for materialization, one dedup decision.
 """
 
 from __future__ import annotations
 
+import logging
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .engine import SparkMaterializer
+from .engine import SparkMaterializer, dedup_triples
 from .model import MappingDocument, TriplesMap
 from .native import (NativeCompiler, is_tabular_compilable,
-                     provably_distinct, union_all)
+                     overlapping_pair, provably_distinct, union_all)
 from .sources import SourceCatalog
 from .translate import EngineConfig
+
+_log = logging.getLogger(__name__)
 
 
 def route_tier(mapping: MappingDocument, tm: TriplesMap,
@@ -64,11 +67,18 @@ def _routed_plan(spark: SparkSession, mapping: MappingDocument,
                  catalog: Optional[SourceCatalog] = None,
                  tables: Optional[dict[str, DataFrame]] = None,
                  cfg: Optional[EngineConfig] = None,
-                 constraints: Optional[dict] = None):
+                 constraints: Optional[dict] = None, dedup: bool = False):
     """Compile ``mapping`` with every TM on its routed tier.  Returns
     ``(triples, tiers, distinct)``: the union of the per-TM plans, the
     tier of every emitting TM, and a thunk for the plan's one
     duplicate-freeness proof.
+
+    ``dedup`` (materialization) deduplicates the triples, in the first
+    mode that applies, logged at DEBUG: ``eliminated`` when ``distinct``
+    proves there is nothing to drop; ``keyed`` when every TM dedups
+    exactly on its entry ids and typed leaf values
+    (``CatalystCompiler.keyed_triples``) and the TMs are pairwise
+    disjoint; otherwise ``hashed`` (``engine.dedup_triples``).
 
     ``constraints`` (rewrite.derive_tm_constraints) selects answering
     mode, ``None`` materialization.  In answering mode a TM whose
@@ -112,11 +122,6 @@ def _routed_plan(spark: SparkSession, mapping: MappingDocument,
     nc = NativeCompiler(spark, mapping, tables, cfg,
                         fuse_projections=not answering,
                         tm_row_filters=row_filters)
-    parts = [nc.tm_triples(tm) for tm in by_tier["native"]]
-    parts += [jc.tm_triples(tm) for tm in by_tier["json"]]
-    if by_tier["doc"]:
-        sm = SparkMaterializer(spark, mapping, catalog, cfg)
-        parts += [sm._tm_triples(tm) for tm in by_tier["doc"]]
 
     def distinct() -> bool:
         """The plan provably emits no duplicate triple: each native TM
@@ -129,7 +134,51 @@ def _routed_plan(spark: SparkSession, mapping: MappingDocument,
             lambda tm: (nc if tiers[tm.name] == "native" else jc)
             .tm_distinct(tm))
 
-    return union_all(spark, parts), tiers, distinct
+    mode = None
+    if dedup:
+        if distinct():
+            mode, why = "eliminated", "the plan emits no duplicate triple"
+        else:
+            keyed, why = _keyed_parts(mapping, tiers, {"native": nc,
+                                                       "json": jc})
+            mode = "hashed" if keyed is None else "keyed"
+        _log.debug("dedup %s: %s", mode, why)
+        if mode == "keyed":
+            return union_all(spark, keyed), tiers, distinct
+    parts = [nc.tm_triples(tm) for tm in by_tier["native"]]
+    parts += [jc.tm_triples(tm) for tm in by_tier["json"]]
+    if by_tier["doc"]:
+        sm = SparkMaterializer(spark, mapping, catalog, cfg)
+        parts += [sm._tm_triples(tm) for tm in by_tier["doc"]]
+    out = union_all(spark, parts)
+    if mode == "hashed":
+        # native and json-native TMs emit one triple per (row, term map)
+        # -- mostly distinct, where the map-side partial agg only burns
+        # memory (measured 2.4x at 66M triples).  Document-tier TMs
+        # (iterator re-emission) keep the default map-side collapse.
+        out = dedup_triples(out, prepartition="doc" not in tiers.values())
+    return out, tiers, distinct
+
+
+def _keyed_parts(mapping: MappingDocument, tiers: dict, compilers: dict):
+    """``(parts, why)``: every emitting TM's keyed dedup, or ``(None,
+    why)`` naming the first TM, term or pair the proof refuses."""
+    doc = [n for n, t in tiers.items() if t == "doc"]
+    if doc:
+        return None, f"{doc[0]} runs on the Python document tier"
+    tms = [mapping.triples_maps[n] for n in tiers]
+    pair = overlapping_pair(tms)
+    if pair is not None:
+        return None, (f"{pair[0].name} and {pair[1].name} may emit the "
+                      f"same triple")
+    parts = []
+    for tm in tms:
+        part, why = compilers[tiers[tm.name]].keyed_triples(tm)
+        if part is None:
+            return None, why
+        parts.append(part)
+    return parts, ("on entry ids and typed leaf values of "
+                   + ", ".join(tiers))
 
 
 def materialize_auto(spark: SparkSession, mapping: MappingDocument,
@@ -138,18 +187,11 @@ def materialize_auto(spark: SparkSession, mapping: MappingDocument,
                      cfg: Optional[EngineConfig] = None,
                      dedup: bool = True) -> DataFrame:
     """One call, one triple DataFrame with every TM on its routed tier;
-    deduplicated unless the plan is provably duplicate-free -- the
-    drop-in equivalent of the reference's materialization mode."""
-    out, tiers, distinct = _routed_plan(spark, mapping, catalog, tables,
-                                        cfg)
-    if not dedup or distinct():
-        return out
-    from .engine import dedup_triples
-    # native and json-native TMs emit one triple per (row, term map) --
-    # mostly distinct, where the map-side partial agg only burns memory
-    # (measured 2.4x at 66M triples).  Document-tier TMs (iterator
-    # re-emission) keep the default map-side collapse.
-    return dedup_triples(out, prepartition="doc" not in tiers.values())
+    deduplicated (Jena set semantics) unless ``dedup=False`` -- the
+    drop-in equivalent of the reference's materialization mode.  The
+    dedup mode and its reason are logged at DEBUG (``_routed_plan``)."""
+    return _routed_plan(spark, mapping, catalog, tables, cfg,
+                        dedup=dedup)[0]
 
 
 def answer_auto(spark: SparkSession, mapping: MappingDocument,

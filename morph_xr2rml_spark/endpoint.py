@@ -92,6 +92,8 @@ class SparqlEndpoint:
     def __init__(self, engine: SparqlEngine, host: str = "127.0.0.1",
                  port: int = 0, max_result_rows: Optional[int] = 100_000):
         self.engine = engine
+        # the frame ``serve`` cached for this endpoint; ``stop`` releases it
+        self._cached = None
         # driver-OOM guard: SELECT/CONSTRUCT results are capped Spark-side
         # (.limit) before the driver-side serializers collect them; None
         # disables the cap
@@ -223,15 +225,25 @@ class SparqlEndpoint:
         return self
 
     def stop(self) -> None:
+        """Shut the server down and unpersist the triple table if
+        ``serve`` cached it."""
         self._server.shutdown()
         self._server.server_close()
         if self._thread:
             self._thread.join(timeout=5)
+        if self._cached is not None:
+            self._cached.unpersist()
+            self._cached = None
 
 
 def serve(triples_df, host: str = "127.0.0.1", port: int = 0,
           cache: bool = True) -> SparqlEndpoint:
-    """One-call: cache the triple table and start serving SPARQL on it."""
-    if cache:
+    """One-call: cache the triple table and start serving SPARQL on it.
+    A table the caller already cached stays the caller's; one cached here
+    is unpersisted by ``stop()``."""
+    owned = cache and not triples_df.is_cached
+    if owned:
         triples_df = triples_df.cache()
-    return SparqlEndpoint(SparqlEngine(triples_df), host, port).start()
+    ep = SparqlEndpoint(SparqlEngine(triples_df), host, port)
+    ep._cached = triples_df if owned else None
+    return ep.start()

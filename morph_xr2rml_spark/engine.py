@@ -13,7 +13,11 @@ record-at-a-time loop, MorphMongoDataTranslator.scala:85-231):
       → refobjectmap joins: explode-both-sides EQUI-JOIN # replaces the
           + AND-intersection across join conditions     # reference's
           + collect_list for collection-typed results   # O(n·m) nested loop
-  union all triples maps → dropDuplicates               # Jena set semantics
+
+Jena set semantics (every triple once) are api._routed_plan's decision
+over the union of all tiers' triples maps: no dedup when the plan is
+provably duplicate-free, a keyed dedup on typed values where the
+Catalyst tiers prove it exact, else ``dedup_triples`` below.
 
 The per-document semantics live in translate.py and are shared with the
 single-process oracle (local_engine.py), so Spark output == oracle output
@@ -90,7 +94,10 @@ TRIPLE_SCHEMA = StructType([
 
 
 def dedup_triples(df: DataFrame, prepartition: bool = False) -> DataFrame:
-    """Set-semantics dedup of a triple DataFrame (Jena model equivalence).
+    """Set-semantics dedup of a triple DataFrame (Jena model equivalence):
+    the fallback for the plans the keyed dedup's proof refuses
+    (CatalystCompiler.keyed_triples), which groups on typed source
+    values instead and renders the terms after the exchange.
 
     Groups on a 128-bit key (two independently-streamed xxhash64
     values) instead of the ~150-byte string tuple — measured 3.6× faster

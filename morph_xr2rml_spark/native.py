@@ -13,11 +13,13 @@ This is the scale path: the document compiler (engine.py) covers full
 xR2RML (JSONPath, iterators, nested term maps); this one covers the
 R2RML subset at parquet-native speed.  ``CatalystCompiler`` is the core
 it shares with the json-native tier (native_json.py): term render,
-class/POM walk, unfused branches and duplicate-freeness check.
+class/POM walk, unfused branches, keyed dedup and duplicate-freeness
+check.
 """
 
 from __future__ import annotations
 
+import itertools
 import math
 from decimal import Decimal, InvalidOperation
 from typing import Optional
@@ -28,8 +30,8 @@ from pyspark.sql import types as T
 from . import namespaces as NS
 from .functions.encoding import _ENCODE_RESERVED, _ENCODE_URL, encode_url
 from .functions.templates import compile_template, get_template_groups
-from .model import (COLUMN, CONSTANT, TEMPLATE, MappingDocument, TermMap,
-                    TriplesMap)
+from .model import (COLUMN, CONSTANT, REFERENCE, TEMPLATE, MappingDocument,
+                    TermMap, TriplesMap)
 from .translate import EngineConfig, nt_escape
 
 TRIPLE_COLS = ("subj", "pred", "obj", "graph")
@@ -262,14 +264,41 @@ def union_all(spark: SparkSession, parts: list) -> DataFrame:
     return out
 
 
+def case_sql(index: str, vals) -> str:
+    """The value ``vals[i]`` of the row whose ``index`` column is i."""
+    whens = " ".join(f"WHEN {index} = {i} THEN {v}"
+                     for i, v in enumerate(vals))
+    return f"(CASE {whens} END)"
+
+
+class KeyRow(dict):
+    """The row context above a keyed dedup's aggregate: reference →
+    (key column, source type, stringified), what ``source_leaf`` gives
+    for the same reference below it."""
+
+
+def _iri_map(position: str, iri: str) -> TermMap:
+    return TermMap(kind=CONSTANT, position=position, constant=("iri", iri))
+
+
+def _leaf_refs(m: TermMap) -> list:
+    """The references whose values the term ``m`` renders."""
+    if m.kind == TEMPLATE:
+        return get_template_groups(m.template)
+    if m.kind == CONSTANT:
+        return []
+    return [m.column if m.kind == COLUMN else m.reference]
+
+
 class CatalystCompiler:
     """The compiler core of both Catalyst tiers, as SQL text: the term
     renderer, the class/predicate-object walk, the unfused per-entry
-    branches and the per-TM duplicate-freeness check.  A tier supplies
-    only what depends on where a value comes from:
+    branches, the keyed dedup and the per-TM duplicate-freeness check.
+    A tier supplies only what depends on where a value comes from:
 
-      - ``leaf(ctx, ref)``: a reference's (SQL, source type) in the
-        tier's row context, and ``NATURAL_XSD``, its natural datatypes;
+      - ``source_leaf(ctx, ref)``: a reference's (SQL, source type,
+        stringified) in the tier's row context, and ``NATURAL_XSD``, its
+        natural datatypes;
       - ``scan(tm)``: the source frame and its row context;
       - ``subject_unique(tm)``, ``_slot_ok(om)`` and ``_rom_ok(rom)``:
         the facts the duplicate-freeness check rests on;
@@ -290,6 +319,16 @@ class CatalystCompiler:
         self.mapping = mapping
         self.cfg = cfg or EngineConfig()
         self.fuse_projections = fuse_projections
+
+    def leaf(self, ctx, ref: str) -> tuple[str, T.DataType]:
+        """A reference's (SQL, type) as the renderer reads it: the tier's
+        source value, or in a ``KeyRow`` its key column, cast to its
+        lexical string where the value is stringified (a pushed-down
+        field)."""
+        sql, dt, stringified = ctx[ref] if isinstance(ctx, KeyRow) \
+            else self.source_leaf(ctx, ref)
+        return (lexical_sql(sql, dt), T.StringType()) if stringified \
+            else (sql, dt)
 
     # -- terms ----------------------------------------------------------
     def term_sql(self, ctx, m: TermMap) -> str:
@@ -394,12 +433,9 @@ class CatalystCompiler:
         string twice; None when the term is never NULL.  A reference is
         NULL iff its value is (every lexical keeps NULL as NULL), a
         template iff every group is (NULL groups render '')."""
-        if m.kind == CONSTANT:
-            return None
-        refs = get_template_groups(m.template) if m.kind == TEMPLATE \
-            else [m.column if m.kind == COLUMN else m.reference]
+        refs = _leaf_refs(m)
         if not refs:
-            return None              # group-less template: constant text
+            return None              # a constant, or a group-less template
         return "(" + " AND ".join(f"({self.leaf(ctx, r)[0]} IS NULL)"
                                   for r in refs) + ")"
 
@@ -421,25 +457,22 @@ class CatalystCompiler:
             + [(NULL_G, f"({allnull})")]
 
     def _entries(self, ctx, tm: TriplesMap) -> tuple[list, list]:
-        """A TM's per-row emissions as SQL text: ``(pred, obj, graph,
-        cond, obj_null)`` entries for its classes and object maps, and
-        ``(pred, rom, graph, cond)`` ROM slots.  A class triple lands in
-        the subject map's graphs, a POM triple in subject ∪ POM graphs."""
-        rdf_type = sql_lit(f"<{NS.RDF_TYPE}>")
+        """A TM's per-row emissions: ``(pred map, obj map, graph, cond)``
+        entries for its classes and object maps, and ``(pred map, rom,
+        graph, cond)`` ROM slots; the graph and the row condition are SQL
+        text.  A class triple lands in the subject map's graphs, a POM
+        triple in subject ∪ POM graphs."""
+        rdf_type = _iri_map("predicate", NS.RDF_TYPE)
         sub_vars = self.graph_variants(ctx, tm.graph_maps)
-        entries = [(rdf_type, sql_lit(f"<{cls}>"), gc, cond, None)
+        entries = [(rdf_type, _iri_map("object", cls), gc, cond)
                    for cls in tm.class_uris for gc, cond in sub_vars]
         roms = []
         for pom in tm.predicate_object_maps:
             gvars = self.graph_variants(ctx, tm.graph_maps + pom.graph_maps)
             for pm in pom.predicate_maps:
-                pred = self.term_sql(ctx, pm)
-                for om in pom.object_maps:
-                    obj = self.term_sql(ctx, om)
-                    obj_null = self.term_null_sql(ctx, om)
-                    entries += [(pred, obj, gc, cond, obj_null)
-                                for gc, cond in gvars]
-                roms += [(pred, rom, gc, cond)
+                entries += [(pm, om, gc, cond) for om in pom.object_maps
+                            for gc, cond in gvars]
+                roms += [(pm, rom, gc, cond)
                          for rom in pom.ref_object_maps
                          for gc, cond in gvars]
         return entries, roms
@@ -455,15 +488,103 @@ class CatalystCompiler:
         frame, ctx = self.scan(tm)
         subj = self.term_sql(ctx, tm.subject_map)
         subj_null = self.term_null_sql(ctx, tm.subject_map)
-        entries, roms = self._entries(ctx, tm)
+        entry_maps, roms = self._entries(ctx, tm)
+        entries = [(self.term_sql(ctx, pm), self.term_sql(ctx, om), graph,
+                    cond, self.term_null_sql(ctx, om))
+                   for pm, om, graph, cond in entry_maps]
         if self.fuse_projections and entries:
             parts = self._fused(frame, subj, subj_null, entries)
         else:
             parts = [self._branch(frame, subj, subj_null, *e)
                      for e in entries]
-        parts += [self._rom_triples(ctx, frame, subj, subj_null, *r)
-                  for r in roms]
+        parts += [self._rom_triples(ctx, frame, subj, subj_null,
+                                    self.term_sql(ctx, pm), *r)
+                  for pm, *r in roms]
         return union_all(self.spark, parts)
+
+    # -- keyed dedup ------------------------------------------------------
+    def keyed_triples(self, tm: TriplesMap):
+        """``(frame, None)``: the TM's triples deduplicated on keys, not
+        rendered strings; ``(None, why)`` when that is not provably exact.
+
+        Each row explodes one narrow struct per entry: the entry id and
+        the typed source value of every leaf the entry reads (NULL for
+        the leaves it does not read), after the null guards.  The
+        aggregate groups those structs, and the terms render above it
+        through the same ``term_sql``, over a ``KeyRow`` context.  Equal
+        keys render equal triples.  The converse needs two facts: the
+        entries are pairwise disjoint, and every term renders
+        injectively from its leaves (``term_key_refusal``)."""
+        if any(pom.ref_object_maps for pom in tm.predicate_object_maps):
+            return None, f"{tm.name}: a referencing object map"
+        gms = tm.graph_maps + [gm for pom in tm.predicate_object_maps
+                               for gm in pom.graph_maps]
+        if any(gm.kind != CONSTANT for gm in gms):
+            return None, f"{tm.name}: a graph map that is not constant"
+        frame, ctx = self.scan(tm)
+        entries, _roms = self._entries(ctx, tm)
+
+        def fixed(m: TermMap) -> Optional[str]:
+            return self.term_sql(ctx, m) if m.kind == CONSTANT else None
+
+        sigs = [(fixed(pm), fixed(om), graph)
+                for pm, om, graph, _cond in entries]
+        for i, a in enumerate(sigs):
+            for b in sigs[i + 1:]:
+                if not any(x is not None and y is not None and x != y
+                           for x, y in zip(a, b)):
+                    return None, (f"{tm.name}: two entries on predicate "
+                                  f"{a[0] or b[0] or '(per row)'} may "
+                                  f"emit the same triple")
+        sm = tm.subject_map
+        terms = [sm] + [m for pm, om, _g, _c in entries for m in (pm, om)]
+        for m in terms:
+            why = term_key_refusal(m, lambda r: self.source_leaf(ctx, r)[1],
+                                   self.cfg)
+            if why is not None:
+                return None, f"{tm.name}: {why}"
+        if not entries:
+            return union_all(self.spark, []), None
+
+        reads = [_leaf_refs(sm) + _leaf_refs(pm) + _leaf_refs(om)
+                 for pm, om, _g, _c in entries]
+        leaves = list(dict.fromkeys(r for refs in reads for r in refs))
+        src = {r: self.source_leaf(ctx, r) for r in leaves}
+        # a stringified (pushed-down) value of a RENDER_ALPHABET type
+        # renders as the typed value does, since no string chain touches
+        # its characters -- except as a literal that takes its natural
+        # datatype from the type.  Elsewhere it renders typed: kg_docs'
+        # subject then skips a 30-replace encode chain per triple
+        literal_refs = {r for m in terms if m.kind in (COLUMN, REFERENCE)
+                        and m.infer_term_type() == NS.RR_LITERAL
+                        for r in _leaf_refs(m)}
+        key = KeyRow({r: (f"_k{j}", src[r][1],
+                          src[r][2] and r in literal_refs)
+                      for j, r in enumerate(leaves)})
+        structs = []
+        for e, ((_pm, om, _g, _c), refs) in enumerate(zip(entries, reads)):
+            fields = [f"{e} AS _e"] + [
+                (src[r][0] if r in refs
+                 else f"CAST(NULL AS {src[r][1].simpleString()})")
+                + f" AS _k{j}" for j, r in enumerate(leaves)]
+            st = f"struct({', '.join(fields)})"
+            obj_null = self.term_null_sql(ctx, om)
+            structs.append(st if obj_null is None
+                           else f"(CASE WHEN NOT {obj_null} THEN {st} END)")
+        subj_null = self.term_null_sql(ctx, sm)
+        if subj_null is not None:
+            frame = frame.where(f"(NOT {subj_null})")
+        keys = (frame.selectExpr(f"explode(array({', '.join(structs)})) AS _k")
+                .where("_k IS NOT NULL").select("_k.*").distinct())
+
+        def per_entry(vals) -> str:
+            return vals[0] if len(set(vals)) == 1 else case_sql("_e", vals)
+
+        return keys.selectExpr(
+            f"{self.term_sql(key, sm)} AS subj",
+            f"{per_entry([self.term_sql(key, e[0]) for e in entries])} AS pred",
+            f"{per_entry([self.term_sql(key, e[1]) for e in entries])} AS obj",
+            f"{per_entry([e[2] for e in entries])} AS graph"), None
 
     @staticmethod
     def _branch(frame: DataFrame, subj: str, subj_null: Optional[str],
@@ -529,19 +650,24 @@ def provably_distinct(tms, tm_distinct) -> bool:
     pair of TMs with disjoint subject spaces (distinct term types, or
     neither fixed prefix a prefix of the other) or disjoint constant
     predicate sets."""
-    from .rewrite import tm_pred_iris
     tms = list(tms)
-    if not all(tm_distinct(tm) for tm in tms):
-        return False
-    infos = [(subject_space(tm), tm_pred_iris(tm)) for tm in tms]
-    for i, (sp_a, pr_a) in enumerate(infos):
-        for sp_b, pr_b in infos[i + 1:]:
+    return all(tm_distinct(tm) for tm in tms) and overlapping_pair(tms) is None
+
+
+def overlapping_pair(tms):
+    """The first pair of triples maps that may emit a common triple, or
+    None when every pair has disjoint subject spaces or disjoint
+    constant predicate sets."""
+    from .rewrite import tm_pred_iris
+    infos = [(tm, subject_space(tm), tm_pred_iris(tm)) for tm in tms]
+    for i, (tm_a, sp_a, pr_a) in enumerate(infos):
+        for tm_b, sp_b, pr_b in infos[i + 1:]:
             if subject_spaces_disjoint(sp_a, sp_b):
                 continue
             if pr_a is not None and pr_b is not None and not (pr_a & pr_b):
                 continue
-            return False
-    return True
+            return tm_a, tm_b
+    return None
 
 
 class NativeCompiler(CatalystCompiler):
@@ -601,8 +727,8 @@ class NativeCompiler(CatalystCompiler):
         return df, df
 
     @staticmethod
-    def leaf(df: DataFrame, ref: str) -> tuple[str, T.DataType]:
-        return sql_ident(ref), df.schema[ref].dataType
+    def source_leaf(df: DataFrame, ref: str) -> tuple:
+        return sql_ident(ref), df.schema[ref].dataType, False
 
     def subject_unique(self, tm: TriplesMap) -> bool:
         return subject_renders_unique(tm, self._source_df(tm))
@@ -632,21 +758,15 @@ class NativeCompiler(CatalystCompiler):
                     for e in flat + conditional]
         base = df.selectExpr(
             "*", f"explode(sequence(0, {len(flat) - 1})) AS _i")
-
-        def case_over(vals) -> str:
-            whens = " ".join(f"WHEN _i = {i} THEN {v}"
-                             for i, v in enumerate(vals))
-            return f"(CASE {whens} END)"
-
         preds, objs, graphs, _conds, obj_nulls = zip(*flat)
         # graph-less mapping (the common case): keep the constant NULL
         # instead of a per-row CASE over the index
         graph = NULL_G if all(g == NULL_G for g in graphs) \
-            else case_over(graphs)
+            else case_sql("_i", graphs)
         obj_null = None if all(n is None for n in obj_nulls) \
-            else case_over([n or "false" for n in obj_nulls])
-        return [self._branch(base, subj, subj_null, case_over(preds),
-                             case_over(objs), graph, None, obj_null)] \
+            else case_sql("_i", [n or "false" for n in obj_nulls])
+        return [self._branch(base, subj, subj_null, case_sql("_i", preds),
+                             case_sql("_i", objs), graph, None, obj_null)] \
             + [self._branch(df, subj, subj_null, *e) for e in conditional]
 
     @staticmethod
@@ -884,15 +1004,19 @@ class NativeCompiler(CatalystCompiler):
 # cross-pattern constraint propagation)
 # ---------------------------------------------------------------------------
 
-# Rendered-value alphabets per source dtype, for multi-group template
-# injectivity: a value of this type can only contain these characters, so
-# a separator whose first char is OUTSIDE the union alphabet makes the
-# template parse unique (leftmost-delimiter argument).
+# Rendered-value languages per source dtype, for template injectivity: a
+# value of this type renders as at most one LEAD character, then one or
+# more BODY characters (a superset of its string casts: integers
+# "-12", decimals "-1.50", dates "+12000-01-01", booleans).  Exactly these
+# types key a dedup (term_key_refusal): equal values render alike and
+# distinct values differently.  A string's renders are trimmed or
+# encoded many-to-one, and a double's grouping merges -0.0/0.0 and NaN.
+_DIGITS = "0123456789"
 RENDER_ALPHABET = {
-    T.ByteType: "0123456789-", T.ShortType: "0123456789-",
-    T.IntegerType: "0123456789-", T.LongType: "0123456789-",
-    T.DecimalType: "0123456789-.", T.DateType: "0123456789-",
-    T.BooleanType: "truefals",
+    T.ByteType: ("-", _DIGITS), T.ShortType: ("-", _DIGITS),
+    T.IntegerType: ("-", _DIGITS), T.LongType: ("-", _DIGITS),
+    T.DecimalType: ("-", _DIGITS + "."), T.DateType: ("+-", _DIGITS + "-"),
+    T.BooleanType: ("", "truefals"),
 }
 # dtypes whose string render is injective on distinct values (TIMESTAMP
 # truncates sub-second precision; FLOAT/DOUBLE excluded out of caution)
@@ -933,10 +1057,10 @@ def subject_renders_unique(tm: TriplesMap, df: DataFrame) -> bool:
     # as strict (no two rows share the key, NULL included).
     alphabet = set()
     for dt in dtypes:
-        chars = RENDER_ALPHABET.get(type(dt))
-        if chars is None:
+        lang = RENDER_ALPHABET.get(type(dt))
+        if lang is None:
             return False            # string/unbounded value alphabet
-        alphabet.update(chars)
+        alphabet.update(*lang)
     rest = sm.template
     seps = []
     for g in groups:
@@ -946,6 +1070,115 @@ def subject_renders_unique(tm: TriplesMap, df: DataFrame) -> bool:
         if not sep or sep[0] in alphabet:
             return False
     return True
+
+
+def term_key_refusal(m: TermMap, leaf_type, cfg: EngineConfig) -> Optional[str]:
+    """None when the term ``m`` renders injectively from the typed
+    values of its leaves, NULL included: equal terms then mean equal
+    values, so a dedup on the values is exact.  Otherwise, why not.
+    ``leaf_type(ref)`` is a leaf's source type; a stringified
+    (pushed-down) value passes string chains that leave every
+    RENDER_ALPHABET character alone.
+
+    Admitted: constants; references to RENDER_ALPHABET types (the
+    render adds fixed text around one lexical); templates over those
+    types whose fixed text the literal chains or the Python tier's IRI
+    trim leave alone and whose separators parse uniquely
+    (``template_parses_unique``).  An explicit xsd:boolean maps every
+    non-boolean lexical but 'true' to 'false', so it is refused."""
+    refs = _leaf_refs(m)
+    if not refs:
+        return None                  # constant text
+    what = f"{m.position} map {m.template or m.column or m.reference!r}"
+    for ref in refs:
+        dt = leaf_type(ref)
+        if type(dt) not in RENDER_ALPHABET:
+            return f"{what} reads {ref} as {dt.simpleString()}"
+    literal = m.infer_term_type() == NS.RR_LITERAL
+    if literal and m.datatype == NS.XSD_BOOLEAN and (
+            m.kind == TEMPLATE
+            or not isinstance(leaf_type(refs[0]), T.BooleanType)):
+        return f"{what} normalizes its values to xsd:boolean"
+    if m.kind != TEMPLATE:
+        return None
+    segs = compile_template(m.template)
+    if any(c.isspace() or (literal and c in '\\"_')
+           for seg in segs for c in seg):
+        return f"{what} has text around its groups the render changes"
+    if not literal and (m.infer_term_type() == NS.RR_BLANKNODE
+                        or cfg.encode_unsafe_chars_in_uri):
+        segs = [encode_url(s) for s in segs]
+    if not template_parses_unique(
+            [RENDER_ALPHABET[type(leaf_type(g))] for g in refs], segs[1:-1]):
+        return f"{what}: its separators do not delimit the group values"
+    return None
+
+
+def template_parses_unique(langs, seps) -> bool:
+    """True when group values, each '' (NULL) or a word of its
+    RENDER_ALPHABET language ``(lead, body)``, joined by the n-1 fixed
+    ``seps`` parse back into one tuple only.  Decided exactly on the
+    template's automaton: it is unambiguous iff no state pair off the
+    diagonal of its self-product lies on an accepting path.  So
+    ``{a}-{b}`` over integers qualifies ("1--2" is (1, -2)), and
+    ``{a}-{b}-{c}`` does not: (NULL, 5, -3) and (-5, NULL, 3) both
+    render "-5--3"."""
+    delta: dict = {}                 # (state, char) -> target states
+    eps: dict = {}                   # state -> its one ε-successor
+    n = len(langs)
+    final = 3 * n
+    fresh = itertools.count(final + 1).__next__
+
+    def edge(p, c, q):
+        delta.setdefault((p, c), set()).add(q)
+
+    for i, (lead, body) in enumerate(langs):
+        start, led, inside = 3 * i, 3 * i + 1, 3 * i + 2
+        for c in lead:
+            edge(start, c, led)
+        for c in body:
+            edge(start, c, inside)
+            edge(led, c, inside)
+            edge(inside, c, inside)
+        cur = final if i == n - 1 else fresh()
+        eps[start] = eps[inside] = cur
+        if i < n - 1:
+            for c in seps[i]:
+                nxt = fresh()
+                edge(cur, c, nxt)
+                cur = nxt
+            eps[cur] = 3 * (i + 1)
+
+    def closure(p):
+        while p is not None:
+            yield p
+            p = eps.get(p)
+
+    chars = {c for _p, c in delta}
+
+    def step(p, c):
+        return {q for r in closure(p) for q in delta.get((r, c), ())}
+
+    def accepts(p):
+        return final in closure(p)
+
+    seen, todo, back = {(0, 0)}, [(0, 0)], {}
+    while todo:
+        p, q = todo.pop()
+        for c in chars:
+            for pq in ((a, b) for a in step(p, c) for b in step(q, c)):
+                back.setdefault(pq, set()).add((p, q))
+                if pq not in seen:
+                    seen.add(pq)
+                    todo.append(pq)
+    useful = {(p, q) for p, q in seen if accepts(p) and accepts(q)}
+    todo = list(useful)
+    while todo:
+        for pq in back.get(todo.pop(), ()):
+            if pq not in useful:
+                useful.add(pq)
+                todo.append(pq)
+    return all(p == q for p, q in useful)
 
 
 def subject_renders_unique_schemaless(tm: TriplesMap) -> bool:

@@ -246,7 +246,7 @@ class JsonNativeCompiler(CatalystCompiler):
                 return
             if it_prefix and p[0] in pushdown_fields:
                 # pushed-down fields SHADOW same-named item fields
-                # (_field_sql resolves them against the parent doc), so
+                # (source_leaf resolves them against the parent doc), so
                 # no lines.*.<field> schema entry exists or is needed
                 return
             paths.append(it_prefix + ["__*__"] + p if it_prefix else p)
@@ -347,11 +347,13 @@ class JsonNativeCompiler(CatalystCompiler):
         assert isinstance(dt, T.ArrayType)
         return dt.elementType
 
-    def _field_sql(self, tm: TriplesMap, root_sql: str,
-                   item_sql: Optional[str], ref: str) -> tuple[str, T.DataType]:
-        """(sql fragment, type) of a static reference resolved against
-        the parsed doc (root) and the iterated item — leaves are the
-        named parse columns."""
+    def source_leaf(self, ctx, ref: str) -> tuple:
+        """(sql fragment, type, stringified) of a static reference
+        resolved against the parsed doc (root) and the iterated item —
+        leaves are the named parse columns.  A pushed-down field is its
+        typed source on the parent doc, stringified (xR2RMLPushDown
+        semantics)."""
+        tm, root_sql, item_sql = ctx
         if ref == "$._id":
             ref = "$._id.$oid"
         parts = _static_path(ref)
@@ -365,20 +367,14 @@ class JsonNativeCompiler(CatalystCompiler):
         if it is not None and parts[0] in pushdown_fields:
             if len(parts) > 1:
                 # pushed values are scalar strings; deeper paths match nothing
-                return "CAST(NULL AS STRING)", T.StringType()
+                return "CAST(NULL AS STRING)", T.StringType(), False
             for pd in tm.logical_source.pushdowns:
                 if pd.target_field == parts[0]:
                     pparts = _static_path(
                         "$._id.$oid" if pd.reference == "$._id"
                         else pd.reference)
-                    sql, dt = _descend_sql(root_sql, schema, pparts)
-                    # pushDown stringifies values (xR2RMLPushDown semantics)
-                    return lexical_sql(sql, dt), T.StringType()
-        return _descend_sql(src_sql, src_schema, parts)
-
-    def leaf(self, ctx, ref: str) -> tuple[str, T.DataType]:
-        tm, root_sql, item_sql = ctx
-        return self._field_sql(tm, root_sql, item_sql, ref)
+                    return *_descend_sql(root_sql, schema, pparts), True
+        return *_descend_sql(src_sql, src_schema, parts), False
 
     # -- triples map --------------------------------------------------------
     @staticmethod

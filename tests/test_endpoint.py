@@ -132,3 +132,38 @@ def test_select_row_cap(spark):
         assert len(json.loads(body)["results"]["bindings"]) == 10
     finally:
         ep2.stop()
+
+
+def _persistent_rdds(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def test_stop_unpersists_the_table_serve_cached(spark):
+    start = _persistent_rdds(spark)
+    df = spark.createDataFrame(
+        ROWS, "subj string, pred string, obj string, graph string")
+    ep2 = serve(df)
+    try:
+        # the first query fills the cache
+        body, _ = _get(ep2, "SELECT ?n WHERE { ?s <http://ex/name> ?n }")
+        assert len(json.loads(body)["results"]["bindings"]) == 2
+        assert _persistent_rdds(spark) == start + 1
+    finally:
+        ep2.stop()
+    assert _persistent_rdds(spark) == start
+    assert not df.is_cached
+
+
+@pytest.mark.parametrize("cache", [True, False])
+def test_stop_leaves_the_callers_cache(spark, cache):
+    df = spark.createDataFrame(
+        ROWS, "subj string, pred string, obj string, graph string").cache()
+    try:
+        ep2 = serve(df, cache=cache)
+        try:
+            _get(ep2, "SELECT ?n WHERE { ?s <http://ex/name> ?n }")
+        finally:
+            ep2.stop()
+        assert df.is_cached
+    finally:
+        df.unpersist()

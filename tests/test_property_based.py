@@ -3,6 +3,7 @@
 import json
 import string
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -259,3 +260,145 @@ def test_invert_graph_ctx_never_false_prunes(values, sep, ctx_kind,
         assert res is not None
         if isinstance(res, dict):
             assert res == dict(zip(groups, values))
+
+
+# ---------------------------------------------------------------------------
+# Keyed dedup: the injectivity proof (native.term_key_refusal) against the
+# Python tier's term rendering
+# ---------------------------------------------------------------------------
+
+def _key_domains():
+    import datetime
+    from decimal import Decimal
+
+    from pyspark.sql import types as T
+    # small value domains with NULL, negatives and shared digits, so that
+    # a separator the parse cannot tell from a value shows as a collision
+    return {
+        T.LongType(): [None, -12, -2, -1, 0, 1, 2, 12, 21, 112],
+        T.IntegerType(): [None, -1, 0, 1, 11, -11],
+        T.BooleanType(): [None, True, False],
+        T.DecimalType(4, 2): [None, Decimal("-1.50"), Decimal("0.00"),
+                              Decimal("1.50"), Decimal("11.50")],
+        T.DateType(): [None, datetime.date(2020, 1, 1),
+                       datetime.date(2020, 1, 11), datetime.date(1, 1, 1)],
+    }
+
+
+_KEY_SEP = st.sampled_from(["-", "/", ".", "--", "-/", "t", "1", "e", "",
+                            " ", "_", "%", "|", "+", ":"])
+_TERM_TYPES = ("http://www.w3.org/ns/r2rml#IRI",
+               "http://www.w3.org/ns/r2rml#Literal",
+               "http://www.w3.org/ns/r2rml#BlankNode")
+
+
+@st.composite
+def _keyed_shape(draw):
+    """A reference or template term over typed leaves $.g0..$.gN."""
+    from morph_xr2rml_spark import namespaces as NS
+    from morph_xr2rml_spark.model import REFERENCE, TEMPLATE, TermMap
+    types = list(_key_domains())
+    n = draw(st.integers(1, 3))
+    dtypes = [draw(st.sampled_from(types)) for _ in range(n)]
+    term_type = draw(st.sampled_from(_TERM_TYPES))
+    datatype = draw(st.sampled_from([None, NS.XSD_BOOLEAN, NS.XSD_DATETIME]))
+    if term_type != _TERM_TYPES[1]:
+        datatype = None
+    if n == 1 and draw(st.booleans()):
+        m = TermMap(kind=REFERENCE, position="object", reference="$.g0",
+                    term_type=term_type, datatype=datatype)
+    else:
+        seps = [draw(_KEY_SEP) for _ in range(n + 1)]
+        template = seps[0] + "".join("{$.g%d}" % i + seps[i + 1]
+                                     for i in range(n))
+        m = TermMap(kind=TEMPLATE, position="object", template=template,
+                    term_type=term_type, datatype=datatype)
+    cfg = draw(st.builds(_cfg, st.booleans(), st.booleans(), st.booleans()))
+    return m, dtypes, cfg
+
+
+def _cfg(trim, enc_uri, enc_db):
+    from morph_xr2rml_spark.translate import EngineConfig
+    return EngineConfig(literal_trim=trim, encode_unsafe_chars_in_uri=enc_uri,
+                        encode_unsafe_chars_in_db_values=enc_db)
+
+
+def _refusal(m, dtypes, cfg):
+    from morph_xr2rml_spark.native import term_key_refusal
+    return term_key_refusal(m, lambda ref: dtypes[int(ref[3:])], cfg)
+
+
+@given(_keyed_shape())
+@settings(max_examples=400, deadline=None)
+def test_admitted_key_renders_are_injective(shape):
+    """Every term shape the proof admits renders distinct leaf tuples,
+    NULLs included, as distinct terms in the Python tier: two rows the
+    keyed dedup keeps apart never render the same triple."""
+    import itertools
+
+    from morph_xr2rml_spark.translate import CompiledTermMap
+    m, dtypes, cfg = shape
+    if _refusal(m, dtypes, cfg) is not None:
+        return
+    domains = _key_domains()
+    ctm = CompiledTermMap(m, cfg)
+    seen: dict = {}
+    for values in itertools.product(*(domains[dt] for dt in dtypes)):
+        terms = ctm.translate({f"g{i}": v for i, v in enumerate(values)})
+        if terms:
+            assert len(terms) == 1
+            assert seen.setdefault(terms[0], values) == values, \
+                (m.template or m.reference, terms[0])
+
+
+def test_the_proof_admits_the_corpus_shapes():
+    """The shapes of the kg_docs mapping: a '-'-separated template over
+    integers, an integer literal and a single-group template."""
+    from pyspark.sql import types as T
+
+    from morph_xr2rml_spark.model import REFERENCE, TEMPLATE, TermMap
+    from morph_xr2rml_spark.translate import EngineConfig
+    cfg = EngineConfig()
+    longs = [T.LongType(), T.LongType()]
+    for m in (TermMap(kind=TEMPLATE, position="subject",
+                      template="http://example.org/line/{$.g0}-{$.g1}"),
+              TermMap(kind=REFERENCE, position="object", reference="$.g0"),
+              TermMap(kind=TEMPLATE, position="object",
+                      template="http://example.org/part/{$.g0}")):
+        assert _refusal(m, longs, cfg) is None
+    # three '-'-separated integers do not parse back uniquely:
+    # (NULL, 5, -3) and (-5, NULL, 3) both render ".../-5--3"
+    m = TermMap(kind=TEMPLATE, position="subject",
+                template="http://x/{$.g0}-{$.g1}-{$.g2}")
+    assert "separators" in _refusal(m, longs + [T.LongType()], cfg)
+
+
+@pytest.mark.parametrize("case", [
+    "double", "float", "timestamp", "trimmed string literal",
+    "string IRI reference", "string multi-group template"])
+def test_the_proof_refuses_the_unsound_shapes(case):
+    """The five shapes a key of typed values would dedup wrongly:
+    doubles (grouping merges -0.0/0.0 and NaN, which render apart),
+    timestamps (rendered to the second), string literals under
+    literal_trim (" a" and "a" render alike), string references to IRIs
+    (trimmed) and multi-group templates over strings (("x-y", "z") and
+    ("x", "y-z") render alike)."""
+    from pyspark.sql import types as T
+
+    from morph_xr2rml_spark import namespaces as NS
+    from morph_xr2rml_spark.model import REFERENCE, TEMPLATE, TermMap
+    from morph_xr2rml_spark.translate import EngineConfig
+    ref = TermMap(kind=REFERENCE, position="object", reference="$.g0")
+    iri_ref = TermMap(kind=REFERENCE, position="object", reference="$.g0",
+                      term_type=NS.RR_IRI)
+    pair = TermMap(kind=TEMPLATE, position="subject",
+                   template="http://x/{$.g0}-{$.g1}")
+    m, dtypes = {
+        "double": (ref, [T.DoubleType()]),
+        "float": (pair, [T.LongType(), T.FloatType()]),
+        "timestamp": (iri_ref, [T.TimestampType()]),
+        "trimmed string literal": (ref, [T.StringType()]),
+        "string IRI reference": (iri_ref, [T.StringType()]),
+        "string multi-group template": (pair, [T.StringType()] * 2),
+    }[case]
+    assert _refusal(m, dtypes, EngineConfig(literal_trim=True)) is not None
