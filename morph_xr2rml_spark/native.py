@@ -536,11 +536,16 @@ class CatalystCompiler:
                     return None, (f"{tm.name}: two entries on predicate "
                                   f"{a[0] or b[0] or '(per row)'} may "
                                   f"emit the same triple")
+
+        def key_type(ref: str) -> T.DataType:
+            _sql, dt, stringified = self.source_leaf(ctx, ref)
+            return T.StringType() if stringified \
+                and not isinstance(dt, STRING_CHAIN_FIXED) else dt
+
         sm = tm.subject_map
         terms = [sm] + [m for pm, om, _g, _c in entries for m in (pm, om)]
         for m in terms:
-            why = term_key_refusal(m, lambda r: self.source_leaf(ctx, r)[1],
-                                   self.cfg)
+            why = term_key_refusal(m, key_type, self.cfg)
             if why is not None:
                 return None, f"{tm.name}: {why}"
         if not entries:
@@ -550,11 +555,11 @@ class CatalystCompiler:
                  for pm, om, _g, _c in entries]
         leaves = list(dict.fromkeys(r for refs in reads for r in refs))
         src = {r: self.source_leaf(ctx, r) for r in leaves}
-        # a stringified (pushed-down) value of a RENDER_ALPHABET type
-        # renders as the typed value does, since no string chain touches
-        # its characters -- except as a literal that takes its natural
-        # datatype from the type.  Elsewhere it renders typed: kg_docs'
-        # subject then skips a 30-replace encode chain per triple
+        # a stringified value that passed the proof (STRING_CHAIN_FIXED)
+        # renders as the typed value does -- except as a literal that
+        # takes its natural datatype from the type.  Elsewhere it renders
+        # typed: kg_docs' subject then skips a 30-replace encode chain
+        # per triple
         literal_refs = {r for m in terms if m.kind in (COLUMN, REFERENCE)
                         and m.infer_term_type() == NS.RR_LITERAL
                         for r in _leaf_refs(m)}
@@ -1018,6 +1023,12 @@ RENDER_ALPHABET = {
     T.DecimalType: ("-", _DIGITS + "."), T.DateType: ("+-", _DIGITS + "-"),
     T.BooleanType: ("", "truefals"),
 }
+# the RENDER_ALPHABET types whose characters no string chain (trim, the
+# encoders, N-Triples escaping) changes -- not dates, whose '+' the
+# reserved-character encoder rewrites: a stringified (pushed-down) value
+# of one of these keys a dedup and renders as its source type
+STRING_CHAIN_FIXED = (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
+                      T.DecimalType, T.BooleanType)
 # dtypes whose string render is injective on distinct values (TIMESTAMP
 # truncates sub-second precision; FLOAT/DOUBLE excluded out of caution)
 NON_INJECTIVE_RENDER = (T.TimestampType, T.TimestampNTZType,
@@ -1076,9 +1087,8 @@ def term_key_refusal(m: TermMap, leaf_type, cfg: EngineConfig) -> Optional[str]:
     """None when the term ``m`` renders injectively from the typed
     values of its leaves, NULL included: equal terms then mean equal
     values, so a dedup on the values is exact.  Otherwise, why not.
-    ``leaf_type(ref)`` is a leaf's source type; a stringified
-    (pushed-down) value passes string chains that leave every
-    RENDER_ALPHABET character alone.
+    ``leaf_type(ref)`` is a leaf's source type, and a string type for a
+    stringified (pushed-down) value outside STRING_CHAIN_FIXED.
 
     Admitted: constants; references to RENDER_ALPHABET types (the
     render adds fixed text around one lexical); templates over those

@@ -402,3 +402,18 @@ def test_the_proof_refuses_the_unsound_shapes(case):
         "string multi-group template": (pair, [T.StringType()] * 2),
     }[case]
     assert _refusal(m, dtypes, EngineConfig(literal_trim=True)) is not None
+
+
+def test_string_chains_leave_render_alphabets_alone():
+    """A stringified (pushed-down) value of a STRING_CHAIN_FIXED type
+    passes the string chains unchanged: the proof reads its source type,
+    and above a keyed aggregate it renders as that type."""
+    from morph_xr2rml_spark.functions.datatypes import normalize_datetime
+    from morph_xr2rml_spark.functions.encoding import encode_literal
+    from morph_xr2rml_spark.native import RENDER_ALPHABET, STRING_CHAIN_FIXED
+    from morph_xr2rml_spark.translate import nt_escape
+    chars = {c for t in STRING_CHAIN_FIXED for c in "".join(RENDER_ALPHABET[t])}
+    for c in chars:
+        for chain in (str.strip, encode_reserved_chars, encode_url,
+                      encode_literal, normalize_datetime, nt_escape):
+            assert chain(c) == c, (chain, c)
