@@ -6,17 +6,30 @@ triple twice; every refused case must fall back to the hashed dedup."""
 
 import json
 import logging
+from decimal import Decimal
+
+import pytest
 
 from morph_xr2rml_spark.api import materialize_auto
 from morph_xr2rml_spark.engine import dedup_triples
 from morph_xr2rml_spark.examples import (LINEITEM_JSON_MAPPING,
-                                         TPCH_KG_MAPPING, orderdocs_df,
-                                         tpch_tables)
+                                         TPCH_KG_MAPPING, orderdocs_df)
 from morph_xr2rml_spark.local_engine import materialize_local
 from morph_xr2rml_spark.model import MappingDocument
 from morph_xr2rml_spark.sources import SourceCatalog
 
-SF_DIR = "/root/testdata/sf0.001"
+
+@pytest.fixture(scope="module")
+def corpus(spark):
+    """The kg_docs corpus shape: one document per order, its lines
+    nested, about a tenth of (order, line) pairs repeated."""
+    rows = [(ok, ok * 7 % 50, ln % 4 + 1, float(ok * ln % 9))
+            for ok in range(1, 60) for ln in range(5)]
+    lineitem = spark.createDataFrame(
+        rows, "l_orderkey long, l_partkey long, l_linenumber int, "
+              "l_quantity double")
+    return SourceCatalog().register_collection(
+        "orderdocs", orderdocs_df(spark, None, lineitem=lineitem))
 
 PREFIXES = """
 @prefix rr:  <http://www.w3.org/ns/r2rml#> .
@@ -200,16 +213,26 @@ def test_string_separator_collision_routes_hashed(caplog, spark):
     assert "{$.a}-{$.b}" in reason and "as string" in reason
 
 
-def test_dedup_mode_is_logged(caplog, spark):
-    corpus = SourceCatalog().register_collection(
-        "orderdocs", orderdocs_df(spark, SF_DIR))
+def test_dedup_mode_is_logged(caplog, spark, corpus):
     _rows, mode, _ = _dedup_mode(
         caplog, spark, MappingDocument.from_text(LINEITEM_JSON_MAPPING),
         catalog=corpus)
     assert mode == "keyed"
+    # one row per table: the proof reads the mapping and the schemas
+    tables = {name: spark.createDataFrame([row], schema)
+              for name, row, schema in (
+        ("region", (1, "R"), "r_regionkey long, r_name string"),
+        ("nation", (1, "N", 1),
+         "n_nationkey long, n_name string, n_regionkey long"),
+        ("customer", (1, "C", "S", Decimal("1.00"), 1),
+         "c_custkey long, c_name string, c_mktsegment string, "
+         "c_acctbal decimal(12,2), c_nationkey long"),
+        ("orders", (1, "O", None, Decimal("1.00"), 1),
+         "o_orderkey long, o_orderstatus string, o_orderdate date, "
+         "o_totalprice decimal(12,2), o_custkey long"))}
     _rows, mode, _ = _dedup_mode(
         caplog, spark, MappingDocument.from_text(TPCH_KG_MAPPING),
-        tables=tpch_tables(spark, SF_DIR))
+        tables=tables)
     assert mode == "eliminated"
 
 
@@ -227,25 +250,23 @@ def _first_exchange(plan):
     return None
 
 
-def test_corpus_dedup_exchange_ships_no_strings(spark):
+def test_corpus_dedup_exchange_ships_no_strings(spark, corpus):
     """The kg_docs mapping's dedup exchange carries the entry id and the
     typed leaves, no rendered term."""
-    cat = SourceCatalog().register_collection(
-        "orderdocs", orderdocs_df(spark, SF_DIR))
     df = materialize_auto(
-        spark, MappingDocument.from_text(LINEITEM_JSON_MAPPING), catalog=cat)
+        spark, MappingDocument.from_text(LINEITEM_JSON_MAPPING),
+        catalog=corpus)
     exchange = _first_exchange(df._jdf.queryExecution().executedPlan())
     out = exchange.output()
     types = [out.apply(i).dataType().simpleString() for i in range(out.size())]
     assert types and "string" not in types, types
 
 
-def test_corpus_output_equals_hashed_dedup(spark):
-    cat = SourceCatalog().register_collection(
-        "orderdocs", orderdocs_df(spark, SF_DIR))
+def test_corpus_output_equals_hashed_dedup(spark, corpus):
     mapping = MappingDocument.from_text(LINEITEM_JSON_MAPPING)
-    got = materialize_auto(spark, mapping, catalog=cat)
-    want = dedup_triples(materialize_auto(spark, mapping, catalog=cat,
-                                          dedup=False))
-    assert got.count() == want.count()
+    got = materialize_auto(spark, mapping, catalog=corpus)
+    plain = materialize_auto(spark, mapping, catalog=corpus, dedup=False)
+    want = dedup_triples(plain)
+    n = got.count()
+    assert plain.count() > n == want.count()     # duplicates were dropped
     assert got.exceptAll(want).count() == 0
