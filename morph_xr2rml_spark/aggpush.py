@@ -207,7 +207,7 @@ class _BindingTier:
         self.mapping = mapping
         self.tables = tables or {}
         self.tab = NativeCompiler(spark, mapping, self.tables, cfg,
-                                  fuse_projections=False)
+                                  fused=frozenset())
         self.doc = JsonNativeCompiler(spark, mapping,
                                       catalog or SourceCatalog(), cfg)
 

@@ -67,7 +67,8 @@ def _routed_plan(spark: SparkSession, mapping: MappingDocument,
                  catalog: Optional[SourceCatalog] = None,
                  tables: Optional[dict[str, DataFrame]] = None,
                  cfg: Optional[EngineConfig] = None,
-                 constraints: Optional[dict] = None, dedup: bool = False):
+                 constraints: Optional[dict] = None, dedup: bool = False,
+                 fused: Optional[dict] = None):
     """Compile ``mapping`` with every TM on its routed tier.  Returns
     ``(triples, tiers, distinct)``: the union of the per-TM plans, the
     tier of every emitting TM, and a thunk for the plan's one
@@ -84,16 +85,21 @@ def _routed_plan(spark: SparkSession, mapping: MappingDocument,
     mode, ``None`` materialization.  In answering mode a TM whose
     constraint is ``[]`` is skipped on every tier (it emits nothing but
     stays in the mapping as a ROM join parent), the others' row filters
-    / composed find() filters come from rewrite.constrained_plan, and the
-    native and json-native compilers emit one unfused branch per
-    predicate so the evaluator's pattern filters prune the branches they
-    cannot match."""
+    / composed find() filters come from rewrite.constrained_plan.  The
+    TMs in ``fused`` (rewrite.derive_tm_plan: TM name → the
+    variable-predicate pattern that may match it) compile to one fused
+    scan; the native and json-native compilers emit every other TM as
+    one branch per predicate, so the evaluator's pattern filters prune
+    the branches they cannot match.  Each TM's choice, ``fused`` or
+    ``per-predicate``, is logged at DEBUG with its reason."""
     cfg = cfg or EngineConfig()
     tables = tables or {}
     catalog = catalog or SourceCatalog()
     answering = constraints is not None
     row_filters: dict = {}
     skip: frozenset = frozenset()
+    # None: materialization, every TM fused
+    fused = (fused or {}) if answering else None
     if answering:
         from .rewrite import constrained_plan
         # the $renderIn mirror assumes the DEFAULT literal render pipeline
@@ -103,10 +109,16 @@ def _routed_plan(spark: SparkSession, mapping: MappingDocument,
         skip = frozenset(n for n, c in constraints.items() if c == [])
 
     from .native_json import JsonNativeCompiler
-    jc = JsonNativeCompiler(spark, mapping, catalog, cfg,
-                            fuse_projections=not answering)
+    jc = JsonNativeCompiler(spark, mapping, catalog, cfg, fused=fused)
     tiers = {n: route_tier(mapping, tm, tables, jc)
              for n, tm in mapping.triples_maps.items() if n not in skip}
+    if answering:
+        for n in tiers:
+            if n in fused:
+                _log.debug("%s fused: pattern %s", n, fused[n])
+            else:
+                _log.debug("%s per-predicate: no variable-predicate "
+                           "pattern matches it", n)
     by_tier = {t: [mapping.triples_maps[n] for n, tn in tiers.items()
                    if tn == t] for t in ("native", "json", "doc")}
     # the document compiler reads tables through the catalog and SQL-text
@@ -119,8 +131,7 @@ def _routed_plan(spark: SparkSession, mapping: MappingDocument,
         for name, df in tables.items():
             catalog.register_table(name, df)
 
-    nc = NativeCompiler(spark, mapping, tables, cfg,
-                        fuse_projections=not answering,
+    nc = NativeCompiler(spark, mapping, tables, cfg, fused=fused,
                         tm_row_filters=row_filters)
 
     def distinct() -> bool:
@@ -207,13 +218,14 @@ def answer_auto(spark: SparkSession, mapping: MappingDocument,
 
       1. aggregate/DISTINCT pushdown (aggpush.py) when bindings provably
          equal source rows -- no triple pool at all;
-      2. constraints derived ONCE for every TM (rewrite.py);
+      2. constraints and the fused TMs derived ONCE for every TM
+         (rewrite.py);
       3. the routed plan: ``.where`` row filters on native scans
          (parquet PushedFilters), composed find() filters on document
          scans, TMs that match nothing skipped;
       4. the evaluator over that plan, with its per-pattern dedup
          dropped when the plan is provably duplicate-free."""
-    from .rewrite import _eng_answer, derive_tm_constraints
+    from .rewrite import _eng_answer, derive_tm_plan
     from .sparql import SparqlEngine, parse_sparql
     tables = tables or {}
     catalog = catalog or SourceCatalog()
@@ -224,9 +236,9 @@ def answer_auto(spark: SparkSession, mapping: MappingDocument,
                                        catalog=catalog, cfg=cfg)
     if fast is not None:
         return fast
-    constraints = derive_tm_constraints(mapping, q, tables)
+    constraints, fused = derive_tm_plan(mapping, q, tables)
     triples, _tiers, distinct = _routed_plan(spark, mapping, catalog, tables,
-                                             cfg, constraints)
+                                             cfg, constraints, fused=fused)
     eng = SparqlEngine(triples, dedup_source=not distinct())
     return _eng_answer(spark, eng, q)
 

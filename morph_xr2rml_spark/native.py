@@ -22,7 +22,7 @@ from __future__ import annotations
 import itertools
 import math
 from decimal import Decimal, InvalidOperation
-from typing import Optional
+from typing import Collection, Optional
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
@@ -290,6 +290,20 @@ def _leaf_refs(m: TermMap) -> list:
     return [m.column if m.kind == COLUMN else m.reference]
 
 
+def _edge_may_be_ws(segs: list, strings: list, edge: int) -> bool:
+    """A template expansion may begin (``edge`` 0; pass both lists
+    reversed and -1 for its end) with whitespace: ``segs`` are its fixed
+    segments, ``strings[i]`` whether group i is a string leaf.  Another
+    leaf's lexical never has whitespace, but a NULL group renders '', so
+    the walk goes on past it."""
+    for seg, string in zip(segs, strings + [False]):
+        if seg:
+            return seg[edge].isspace()
+        if string:
+            return True
+    return False
+
+
 class CatalystCompiler:
     """The compiler core of both Catalyst tiers, as SQL text: the term
     renderer, the class/predicate-object walk, the unfused per-entry
@@ -313,12 +327,15 @@ class CatalystCompiler:
     TERM_KINDS: tuple = ()
 
     def __init__(self, spark: SparkSession, mapping: MappingDocument,
-                 cfg: Optional[EngineConfig], fuse_projections: bool):
+                 cfg: Optional[EngineConfig],
+                 fused: Optional[Collection[str]]):
         check_sql_text_conf(spark)
         self.spark = spark
         self.mapping = mapping
         self.cfg = cfg or EngineConfig()
-        self.fuse_projections = fuse_projections
+        # None: the materialization plan, every TM fused; otherwise an
+        # answering plan fusing only the named TMs
+        self.fused = fused
 
     def leaf(self, ctx, ref: str) -> tuple[str, T.DataType]:
         """A reference's (SQL, type) as the renderer reads it: the tier's
@@ -395,6 +412,19 @@ class CatalystCompiler:
         cfg = self.cfg
         iri = tt == NS.RR_IRI
         segs = compile_template(m.template)
+        groups = get_template_groups(m.template)
+        strip = False
+        if iri:
+            # createIRI trims the expanded IRI (_make_term, before its
+            # encodeURI): the fixed edges trim here, and the SQL trims
+            # only where a string group can reach an edge
+            segs = list(segs)
+            segs[0] = segs[0].lstrip(_PY_STRIP_WS)
+            segs[-1] = segs[-1].rstrip(_PY_STRIP_WS)
+            strings = [isinstance(self._source_type(ctx, g), T.StringType)
+                       for g in groups]
+            strip = _edge_may_be_ws(segs, strings, 0) \
+                or _edge_may_be_ws(segs[::-1], strings[::-1], -1)
         if iri and cfg.encode_unsafe_chars_in_uri:
             # the Python tier applies encodeURI over the WHOLE expanded
             # IRI; group content is already reserved-encoded (a superset
@@ -403,7 +433,7 @@ class CatalystCompiler:
             segs = [encode_url(s) for s in segs]
         parts = [sql_lit(segs[0])]
         nulls = []
-        for g, seg in zip(get_template_groups(m.template), segs[1:]):
+        for g, seg in zip(groups, segs[1:]):
             sql, dt = self.leaf(ctx, g)
             lex = lexical_sql(sql, dt)
             if iri and cfg.encode_unsafe_chars_in_db_values \
@@ -418,7 +448,8 @@ class CatalystCompiler:
             expanded = (f"(CASE WHEN {' AND '.join(nulls)} THEN NULL "
                         f"ELSE {expanded} END)")
         if iri:
-            return iri_term_sql(expanded)
+            return iri_term_sql(strip_ws_sql(expanded) if strip
+                                else expanded)
         if tt == NS.RR_BLANKNODE:
             # format_bnode encodes the whole id, groups included
             return f"concat('_:', {encode_url_sql(expanded)})"
@@ -426,6 +457,11 @@ class CatalystCompiler:
         return literal_term_sql(
             self.literal_lexical_sql(expanded, T.StringType(), m.datatype),
             m.datatype, m.language)
+
+    def _source_type(self, ctx, ref: str) -> T.DataType:
+        """A reference's source type (a stringified value's too)."""
+        return (ctx[ref] if isinstance(ctx, KeyRow)
+                else self.source_leaf(ctx, ref))[1]
 
     def term_null_sql(self, ctx, m: TermMap) -> Optional[str]:
         """SQL text true exactly where ``term_sql(ctx, m)`` is NULL,
@@ -478,13 +514,15 @@ class CatalystCompiler:
         return entries, roms
 
     def tm_triples(self, tm: TriplesMap) -> DataFrame:
-        """One triples map → (subj, pred, obj, graph) over ONE scan of
-        its source.  Materialization fuses every entry into the tier's
-        one projection (the compile-time analogue of the reference's
-        self-union elimination, AbstractQueryAtomicMongo.scala:331-349);
-        answering emits one branch per entry with a constant pred, which
-        Catalyst folds away when a downstream pattern filter cannot
-        match it.  Each ROM slot is a join."""
+        """One triples map → (subj, pred, obj, graph).  A fused TM
+        (every TM in materialization; in answering, one a
+        variable-predicate pattern may match) puts every entry into the
+        tier's one projection over ONE scan (the compile-time analogue of
+        the reference's self-union elimination,
+        AbstractQueryAtomicMongo.scala:331-349); otherwise each entry is
+        a branch with a constant pred, which Catalyst folds away when a
+        downstream pattern filter cannot match it.  Each ROM slot is a
+        join."""
         frame, ctx = self.scan(tm)
         subj = self.term_sql(ctx, tm.subject_map)
         subj_null = self.term_null_sql(ctx, tm.subject_map)
@@ -492,7 +530,7 @@ class CatalystCompiler:
         entries = [(self.term_sql(ctx, pm), self.term_sql(ctx, om), graph,
                     cond, self.term_null_sql(ctx, om))
                    for pm, om, graph, cond in entry_maps]
-        if self.fuse_projections and entries:
+        if entries and (self.fused is None or tm.name in self.fused):
             parts = self._fused(frame, subj, subj_null, entries)
         else:
             parts = [self._branch(frame, subj, subj_null, *e)
@@ -694,12 +732,13 @@ class NativeCompiler(CatalystCompiler):
     def __init__(self, spark: SparkSession, mapping: MappingDocument,
                  tables: dict[str, DataFrame],
                  cfg: Optional[EngineConfig] = None,
-                 fuse_projections: bool = True,
+                 fused: Optional[Collection[str]] = None,
                  tm_row_filters: Optional[dict] = None):
-        """fuse_projections: True → ONE projection per TM (index explode
-        + CASE) — best for materialization throughput.  False → one
-        union branch per entry with a CONSTANT pred — best when querying
-        the un-materialized pipeline (SPARQL over the plan).
+        """fused: the TMs compiled to ONE projection (index explode +
+        CASE), None for every TM — best for materialization throughput
+        and for a TM a variable-predicate pattern reads whole.  Every
+        other TM emits one union branch per entry with a CONSTANT pred —
+        best when a pattern's constant pred prunes the branches.
 
         tm_row_filters: {tm_name: [ {col: constraint, ...}, ... ]} —
         OR-of-conjunctions row constraints derived by rewrite.py's
@@ -709,7 +748,7 @@ class NativeCompiler(CatalystCompiler):
         ('cmp', ((op, num), ...)) numeric predicates, or
         ('lexpat', kind, pat) STRSTARTS/STRENDS/CONTAINS mirrors — see
         _constraint_sql."""
-        super().__init__(spark, mapping, cfg, fuse_projections)
+        super().__init__(spark, mapping, cfg, fused)
         self.tables = tables
         self.tm_row_filters = tm_row_filters or {}
 

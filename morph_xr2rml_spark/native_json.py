@@ -27,7 +27,7 @@ from __future__ import annotations
 
 import json
 import re
-from typing import Any, Optional
+from typing import Any, Collection, Optional
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
@@ -204,19 +204,21 @@ class JsonNativeCompiler(CatalystCompiler):
 
     def __init__(self, spark: SparkSession, mapping: MappingDocument,
                  catalog: SourceCatalog, cfg: Optional[EngineConfig] = None,
-                 sample_n: int = 200, fuse_projections: bool = True):
-        """fuse_projections mirrors NativeCompiler: True → ONE projection
-        per TM (explode over an array of (pred, obj, graph) structs) —
-        best for materialization throughput.  False → one union branch
-        per entry with a CONSTANT pred, so the SPARQL evaluator's
-        per-pattern ``pred = <iri>`` prunes every non-matching
-        collection scan (and its from_json parse) out of the plan.
+                 sample_n: int = 200, fused: Optional[Collection[str]] = None):
+        """fused mirrors NativeCompiler: the TMs compiled to ONE
+        projection (explode over an array of (pred, obj, graph) structs),
+        None for every TM (materialization).  Every other TM emits one
+        union branch per entry with a CONSTANT pred, so the SPARQL
+        evaluator's per-pattern ``pred = <iri>`` prunes every
+        non-matching collection scan (and its from_json parse) out of
+        the plan.  An answering plan (a ``fused`` set) spreads its scans
+        (``spread``).
 
         Schema sampling costs a driver-side collect() job per (source,
         path-set): memoized in the catalog's schema_samples, keyed by the
         needed-path set, so repeated queries over the same registered
         data pay it once and mappings sharing a catalog never collide."""
-        super().__init__(spark, mapping, cfg, fuse_projections)
+        super().__init__(spark, mapping, cfg, fused)
         self.catalog = catalog
         self.sample_n = sample_n
 
@@ -405,7 +407,7 @@ class JsonNativeCompiler(CatalystCompiler):
         """Scan → from_json (→ explode the iterator); the row context is
         (tm, parsed-doc SQL, item SQL or None)."""
         src = self._source(tm)
-        if not self.fuse_projections:
+        if self.fused is not None:
             src = spread(src)
         parsed = self._parse_select(src, self._schema_for(tm))
         if tm.logical_source.iterator is None:

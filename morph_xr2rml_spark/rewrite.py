@@ -727,6 +727,18 @@ def _path_iris(pred) -> Optional[set]:
     return None
 
 
+def _pattern_text(tp) -> str:
+    """A triple pattern as SPARQL-like text, for the plan log."""
+    def term(t):
+        if t[0] == "var":
+            return f"?{t[1]}"
+        if t[0] == "iri":
+            return f"<{t[1]}>"
+        return str(t[1])
+    pred = term(tp.p) if tp.p[0] in ("var", "iri") else "(path)"
+    return f"{term(tp.s)} {pred} {term(tp.o)}"
+
+
 _CMP_FLIP = {"<": ">", ">": "<", "<=": ">=", ">=": "<=", "=": "="}
 _LIT_KINDS = ("lit", "lit_exact", "num")
 
@@ -943,7 +955,7 @@ def _collect(group: Group, out: list, top: bool = False,
                 # the remaining steps stay unconstrained
                 out.append({"preds": {tp.p[1][0][1]}, "svar": None,
                             "top": False, "cmps": [], "lexpats": [],
-                            "graph": graph_ctx,
+                            "graph": graph_ctx, "text": _pattern_text(tp),
                             "variants": [(tp.s, ("var", "*"))]})
                 rest: Optional[set] = set()
                 for elt in tp.p[1][1:]:
@@ -954,13 +966,13 @@ def _collect(group: Group, out: list, top: bool = False,
                     rest |= sub
                 out.append({"preds": rest, "svar": None, "top": False,
                             "cmps": [], "lexpats": [],
-                            "graph": graph_ctx,
+                            "graph": graph_ctx, "text": _pattern_text(tp),
                             "variants": [(("var", "*"), ("var", "*"))]})
                 continue
             # closures walk intermediate nodes: never constrain
             out.append({"preds": _path_iris(tp.p), "svar": None,
                         "top": False, "cmps": [], "lexpats": [],
-                        "graph": graph_ctx,
+                        "graph": graph_ctx, "text": _pattern_text(tp),
                         "variants": [(("var", "*"), ("var", "*"))]})
             continue
         preds = {tp.p[1]} if tp.p[0] == "iri" else None
@@ -984,7 +996,8 @@ def _collect(group: Group, out: list, top: bool = False,
         out.append({"preds": preds, "svar": svar, "top": top,
                     "cmps": cmps, "lexpats": lexpats,
                     "typereqs": typereqs, "s_typereqs": s_typereqs,
-                    "graph": graph_ctx, "variants": variants})
+                    "graph": graph_ctx, "variants": variants,
+                    "text": _pattern_text(tp)})
     for sub in group.optionals + group.minuses:
         _collect(sub, out, False, in_subquery, graph_ctx)
     for left, right in group.unions:
@@ -1123,7 +1136,17 @@ def _describe_constraints(mapping: MappingDocument, iris: list) -> dict:
 def derive_tm_constraints(mapping: MappingDocument,
                           q: Union[str, SelectQuery],
                           tables: Optional[dict] = None) -> dict:
-    """Per-TM source constraints for a parsed query:
+    """Per-TM source constraints for a parsed query (``derive_tm_plan``)."""
+    return derive_tm_plan(mapping, q, tables)[0]
+
+
+def derive_tm_plan(mapping: MappingDocument, q: Union[str, SelectQuery],
+                   tables: Optional[dict] = None) -> tuple[dict, dict]:
+    """``(constraints, fused)``: per-TM source constraints for a parsed
+    query, and for each TM that a pattern with an unknowable predicate
+    set (a variable predicate, a negated or zero-length path) may match,
+    that pattern's text: such a pattern reads every predicate branch, so
+    the TM compiles to one fused scan.  Constraints:
        None           → unconstrained (full scan)
        []             → TM generates no pattern-matching triple: eliminate
        [dict, ...]    → OR of column/ref→predicate conjunctions.
@@ -1144,8 +1167,9 @@ def derive_tm_constraints(mapping: MappingDocument,
         if any(k != "iri" for k, _v in q.describe):
             # DESCRIBE ?var: resources come from WHERE bindings — never
             # constrain
-            return {name: None for name in mapping.triples_maps}
-        return _describe_constraints(mapping, [v for _k, v in q.describe])
+            return {name: None for name in mapping.triples_maps}, {}
+        return _describe_constraints(mapping,
+                                     [v for _k, v in q.describe]), {}
     pats: list = []
     _collect(q.where, pats, top=True)
     if q.construct:
@@ -1186,7 +1210,7 @@ def derive_tm_constraints(mapping: MappingDocument,
                 uq = subject_renders_unique_schemaless(tm)
         unique[name] = uq
 
-    out = {}
+    out, fused = {}, {}
     for name, tm in mapping.triples_maps.items():
         emits = tm_pred_iris(tm)
         # evaluate every pattern once: (record, [(ok, conj), ...])
@@ -1251,6 +1275,12 @@ def derive_tm_constraints(mapping: MappingDocument,
                     if not _conj_merge(cur, oks[0]):
                         var_dead.add(svar)
 
+        fused_by = [rec["text"] for rec, results in evals
+                    if rec["preds"] is None and results is not None
+                    and rec["svar"] not in var_dead
+                    and any(ok for ok, _c in results)]
+        if fused_by:
+            fused[name] = fused_by[0]
         constraints: list[dict] = []
         seen = set()
         unconstrained = False
@@ -1279,7 +1309,7 @@ def derive_tm_constraints(mapping: MappingDocument,
             if unconstrained:
                 break
         out[name] = None if unconstrained else constraints
-    return out
+    return out, fused
 
 
 def _eng_answer(spark: SparkSession, eng: SparqlEngine, q: SelectQuery):

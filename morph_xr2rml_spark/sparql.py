@@ -27,11 +27,14 @@ DESCRIBE.
 
 from __future__ import annotations
 
+import logging
 import re
 from dataclasses import dataclass, field
 from typing import Optional, Union
 
 from pyspark.sql import Column, DataFrame, functions as F
+
+_log = logging.getLogger(__name__)
 
 _XSD_NS = "http://www.w3.org/2001/XMLSchema#"
 _NUMERIC_XSD = frozenset(_XSD_NS + t for t in (
@@ -1077,6 +1080,29 @@ def aggregate_specs(q: SelectQuery) -> tuple[list, dict]:
     return specs, agg_alias
 
 
+def _order_vars(order_by: list) -> set:
+    """The variables the ORDER BY keys read."""
+    out: set = set()
+
+    def walk(x):
+        if isinstance(x, tuple):
+            if len(x) == 2 and x[0] == "var" and isinstance(x[1], str):
+                out.add(x[1])
+            else:
+                for e in x:
+                    walk(e)
+        elif isinstance(x, list):
+            for e in x:
+                walk(e)
+
+    for v, _asc in order_by:
+        if isinstance(v, str):
+            out.add(v)
+        else:
+            walk(v)
+    return out
+
+
 class SparqlEngine:
     """Evaluate parsed SELECT queries against a (subj, pred, obj[, graph])
     triple DataFrame.  Variable bindings are the canonical lexical term
@@ -1159,7 +1185,9 @@ class SparqlEngine:
             bindings = self._join_group(q.where) if q.where else None
             if bindings is None:
                 raise ValueError("DESCRIBE ?var needs a WHERE clause")
-            bindings = self._slice_solutions(bindings, q)
+            if q.limit is not None or q.offset:
+                # the result is a set: ORDER BY alone changes nothing
+                bindings = self._slice_solutions(bindings, q)
             for v in vars_:
                 vdf = bindings.select(F.col(v).alias("r")).distinct()
                 res = vdf if res is None else res.unionByName(vdf).distinct()
@@ -2081,7 +2109,9 @@ class SparqlEngine:
         if q.construct is None:
             raise ValueError("not a CONSTRUCT query")
         bindings = self._dataset_engine(q)._join_group(q.where)
-        bindings = self._slice_solutions(bindings, q)
+        if q.limit is not None or q.offset:
+            # the result is a set: ORDER BY alone changes nothing
+            bindings = self._slice_solutions(bindings, q)
 
         def term_col(term) -> Column:
             kind, val = term
@@ -2126,7 +2156,31 @@ class SparqlEngine:
         grammar's SolutionModifier on every query form, and the last
         step of aggpush's pushed SELECT.  ``self`` is read only for an
         expression key, so aggpush passes no engine (None) when every
-        key is a plain variable."""
+        key is a plain variable.
+
+        The ordering mode, logged at DEBUG:
+
+          - ``take-ordered``: ORDER BY with LIMIT stays a global
+            ``orderBy``, which plans as ``TakeOrderedAndProject``: a
+            per-partition top-k and no exchange, where the one-partition
+            sort would add a shuffle and a job;
+          - ``single-partition``: ORDER BY without LIMIT projects the
+            §15.4 keys as hidden ``#ok<i>`` columns in the parallel
+            upstream stage, moves the rows to one partition and sorts
+            them there.  A global ``orderBy`` would run the upstream
+            twice (its range exchange samples it first) and evaluate
+            the key expressions on every comparison.  Every consumer
+            collects the whole answer into the driver anyway, so only
+            the merge is single;
+          - ``none``: no ORDER BY."""
+        if not q.order_by:
+            mode = "none"
+        elif q.limit is not None:
+            mode = "take-ordered"
+        else:
+            mode = "single-partition"
+        _log.debug("ordering %s", mode)
+        hidden: list = []
         if q.order_by:
             dtypes = dict(df.dtypes)
 
@@ -2138,13 +2192,27 @@ class SparqlEngine:
                     # alias): its native type already sorts by value
                     return [F.col(v)]
                 return term_order_keys(F.col(v))
-            df = df.orderBy(*[k.asc() if a else k.desc()
-                              for v, a in q.order_by for k in keys(v)])
+            ks = [(k, a) for v, a in q.order_by for k in keys(v)]
+            if mode == "take-ordered":
+                df = df.orderBy(*[k.asc() if a else k.desc() for k, a in ks])
+            elif all(v in dtypes for v in _order_vars(q.order_by)):
+                hidden = [f"#ok{i}" for i in range(len(ks))]
+                df = (df.select("*", *[k.alias(n)
+                                       for (k, _a), n in zip(ks, hidden)])
+                      .repartition(1)
+                      .sortWithinPartitions(*[
+                          F.col(n).asc() if a else F.col(n).desc()
+                          for (_k, a), n in zip(ks, hidden)]))
+            else:
+                # a key reads a variable the projection dropped: Spark
+                # resolves it below the sort, so the keys stay inline
+                df = df.repartition(1).sortWithinPartitions(
+                    *[k.asc() if a else k.desc() for k, a in ks])
         if q.offset:
             df = df.offset(q.offset)
         if q.limit is not None:
             df = df.limit(q.limit)
-        return df
+        return df.drop(*hidden) if hidden else df
 
     def evaluate(self, q: SelectQuery, graph_term=None) -> DataFrame:
         df = self._join_group(q.where, graph_term)

@@ -375,14 +375,16 @@ def test_the_proof_admits_the_corpus_shapes():
 
 @pytest.mark.parametrize("case", [
     "double", "float", "timestamp", "trimmed string literal",
-    "string IRI reference", "string multi-group template"])
+    "string IRI reference", "string multi-group template",
+    "string IRI template edge"])
 def test_the_proof_refuses_the_unsound_shapes(case):
-    """The five shapes a key of typed values would dedup wrongly:
-    doubles (grouping merges -0.0/0.0 and NaN, which render apart),
-    timestamps (rendered to the second), string literals under
-    literal_trim (" a" and "a" render alike), string references to IRIs
-    (trimmed) and multi-group templates over strings (("x-y", "z") and
-    ("x", "y-z") render alike)."""
+    """The shapes a key of typed values would dedup wrongly: doubles
+    (grouping merges -0.0/0.0 and NaN, which render apart), timestamps
+    (rendered to the second), string literals under literal_trim (" a"
+    and "a" render alike), string references to IRIs (trimmed),
+    multi-group templates over strings (("x-y", "z") and ("x", "y-z")
+    render alike) and a string group at an IRI template's edge (the
+    expanded IRI is trimmed: "a" and "a\t" render alike)."""
     from pyspark.sql import types as T
 
     from morph_xr2rml_spark import namespaces as NS
@@ -400,6 +402,9 @@ def test_the_proof_refuses_the_unsound_shapes(case):
         "trimmed string literal": (ref, [T.StringType()]),
         "string IRI reference": (iri_ref, [T.StringType()]),
         "string multi-group template": (pair, [T.StringType()] * 2),
+        "string IRI template edge": (
+            TermMap(kind=TEMPLATE, position="subject",
+                    template="http://x/o/{$.g0}"), [T.StringType()]),
     }[case]
     assert _refusal(m, dtypes, EngineConfig(literal_trim=True)) is not None
 

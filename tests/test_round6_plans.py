@@ -84,6 +84,144 @@ def test_point_query_no_exchange(spark):
 
 
 # ---------------------------------------------------------------------------
+# ORDER BY without LIMIT: precomputed keys sorted in one partition
+# ---------------------------------------------------------------------------
+
+def _sort_lines(plan: str) -> list:
+    return [ln for ln in plan.splitlines()
+            if ln.lstrip(" :+-*()0123456789").startswith("Sort [")]
+
+
+def test_order_without_limit_sorts_precomputed_keys_in_one_partition(spark):
+    mapping = MappingDocument.from_text(TPCH_KG_MAPPING)
+    df = answer_auto(spark, mapping, P + """
+        SELECT ?o ?p WHERE { ?o ex:totalPrice ?p } ORDER BY DESC(?p) ?o""",
+                     tables=tpch_tables(spark, SF_DIR))
+    plan = _plan(df)
+    assert "rangepartitioning" not in plan      # no sampling pass
+    assert plan.count("Exchange SinglePartition") == 1
+    sorts = _sort_lines(plan)
+    assert len(sorts) == 1 and "#ok" in sorts[0]
+    assert "RLIKE" not in sorts[0]              # keys computed upstream
+    rows = df.collect()
+    assert df.columns == ["o", "p"]
+    vals = [float(r["p"].split('"')[1]) for r in rows]
+    assert vals == sorted(vals, reverse=True)
+
+
+def test_point_query_fuses_its_variable_predicate_scan(spark):
+    """``<s> ?p ?o`` reads the orders TM whole: one fused scan for its
+    entries and one for its referencing object map's probe, not one per
+    predicate."""
+    mapping = MappingDocument.from_text(TPCH_KG_MAPPING)
+    text = P + """SELECT ?p ?o WHERE { <http://example.org/order/1> ?p ?o }
+                  ORDER BY ?p ?o"""
+    tables = tpch_tables(spark, SF_DIR)
+    df = answer_auto(spark, mapping, text, tables=tables)
+    plan = _plan(df)
+    scans = [ln for ln in plan.splitlines() if "FileScan" in ln]
+    assert sum("orders.parquet" in ln for ln in scans) == 2, scans
+    assert "rangepartitioning" not in plan
+    rows = sorted(map(tuple, df.collect()))
+    assert len(rows) == 5       # rdf:type, status, date, price, placedBy
+    from morph_xr2rml_spark.sparql import SparqlEngine
+    full = SparqlEngine(materialize_auto(spark, mapping, tables=tables))
+    assert rows == sorted(map(tuple, full.sql(text).collect()))
+
+
+XSD_INT = "^^<http://www.w3.org/2001/XMLSchema#integer>"
+
+
+def test_order_is_exact_under_both_modes(spark):
+    """SPARQL §15.4 under DESC and a second key: literals (numeric by
+    value, "10" before "9" descending, then the others by lexical form)
+    before IRIs before blank nodes before unbound; ties on the first key
+    go by the second.  The single-partition sort and the take-ordered
+    top-k give the same sequence."""
+    from morph_xr2rml_spark.sparql import SparqlEngine
+    ex, t = "http://example.com/", "<http://example.com/T>"
+    k = {"s1": f'"9"{XSD_INT}', "s2": f'"10"{XSD_INT}', "s3": '"abc"',
+         "s4": '"abc"', "s5": "<http://x/a>", "s6": "_:b1"}
+    triples = [(f"<{ex}{s}>", "<http://www.w3.org/1999/02/22-rdf-syntax-"
+                "ns#type>", t) for s in ("s1", "s2", "s3", "s4", "s5",
+                                         "s6", "s7")]
+    triples += [(f"<{ex}{s}>", f"<{ex}k>", v) for s, v in k.items()]
+    eng = SparqlEngine(spark.createDataFrame(
+        triples, "subj string, pred string, obj string"))
+    text = P + """SELECT ?s ?k WHERE { ?s a ex:T OPTIONAL { ?s ex:k ?k } }
+                  ORDER BY DESC(?k) ?s"""
+    want = [("s2", k["s2"]), ("s1", k["s1"]), ("s3", '"abc"'),
+            ("s4", '"abc"'), ("s5", k["s5"]), ("s6", k["s6"]),
+            ("s7", None)]
+    want = [(f"<{ex}{s}>", v) for s, v in want]
+    single = eng.sql(text)
+    assert "rangepartitioning" not in _plan(single)
+    assert [tuple(r) for r in single.collect()] == want
+    topk = eng.sql(text + " LIMIT 100")
+    assert "TakeOrderedAndProject" in _plan(topk)
+    assert [tuple(r) for r in topk.collect()] == want
+    # an OFFSET keeps the single-partition order
+    assert [tuple(r) for r in eng.sql(text + " OFFSET 2").collect()] \
+        == want[2:]
+
+
+def test_construct_does_not_sort_its_set(spark):
+    """The triples are a set: ORDER BY alone neither sorts nor moves
+    the solutions to one partition (Catalyst drops a sort under the
+    distinct, but not the one-partition exchange)."""
+    mapping = MappingDocument.from_text(TPCH_KG_MAPPING)
+    tables = tpch_tables(spark, SF_DIR)
+    body = P + """CONSTRUCT { ?c ex:label ?n } WHERE { ?c ex:name ?n }"""
+    ordered = answer_auto(spark, mapping, body + " ORDER BY ?n",
+                          tables=tables)
+    plan = _plan(ordered)
+    assert not _sort_lines(plan) and "SinglePartition" not in plan
+    plain = answer_auto(spark, mapping, body, tables=tables)
+    assert sorted(map(tuple, ordered.collect())) \
+        == sorted(map(tuple, plain.collect()))
+    # a slice still applies before the template (SPARQL §16.2)
+    sliced = answer_auto(spark, mapping, body + " ORDER BY ?n LIMIT 3",
+                         tables=tables)
+    assert sliced.count() == 3
+
+
+def _decisions(caplog, spark, text, **sources):
+    """The ordering and fusion lines one ``answer_auto`` call logs."""
+    import logging
+    caplog.clear()
+    with caplog.at_level(logging.DEBUG, logger="morph_xr2rml_spark"):
+        answer_auto(spark, MappingDocument.from_text(TPCH_KG_MAPPING),
+                    P + text, **sources)
+    msgs = [r.getMessage() for r in caplog.records]
+    return ([m for m in msgs if m.startswith("ordering ")],
+            [m for m in msgs if " fused: " in m or " per-predicate: " in m])
+
+
+def test_ordering_and_fusion_are_logged(caplog, spark):
+    tables = tpch_tables(spark, SF_DIR)
+    order, fuse = _decisions(caplog, spark, """
+        SELECT ?p ?o WHERE { <http://example.org/order/1> ?p ?o }
+        ORDER BY ?p ?o""", tables=tables)
+    assert order == ["ordering single-partition"]
+    assert fuse == ["#Orders fused: pattern <http://example.org/order/1> "
+                    "?p ?o"]
+    order, _fuse = _decisions(caplog, spark, """
+        SELECT ?name ?k WHERE {
+          ?c ex:name ?name .
+          { SELECT ?c (COUNT(*) AS ?k) WHERE { ?o ex:placedBy ?c }
+            GROUP BY ?c }
+        } ORDER BY DESC(?k) ?name LIMIT 5""", tables=tables)
+    # the subquery's own solution tail logs first
+    assert order[-1] == "ordering take-ordered"
+    order, fuse = _decisions(caplog, spark, """
+        SELECT ?c ?n WHERE { ?c ex:name ?n ; ex:acctbal ?b }""",
+                             tables=tables)
+    assert order == ["ordering none"]
+    assert fuse and all(" per-predicate: no variable-predicate pattern"
+                        in m for m in fuse), fuse
+
+
+# ---------------------------------------------------------------------------
 # json-native dedup elimination
 # ---------------------------------------------------------------------------
 
