@@ -43,8 +43,9 @@ preconditions:
   subject variable; several groups join as a tree over referencing-
   object-map edges (_build_join_frame).  An rdf:type pattern needs a
   constant class (class objects multiply per class).  Constant objects
-  mirror `_pattern_df`'s exact match forms (IRI equality, plain-literal
-  prefix match, typed-literal exact match, numeric-value equality);
+  match by the evaluator's own rule, `sparql.const_term_match` (IRI
+  equality, plain-literal prefix match, typed-literal exact match,
+  numeric-value equality);
 * the SELECT tail over the native bindings frame is the EVALUATOR'S
   OWN code (`_apply_tail`): BIND, VALUES, HAVING and ORDER BY/OFFSET/
   LIMIT are the SparqlEngine methods `_join_group` and `evaluate` call
@@ -97,12 +98,13 @@ from pyspark.sql import types as T
 
 from . import namespaces as NS
 from .api import route_tier
-from .model import COLUMN, CONSTANT, REFERENCE, MappingDocument, TermMap
+from .model import (COLUMN, CONSTANT, REFERENCE, MappingDocument, TermMap,
+                    pred_slots)
 from .native import NativeCompiler, subject_space, subject_spaces_disjoint
 from .sources import SourceCatalog
 from .sparql import (SelectQuery, SparqlEngine, TriplePattern,
-                     aggregate_specs, distinct_numeric_agg, lexical_value,
-                     numeric_value)
+                     aggregate_specs, const_term_match, distinct_numeric_agg,
+                     lexical_value, numeric_value)
 
 # filter/operand AST nodes that depend on evaluation-time state the
 # borrowed expression compiler cannot supply here: EXISTS needs the
@@ -221,34 +223,24 @@ class _BindingTier:
             return None
         try:
             tier = route_tier(self.mapping, tm, self.tables, self.doc)
-        except Exception:
-            return None          # unresolvable source / schema conflict
+        except KeyError:
+            # an unregistered collection or table (SourceCatalog.resolve,
+            # reached through the json tier's schema sample) or a ROM
+            # naming no TM.  A JSON schema conflict never escapes: the
+            # sampler marks the leaf unsafe and the TM routes "doc"
+            return None
         return {"native": self.tab, "json": self.doc}.get(tier)
 
 
 def _tm_needed_slots(tm, needed: set) -> Optional[dict]:
-    """How a TM relates to the pattern predicates.
-
-    Returns None when any predicate map is non-constant (the TM's
-    emissions cannot be bounded -- caller must fall back), else a dict
-    mapping each needed predicate the TM emits to its ``(object maps,
-    referencing object maps)`` lists.  rdf:type is handled by
+    """The TM's `pred_slots` for the needed pattern predicates, or None
+    when any predicate map is non-constant (the TM's emissions cannot be
+    bounded -- caller must fall back).  rdf:type is handled by
     `_tm_type_consts`, never through slots."""
-    slots: dict = {}
-    for pom in tm.predicate_object_maps:
-        preds = []
-        for pm in pom.predicate_maps:
-            if pm.kind != CONSTANT or pm.constant is None \
-                    or pm.constant[0] != "iri":
-                return None
-            preds.append(pm.constant[1])
-        for p in preds:
-            if p not in needed:
-                continue
-            ent = slots.setdefault(p, ([], []))
-            ent[0].extend(pom.object_maps)
-            ent[1].extend(pom.ref_object_maps)
-    return slots
+    slots = pred_slots(tm)
+    if slots is None:
+        return None
+    return {p: slot for p, slot in slots.items() if p in needed}
 
 
 def _sole_om(slot, om_kinds) -> Optional[TermMap]:
@@ -265,39 +257,28 @@ def _tm_type_consts(tm) -> Optional[set]:
     """The set of constant rdf:type object IRIs the TM emits (rr:class
     plus constant-object rdf:type POMs), or None when an rdf:type POM
     has a NON-constant object -- the TM could then emit any class and
-    its contribution to a type pattern cannot be bounded."""
-    out = set(tm.class_uris)
-    for pom in tm.predicate_object_maps:
-        type_pred = any(pm.kind == CONSTANT and pm.constant is not None
-                        and pm.constant[0] == "iri"
-                        and pm.constant[1] == NS.RDF_TYPE
-                        for pm in pom.predicate_maps)
-        if not type_pred:
-            continue
-        if pom.ref_object_maps:
-            return None
-        for om in pom.object_maps:
-            if om.kind == CONSTANT and om.constant is not None \
-                    and om.constant[0] == "iri":
-                out.add(om.constant[1])
-            else:
-                return None
-    return out
+    its contribution to a type pattern cannot be bounded -- or when a
+    predicate map is non-constant (its callers refuse such a TM
+    anyway)."""
+    slots = pred_slots(tm)
+    if slots is None:
+        return None
+    oms, roms = slots.get(NS.RDF_TYPE, ((), ()))
+    if roms or any(om.kind != CONSTANT or om.constant is None
+                   or om.constant[0] != "iri" for om in oms):
+        return None
+    return set(tm.class_uris) | {om.constant[1] for om in oms}
 
 
 def _const_obj_cond(c, ctx, om, okind, oval) -> Optional[Column]:
-    """Constant-object row condition mirroring `_pattern_df`'s four
-    match forms; None = unmirrorable numeric lexical (caller refuses)."""
+    """Constant-object row condition: the evaluator's own match rule
+    (`const_term_match`) over the rendered term, with the native-cast
+    numeric value; None = unmirrorable numeric lexical (caller
+    refuses)."""
     t = _term(c, ctx, om)
-    if okind == "iri":
-        return t == f"<{oval}>"
-    if okind == "lit":
-        # plain-literal prefix match (any datatype variant of the lexical)
-        return t.startswith(oval)
-    if okind == "lit_exact":
-        return t == oval
     try:
-        return _numeric(c, ctx, om) == float(oval)
+        return const_term_match(t, okind, oval, _numeric(c, ctx, om)
+                                if okind == "num" else None)
     except ValueError:
         return None
 

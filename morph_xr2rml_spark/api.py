@@ -81,8 +81,8 @@ def _routed_plan(spark: SparkSession, mapping: MappingDocument,
     (``CatalystCompiler.keyed_triples``) and the TMs are pairwise
     disjoint; otherwise ``hashed`` (``engine.dedup_triples``).
 
-    ``constraints`` (rewrite.derive_tm_constraints) selects answering
-    mode, ``None`` materialization.  In answering mode a TM whose
+    ``constraints`` (the first half of rewrite.derive_tm_plan) selects
+    answering mode, ``None`` materialization.  In answering mode a TM whose
     constraint is ``[]`` is skipped on every tier (it emits nothing but
     stays in the mapping as a ROM join parent), the others' row filters
     / composed find() filters come from rewrite.constrained_plan.  The

@@ -120,6 +120,18 @@ class PredicateObjectMap:
     ref_object_maps: list[RefObjectMap]
     graph_maps: list[TermMap] = field(default_factory=list)
 
+    def pred_iris(self) -> Optional[list[str]]:
+        """The constant IRI of every predicate map, in order (a predicate
+        listed twice appears twice), or None when a predicate map is not
+        a constant IRI: the POM may then emit any predicate."""
+        iris = []
+        for pm in self.predicate_maps:
+            if pm.kind != CONSTANT or pm.constant is None \
+                    or pm.constant[0] != "iri":
+                return None
+            iris.append(pm.constant[1])
+        return iris
+
 
 @dataclass
 class LogicalSource:
@@ -148,6 +160,35 @@ class TriplesMap:
     class_uris: list[str]
     graph_maps: list[TermMap]
     predicate_object_maps: list[PredicateObjectMap]
+
+
+def pred_slots(tm: TriplesMap) -> Optional[dict[str, tuple[list, list]]]:
+    """``{predicate IRI: (object maps, referencing object maps)}`` a TM
+    emits under each constant predicate, in POM order; every constant
+    predicate has a key, even with no object map, and a predicate listed
+    twice in one POM contributes its maps twice (the TM emits each of
+    those triples twice).  None when any predicate map is not a constant
+    IRI: the TM's predicate set is then unknowable.  The rr:class
+    triples are not slots."""
+    slots: dict = {}
+    for pom in tm.predicate_object_maps:
+        iris = pom.pred_iris()
+        if iris is None:
+            return None
+        for p in iris:
+            oms, roms = slots.setdefault(p, ([], []))
+            oms.extend(pom.object_maps)
+            roms.extend(pom.ref_object_maps)
+    return slots
+
+
+def tm_pred_iris(tm: TriplesMap) -> Optional[set]:
+    """Constant predicate IRIs a TM can emit; None when a predicate map
+    is dynamic (template/column/reference) so any predicate is possible."""
+    slots = pred_slots(tm)
+    if slots is None:
+        return None
+    return set(slots) | ({NS.RDF_TYPE} if tm.class_uris else set())
 
 
 @dataclass

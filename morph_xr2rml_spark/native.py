@@ -31,7 +31,7 @@ from . import namespaces as NS
 from .functions.encoding import _ENCODE_RESERVED, _ENCODE_URL, encode_url
 from .functions.templates import compile_template, get_template_groups
 from .model import (COLUMN, CONSTANT, REFERENCE, TEMPLATE, MappingDocument,
-                    TermMap, TriplesMap)
+                    TermMap, TriplesMap, pred_slots, tm_pred_iris)
 from .translate import EngineConfig, nt_escape
 
 TRIPLE_COLS = ("subj", "pred", "obj", "graph")
@@ -655,29 +655,22 @@ class CatalystCompiler:
         one per row (``_rom_ok``), and a predicate emitted twice only
         with pairwise-distinct constant objects."""
         ls = tm.logical_source
-        if ls.iterator or ls.pushdowns or tm.graph_maps \
+        slots = pred_slots(tm)
+        if ls.iterator or ls.pushdowns or tm.graph_maps or slots is None \
+                or any(pom.graph_maps for pom in tm.predicate_object_maps) \
                 or not self.subject_unique(tm):
             return False
         by_pred: dict = {NS.RDF_TYPE: [("iri", cls)
                                        for cls in tm.class_uris]}
-        for pom in tm.predicate_object_maps:
-            if pom.graph_maps:
+        for p, (oms, roms) in slots.items():
+            if not all(map(self._slot_ok, oms)) \
+                    or not all(map(self._rom_ok, roms)):
                 return False
-            for pm in pom.predicate_maps:
-                if pm.kind != CONSTANT or pm.constant is None \
-                        or pm.constant[0] != "iri":
-                    return False
-                sigs = by_pred.setdefault(pm.constant[1], [])
-                for om in pom.object_maps:
-                    if not self._slot_ok(om):
-                        return False
-                    # None: a per-row value, which may equal another's
-                    sigs.append(tuple(om.constant) if om.kind == CONSTANT
-                                and om.constant is not None else None)
-                for rom in pom.ref_object_maps:
-                    if not self._rom_ok(rom):
-                        return False
-                    sigs.append(None)
+            # None: a per-row value, which may equal another's
+            by_pred.setdefault(p, []).extend(
+                [tuple(om.constant) if om.kind == CONSTANT
+                 and om.constant is not None else None for om in oms]
+                + [None] * len(roms))
         return all(len(sigs) < 2 or (None not in sigs
                                      and len(set(sigs)) == len(sigs))
                    for sigs in by_pred.values())
@@ -701,7 +694,6 @@ def overlapping_pair(tms):
     """The first pair of triples maps that may emit a common triple, or
     None when every pair has disjoint subject spaces or disjoint
     constant predicate sets."""
-    from .rewrite import tm_pred_iris
     infos = [(tm, subject_space(tm), tm_pred_iris(tm)) for tm in tms]
     for i, (tm_a, sp_a, pr_a) in enumerate(infos):
         for tm_b, sp_b, pr_b in infos[i + 1:]:

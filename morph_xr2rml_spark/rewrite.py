@@ -54,7 +54,10 @@ from . import namespaces as NS
 from .functions.encoding import encode_literal
 from .functions.templates import get_template_groups
 from .model import (COLUMN, CONSTANT, REFERENCE, TEMPLATE, MappingDocument,
-                    TriplesMap, parse_mongo_query)
+                    TermMap, TriplesMap, parse_mongo_query, pred_slots,
+                    tm_pred_iris)
+from .native import (subject_renders_unique, subject_renders_unique_schemaless,
+                     subject_space, subject_spaces_disjoint)
 from .sparql import Group, SelectQuery, SparqlEngine, parse_sparql
 
 # sentinel: inversion failed in a way that must disable pushdown for the
@@ -119,18 +122,17 @@ def template_literal_may_render(template: str, lex: str) -> bool:
     return True
 
 
-def invert_subject(tm: TriplesMap, iri: str):
-    """Constant subject IRI → source-level equality dict for this TM, or
-    None (TM cannot produce it) / AMBIGUOUS (cannot safely push)."""
-    sm = tm.subject_map
-    if sm.infer_term_type() != NS.RR_IRI:
-        return None                 # IRI pattern can't match bnode subjects
-    if sm.kind == CONSTANT:
-        if sm.constant is not None and sm.constant[0] == "iri" \
-                and sm.constant[1] == iri:
+def invert_iri_map(m: TermMap, iri: str):
+    """Constant IRI vs one IRI-rendering term map (subject, object or
+    graph position) → source-level equality dict, or None (the map
+    cannot render it) / AMBIGUOUS (it may, but no safe row constraint
+    derives)."""
+    if m.kind == CONSTANT:
+        if m.constant is not None and m.constant[0] == "iri" \
+                and m.constant[1] == iri:
             return AMBIGUOUS        # matches every row: no row constraint
         return None
-    if sm.kind == COLUMN:
+    if m.kind == COLUMN:
         if "%" in iri:
             # a %-escaped IRI may come from a DECODED stored value (the
             # render percent-encodes reserved chars) — raw equality
@@ -138,10 +140,18 @@ def invert_subject(tm: TriplesMap, iri: str):
             return AMBIGUOUS
         # the render strips the column value (createIRI trim) — the
         # mirror must compare the STRIPPED column, not the raw one
-        return {sm.column: ("irieq", iri)}
-    if sm.kind == TEMPLATE:
-        return invert_template(sm.template, iri)
-    return AMBIGUOUS                # reference/dynamic subject: full scan
+        return {m.column: ("irieq", iri)}
+    if m.kind == TEMPLATE:
+        return invert_template(m.template, iri)
+    return AMBIGUOUS                # reference/dynamic map: full scan
+
+
+def invert_subject(tm: TriplesMap, iri: str):
+    """Constant subject IRI → source-level equality dict for this TM, or
+    None (TM cannot produce it) / AMBIGUOUS (cannot safely push)."""
+    if tm.subject_map.infer_term_type() != NS.RR_IRI:
+        return None                 # IRI pattern can't match bnode subjects
+    return invert_iri_map(tm.subject_map, iri)
 
 
 def invert_object(mapping: MappingDocument, tm: TriplesMap,
@@ -162,55 +172,36 @@ def invert_object(mapping: MappingDocument, tm: TriplesMap,
         # also be emitted by an explicit predicate-object map (legal
         # R2RML), which the POM scan below handles like any predicate.
         candidates.append(AMBIGUOUS)
-    for pom in tm.predicate_object_maps:
-        pred_consts = set()
-        for pm in pom.predicate_maps:
-            if pm.kind == CONSTANT and pm.constant is not None \
-                    and pm.constant[0] == "iri":
-                pred_consts.add(pm.constant[1])
-            else:
-                return AMBIGUOUS    # dynamic predicate: can't reason
-        if pred_iri not in pred_consts:
+    slots = pred_slots(tm)
+    if slots is None:
+        return AMBIGUOUS            # dynamic predicate: can't reason
+    oms, roms = slots.get(pred_iri, ((), ()))
+    for om in oms:
+        if om.infer_term_type() != NS.RR_IRI:
+            continue                # literal/bnode object ≠ IRI pattern
+        inv = invert_iri_map(om, obj_iri)
+        if inv is not None:
+            candidates.append(inv)
+    for rom in roms:
+        parent = mapping.triples_maps[rom.parent_tm]
+        inv = invert_subject(parent, obj_iri)
+        if inv is None:
+            continue                # parent can't produce the object
+        if inv is AMBIGUOUS or len(rom.join_conditions) != 1:
+            candidates.append(AMBIGUOUS)
             continue
-        for om in pom.object_maps:
-            if om.infer_term_type() != NS.RR_IRI:
-                continue            # literal/bnode object ≠ IRI pattern
-            if om.kind == CONSTANT:
-                if om.constant is not None and om.constant[0] == "iri" \
-                        and om.constant[1] == obj_iri:
-                    candidates.append(AMBIGUOUS)   # every row matches
-            elif om.kind == COLUMN:
-                candidates.append(AMBIGUOUS if "%" in obj_iri
-                                  else {om.column: ("irieq", obj_iri)})
-            elif om.kind == TEMPLATE:
-                inv = invert_template(om.template, obj_iri)
-                if inv is AMBIGUOUS:
-                    candidates.append(AMBIGUOUS)
-                elif inv is not None:
-                    candidates.append(inv)
-            else:
-                candidates.append(AMBIGUOUS)
-        for rom in pom.ref_object_maps:
-            parent = mapping.triples_maps[rom.parent_tm]
-            inv = invert_subject(parent, obj_iri)
-            if inv is None:
-                continue            # parent can't produce the object
-            if inv is AMBIGUOUS or len(rom.join_conditions) != 1:
-                candidates.append(AMBIGUOUS)
-                continue
-            jc = rom.join_conditions[0]
-            if set(inv) == {jc.parent_ref}:
-                candidates.append({jc.child_ref: inv[jc.parent_ref]})
-            else:
-                candidates.append(AMBIGUOUS)
-    if not candidates:
-        return None
-    if len(candidates) == 1 and candidates[0] is not AMBIGUOUS:
-        return candidates[0]
-    return AMBIGUOUS                # several producers: no single conj
+        jc = rom.join_conditions[0]
+        if set(inv) == {jc.parent_ref}:
+            candidates.append({jc.child_ref: inv[jc.parent_ref]})
+        else:
+            candidates.append(AMBIGUOUS)
+    return _merge_candidates(candidates)
 
 
 def _merge_candidates(candidates):
+    """One producer's constraint; None when nothing produces the term,
+    AMBIGUOUS for several producers (no single conjunction) or one
+    without a row constraint."""
     if not candidates:
         return None
     if len(candidates) == 1 and candidates[0] is not AMBIGUOUS:
@@ -232,34 +223,12 @@ def _graph_map_cats(tm: TriplesMap, preds: Optional[set]) -> list[list]:
     if tm.class_uris and (preds is None or NS.RDF_TYPE in preds):
         cats.append(list(tm.graph_maps))
     for pom in tm.predicate_object_maps:
-        pom_preds = set()
-        dynamic = False
-        for pm in pom.predicate_maps:
-            if pm.kind == CONSTANT and pm.constant is not None \
-                    and pm.constant[0] == "iri":
-                pom_preds.add(pm.constant[1])
-            else:
-                dynamic = True
-        if preds is not None and not dynamic and not (preds & pom_preds):
+        iris = pom.pred_iris()
+        if preds is not None and iris is not None \
+                and preds.isdisjoint(iris):
             continue
         cats.append(list(tm.graph_maps) + list(pom.graph_maps))
     return cats
-
-
-def _invert_graph_map(gm, iri: str):
-    """Constant graph IRI vs one graph term map: None = cannot render it,
-    AMBIGUOUS = renders it with no safe row constraint, dict = source
-    equality constraint (same conventions as invert_subject)."""
-    if gm.kind == CONSTANT:
-        if gm.constant is not None and gm.constant[0] == "iri" \
-                and gm.constant[1] == iri:
-            return AMBIGUOUS
-        return None
-    if gm.kind == COLUMN:
-        return AMBIGUOUS if "%" in iri else {gm.column: ("irieq", iri)}
-    if gm.kind == TEMPLATE:
-        return invert_template(gm.template, iri)
-    return AMBIGUOUS                 # reference/dynamic graph
 
 
 def invert_graph_ctx(tm: TriplesMap, preds: Optional[set], gctx):
@@ -299,7 +268,7 @@ def invert_graph_ctx(tm: TriplesMap, preds: Optional[set], gctx):
     for g in targets:
         for cat in cats:
             for gm in cat:
-                inv = _invert_graph_map(gm, g)
+                inv = invert_iri_map(gm, g)
                 if inv is None:
                     continue
                 key = "ambiguous" if inv is AMBIGUOUS \
@@ -319,21 +288,11 @@ def _literal_oms(tm: TriplesMap, pred_iri: str):
     """Literal-rendering object maps under a constant predicate, or None
     when a predicate map is dynamic.  ROM / IRI / bnode object maps never
     render literals and are excluded."""
-    out = []
-    for pom in tm.predicate_object_maps:
-        pred_consts = set()
-        for pm in pom.predicate_maps:
-            if pm.kind == CONSTANT and pm.constant is not None \
-                    and pm.constant[0] == "iri":
-                pred_consts.add(pm.constant[1])
-            else:
-                return None
-        if pred_iri not in pred_consts:
-            continue
-        for om in pom.object_maps:
-            if om.infer_term_type() == NS.RR_LITERAL:
-                out.append(om)
-    return out
+    slots = pred_slots(tm)
+    if slots is None:
+        return None
+    return [om for om in slots.get(pred_iri, ((), ()))[0]
+            if om.infer_term_type() == NS.RR_LITERAL]
 
 
 def invert_object_literal(mapping: MappingDocument, tm: TriplesMap,
@@ -351,21 +310,12 @@ def invert_object_literal(mapping: MappingDocument, tm: TriplesMap,
       ('lexeq', lex)           rendered-literal lexical equality
       ('cmp', [(op, num),...]) numeric value predicates"""
     kind, raw = o_term
+    if kind == "num":
+        # value equality, the same predicate as FILTER(?o = n)
+        return invert_object_compare(mapping, tm, pred_iri, "=", raw)
     oms = _literal_oms(tm, pred_iri)
     if oms is None:
         return AMBIGUOUS            # dynamic predicate: can't reason
-    if kind == "num":
-        candidates = []
-        for om in oms:
-            if om.kind == COLUMN:
-                candidates.append({om.column: ("cmp", (("=", raw),))})
-            elif om.kind == REFERENCE and not om.language:
-                # doc tier: numeric value equality via the $numCmp arm
-                candidates.append({om.reference: ("cmp", (("=", raw),))})
-            else:
-                # template/constant renders COULD carry a numeric value
-                candidates.append(AMBIGUOUS)
-        return _merge_candidates(candidates)
     m = _LIT_TERM_RE.match(raw)
     if not m:
         return AMBIGUOUS
@@ -431,37 +381,23 @@ def invert_object_lexpat(mapping: MappingDocument, tm: TriplesMap,
         return AMBIGUOUS            # escaped lexicals: mirror diverges
     if pred_iri == NS.RDF_TYPE and tm.class_uris:
         return AMBIGUOUS            # class IRIs could satisfy via STR()
-    candidates = []
-    found = False
-    for pom in tm.predicate_object_maps:
-        pred_consts = set()
-        for pm in pom.predicate_maps:
-            if pm.kind == CONSTANT and pm.constant is not None \
-                    and pm.constant[0] == "iri":
-                pred_consts.add(pm.constant[1])
-            else:
-                return AMBIGUOUS
-        if pred_iri not in pred_consts:
-            continue
-        for om in pom.object_maps:
-            found = True
-            if om.kind in (COLUMN, REFERENCE) \
-                    and om.infer_term_type() == NS.RR_LITERAL \
-                    and om.datatype not in (NS.XSD_DATETIME,
-                                            NS.XSD_BOOLEAN):
-                # rendered-lexical pattern on the column, or on the
-                # field as the internal $renderPat find() operator;
-                # dateTime/boolean normalizers rewrite the lexical
-                # post-encode, so those stay AMBIGUOUS
-                candidates.append({om.column or om.reference:
-                                   ("lexpat", kind, pat)})
-            else:
-                candidates.append(AMBIGUOUS)
-        for _rom in pom.ref_object_maps:
-            found = True
+    slots = pred_slots(tm)
+    if slots is None:
+        return AMBIGUOUS
+    oms, roms = slots.get(pred_iri, ((), ()))
+    candidates = [AMBIGUOUS] * len(roms)
+    for om in oms:
+        if om.kind in (COLUMN, REFERENCE) \
+                and om.infer_term_type() == NS.RR_LITERAL \
+                and om.datatype not in (NS.XSD_DATETIME, NS.XSD_BOOLEAN):
+            # rendered-lexical pattern on the column, or on the field as
+            # the internal $renderPat find() operator; dateTime/boolean
+            # normalizers rewrite the lexical post-encode, so those stay
+            # AMBIGUOUS
+            candidates.append({om.column or om.reference:
+                               ("lexpat", kind, pat)})
+        else:
             candidates.append(AMBIGUOUS)
-    if not found:
-        return None
     return _merge_candidates(candidates)
 
 
@@ -599,31 +535,25 @@ def invert_object_typereq(mapping: MappingDocument, tm: TriplesMap,
         found = True                    # class IRIs: plain IRI objects
         if kind_ == "termtype":
             satisfiable = satisfiable or arg == "iri"
-    for pom in tm.predicate_object_maps:
-        pred_consts = set()
-        for pm in pom.predicate_maps:
-            if pm.kind == CONSTANT and pm.constant is not None \
-                    and pm.constant[0] == "iri":
-                pred_consts.add(pm.constant[1])
-            else:
-                return {}               # dynamic predicate: can't enumerate
-        if pred_iri not in pred_consts:
-            continue
-        for om in pom.object_maps:
-            found = True
-            satisfiable = satisfiable or om_ok(om)
-        for rom in pom.ref_object_maps:
-            found = True
-            parent = mapping.triples_maps.get(rom.parent_tm)
-            if parent is None:
-                satisfiable = True      # unresolvable parent: unknown
-            elif kind_ == "termtype":
-                ptt = parent.subject_map.infer_term_type()
-                satisfiable = satisfiable \
-                    or (ptt == NS.RR_IRI and arg == "iri") \
-                    or (ptt == NS.RR_BLANKNODE and arg == "blank") \
-                    or ptt not in (NS.RR_IRI, NS.RR_BLANKNODE)
-            # lang/datatype facets never hold on parent subjects (IRI/BNode)
+    slots = pred_slots(tm)
+    if slots is None:
+        return {}                       # dynamic predicate: can't enumerate
+    oms, roms = slots.get(pred_iri, ((), ()))
+    for om in oms:
+        found = True
+        satisfiable = satisfiable or om_ok(om)
+    for rom in roms:
+        found = True
+        parent = mapping.triples_maps.get(rom.parent_tm)
+        if parent is None:
+            satisfiable = True          # unresolvable parent: unknown
+        elif kind_ == "termtype":
+            ptt = parent.subject_map.infer_term_type()
+            satisfiable = satisfiable \
+                or (ptt == NS.RR_IRI and arg == "iri") \
+                or (ptt == NS.RR_BLANKNODE and arg == "blank") \
+                or ptt not in (NS.RR_IRI, NS.RR_BLANKNODE)
+        # lang/datatype facets never hold on parent subjects (IRI/BNode)
     if not found:
         return None
     return {} if satisfiable else None
@@ -743,6 +673,26 @@ _CMP_FLIP = {"<": ">", ">": "<", "<=": ">=", ">=": "<=", "=": "="}
 _LIT_KINDS = ("lit", "lit_exact", "num")
 
 
+def _str_lit(t):
+    """A filter's bare string operand (which carries the lexical alone)
+    as the plain-literal pattern term ``("lit", '"lex"')``; any other
+    term, and a string holding a quote or a backslash (its rendered
+    lexical is escaped), is returned as is."""
+    if t[0] == "str" and '"' not in t[1] and "\\" not in t[1]:
+        return ("lit", f'"{t[1]}"')
+    return t
+
+
+def _path_record(tp, preds: Optional[set], graph_ctx: tuple,
+                 s_term: tuple = ("var", "*")) -> dict:
+    """The record of a property-path pattern (or of one part of it): it
+    constrains nothing but its first hop's subject ``s_term``."""
+    return {"preds": preds, "svar": None, "top": False, "cmps": [],
+            "lexpats": [], "typereqs": [], "s_typereqs": [],
+            "graph": graph_ctx, "text": _pattern_text(tp),
+            "variants": [(s_term, ("var", "*"))]}
+
+
 def _collect(group: Group, out: list, top: bool = False,
              in_subquery: bool = False,
              graph_ctx: tuple = ("default",)) -> None:
@@ -792,9 +742,7 @@ def _collect(group: Group, out: list, top: bool = False,
                 and node[1] == "=":
             for a, b in ((node[2], node[3]), (node[3], node[2])):
                 if a[0] == "var":
-                    if b[0] == "str" and '"' not in b[1] \
-                            and "\\" not in b[1]:
-                        b = ("lit", f'"{b[1]}"')
+                    b = _str_lit(b)
                     if b[0] in ("iri", "lit", "lit_exact"):
                         acc.append((a[1], b))
                         return True
@@ -830,9 +778,7 @@ def _collect(group: Group, out: list, top: bool = False,
                 if a[0] != "var":
                     continue
                 op = flt[1] if (a, b) == sides else _CMP_FLIP.get(flt[1])
-                if b[0] == "str" and '"' not in b[1] and "\\" not in b[1]:
-                    # filter string operands carry the bare lexical
-                    b = ("lit", f'"{b[1]}"')
+                b = _str_lit(b)
                 if op == "=" and b[0] in ("iri", "lit", "lit_exact"):
                     var_consts.setdefault(a[1], []).append(b)
                 elif op in _CMP_FLIP and b[0] == "num":
@@ -848,9 +794,7 @@ def _collect(group: Group, out: list, top: bool = False,
             # member constant → per-member pattern variants (OR)
             v_term, members = flt[1], flt[2]
             norm = []
-            for t in members:
-                if t[0] == "str" and '"' not in t[1] and "\\" not in t[1]:
-                    t = ("lit", f'"{t[1]}"')
+            for t in map(_str_lit, members):
                 if t[0] not in ("iri", "num") + _LIT_KINDS:
                     norm = None
                     break
@@ -913,8 +857,7 @@ def _collect(group: Group, out: list, top: bool = False,
                 if not (isinstance(a, tuple) and a[0] == "var"
                         and isinstance(b, tuple)):
                     continue
-                if b[0] == "str" and '"' not in b[1] and "\\" not in b[1]:
-                    b = ("lit", f'"{b[1]}"')
+                b = _str_lit(b)
                 if b[0] in ("iri", "lit", "lit_exact"):
                     var_consts.setdefault(a[1], []).append(b)
     for var, expr in group.binds:
@@ -925,9 +868,8 @@ def _collect(group: Group, out: list, top: bool = False,
         # on one var stay OR-variants — a superset, sound.
         if not isinstance(expr, tuple):
             continue
-        if expr[0] == "str" and '"' not in expr[1] and "\\" not in expr[1]:
-            var_consts.setdefault(var, []).append(("lit", f'"{expr[1]}"'))
-        elif expr[0] == "iri":
+        expr = _str_lit(expr)
+        if expr[0] in ("lit", "iri"):
             var_consts.setdefault(var, []).append(expr)
         elif expr[0] == "termlit":
             var_consts.setdefault(var, []).append(("lit_exact", expr[1]))
@@ -953,10 +895,8 @@ def _collect(group: Group, out: list, top: bool = False,
                 # predicate are constrained exactly like a plain pattern
                 # (<s> p/q ?o ⇒ p-triples only matter with subject <s>);
                 # the remaining steps stay unconstrained
-                out.append({"preds": {tp.p[1][0][1]}, "svar": None,
-                            "top": False, "cmps": [], "lexpats": [],
-                            "graph": graph_ctx, "text": _pattern_text(tp),
-                            "variants": [(tp.s, ("var", "*"))]})
+                out.append(_path_record(tp, {tp.p[1][0][1]}, graph_ctx,
+                                        tp.s))
                 rest: Optional[set] = set()
                 for elt in tp.p[1][1:]:
                     sub = _path_iris(elt)
@@ -964,16 +904,10 @@ def _collect(group: Group, out: list, top: bool = False,
                         rest = None
                         break
                     rest |= sub
-                out.append({"preds": rest, "svar": None, "top": False,
-                            "cmps": [], "lexpats": [],
-                            "graph": graph_ctx, "text": _pattern_text(tp),
-                            "variants": [(("var", "*"), ("var", "*"))]})
+                out.append(_path_record(tp, rest, graph_ctx))
                 continue
             # closures walk intermediate nodes: never constrain
-            out.append({"preds": _path_iris(tp.p), "svar": None,
-                        "top": False, "cmps": [], "lexpats": [],
-                        "graph": graph_ctx, "text": _pattern_text(tp),
-                        "variants": [(("var", "*"), ("var", "*"))]})
+            out.append(_path_record(tp, _path_iris(tp.p), graph_ctx))
             continue
         preds = {tp.p[1]} if tp.p[0] == "iri" else None
 
@@ -1031,65 +965,43 @@ def _collect(group: Group, out: list, top: bool = False,
         walk_exists(flt)
 
 
-def tm_pred_iris(tm: TriplesMap) -> Optional[set]:
-    """Constant predicate IRIs a TM can emit; None when a predicate map
-    is dynamic (template/column/reference) so any predicate is possible."""
-    preds = set()
-    if tm.class_uris:
-        preds.add(NS.RDF_TYPE)
-    for pom in tm.predicate_object_maps:
-        for pm in pom.predicate_maps:
-            if pm.kind == CONSTANT and pm.constant is not None \
-                    and pm.constant[0] == "iri":
-                preds.add(pm.constant[1])
-            else:
-                return None
-    return preds
+def _eval_variant(mapping: MappingDocument, tm: TriplesMap, rec: dict,
+                  s_term, o_term, single_pred, g_res):
+    """(ok, conj) for one instantiation of the pattern ``rec`` against
+    one TM.  ok=False means the TM provably cannot produce a triple
+    matching it (with its filters); conj is the derived row constraint
+    (possibly empty).  ``g_res`` is the pattern's graph-context
+    inversion, merged last."""
+    if not all(_subject_satisfies_typereq(tm, req)
+               for req in rec["s_typereqs"]):
+        return False, None          # subject term type can't satisfy
 
+    def inversions():
+        # each: None = the TM cannot match, AMBIGUOUS = no row
+        # constraint, dict = a constraint to AND in
+        if s_term[0] == "iri":
+            yield invert_subject(tm, s_term[1])
+        if single_pred is not None:
+            if o_term[0] == "iri":
+                yield invert_object(mapping, tm, single_pred, o_term[1])
+            elif o_term[0] in _LIT_KINDS:
+                yield invert_object_literal(mapping, tm, single_pred,
+                                            o_term)
+            for op, num_lex in rec["cmps"]:
+                yield invert_object_compare(mapping, tm, single_pred, op,
+                                            num_lex)
+            for kind, pat in rec["lexpats"]:
+                yield invert_object_lexpat(mapping, tm, single_pred, kind,
+                                           pat)
+            for req in rec["typereqs"]:
+                yield invert_object_typereq(mapping, tm, single_pred, req)
+        yield g_res
 
-def _eval_variant(mapping: MappingDocument, tm: TriplesMap,
-                  s_term, o_term, single_pred, o_cmps, o_lexpats=(),
-                  o_typereqs=(), s_typereqs=()):
-    """(ok, conj) for one pattern instantiation against one TM.  ok=False
-    means the TM provably cannot produce a triple matching it (with its
-    filters); conj is the derived row constraint (possibly empty)."""
     conj: dict = {}
-    for req in s_typereqs:
-        if not _subject_satisfies_typereq(tm, req):
-            return False, None      # subject term type can't satisfy
-    if s_term[0] == "iri":
-        sub_c = invert_subject(tm, s_term[1])
-        if sub_c is None:
-            return False, None      # TM can't produce this subject
-        if isinstance(sub_c, dict):
-            conj.update(sub_c)
-    if o_term[0] == "iri" and single_pred is not None:
-        obj_c = invert_object(mapping, tm, single_pred, o_term[1])
-        if obj_c is None:
-            return False, None      # no term map with this pred makes it
-        if isinstance(obj_c, dict) and not _conj_merge(conj, obj_c):
-            return False, None      # unsatisfiable conjunction: no match
-    elif o_term[0] in _LIT_KINDS and single_pred is not None:
-        obj_c = invert_object_literal(mapping, tm, single_pred, o_term)
-        if obj_c is None:
-            return False, None      # no literal om under this pred
-        if isinstance(obj_c, dict) and not _conj_merge(conj, obj_c):
-            return False, None
-    for op, num_lex in (o_cmps if single_pred is not None else []):
-        cmp_c = invert_object_compare(mapping, tm, single_pred, op, num_lex)
-        if cmp_c is None:
-            return False, None      # numeric filter can never hold here
-        if isinstance(cmp_c, dict) and not _conj_merge(conj, cmp_c):
-            return False, None
-    for kind, pat in (o_lexpats if single_pred is not None else []):
-        pat_c = invert_object_lexpat(mapping, tm, single_pred, kind, pat)
-        if pat_c is None:
-            return False, None      # predicate has no object maps at all
-        if isinstance(pat_c, dict) and not _conj_merge(conj, pat_c):
-            return False, None
-    for req in (o_typereqs if single_pred is not None else []):
-        if invert_object_typereq(mapping, tm, single_pred, req) is None:
-            return False, None      # no object under this pred satisfies
+    for inv in inversions():
+        if inv is None or (isinstance(inv, dict)
+                           and not _conj_merge(conj, inv)):
+            return False, None      # unmatched, or an unsatisfiable AND
     return True, conj
 
 
@@ -1180,7 +1092,7 @@ def derive_tm_plan(mapping: MappingDocument, q: Union[str, SelectQuery],
         # GRAPH clauses see only the FROM NAMED graphs
         deflt, named = tuple(q.from_graphs), tuple(q.from_named)
         for rec in pats:
-            g = rec.get("graph", ("default",))
+            g = rec["graph"]
             if g[0] == "default":
                 rec["graph"] = ("anyof", deflt) if deflt else ("none",)
             elif g[0] == "any":
@@ -1188,9 +1100,6 @@ def derive_tm_plan(mapping: MappingDocument, q: Union[str, SelectQuery],
             elif g[0] == "iri":
                 rec["graph"] = g if g[1] in named else ("none",)
 
-    from .native import (subject_renders_unique,
-                         subject_renders_unique_schemaless, subject_space,
-                         subject_spaces_disjoint)
     spaces = {n: subject_space(tm) for n, tm in mapping.triples_maps.items()}
     disjoint, unique = {}, {}
     for name, tm in mapping.triples_maps.items():
@@ -1225,31 +1134,15 @@ def derive_tm_plan(mapping: MappingDocument, q: Union[str, SelectQuery],
             # maps provably cannot emit into the pattern's graph context
             # serves no binding; an invertible graph template adds a row
             # constraint (e.g. GRAPH <g/{col}> ⇒ col = value)
-            g_res = invert_graph_ctx(tm, preds,
-                                     rec.get("graph", ("default",)))
+            g_res = invert_graph_ctx(tm, preds, rec["graph"])
             if g_res is None:
                 evals.append((rec, None))
                 continue
             single_pred = next(iter(preds)) \
                 if preds is not None and len(preds) == 1 else None
-            results = [_eval_variant(mapping, tm, s, o, single_pred,
-                                     rec["cmps"], rec.get("lexpats", ()),
-                                     rec.get("typereqs", ()),
-                                     rec.get("s_typereqs", ()))
-                       for s, o in rec["variants"]]
-            if isinstance(g_res, dict) and g_res:
-                merged_results = []
-                for ok, conj in results:
-                    if not ok:
-                        merged_results.append((ok, conj))
-                        continue
-                    m = dict(conj)
-                    if _conj_merge(m, g_res):
-                        merged_results.append((True, m))
-                    else:
-                        merged_results.append((False, None))
-                results = merged_results
-            evals.append((rec, results))
+            evals.append((rec, [_eval_variant(mapping, tm, rec, s, o,
+                                              single_pred, g_res)
+                                for s, o in rec["variants"]]))
 
         # per-subject-variable candidacy + AND-combined constraints from
         # the top-level required patterns (sound only under disjoint /

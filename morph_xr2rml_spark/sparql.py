@@ -1012,6 +1012,23 @@ def numeric_value(col: Column) -> Column:
              .otherwise(s.try_cast("double")))
 
 
+def const_term_match(term: Column, kind: str, val,
+                     num: Optional[Column] = None) -> Column:
+    """Whether a rendered term matches a constant pattern term: ``iri``
+    by IRI equality, ``lit`` (a plain literal) by prefix, so any
+    datatype or language variant of the lexical matches, ``lit_exact``
+    (a typed or tagged literal) by exact term, ``num`` by numeric value
+    (``num`` stands in for ``numeric_value(term)``).  A ``num`` constant
+    that does not parse raises ValueError."""
+    if kind == "iri":
+        return term == f"<{val}>"
+    if kind == "lit":
+        return term.startswith(val)
+    if kind == "lit_exact":
+        return term == val
+    return (numeric_value(term) if num is None else num) == float(val)
+
+
 _NUMERIC_DT_RE = (r'\^\^<http://www\.w3\.org/2001/XMLSchema#(integer|'
                   r'decimal|double|float|long|int|short|byte|'
                   r'nonNegativeInteger|nonPositiveInteger|negativeInteger|'
@@ -1348,12 +1365,8 @@ class SparqlEngine:
             kind, val = term
             if kind == "var":
                 sel.append(F.col(role).alias(val))
-            elif kind == "iri":
-                pairs = pairs.where(F.col(role) == f"<{val}>")
-            elif kind == "lit":
-                pairs = pairs.where(F.col(role).startswith(val))
-            elif kind == "lit_exact":
-                pairs = pairs.where(F.col(role) == val)
+            elif kind in ("iri", "lit", "lit_exact"):
+                pairs = pairs.where(const_term_match(F.col(role), kind, val))
         if tp.s[0] == "var" and tp.o[0] == "var" and tp.s[1] == tp.o[1]:
             pairs = pairs.where(F.col("ps") == F.col("po"))
             sel = [F.col("ps").alias(tp.s[1])]
@@ -1385,16 +1398,8 @@ class SparqlEngine:
                 else:
                     bound[val] = role
                     sel.append(F.col(role).alias(val))
-            elif kind == "iri":
-                df = df.where(F.col(role) == f"<{val}>")
-            elif kind == "lit":
-                # match any literal whose lexical form equals; plain match
-                df = df.where(F.col(role).startswith(val))
-            elif kind == "lit_exact":
-                # typed / lang-tagged literal: exact term match
-                df = df.where(F.col(role) == val)
-            elif kind == "num":
-                df = df.where(numeric_value(F.col(role)) == float(val))
+            else:
+                df = df.where(const_term_match(F.col(role), kind, val))
         if self.dedup_source:
             # set semantics per pattern, applied AFTER the constant
             # filters so pushdown/pruning has already happened

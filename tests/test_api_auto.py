@@ -417,3 +417,33 @@ def test_numeric_filter_pushdown_keeps_padded_numbers(spark):
     got = sorted(r.s for r in answer_auto(spark, doc, q,
                                           catalog=cat).collect())
     assert got == ["<http://example.org/t/1>", "<http://example.org/t/4>"]
+
+
+def test_aggregate_tier_probe_fails_loudly(spark, monkeypatch):
+    """Aggregate pushdown refuses a TM whose source is not registered,
+    but a fault inside the router propagates instead of silently
+    turning into "no pushdown"."""
+    from morph_xr2rml_spark import aggpush
+    from morph_xr2rml_spark.sparql import parse_sparql
+    P = "PREFIX ex: <http://example.com/>\n"
+    q = parse_sparql(P + "SELECT (COUNT(*) AS ?n) WHERE { ?s ex:v ?v }")
+    doc = MappingDocument.from_text("""
+@prefix rr: <http://www.w3.org/ns/r2rml#> .
+@prefix xrr: <http://i3s.unice.fr/xr2rml#> .
+@prefix ex: <http://example.com/> .
+<#V> xrr:logicalSource [ xrr:query "db.v.find({})" ];
+  rr:subjectMap [ rr:template "http://example.org/t/{$.id}" ];
+  rr:predicateObjectMap [ rr:predicate ex:v;
+    rr:objectMap [ xrr:reference "$.v" ] ].
+""")
+    assert aggpush.try_aggregate_pushdown_auto(
+        spark, doc, q, catalog=SourceCatalog()) is None
+
+    def broken(*_args):
+        raise RuntimeError("router fault")
+
+    monkeypatch.setattr(aggpush, "route_tier", broken)
+    cat = SourceCatalog().register_collection("v", spark.createDataFrame(
+        [(json.dumps({"id": 1, "v": 2}),)], "content string"))
+    with pytest.raises(RuntimeError, match="router fault"):
+        aggpush.try_aggregate_pushdown_auto(spark, doc, q, catalog=cat)

@@ -1,9 +1,11 @@
 """Package layout guards: the engine imports neither the removed
 training-data operator suite nor the removed legacy bench harness,
 ``__spark_entry__`` pairs every query with an oracle, SPARQL answering
-has one entry point, one router picks every triples map's tier, only
-the router's ``api._routed_plan`` builds a whole-mapping plan,
-aggregate pushdown runs the evaluator's own SELECT tail, the
+has one entry point, one router picks every triples map's tier, the
+compilers build per-TM plans only (``api._routed_plan`` composes them;
+``engine.SparkMaterializer.triples`` still builds the Python document
+tier's whole-mapping plan), the TMs' predicate slots are walked once,
+in model.py, aggregate pushdown runs the evaluator's own SELECT tail, the
 Catalyst compilers and the find() compiler build expressions as SQL
 text only, with one find()-filter walker, the two Catalyst tiers
 share one compiler core, the Python document tier has one find()
@@ -22,7 +24,7 @@ FORBIDDEN = ("morph_xr2rml_spark.ops", "morph_xr2rml_spark.streaming",
 # answering entry points folded into api.answer_auto
 DELETED = {"answer_tabular", "answer_documents", "constrained_mapping",
            "plan_provably_distinct", "try_aggregate_pushdown",
-           "try_aggregate_pushdown_documents"}
+           "try_aggregate_pushdown_documents", "_invert_graph_map"}
 # tier tests: outside their own compilers only api.route_tier calls them
 TIER_TESTS = {"is_tabular_compilable", "compilable", "unsafe_paths"}
 COMPILERS = ("native.py", "native_json.py")
@@ -267,6 +269,51 @@ def _pairwise_loop(fn) -> bool:
                        == "subject_spaces_disjoint"
                        for c in ast.walk(inner))
                for outer in loops for inner in ast.walk(outer))
+
+
+def _const_iri_predicate_tests(path: pathlib.Path):
+    """Lines comparing a predicate map's ``.constant[0]`` with "iri"
+    (the map named by a loop or comprehension over ``.predicate_maps``)."""
+    tree = ast.parse(path.read_text(), str(path))
+    pms = {n.target.id for n in ast.walk(tree)
+           if isinstance(n, (ast.For, ast.comprehension))
+           and isinstance(n.iter, ast.Attribute)
+           and n.iter.attr == "predicate_maps"
+           and isinstance(n.target, ast.Name)}
+
+    def pm_kind(e) -> bool:
+        return isinstance(e, ast.Subscript) \
+            and isinstance(e.slice, ast.Constant) and e.slice.value == 0 \
+            and isinstance(e.value, ast.Attribute) \
+            and e.value.attr == "constant" \
+            and isinstance(e.value.value, ast.Name) \
+            and e.value.value.id in pms
+
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Compare):
+            sides = [node.left, *node.comparators]
+            if any(map(pm_kind, sides)) and any(
+                    isinstance(e, ast.Constant) and e.value == "iri"
+                    for e in sides):
+                yield node.lineno
+
+
+def test_predicate_slots_are_walked_once():
+    """Which term maps a TM emits under a constant predicate, and that a
+    non-constant predicate map makes its predicate set unknowable, is
+    decided in model.py alone; native.py, which reads it, imports
+    nothing from rewrite.py."""
+    bad = [f"{path.relative_to(ROOT)}:{line}" for path in _sources()
+           if path.name != "model.py"
+           for line in _const_iri_predicate_tests(path)]
+    pkg = ROOT / "morph_xr2rml_spark"
+    if not list(_const_iri_predicate_tests(pkg / "model.py")):
+        bad.append("model.py: no predicate-slot walk")
+    bad += [f"native.py: {mod}" for mod in _imported_modules(
+                pkg / "native.py")
+            if mod == "morph_xr2rml_spark.rewrite"
+            or mod.startswith("morph_xr2rml_spark.rewrite.")]
+    assert not bad, bad
 
 
 def test_compiler_core_is_written_once():
